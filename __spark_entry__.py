@@ -5,10 +5,9 @@
 ``queries`` — one entry per implemented operator (SURVEY.md §2 + the
               training-data-pipeline operators); each runs on the driver's
               parquet tables at ``sf_dir``.
-``oracle_sql`` — DuckDB-equivalent SQL for every SQL-expressible query.
-              Omitted keys (extraction, MinHash/SimHash/LSH approximations,
-              salted host stats) are non-SQL-expressible or operate on the
-              in-memory synthetic pages table → rows-only checks.
+``oracle_sql`` — DuckDB-equivalent SQL for every query.
+Both are views over ``_QUERIES`` (end of file), which holds one
+(name, builder, oracle) row per query; each oracle sits next to its builder.
 
 Numeric discipline for cross-engine hash parity: big double sums go through
 decimal(18,x) (exact, order-independent) then back to double; averages and
@@ -70,6 +69,16 @@ def _sql_lit(v) -> str:
 def _values_cte(name: str, cols: list[str], rows: list[tuple]) -> str:
     vals = ",\n  ".join("(" + ", ".join(_sql_lit(v) for v in r) + ")" for r in rows)
     return f"{name}({', '.join(cols)}) AS (VALUES\n  {vals})"
+
+
+_TOKS = r"list_filter(regexp_split_to_array(lower(text), '\s+'), x -> x != '')"
+
+# DuckDB mirror of dedup.normalized_tokens (lower → strip non-alnum →
+# whitespace split) — the tokenization every dedup/classifier op shares
+_NTOKS = (
+    r"list_filter(regexp_split_to_array(trim(regexp_replace(lower(text), "
+    r"'[^a-z0-9\s]', ' ', 'g')), '\s+'), x -> x != '')"
+)
 
 
 # Primary keys for scan-parallelism repair (below). Tiny dimension tables
@@ -282,6 +291,21 @@ def _q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_Q1_PRICING_SUMMARY_ORACLE = """
+            SELECT l_returnflag, l_linestatus,
+                   CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+                   CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
+                   CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS sum_disc_price,
+                   ROUND(CAST(SUM(CAST(l_quantity AS DECIMAL(28,6))) AS DOUBLE) / COUNT(*), 6) AS avg_qty,
+                   ROUND(CAST(SUM(CAST(l_extendedprice AS DECIMAL(28,6))) AS DOUBLE) / COUNT(*), 6) AS avg_price,
+                   ROUND(CAST(SUM(CAST(l_discount AS DECIMAL(28,6))) AS DOUBLE) / COUNT(*), 6) AS avg_disc,
+                   COUNT(*) AS count_order
+            FROM lineitem
+            WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
+            GROUP BY l_returnflag, l_linestatus
+        """
+
+
 def _q_revenue_by_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     orders = _t(spark, sf_dir, "orders")
@@ -292,6 +316,17 @@ def _q_revenue_by_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderkey", "o_orderdate")
         .agg(_dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 6).alias("revenue"))
     )
+
+
+_REVENUE_BY_ORDER_ORACLE = """
+            SELECT o_orderkey, o_orderdate,
+                   CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS revenue
+            FROM lineitem
+            JOIN orders ON l_orderkey = o_orderkey
+            JOIN customer ON o_custkey = c_custkey
+            WHERE c_mktsegment = 'BUILDING'
+            GROUP BY o_orderkey, o_orderdate
+        """
 
 
 def _q_region_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -309,10 +344,28 @@ def _q_region_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_REGION_ROLLUP_ORACLE = """
+            SELECT r_name, COUNT(*) AS n_customers, ROUND(CAST(SUM(CAST(c_acctbal AS DECIMAL(28,6))) AS DOUBLE) / COUNT(*), 6) AS avg_acctbal
+            FROM customer
+            JOIN nation ON c_nationkey = n_nationkey
+            JOIN region ON n_regionkey = r_regionkey
+            GROUP BY r_name
+        """
+
+
 def _q_best_order_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = _t(spark, sf_dir, "orders")
     best = analytics.latest_per_key(orders, "o_custkey", "o_totalprice", "o_orderkey")
     return best.select("o_custkey", "o_orderkey", "o_totalprice")
+
+
+_BEST_ORDER_PER_CUSTOMER_ORACLE = """
+            SELECT o_custkey, o_orderkey, o_totalprice FROM (
+                SELECT o_custkey, o_orderkey, o_totalprice,
+                       ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn
+                FROM orders
+            ) WHERE rn = 1
+        """
 
 
 def _q_top3_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -322,11 +375,29 @@ def _q_top3_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_TOP3_ORDERS_PER_CUSTOMER_ORACLE = """
+            SELECT o_custkey, o_orderkey, o_totalprice, rank FROM (
+                SELECT o_custkey, o_orderkey, o_totalprice,
+                       ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey ASC) AS rank
+                FROM orders
+            ) WHERE rank <= 3
+        """
+
+
 def _q_latest_event_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     return analytics.latest_per_key(ev, "user_id", "ts", "event_id").select(
         "user_id", "event_id", "ts", "event_type"
     )
+
+
+_LATEST_EVENT_PER_USER_ORACLE = """
+            SELECT user_id, event_id, ts, event_type FROM (
+                SELECT user_id, event_id, ts, event_type,
+                       ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id ASC) AS rn
+                FROM events
+            ) WHERE rn = 1
+        """
 
 
 def _q_supplier_customer_match(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -347,6 +418,15 @@ def _q_supplier_customer_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_SUPPLIER_CUSTOMER_MATCH_ORACLE = """
+            SELECT s_suppkey,
+                   MIN(levenshtein(lower(s_name), lower(c_name))) AS best_dist,
+                   (MIN(levenshtein(lower(s_name), lower(c_name))) <= 3) AS found
+            FROM supplier JOIN customer ON s_nationkey = c_nationkey
+            GROUP BY s_suppkey
+        """
+
+
 def _q_digit_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = _t(spark, sf_dir, "customer")
     return (
@@ -358,6 +438,14 @@ def _q_digit_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_DIGIT_FREQUENCY_ORACLE = """
+            SELECT digit, COUNT(*) AS n FROM (
+                SELECT unnest(string_to_array(lpad(CAST(c_custkey AS VARCHAR), 8, '0'), '')) AS digit
+                FROM customer
+            ) GROUP BY digit
+        """
+
+
 def _q_pareto_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scalable two-phase skyline (vectorized local frontier → tiny anti-join):
     # the plain anti-join form is a broadcast nested loop that dies at scale
@@ -365,6 +453,15 @@ def _q_pareto_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return analytics.pareto_frontier_scalable(part, "p_retailprice", "p_size").select(
         "p_partkey", "p_retailprice", "p_size"
     )
+
+
+_PARETO_PARTS_ORACLE = """
+            SELECT p_partkey, p_retailprice, p_size FROM part p
+            WHERE NOT EXISTS (
+                SELECT 1 FROM part o
+                WHERE o.p_retailprice < p.p_retailprice AND o.p_size >= p.p_size
+            )
+        """
 
 
 def _q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -379,6 +476,15 @@ def _q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         # sf0.1), breaking cross-engine hash parity
         F.round(_dsum(F.col("value"), 6) / F.count(F.lit(1)), 6).alias("avg_value"),
     )
+
+
+_EVENTS_HOURLY_ORACLE = """
+            SELECT date_trunc('hour', ts) AS hour, event_type,
+                   COUNT(*) AS n,
+                   CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value,
+                   ROUND(CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*), 6) AS avg_value
+            FROM events GROUP BY 1, 2
+        """
 
 
 def _q_events_asof_order(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -721,6 +827,10 @@ _BM25_ORACLE = f"""
 """
 
 
+def _bm25_oracle() -> str:
+    return _BM25_ORACLE.format(ntoks=_NTOKS)
+
+
 _SHARD_TARGET = 1000
 _SHARD_SEED = 11
 
@@ -742,6 +852,18 @@ def _q_shard_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "n_tokens", "shard_id", "shard_offset", "shard_pos")
 
 
+def _shard_layout_oracle() -> str:
+    return f"""
+        WITH {_shard_cte()}
+        SELECT doc_id, n_tokens,
+               s // {_SHARD_TARGET} AS shard_id,
+               s % {_SHARD_TARGET} AS shard_offset,
+               CAST(ROW_NUMBER() OVER (PARTITION BY s // {_SHARD_TARGET}
+                                       ORDER BY draw, doc_id) - 1 AS INT) AS shard_pos
+        FROM soff
+    """
+
+
 def _q_shard_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-shard manifest rows over the shard layout (round 6)."""
     from batch_doc_vqa_spark.operators.packing import assign_shards, shard_stats
@@ -756,6 +878,16 @@ def _q_shard_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return shard_stats(sharded, "n_tokens")
 
 
+def _shard_stats_oracle() -> str:
+    return f"""
+        WITH {_shard_cte()}
+        SELECT s // {_SHARD_TARGET} AS shard_id,
+               COUNT(*) AS n_docs,
+               CAST(SUM(n_tokens) AS BIGINT) AS shard_tokens
+        FROM soff GROUP BY 1
+    """
+
+
 _SHARD_OFF_CTE = f"""sk AS (
         SELECT doc_id, n_tokens,
                CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR) || '#{_SHARD_SEED}'),
@@ -768,6 +900,13 @@ _SHARD_OFF_CTE = f"""sk AS (
                    AS s
         FROM sk
     )"""
+
+
+def _shard_cte() -> str:
+    ntoks_count = (
+        f"SELECT doc_id, CAST(len({_NTOKS}) AS INT) AS n_tokens FROM documents"
+    )
+    return _SHARD_OFF_CTE.format(ntoks_count=ntoks_count)
 
 
 def _q_url_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -906,6 +1045,20 @@ def _q_events_in_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("n_users", F.lit(0)).alias("n_users"),
         )
     )
+
+
+_EVENTS_IN_WINDOWS_ORACLE = """
+            WITH ep AS (SELECT event_id, user_id,
+                               CAST(floor(epoch(ts)) AS BIGINT) AS p FROM events),
+            anchor AS (SELECT MIN(p) AS a FROM ep),
+            win AS (SELECT CAST(i AS INT) AS window_id, a + i * 14400 AS s
+                    FROM anchor, range(0, 64) t(i))
+            SELECT w.window_id, w.s AS win_start, w.s + 21600 AS win_end,
+                   COUNT(e.event_id) AS n_events,
+                   COUNT(DISTINCT e.user_id) AS n_users
+            FROM win w LEFT JOIN ep e ON e.p >= w.s AND e.p < w.s + 21600
+            GROUP BY w.window_id, w.s
+        """
 
 
 def _q_hll_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1064,6 +1217,19 @@ def _q_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     return analytics.calibration_bins(ev, "p", "is_correct", 7)
 
 
+_CALIBRATION_BINS_ORACLE = """
+            WITH p AS (
+                SELECT (abs(value) % 100.0) / 100.0 AS p,
+                       event_type IN ('purchase', 'signup') AS is_correct
+                FROM events
+            )
+            SELECT bin, COUNT(*) AS n, ROUND(AVG(p), 6) AS mean_prob,
+                   ROUND(AVG(CAST(is_correct AS DOUBLE)), 6) AS mean_correct
+            FROM (SELECT CAST(least(floor(p * 7), 6) AS INTEGER) AS bin, p, is_correct FROM p)
+            GROUP BY bin
+        """
+
+
 def _q_discount_product(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", (1 - F.col("l_discount")).alias("keep")
@@ -1073,14 +1239,56 @@ def _q_discount_product(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_DISCOUNT_PRODUCT_ORACLE = """
+            SELECT l_orderkey,
+                   ROUND(CASE WHEN MAX(CASE WHEN (1 - l_discount) <= 0 THEN 1 ELSE 0 END) = 1
+                              THEN 0.0
+                              ELSE ROUND(EXP(SUM(LN(CASE WHEN (1 - l_discount) > 0 THEN (1 - l_discount) END))), 12)
+                         END, 6) AS prob_product
+            FROM lineitem GROUP BY l_orderkey
+        """
+
+
 def _q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     return dedup.exact_dedup(docs, "doc_id", "text")
 
 
+_DEDUP_EXACT_ORACLE = """
+            SELECT md5(text) AS text_hash, MIN(doc_id) AS canonical_id, COUNT(*) AS n_dups
+            FROM documents GROUP BY md5(text)
+        """
+
+
 def _q_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     return dedup.jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.2)
+
+
+def _jaccard_pairs_oracle() -> str:
+    return f"""
+            WITH toks AS (
+                SELECT doc_id,
+                       list_filter(regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9\\s]', ' ', 'g')), '\\s+'), x -> x != '') AS t
+                FROM documents
+            ), sh AS (
+                SELECT doc_id, unnest(list_distinct(list_transform(
+                           range(1, greatest(len(t) - 2, 0) + 1),
+                           i -> array_to_string(list_slice(t, i, i + 2), ' ')))) AS s
+                FROM toks
+            ), sizes AS (
+                SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id
+            ), inter AS (
+                SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
+                FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
+                GROUP BY 1, 2
+            )
+            SELECT id_a, id_b, ROUND(n_inter / (sa.sz + sb.sz - n_inter), 6) AS jaccard
+            FROM inter
+            JOIN sizes sa ON sa.doc_id = id_a
+            JOIN sizes sb ON sb.doc_id = id_b
+            WHERE ROUND(n_inter / (sa.sz + sb.sz - n_inter), 6) >= 0.2
+        """
 
 
 def _q_dedup_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1089,6 +1297,50 @@ def _q_dedup_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         F.col("id").alias("doc_id"), "cluster_id", "keep", "cluster_size"
     )
+
+
+# pairs → duplicate clusters → keep-one, the step after candidate
+# emission a real dedup ships. Components via a recursive reachability
+# closure + MIN (tiny clusters at this sf; Spark uses min-label
+# propagation — same fixpoint).
+_DEDUP_RESOLVE_ORACLE = """
+            WITH RECURSIVE toks AS (
+                SELECT doc_id,
+                       list_filter(regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9\\s]', ' ', 'g')), '\\s+'), x -> x != '') AS t
+                FROM documents
+            ), sh AS (
+                SELECT doc_id, unnest(list_distinct(list_transform(
+                           range(1, greatest(len(t) - 2, 0) + 1),
+                           i -> array_to_string(list_slice(t, i, i + 2), ' ')))) AS s
+                FROM toks
+            ), sizes AS (
+                SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id
+            ), inter AS (
+                SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
+                FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
+                GROUP BY 1, 2
+            ), edges0 AS (
+                SELECT id_a, id_b FROM inter
+                JOIN sizes sa ON sa.doc_id = id_a
+                JOIN sizes sb ON sb.doc_id = id_b
+                WHERE ROUND(n_inter / (sa.sz + sb.sz - n_inter), 6) >= 0.5
+            ), edges AS (
+                SELECT id_a AS src, id_b AS dst FROM edges0
+                UNION
+                SELECT id_b AS src, id_a AS dst FROM edges0
+            ), reach(id, r) AS (
+                SELECT doc_id, doc_id FROM documents
+                UNION
+                SELECT reach.id, e.dst FROM reach JOIN edges e ON e.src = reach.r
+            ), cc AS (
+                SELECT id, MIN(r) AS cluster_id FROM reach GROUP BY id
+            ), csz AS (
+                SELECT cluster_id, COUNT(*) AS cluster_size FROM cc GROUP BY cluster_id
+            )
+            SELECT cc.id AS doc_id, cc.cluster_id,
+                   cc.id = cc.cluster_id AS keep, csz.cluster_size
+            FROM cc JOIN csz USING (cluster_id)
+        """
 
 
 def _q_dedup_resolve_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1227,6 +1479,15 @@ def _q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "n_tokens", "start_offset", "seq_id", "end_seq_id", "crosses_boundary")
 
 
+def _pack_sequences_oracle() -> str:
+    return f"""
+            WITH {_PACK_OFF_CTE}
+            SELECT doc_id, n_tokens, start_offset, seq_id, end_seq_id,
+                   end_seq_id > seq_id AS crosses_boundary
+            FROM laid
+        """
+
+
 def _q_packing_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from batch_doc_vqa_spark.operators.packing import pack_sequences, packing_stats
 
@@ -1234,6 +1495,22 @@ def _q_packing_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         _docs_with_tokens(spark, sf_dir), "doc_id", "n_tokens", _PACK_CTX, _PACK_BLOCK
     )
     return packing_stats(packed, "n_tokens", _PACK_CTX)
+
+
+def _packing_stats_oracle() -> str:
+    return f"""
+            WITH {_PACK_OFF_CTE}
+            SELECT n_docs, total_tokens,
+                   CAST((total_tokens + 511) // 512 AS BIGINT) AS n_sequences,
+                   n_boundary_docs,
+                   ROUND(CAST(total_tokens AS DOUBLE)
+                         / (((total_tokens + 511) // 512) * 512), 6) AS fill_fraction
+            FROM (SELECT COUNT(*) AS n_docs,
+                         CAST(SUM(n_tokens) AS BIGINT) AS total_tokens,
+                         CAST(SUM(CASE WHEN end_seq_id > seq_id THEN 1 ELSE 0 END) AS BIGINT)
+                             AS n_boundary_docs
+                  FROM laid)
+        """
 
 
 _PACK_OFF_CTE = """toks AS (
@@ -1279,12 +1556,26 @@ def _q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     return snapshot_diff(old, new, "doc_id", "text")
 
 
+def _snapshot_diff_oracle() -> str:
+    return f"""
+            WITH {_SNAPSHOT_CTES}
+            SELECT doc_id, change FROM dif
+        """
+
+
 def _q_snapshot_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Release-audit line: one row per change kind with counts."""
     from batch_doc_vqa_spark.operators.snapshots import snapshot_diff_summary
 
     old, new = _snapshot_pair(spark, sf_dir)
     return snapshot_diff_summary(old, new, "doc_id", "text")
+
+
+def _snapshot_summary_oracle() -> str:
+    return f"""
+            WITH {_SNAPSHOT_CTES}
+            SELECT change, COUNT(*) AS n FROM dif GROUP BY change
+        """
 
 
 def _q_snapshot_work_set(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1296,6 +1587,15 @@ def _q_snapshot_work_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     return incremental_work_set(old, new, "doc_id", "text").select(
         "doc_id", F.md5(F.col("text")).alias("text_md5")
     )
+
+
+def _snapshot_work_set_oracle() -> str:
+    return f"""
+            WITH {_SNAPSHOT_CTES}
+            SELECT n.doc_id, md5(n.text) AS text_md5
+            FROM newt n JOIN dif USING (doc_id)
+            WHERE dif.change IN ('added', 'changed')
+        """
 
 
 _SNAPSHOT_CTES = """newt AS (
@@ -1331,6 +1631,27 @@ def _q_epoch_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_EPOCH_EXPAND_ORACLE = """
+            WITH e AS (
+                SELECT doc_id, source,
+                       CASE WHEN CAST(substr(source, 4) AS INT) % 2 = 1
+                            THEN 2.5 ELSE 1.0 END AS epochs,
+                       CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR) || '#0'), 1, 15)) AS BIGINT)
+                           % 1048576 AS h
+                FROM documents
+            ), c AS (
+                SELECT doc_id, source,
+                       CAST(FLOOR(epochs) AS INT)
+                       + CASE WHEN h < CAST(FLOOR((epochs - FLOOR(epochs)) * 1048576) AS BIGINT)
+                              THEN 1 ELSE 0 END AS copies
+                FROM e
+            )
+            SELECT doc_id, source, CAST(epoch_idx AS INT) AS epoch_idx
+            FROM (SELECT doc_id, source, unnest(range(0, copies)) AS epoch_idx
+                  FROM c WHERE copies > 0)
+        """
+
+
 def _q_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-budget curation: best docs per source (n_chars desc) until a
     5000-char budget — the fixed-budget curriculum step."""
@@ -1338,6 +1659,18 @@ def _q_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
     return budget_select(docs, "source", "n_chars", 5000, "n_chars", "doc_id")
+
+
+_BUDGET_SELECT_ORACLE = """
+            SELECT doc_id, source, n_chars, cum_tokens
+            FROM (SELECT doc_id, source, n_chars,
+                         CAST(SUM(n_chars) OVER (PARTITION BY source
+                             ORDER BY n_chars DESC, doc_id
+                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+                             AS cum_tokens
+                  FROM documents)
+            WHERE cum_tokens <= 5000
+        """
 
 
 def _pii_dirty_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1481,6 +1814,14 @@ def _q_contamination_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _contamination_report_oracle() -> str:
+    return f"""
+            WITH {_decontam_ctes()}
+            SELECT doc_id, bench_id, matched_ngrams, bench_ngrams, coverage
+            FROM contam
+        """
+
+
 def _q_contamination_report_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decontamination through the NON-broadcast tier (shuffle hash join on
     the n-gram hash) — the fallback for eval suites whose n-gram set exceeds
@@ -1520,6 +1861,16 @@ def _q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, "doc_id", "text", bench, "bench_id", "bench_text",
         n=8, threshold=0.8, base_hash="md5",
     ).select("doc_id", "n_chars")
+
+
+def _decontaminate_oracle() -> str:
+    return f"""
+            WITH {_decontam_ctes()}
+            SELECT d.doc_id, d.n_chars
+            FROM documents d
+            ANTI JOIN (SELECT DISTINCT doc_id FROM contam WHERE coverage >= 0.8) c
+            USING (doc_id)
+        """
 
 
 # Shared tokenization + benchmark-derivation CTEs for the decontamination
@@ -1583,6 +1934,14 @@ def _q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, new, "doc_id", "text", path, threshold=0.5,
         update_index=False, base_hash="md5",
     )
+
+
+def _incremental_dedup_oracle() -> str:
+    return f"""
+            WITH {_minhash_ctes()}
+            SELECT id_a, id_b, est_jaccard FROM pairs
+            WHERE est_jaccard >= 0.5 AND (id_a % 5 = 0 OR id_b % 5 = 0)
+        """
 
 
 def _q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1654,6 +2013,21 @@ def _q_ann_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.cosine_topk(emb, queries, k=5).select("q_id", "neighbor_id", "cosine", "rank")
 
 
+_ANN_COSINE_TOPK_ORACLE = """
+            WITH emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+            q AS (SELECT vec_id AS q_id, v AS q_vec FROM emb WHERE vec_id % 50 = 0),
+            scored AS (
+                SELECT q.q_id, e.vec_id AS neighbor_id,
+                       ROUND(list_cosine_similarity(e.v, q.q_vec), 6) AS cosine
+                FROM emb e CROSS JOIN q WHERE e.vec_id != q.q_id
+            )
+            SELECT q_id, neighbor_id, cosine, rank FROM (
+                SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, neighbor_id ASC) AS rank
+                FROM scored
+            ) WHERE rank <= 5
+        """
+
+
 def _q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") % 50 == 0).select(
@@ -1662,6 +2036,40 @@ def _q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.ivf_cosine_topk(emb, queries, n_centroids=16, nprobe=4, k=5).select(
         "q_id", "neighbor_id", "cosine", "rank"
     )
+
+
+# IVF is deterministic end to end (md5-ordered centroid sample is
+# engine-portable), so unlike LSH it gets a full value oracle
+_ANN_IVF_TOPK_ORACLE = """
+            WITH emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+            cent AS (
+                SELECT vec_id AS cent_id, v AS cent_vec FROM emb
+                ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT 16),
+            assign AS (
+                SELECT vec_id, v, cent_id FROM (
+                    SELECT e.vec_id, e.v, c.cent_id,
+                           ROW_NUMBER() OVER (PARTITION BY e.vec_id
+                               ORDER BY ROUND(list_cosine_similarity(e.v, c.cent_vec), 6) DESC,
+                                        c.cent_id) AS rn
+                    FROM emb e CROSS JOIN cent c) WHERE rn = 1),
+            q AS (SELECT vec_id AS q_id, v AS q_vec FROM emb WHERE vec_id % 50 = 0),
+            probe AS (
+                SELECT q_id, q_vec, cent_id FROM (
+                    SELECT q.q_id, q.q_vec, c.cent_id,
+                           ROW_NUMBER() OVER (PARTITION BY q.q_id
+                               ORDER BY ROUND(list_cosine_similarity(q.q_vec, c.cent_vec), 6) DESC,
+                                        c.cent_id) AS rn
+                    FROM q CROSS JOIN cent c) WHERE rn <= 4),
+            scored AS (
+                SELECT p.q_id, a.vec_id AS neighbor_id,
+                       ROUND(list_cosine_similarity(a.v, p.q_vec), 6) AS cosine
+                FROM probe p JOIN assign a USING (cent_id)
+                WHERE a.vec_id != p.q_id)
+            SELECT q_id, neighbor_id, cosine, rank FROM (
+                SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, neighbor_id ASC) AS rank
+                FROM scored
+            ) WHERE rank <= 5
+        """
 
 
 def _q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1675,6 +2083,72 @@ def _q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.pq_topk(emb, queries, m=16, n_codes=16, k=5, rerank=40).select(
         "q_id", "neighbor_id", "approx_dist", "exact_dist", "rank"
     )
+
+
+_ANN_PQ_TOPK_ORACLE = """
+            WITH emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+            cb AS (
+                SELECT v, ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR))) AS code
+                FROM (SELECT vec_id, v FROM emb
+                      ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT 16)),
+            mm AS (SELECT unnest(range(0, 16)) AS m),
+            cbm AS (
+                SELECT code, CAST(m AS INT) AS m,
+                       list_slice(v, CAST(m*4 + 1 AS INT), CAST(m*4 + 4 AS INT)) AS cs
+                FROM cb CROSS JOIN mm),
+            ce AS (
+                SELECT e.vec_id, c.m, c.code,
+                       list_slice(e.v, c.m*4 + 1, c.m*4 + 4) AS es,
+                       ROUND(list_reduce(list_transform(range(1, 5),
+                           i -> (es[CAST(i AS INT)] - c.cs[CAST(i AS INT)])
+                                * (es[CAST(i AS INT)] - c.cs[CAST(i AS INT)])),
+                           (a, b) -> a + b), 6) AS dist
+                FROM emb e CROSS JOIN cbm c),
+            codes AS (
+                SELECT vec_id, m, code FROM (
+                    SELECT vec_id, m, code,
+                           ROW_NUMBER() OVER (PARTITION BY vec_id, m
+                               ORDER BY dist, code) AS rn
+                    FROM ce) WHERE rn = 1),
+            carr AS (SELECT vec_id, list(code ORDER BY m) AS codes
+                     FROM codes GROUP BY vec_id),
+            q AS (SELECT vec_id AS q_id, v AS qv FROM emb WHERE vec_id % 50 = 0),
+            qe AS (
+                SELECT q.q_id, c.m, c.code,
+                       list_slice(q.qv, c.m*4 + 1, c.m*4 + 4) AS qs,
+                       ROUND(list_reduce(list_transform(range(1, 5),
+                           i -> (qs[CAST(i AS INT)] - c.cs[CAST(i AS INT)])
+                                * (qs[CAST(i AS INT)] - c.cs[CAST(i AS INT)])),
+                           (a, b) -> a + b), 6) AS dist
+                FROM q CROSS JOIN cbm c),
+            qarr AS (SELECT q_id, list(dist ORDER BY m, code) AS qd
+                     FROM qe GROUP BY q_id),
+            adc AS (
+                SELECT qarr.q_id, carr.vec_id AS neighbor_id,
+                       ROUND(list_reduce(list_transform(range(1, 17),
+                           i -> qd[CAST((i-1)*16 + codes[CAST(i AS INT)] AS INT)]),
+                           (a, b) -> a + b), 6) AS approx_dist
+                FROM carr CROSS JOIN qarr WHERE carr.vec_id != qarr.q_id),
+            short AS (
+                SELECT q_id, neighbor_id, approx_dist FROM (
+                    SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
+                        ORDER BY approx_dist ASC, neighbor_id ASC) AS rn
+                    FROM adc) WHERE rn <= 40),
+            ex AS (
+                SELECT s.q_id, s.neighbor_id, s.approx_dist,
+                       ROUND(list_reduce(list_transform(range(1, 65),
+                           i -> (e.v[CAST(i AS INT)] - q.qv[CAST(i AS INT)])
+                                * (e.v[CAST(i AS INT)] - q.qv[CAST(i AS INT)])),
+                           (a, b) -> a + b), 6) AS exact_dist
+                FROM short s
+                JOIN emb e ON e.vec_id = s.neighbor_id
+                JOIN q ON q.q_id = s.q_id)
+            SELECT q_id, neighbor_id, approx_dist, exact_dist, rank FROM (
+                SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
+                    ORDER BY exact_dist ASC, neighbor_id ASC) AS rank
+                FROM ex
+            ) WHERE rank <= 5
+        """
 
 
 _TRAINER_KW = dict(m=16, n_codes=16, dim=64, iters=20, seed=11)
@@ -1767,6 +2241,99 @@ def _q_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("q_id", "neighbor_id", "approx_dist", "exact_dist", "rank")
 
 
+_ANN_IVFPQ_TOPK_ORACLE = """
+            WITH emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+            cent AS (
+                SELECT vec_id AS cent_id, v AS cv FROM emb
+                ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT 16),
+            assign AS (
+                SELECT vec_id, cent_id,
+                       list_transform(range(1, 65),
+                           i -> v[CAST(i AS INT)] - cv[CAST(i AS INT)]) AS r
+                FROM (
+                    SELECT e.vec_id, e.v, c.cent_id, c.cv,
+                           ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
+                               ROUND(list_reduce(list_transform(range(1, 65),
+                                   i -> (e.v[CAST(i AS INT)] - c.cv[CAST(i AS INT)])
+                                        * (e.v[CAST(i AS INT)] - c.cv[CAST(i AS INT)])),
+                                   (a, b) -> a + b), 6) ASC, c.cent_id ASC) AS rn
+                    FROM emb e CROSS JOIN cent c) WHERE rn = 1),
+            cb AS (
+                SELECT r, ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR))) AS code
+                FROM (SELECT a.vec_id, a.r FROM assign a
+                      ANTI JOIN cent ON a.vec_id = cent.cent_id
+                      ORDER BY md5(CAST(a.vec_id AS VARCHAR)) LIMIT 16)),
+            mm AS (SELECT CAST(unnest(range(0, 16)) AS INT) AS m),
+            cbm AS (SELECT code, m, list_slice(r, m*4 + 1, m*4 + 4) AS cs
+                    FROM cb CROSS JOIN mm),
+            ce AS (
+                SELECT a.vec_id, a.cent_id, c.m, c.code,
+                       list_slice(a.r, c.m*4 + 1, c.m*4 + 4) AS es,
+                       ROUND(list_reduce(list_transform(range(1, 5),
+                           i -> (es[CAST(i AS INT)] - c.cs[CAST(i AS INT)])
+                                * (es[CAST(i AS INT)] - c.cs[CAST(i AS INT)])),
+                           (a2, b) -> a2 + b), 6) AS dist
+                FROM assign a CROSS JOIN cbm c),
+            codes AS (
+                SELECT vec_id, cent_id, m, code FROM (
+                    SELECT vec_id, cent_id, m, code,
+                           ROW_NUMBER() OVER (PARTITION BY vec_id, m
+                               ORDER BY dist, code) AS rn
+                    FROM ce) WHERE rn = 1),
+            carr AS (SELECT vec_id, cent_id, list(code ORDER BY m) AS codes
+                     FROM codes GROUP BY vec_id, cent_id),
+            q AS (SELECT vec_id AS q_id, v AS qv FROM emb WHERE vec_id % 50 = 0),
+            probe AS (
+                SELECT q_id, cent_id,
+                       list_transform(range(1, 65),
+                           i -> qv[CAST(i AS INT)] - cv[CAST(i AS INT)]) AS qr
+                FROM (
+                    SELECT q.q_id, q.qv, c.cent_id, c.cv,
+                           ROW_NUMBER() OVER (PARTITION BY q.q_id ORDER BY
+                               ROUND(list_reduce(list_transform(range(1, 65),
+                                   i -> (q.qv[CAST(i AS INT)] - c.cv[CAST(i AS INT)])
+                                        * (q.qv[CAST(i AS INT)] - c.cv[CAST(i AS INT)])),
+                                   (a, b) -> a + b), 6) ASC, c.cent_id ASC) AS rn
+                    FROM q CROSS JOIN cent c) WHERE rn <= 4),
+            qe AS (
+                SELECT p.q_id, p.cent_id, c.m, c.code,
+                       list_slice(p.qr, c.m*4 + 1, c.m*4 + 4) AS qs,
+                       ROUND(list_reduce(list_transform(range(1, 5),
+                           i -> (qs[CAST(i AS INT)] - c.cs[CAST(i AS INT)])
+                                * (qs[CAST(i AS INT)] - c.cs[CAST(i AS INT)])),
+                           (a2, b) -> a2 + b), 6) AS dist
+                FROM probe p CROSS JOIN cbm c),
+            qarr AS (SELECT q_id, cent_id, list(dist ORDER BY m, code) AS qd
+                     FROM qe GROUP BY q_id, cent_id),
+            adc AS (
+                SELECT qa.q_id, ca.vec_id AS neighbor_id,
+                       ROUND(list_reduce(list_transform(range(1, 17),
+                           i -> qd[CAST((i-1)*16 + codes[CAST(i AS INT)] AS INT)]),
+                           (a, b) -> a + b), 6) AS approx_dist
+                FROM carr ca JOIN qarr qa USING (cent_id)
+                WHERE ca.vec_id != qa.q_id),
+            short AS (
+                SELECT q_id, neighbor_id, approx_dist FROM (
+                    SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
+                        ORDER BY approx_dist ASC, neighbor_id ASC) AS rn
+                    FROM adc) WHERE rn <= 40),
+            ex AS (
+                SELECT s.q_id, s.neighbor_id, s.approx_dist,
+                       ROUND(list_reduce(list_transform(range(1, 65),
+                           i -> (e.v[CAST(i AS INT)] - q.qv[CAST(i AS INT)])
+                                * (e.v[CAST(i AS INT)] - q.qv[CAST(i AS INT)])),
+                           (a, b) -> a + b), 6) AS exact_dist
+                FROM short s
+                JOIN emb e ON e.vec_id = s.neighbor_id
+                JOIN q ON q.q_id = s.q_id)
+            SELECT q_id, neighbor_id, approx_dist, exact_dist, rank FROM (
+                SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
+                    ORDER BY exact_dist ASC, neighbor_id ASC) AS rank
+                FROM ex
+            ) WHERE rank <= 5
+        """
+
+
 _TRAINED_MODEL_CACHE: dict = {}
 
 
@@ -1795,6 +2362,8 @@ def _trained_models() -> dict:
     return _TRAINED_MODEL_CACHE
 
 
+# trained-quantizer oracles: kernel-mirror models embedded as VALUES
+# (k-means itself is iterative; the MODEL is deterministic — VERDICT r5 #1)
 def _ann_pq_trained_oracle() -> str:
     """ann_pq_topk's oracle with the md5-sample codebook CTE replaced by
     the TRAINED centers as VALUES — everything downstream (encode, ADC,
@@ -1985,6 +2554,25 @@ def _q_ann_ivfpq_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# incremental growth (round 6): the SAME IVFADC SQL with the model CTEs
+# (centroid sample + residual-codebook sample) restricted to the even
+# half — frozen-model append means encode-over-all, model-from-A.
+# Derived by targeted rewrite of the one-shot oracle so the two can
+# never drift; the asserts fail loudly if the base SQL is reshaped.
+def _ann_ivfpq_appended_oracle() -> str:
+    base = _ANN_IVFPQ_TOPK_ORACLE
+    cent_old = "SELECT vec_id AS cent_id, v AS cv FROM emb\n"
+    cb_old = "ANTI JOIN cent ON a.vec_id = cent.cent_id\n"
+    assert base.count(cent_old) == 1 and base.count(cb_old) == 1, "ivfpq oracle reshaped"
+    return base.replace(
+        cent_old, "SELECT vec_id AS cent_id, v AS cv FROM emb WHERE vec_id % 2 = 0\n"
+    ).replace(
+        cb_old,
+        "ANTI JOIN cent ON a.vec_id = cent.cent_id\n"
+        "                      WHERE a.vec_id % 2 = 0\n",
+    )
+
+
 def _q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (round 6): cluster embeddings into 16 md5-sampled cells,
     prune near-dups (cosine ≥ 0.4 on this fixture's geometry) within cells,
@@ -2034,6 +2622,15 @@ def _semdedup_oracle(threshold: float = 0.4, n_centroids: int = 16) -> str:
 
 def _q_embedding_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.embedding_dup_pairs(_emb(spark, sf_dir, parallel=True), threshold=0.4)
+
+
+_EMBEDDING_DUP_PAIRS_ORACLE = """
+            WITH emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)
+            SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+                   ROUND(list_cosine_similarity(a.v, b.v), 6) AS cosine
+            FROM emb a JOIN emb b ON a.vec_id < b.vec_id
+            WHERE ROUND(list_cosine_similarity(a.v, b.v), 6) >= 0.4
+        """
 
 
 def _q_embedding_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2122,6 +2719,34 @@ def _q_doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     return textstats.quality_features(_t(spark, sf_dir, "documents"), "doc_id", "text")
 
 
+def _doc_quality_oracle() -> str:
+    return f"""
+            WITH t AS (
+                SELECT doc_id, text, {_TOKS} AS toks FROM documents
+            )
+            SELECT doc_id,
+                   length(text) AS n_chars,
+                   len(toks) AS n_tokens,
+                   CASE WHEN length(text) > 0
+                        THEN ROUND(length(regexp_replace(text, '[^.!?,;:]', '', 'g')) / length(text), 6)
+                        ELSE 0.0 END AS punct_ratio,
+                   CASE WHEN len(toks) > 0
+                        THEN ROUND(len(list_filter(toks, x -> list_contains(['the','and','with','from','that','this','for','are','was'], x))) / len(toks), 6)
+                        ELSE 0.0 END AS stopword_ratio,
+                   CASE WHEN len(toks) > 0 THEN ROUND(length(text) / len(toks), 6) ELSE 0.0 END AS mean_token_len,
+                   ROUND(
+                     (CASE WHEN len(toks) >= 20 AND len(toks) <= 100000 THEN CAST(0.4 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END)
+                   + (CASE WHEN length(text) > 0
+                           AND ROUND(length(regexp_replace(text, '[^.!?,;:]', '', 'g')) / length(text), 6) > 0.001
+                           AND ROUND(length(regexp_replace(text, '[^.!?,;:]', '', 'g')) / length(text), 6) < 0.2
+                           THEN CAST(0.3 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END)
+                   + (CASE WHEN len(toks) > 0
+                           AND ROUND(len(list_filter(toks, x -> list_contains(['the','and','with','from','that','this','for','are','was'], x))) / len(toks), 6) > 0.05
+                           THEN CAST(0.3 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END), 6) AS quality_score
+            FROM t
+        """
+
+
 def _q_classifier_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEARNED quality scoring (round 6 — the CCNet/GPT-3 wiki-vs-crawl
     classifier tier): a deterministic offline-trained hashed-BoW logistic
@@ -2164,6 +2789,9 @@ def _classifier_ctes(rel: str) -> str:
                 FROM clf_toks t LEFT JOIN clf_agg a ON a.doc_id = t.doc_id)"""
 
 
+# learned quality classifier: the deterministic trainer re-runs at
+# oracle-build time; only the WEIGHTS embed as VALUES — the scoring
+# math is full SQL over the documents view
 def _classifier_quality_oracle() -> str:
     return f"""
         WITH {_classifier_ctes("documents")}
@@ -2182,6 +2810,8 @@ def _q_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# LM perplexity tier: training is counting — the whole pipeline
+# (deterministic split, bigram counts, smoothing, scoring) is plain SQL
 def _lm_perplexity_oracle() -> str:
     return f"""
         WITH toks AS (SELECT doc_id, {_NTOKS} AS t FROM documents),
@@ -2229,6 +2859,24 @@ def _q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return weighted_sample(docs, "doc_id", "n_chars", 100, seed=5, base_hash="md5")
 
 
+# weighted sampling: the identical draw + race-key expression; ties
+# after the 6-round break on doc_id in BOTH engines
+_WEIGHTED_SAMPLE_DOCS_ORACLE = """
+        WITH wd AS (
+            SELECT doc_id, source, n_chars,
+                   CAST(concat('0x', substr(md5(concat(CAST(doc_id AS VARCHAR), '#5')),
+                                            1, 15)) AS BIGINT) % 1048576 AS d
+            FROM documents
+            WHERE n_chars IS NOT NULL AND CAST(n_chars AS DOUBLE) > 0)
+        SELECT doc_id, source, n_chars,
+               ROUND(-ln(CAST(d + 1 AS DOUBLE) / 1048577.0)
+                     / CAST(n_chars AS DOUBLE), 6) AS wkey
+        FROM wd
+        ORDER BY wkey, doc_id
+        LIMIT 100
+    """
+
+
 def _q_ppl_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet's head/middle/tail cut (round 6): per-language equal-rank
     perplexity terciles over the lm_perplexity scores — rank cuts on the
@@ -2242,6 +2890,8 @@ def _q_ppl_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id", "lang", "ppl", "bucket", "tier")
 
 
+# CCNet tercile cut: rank cuts over the distinct value table — integer
+# compares only, so the SQL mirror is exact (no quantile interpolation)
 def _ppl_buckets_oracle() -> str:
     return f"""
         WITH lmq AS ({_lm_perplexity_oracle()}),
@@ -2291,6 +2941,8 @@ def _draw_sql(seed: int) -> str:
     )
 
 
+# importance resampling over the learned score: oracle wraps the
+# classifier SQL and reproduces the deterministic md5 draw exactly
 def _classifier_resample_oracle() -> str:
     draw = _draw_sql(7)
     return f"""
@@ -2305,8 +2957,39 @@ def _q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     return textstats.lang_id(_tp(spark, sf_dir, "documents"), "doc_id", "text")
 
 
+def _lang_id_oracle() -> str:
+    return f"""
+            WITH t AS (
+                SELECT doc_id, {_TOKS} AS toks FROM documents
+            ), s AS (
+                SELECT doc_id,
+                       len(list_filter(toks, x -> list_contains(['the','and','with','from','that'], x))) AS score_en,
+                       len(list_filter(toks, x -> list_contains(['und','der','nicht','mit','aber'], x))) AS score_de,
+                       len(list_filter(toks, x -> list_contains(['les','dans','avec','pour','mais'], x))) AS score_fr,
+                       len(list_filter(toks, x -> list_contains(['los','para','pero','como','donde'], x))) AS score_es
+                FROM t
+            )
+            SELECT doc_id, score_en, score_de, score_fr, score_es,
+                   CASE WHEN greatest(score_en, score_de, score_fr, score_es) = 0 THEN 'und'
+                        WHEN score_en = greatest(score_en, score_de, score_fr, score_es) THEN 'en'
+                        WHEN score_de = greatest(score_en, score_de, score_fr, score_es) THEN 'de'
+                        WHEN score_fr = greatest(score_en, score_de, score_fr, score_es) THEN 'fr'
+                        ELSE 'es' END AS lang_guess
+            FROM s
+        """
+
+
 def _q_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return textstats.token_counts(_t(spark, sf_dir, "documents"), "doc_id", "text")
+
+
+def _token_counts_oracle() -> str:
+    return f"""
+            SELECT doc_id,
+                   len({_TOKS}) AS ws_tokens,
+                   len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS regex_tokens
+            FROM documents
+        """
 
 
 # ------------------------------------------------- BPE subword tier (r6)
@@ -2347,6 +3030,10 @@ def _bpe_model() -> dict:
     return _BPE_CACHE
 
 
+def _bpe_counts_cte() -> str:
+    return _values_cte("cnt", ["doc_id", "bpe_tokens"], _bpe_model()["counts"])
+
+
 def _bpe_spark_merges(spark: SparkSession):
     from batch_doc_vqa_spark.operators.subword import learn_bpe
     from batch_doc_vqa_spark.sources.bpe_fixture import (
@@ -2370,6 +3057,17 @@ def _q_token_counts_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "bpe_tokens")
 
 
+# BPE subword tier: kernel outputs as VALUES (byte-identity per doc);
+# the packing layout is re-derived in SQL from the embedded counts
+def _token_counts_bpe_oracle() -> str:
+    return f"""
+        WITH {_bpe_counts_cte()}
+        SELECT CAST(doc_id AS BIGINT) AS doc_id,
+               CAST(bpe_tokens AS INT) AS bpe_tokens
+        FROM cnt
+    """
+
+
 def _q_chunk_documents_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Context-window chunking in MODEL-token units via
     chunk_documents(tokenizer='bpe') — same stride semantics as the ws
@@ -2386,6 +3084,15 @@ def _q_chunk_documents_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _chunk_documents_bpe_oracle() -> str:
+    return f"""
+        WITH {_values_cte("ch", ["doc_id", "chunk_idx", "n_tokens", "chunk_md5"], _bpe_model()["chunks"])}
+        SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(chunk_idx AS INT) AS chunk_idx,
+               CAST(n_tokens AS INT) AS n_tokens, chunk_md5
+        FROM ch
+    """
+
+
 def _q_pack_sequences_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The packing layout denominated in BPE tokens: bpe_token_counts →
     pack_sequences (distributed prefix sum) — budgets/context lengths in
@@ -2400,21 +3107,113 @@ def _q_pack_sequences_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _pack_sequences_bpe_oracle() -> str:
+    return f"""
+        WITH {_bpe_counts_cte()},
+        off AS (
+            SELECT doc_id, bpe_tokens,
+                   CAST(COALESCE(SUM(bpe_tokens) OVER (ORDER BY doc_id
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
+                       AS start_offset
+            FROM cnt)
+        SELECT CAST(doc_id AS BIGINT) AS doc_id,
+               CAST(bpe_tokens AS INT) AS bpe_tokens, start_offset,
+               CAST((start_offset - (start_offset % 64)) // 64 AS BIGINT) AS seq_id,
+               CAST(((start_offset + GREATEST(bpe_tokens - 1, 0))
+                     - ((start_offset + GREATEST(bpe_tokens - 1, 0)) % 64)) // 64 AS BIGINT)
+                   AS end_seq_id,
+               CAST(((start_offset + GREATEST(bpe_tokens - 1, 0))
+                     - ((start_offset + GREATEST(bpe_tokens - 1, 0)) % 64)) // 64 AS BIGINT)
+                   > CAST((start_offset - (start_offset % 64)) // 64 AS BIGINT)
+                   AS crosses_boundary
+        FROM off
+    """
+
+
 def _q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return textstats.fingerprint(_t(spark, sf_dir, "documents"), "doc_id", "text")
+
+
+_FINGERPRINT_ORACLE = """
+            SELECT doc_id,
+                   md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp_md5,
+                   sha256(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp_sha256
+            FROM documents
+        """
 
 
 def _q_lang_id_trigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     return textstats.lang_id_trigram(_tp(spark, sf_dir, "documents"), "doc_id", "text")
 
 
+def _lang_trigram_oracle() -> str:
+    from batch_doc_vqa_spark.operators.textstats import _TRIGRAM_PROFILES
+
+    def hits(grams: list[str]) -> str:
+        parts = " + ".join(
+            f"(length(t) - length(replace(t, '{g}', ''))) / {len(g)}" for g in grams
+        )
+        return f"CAST({parts} AS BIGINT)"
+
+    score_cols = ",\n               ".join(
+        f"{hits(g)} AS tri_{lang}" for lang, g in _TRIGRAM_PROFILES.items()
+    )
+    langs = list(_TRIGRAM_PROFILES)
+    g4 = ", ".join(f"tri_{lg}" for lg in langs)
+    guess = "CASE WHEN greatest({g}) = 0 THEN 'und' ".format(g=g4)
+    for lang in langs[:-1]:
+        guess += f"WHEN tri_{lang} = greatest({g4}) THEN '{lang}' "
+    guess += f"ELSE '{langs[-1]}' END"
+    return f"""
+        WITH lowered AS (SELECT doc_id, lower(text) AS t FROM documents),
+        s AS (SELECT doc_id,
+               {score_cols}
+              FROM lowered)
+        SELECT doc_id, {g4}, {guess} AS lang_guess FROM s
+    """
+
+
 def _q_corpus_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return textstats.corpus_profile(_t(spark, sf_dir, "documents"), "doc_id", "text")
+
+
+def _corpus_profile_oracle() -> str:
+    return f"""
+            SELECT COUNT(*) AS n_docs,
+                   COUNT(DISTINCT md5(text)) AS n_distinct,
+                   ROUND(CAST(SUM(CAST(length(text) AS DECIMAL(28,0))) AS DOUBLE) / COUNT(*), 6) AS mean_chars,
+                   CAST(MEDIAN(length(text)) AS DOUBLE) AS median_chars,
+                   CAST(SUM(len({_TOKS})) AS BIGINT) AS total_ws_tokens
+            FROM documents
+        """
 
 
 def _q_trigram_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perplexity-proxy quality signal: per-doc character-trigram entropy."""
     return textstats.char_trigram_entropy(_tp(spark, sf_dir, "documents"), "doc_id", "text")
+
+
+# H = log2(n) − Σ c·log2(c) / n over the doc's own trigram counts —
+# the one-pass algebraic form; round(6) absorbs double-sum ordering
+_TRIGRAM_ENTROPY_ORACLE = """
+            WITH lowered AS (SELECT doc_id, lower(text) AS t FROM documents),
+            tri AS (
+              SELECT doc_id,
+                     unnest(list_transform(range(1, greatest(length(t) - 2, 0) + 1),
+                            i -> substr(t, CAST(i AS INT), 3))) AS g
+              FROM lowered
+            ), c AS (
+              SELECT doc_id, g, COUNT(*) AS c FROM tri GROUP BY 1, 2
+            ), e AS (
+              SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n,
+                     SUM(c * log2(c)) AS clogc, COUNT(*) AS dt
+              FROM c GROUP BY 1
+            )
+            SELECT d.doc_id, COALESCE(e.n, 0) AS n_trigrams,
+                   COALESCE(e.dt, 0) AS distinct_trigrams,
+                   COALESCE(ROUND(log2(e.n) - e.clogc / e.n, 6), 0.0) AS trigram_entropy
+            FROM documents d LEFT JOIN e USING (doc_id)
+        """
 
 
 def _q_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2423,6 +3222,45 @@ def _q_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     return textstats.repetition_scores(
         _t(spark, sf_dir, "documents"), "doc_id", "text", min_tokens=40
     )
+
+
+# reference-exact assess_repetition (inference.py:69-96): \w is
+# ASCII-only in BOTH Java and RE2 regex engines, ratios are exact
+# integer-over-integer double divisions, so values match bit-for-bit
+_REPETITION_SCORES_ORACLE = r"""
+            WITH t AS (
+              SELECT doc_id, regexp_extract_all(lower(text), '\w+|[^\s\w]') AS tk FROM documents
+            ), b AS (
+              SELECT doc_id, tk, len(tk) AS n FROM t
+            ), cons AS (
+              SELECT doc_id, n,
+                CASE WHEN n > 1
+                     THEN CAST(len(list_filter(range(1, n), i -> tk[i] = tk[i+1])) AS DOUBLE) / (n - 1)
+                     ELSE CAST(0 AS DOUBLE) END AS consec
+              FROM b
+            ), ex AS (
+              SELECT doc_id, unnest(tk) AS tok FROM b
+            ), cnt AS (
+              SELECT doc_id, tok, COUNT(*) AS c FROM ex GROUP BY 1, 2
+            ), agg AS (
+              SELECT doc_id, MAX(c) AS mc, COUNT(*) AS uniq FROM cnt GROUP BY 1
+            ), s AS (
+              SELECT co.doc_id, co.n, co.consec,
+                     CAST(a.mc AS DOUBLE) / co.n AS rep,
+                     CAST(a.uniq AS DOUBLE) / co.n AS div,
+                     (co.n >= 40 AND a.mc IS NOT NULL) AS elig
+              FROM cons co LEFT JOIN agg a USING (doc_id)
+            )
+            SELECT doc_id, CAST(n AS INT) AS n_tokens,
+                   CASE WHEN elig THEN ROUND(rep, 6) ELSE 0.0 END AS repetition_ratio,
+                   CASE WHEN elig THEN ROUND(div, 6) ELSE 0.0 END AS diversity_ratio,
+                   CASE WHEN elig THEN ROUND(consec, 6) ELSE 0.0 END AS consecutive_repeats,
+                   CASE WHEN elig THEN ROUND(greatest(rep, 1.0 - div, consec), 6) ELSE 0.0 END AS repetition_score,
+                   CASE WHEN elig THEN (greatest(rep, 1.0 - div, consec) >= 0.22
+                                        OR (div <= 0.35 AND rep >= 0.18))
+                        ELSE FALSE END AS is_repetitive
+            FROM s
+        """
 
 
 def _q_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2438,6 +3276,113 @@ def _q_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Independent SQL reimplementation of winnowing (Schleimer et al. 2003):
+# per-char unnest -> k=5 polynomial rolling hash mod 2^64 in HUGEINT
+# (exact literal powers of 1000003; ** would go through DOUBLE) ->
+# w=4 sliding windows, rightmost-min pick, dedup consecutive picks.
+_WINNOW_FINGERPRINTS_ORACLE = """
+            WITH base AS (
+              SELECT doc_id, lower(text) AS t, length(text) AS len FROM documents
+            ),
+            codes AS (
+              SELECT doc_id, u.i, CAST(unicode(substr(t, CAST(u.i AS INT), 1)) AS HUGEINT) AS c
+              FROM base, unnest(range(1, len + 1)) u(i)
+            ),
+            h0 AS (
+              SELECT doc_id, i,
+                ((c * CAST('1000012000054000108000081' AS HUGEINT)) % CAST('18446744073709551616' AS HUGEINT)
+                 + (lead(c,1) OVER w * CAST('1000009000027000027' AS HUGEINT)) % CAST('18446744073709551616' AS HUGEINT)
+                 + (lead(c,2) OVER w * CAST('1000006000009' AS HUGEINT)) % CAST('18446744073709551616' AS HUGEINT)
+                 + (lead(c,3) OVER w * CAST('1000003' AS HUGEINT)) % CAST('18446744073709551616' AS HUGEINT)
+                 + lead(c,4) OVER w) % CAST('18446744073709551616' AS HUGEINT) AS hm
+              FROM codes WINDOW w AS (PARTITION BY doc_id ORDER BY i)
+            ),
+            h1 AS (
+              SELECT doc_id, i, hm, count(*) OVER (PARTITION BY doc_id) AS n
+              FROM h0 WHERE hm IS NOT NULL
+            ),
+            h AS (
+              SELECT doc_id, i, n,
+                CAST(CASE WHEN hm >= CAST('9223372036854775808' AS HUGEINT)
+                          THEN hm - CAST('18446744073709551616' AS HUGEINT) ELSE hm END AS BIGINT) AS h
+              FROM h1
+            ),
+            win AS (
+              SELECT doc_id, i AS ws,
+                h AS h0_, lead(h,1) OVER w AS h1_, lead(h,2) OVER w AS h2_, lead(h,3) OVER w AS h3_
+              FROM h WINDOW w AS (PARTITION BY doc_id ORDER BY i)
+            ),
+            picks AS (
+              SELECT doc_id, ws,
+                CASE WHEN h3_ <= least(h0_, h1_, h2_) THEN 3
+                     WHEN h2_ <= least(h0_, h1_) THEN 2
+                     WHEN h1_ <= h0_ THEN 1 ELSE 0 END AS rel
+              FROM win WHERE h3_ IS NOT NULL
+            ),
+            kept AS (
+              SELECT doc_id, ws, ws + rel AS gpos,
+                lag(ws + rel) OVER (PARTITION BY doc_id ORDER BY ws) AS prev_gpos
+              FROM picks
+            ),
+            sel AS (
+              -- n > 4 keeps this branch disjoint from "short": docs with
+              -- exactly w=4 k-gram hashes have one valid window here AND match
+              -- the kernel's n<=w single-min path — without the guard both
+              -- branches would emit and the oracle double-counts such docs
+              SELECT k2.doc_id, k2.ws, h.h
+              FROM kept k2 JOIN h ON h.doc_id = k2.doc_id AND h.i = k2.gpos
+              WHERE (prev_gpos IS NULL OR gpos != prev_gpos) AND h.n > 4
+            ),
+            short AS (
+              SELECT doc_id, min(h) AS h FROM h WHERE n <= 4 GROUP BY doc_id
+            ),
+            fps AS (
+              SELECT doc_id, string_agg(CAST(h AS VARCHAR), ',' ORDER BY ws) AS fps,
+                     count(*) AS n_fp
+              FROM sel GROUP BY doc_id
+              UNION ALL
+              SELECT doc_id, CAST(h AS VARCHAR), 1 FROM short
+            )
+            SELECT b.doc_id, CAST(COALESCE(f.n_fp, 0) AS INT) AS n_fp,
+                   COALESCE(f.fps, '') AS fps
+            FROM base b LEFT JOIN fps f USING (doc_id)
+        """
+
+
+# DuckDB mirror of matching.surname_candidates (reference
+# string_matching.py:46-96): last two tokens individually for 3+-token names,
+# else the last token; per-token variants = token, hyphen parts, hyphen-free
+# concatenation; lower + dedup. Only the candidate SET matters: the oracles
+# use just the min pair distance.
+_CAND = """list_distinct(list_transform(
+      list_filter(
+        flatten(list_transform(
+          CASE WHEN len(toks) >= 3 THEN toks[len(toks)-1:len(toks)]
+               WHEN len(toks) >= 1 THEN [toks[len(toks)]]
+               ELSE CAST([] AS VARCHAR[]) END,
+          t -> CASE WHEN contains(t, '-')
+                    THEN list_concat(list_concat([t],
+                             list_filter(string_split(t, '-'), p -> p != '')),
+                         [array_to_string(string_split(t, '-'), '')])
+                    ELSE [t] END)),
+        x -> x != ''),
+      x -> lower(x)))"""
+
+_SPLIT_NAME = r"list_filter(string_split(regexp_replace(trim({col}), '\s+', ' ', 'g'), ' '), x -> x != '')"
+
+
+def _truth_cte() -> str:
+    return _values_cte(
+        "truth", ["doc", "student_id", "student_full_name"], matching_fixture.truth_rows()
+    )
+
+
+def _extracted_cte() -> str:
+    return _values_cte(
+        "extracted", ["doc", "page", "llm_id", "llm_fullname"], matching_fixture.extracted_rows()
+    )
+
+
 def _q_matching_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth = matching_fixture.truth_df(spark)
     extracted = matching_fixture.extracted_df(spark)
@@ -2447,11 +3392,64 @@ def _q_matching_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _matching_pipeline_oracle() -> str:
+    return f"""
+            WITH {_truth_cte()},
+            {_extracted_cte()},
+            tc0 AS (SELECT *, {_SPLIT_NAME.format(col='student_full_name')} AS toks FROM truth),
+            tc AS (SELECT doc, student_id, {_CAND} AS ct FROM tc0),
+            ec0 AS (SELECT *, {_SPLIT_NAME.format(col='llm_fullname')} AS toks FROM extracted),
+            ec AS (SELECT doc, llm_id, {_CAND} AS ce FROM ec0),
+            pairs AS (
+              SELECT e.doc, t.student_id,
+                     levenshtein(lower(e.llm_id), lower(t.student_id)) AS id_distance,
+                     list_min(flatten(list_transform(e.ce,
+                         a -> list_transform(t.ct, b -> levenshtein(a, b))))) AS lastname_distance
+              FROM ec e CROSS JOIN tc t)
+            SELECT doc, student_id, MIN(id_distance) AS id_distance,
+                   MIN(lastname_distance) AS lastname_distance,
+                   (MIN(id_distance) <= 3 OR MIN(lastname_distance) = 0) AS found
+            FROM pairs WHERE id_distance <= 3 OR lastname_distance = 0
+            GROUP BY doc, student_id
+        """
+
+
 def _q_digit_accuracy_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     dist = matching.pair_distances(
         matching_fixture.extracted_df(spark), matching_fixture.truth_df(spark)
     )
     return matching.digit_accuracy_chain(dist)
+
+
+# reference table_generator.py:700-730: best match per doc → digit
+# explode of matched (llm_id, student_id) → mean·100
+def _digit_accuracy_chain_oracle() -> str:
+    return f"""
+            WITH {_truth_cte()},
+            {_extracted_cte()},
+            tc0 AS (SELECT *, {_SPLIT_NAME.format(col='student_full_name')} AS toks FROM truth),
+            tc AS (SELECT doc, student_id, {_CAND} AS ct FROM tc0),
+            ec0 AS (SELECT *, {_SPLIT_NAME.format(col='llm_fullname')} AS toks FROM extracted),
+            ec AS (SELECT doc, llm_id, {_CAND} AS ce FROM ec0),
+            pairs AS (
+              SELECT e.doc, e.llm_id, t.student_id,
+                     levenshtein(lower(e.llm_id), lower(t.student_id)) AS id_distance,
+                     list_min(flatten(list_transform(e.ce,
+                         a -> list_transform(t.ct, b -> levenshtein(a, b))))) AS lastname_distance
+              FROM ec e CROSS JOIN tc t),
+            best AS (
+              SELECT doc, llm_id, student_id FROM (
+                SELECT *, ROW_NUMBER() OVER (
+                    PARTITION BY doc ORDER BY id_distance, lastname_distance, student_id) AS rn
+                FROM pairs) WHERE rn = 1),
+            dg AS (
+              SELECT substr(lpad(student_id, 8, '0'), CAST(u.i AS INT), 1) AS a,
+                     substr(lpad(llm_id, 8, '0'), CAST(u.i AS INT), 1) AS b
+              FROM best, unnest(range(1, 9)) u(i))
+            SELECT ROUND(AVG(CASE WHEN a = b THEN 1.0 ELSE 0.0 END) * 100, 6) AS digit_top1,
+                   COUNT(*) AS n_digits
+            FROM dg
+        """
 
 
 def _q_detection_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2461,6 +3459,30 @@ def _q_detection_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return matching.detection_stats(dist)
 
 
+def _detection_stats_oracle() -> str:
+    return f"""
+            WITH {_truth_cte()},
+            {_extracted_cte()},
+            tc0 AS (SELECT *, {_SPLIT_NAME.format(col='student_full_name')} AS toks FROM truth),
+            tc AS (SELECT doc, student_id, {_CAND} AS ct FROM tc0),
+            ec0 AS (SELECT *, {_SPLIT_NAME.format(col='llm_fullname')} AS toks FROM extracted),
+            ec AS (SELECT doc, llm_id, {_CAND} AS ce FROM ec0),
+            pairs AS (
+              SELECT e.doc,
+                     levenshtein(lower(e.llm_id), lower(t.student_id)) AS id_distance,
+                     list_min(flatten(list_transform(e.ce,
+                         a -> list_transform(t.ct, b -> levenshtein(a, b))))) AS lastname_distance
+              FROM ec e CROSS JOIN tc t),
+            per_doc AS (
+              SELECT doc, MIN(id_distance) AS min_id, MIN(lastname_distance) AS min_lastname
+              FROM pairs GROUP BY doc)
+            SELECT COUNT(*) AS n_docs,
+                   CAST(SUM(CASE WHEN min_id <= 3 OR min_lastname = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_detected,
+                   ROUND(AVG(CASE WHEN min_id <= 3 OR min_lastname = 0 THEN CAST(1 AS DOUBLE) ELSE CAST(0 AS DOUBLE) END) * 100, 6) AS docs_detected_pct
+            FROM per_doc
+        """
+
+
 def _q_accuracy_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     dist = matching.pair_distances(
         matching_fixture.extracted_df(spark), matching_fixture.truth_df(spark)
@@ -2468,20 +3490,131 @@ def _q_accuracy_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return matching.accuracy_stats(matching.best_match_per_doc(dist))
 
 
+def _accuracy_stats_oracle() -> str:
+    return f"""
+            WITH {_truth_cte()},
+            {_extracted_cte()},
+            tc0 AS (SELECT *, {_SPLIT_NAME.format(col='student_full_name')} AS toks FROM truth),
+            tc AS (SELECT doc, student_id, {_CAND} AS ct FROM tc0),
+            ec0 AS (SELECT *, {_SPLIT_NAME.format(col='llm_fullname')} AS toks FROM extracted),
+            ec AS (SELECT doc, llm_id, {_CAND} AS ce FROM ec0),
+            pairs AS (
+              SELECT e.doc,
+                     levenshtein(lower(e.llm_id), lower(t.student_id)) AS id_distance,
+                     list_min(flatten(list_transform(e.ce,
+                         a -> list_transform(t.ct, b -> levenshtein(a, b))))) AS lastname_distance
+              FROM ec e CROSS JOIN tc t),
+            best AS (
+              SELECT doc, id_distance, lastname_distance FROM (
+                SELECT *, ROW_NUMBER() OVER (PARTITION BY doc ORDER BY id_distance, lastname_distance) AS rn
+                FROM pairs) WHERE rn = 1)
+            SELECT ROUND(AVG(CASE WHEN id_distance = 0 THEN CAST(1 AS DOUBLE) ELSE CAST(0 AS DOUBLE) END) * 100, 6) AS id_top1,
+                   ROUND(AVG(id_distance), 6) AS id_avg_lev,
+                   ROUND(AVG(CASE WHEN lastname_distance = 0 THEN CAST(1 AS DOUBLE) ELSE CAST(0 AS DOUBLE) END) * 100, 6) AS lastname_top1,
+                   CAST(SUM(CASE WHEN id_distance = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_perfect_id
+            FROM best
+        """
+
+
+def _results_cte() -> str:
+    return _values_cte(
+        "results",
+        [
+            "run_name", "url", "prompt_tokens", "completion_tokens", "actual_cost",
+            "cost_is_estimated", "generation_id", "failure_marker", "elapsed_seconds",
+        ],
+        runs_fixture.result_rows(),
+    )
+
+
 def _q_cost_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return runs_analytics.cost_rollup(runs_fixture.results_df(spark))
+
+
+def _cost_rollup_oracle() -> str:
+    return f"""
+            WITH {_results_cte()},
+            agg AS (
+              SELECT run_name, COUNT(*) AS n_rows,
+                     CAST(SUM(prompt_tokens) AS BIGINT) AS prompt_tokens,
+                     CAST(SUM(completion_tokens) AS BIGINT) AS completion_tokens,
+                     CAST(SUM(CASE WHEN actual_cost IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_missing,
+                     CAST(SUM(CASE WHEN actual_cost IS NOT NULL AND cost_is_estimated THEN 1 ELSE 0 END) AS BIGINT) AS n_estimated,
+                     CAST(SUM(CASE WHEN actual_cost IS NOT NULL AND NOT cost_is_estimated AND actual_cost = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_zero,
+                     CAST(SUM(CASE WHEN actual_cost IS NOT NULL AND NOT cost_is_estimated AND actual_cost > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_precise,
+                     SUM(actual_cost) AS cost_sum
+              FROM results GROUP BY run_name)
+            SELECT run_name, n_rows, prompt_tokens, completion_tokens,
+                   n_missing, n_estimated, n_zero, n_precise,
+                   CASE WHEN n_missing = n_rows THEN 'unavailable'
+                        WHEN n_missing > 0 THEN 'partial'
+                        WHEN n_estimated > 0 THEN 'estimated'
+                        WHEN n_zero = n_rows THEN 'verified_zero'
+                        ELSE 'precise' END AS cost_status,
+                   CASE WHEN n_missing = 0 THEN ROUND(cost_sum, 8) END AS total_cost,
+                   CASE WHEN n_missing = 0 THEN ROUND(cost_sum / n_rows, 10) END AS cost_per_row
+            FROM agg
+        """
 
 
 def _q_parallel_runtime(spark: SparkSession, sf_dir: str) -> DataFrame:
     return runs_analytics.parallel_runtime(runs_fixture.results_df(spark))
 
 
+def _parallel_runtime_oracle() -> str:
+    return f"""
+            WITH {_results_cte()}
+            SELECT run_name, COUNT(*) AS n_rows,
+                   CAST(SUM(CASE WHEN elapsed_seconds IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_untimed,
+                   CASE WHEN SUM(CASE WHEN elapsed_seconds IS NULL THEN 1 ELSE 0 END) = 0
+                        THEN MAX(elapsed_seconds) END AS parallel_runtime_seconds
+            FROM results GROUP BY run_name
+        """
+
+
 def _q_failure_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return runs_analytics.failure_counts(runs_fixture.results_df(spark))
 
 
+def _failure_counts_oracle() -> str:
+    return f"""
+            WITH {_results_cte()}
+            SELECT run_name,
+                   CASE WHEN failure_marker = '' THEN 'ok' ELSE failure_marker END AS reason,
+                   COUNT(*) AS n
+            FROM results GROUP BY 1, 2
+        """
+
+
 def _q_cohort_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     return analytics.select_cohorts(runs_fixture.runs_df(spark))
+
+
+def _cohort_select_oracle() -> str:
+    runs_cte = _values_cte(
+        "runs",
+        [
+            "run_name", "model_key", "ts", "fingerprint", "runtime_seconds",
+            "digit_top1", "id_top1", "docs_detected",
+        ],
+        runs_fixture.runs_rows(),
+    )
+    return f"""
+            WITH {runs_cte},
+            anchors AS (
+              SELECT model_key, fingerprint, ts AS anchor_ts FROM (
+                SELECT *, ROW_NUMBER() OVER (PARTITION BY model_key ORDER BY ts DESC, run_name ASC) AS rn
+                FROM runs) WHERE rn = 1)
+            SELECT r.run_name, r.model_key, r.ts, r.fingerprint, r.runtime_seconds,
+                   r.digit_top1, r.id_top1, r.docs_detected, a.anchor_ts
+            FROM runs r
+            JOIN anchors a ON r.model_key = a.model_key AND r.fingerprint = a.fingerprint
+            WHERE epoch(a.anchor_ts) - epoch(r.ts) BETWEEN 0 AND 86400
+        """
+
+
+def _probs_cte() -> str:
+    return _values_cte("probs", ["doc", "pos", "probs", "truth_digit"], probs_fixture.probs_rows())
 
 
 def _q_predict_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2490,8 +3623,45 @@ def _q_predict_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _predict_ids_oracle() -> str:
+    cands_cte = _values_cte(
+        "cands", ["student_id"], [(probs_fixture.truth_id(42, d),) for d in range(32)]
+    )
+    cutoff = repr(probs_ops.DETECTION_CUTOFF)
+    return f"""
+            WITH {_probs_cte()},
+            {cands_cte},
+            cd AS (SELECT student_id, pos, CAST(substr(lpad(student_id, 8, '0'), CAST(pos AS INT) + 1, 1) AS INT) AS d
+                   FROM cands CROSS JOIN range(8) t(pos)),
+            j AS (SELECT p.doc, cd.student_id, list_extract(p.probs, cd.d + 1) AS pv
+                  FROM probs p JOIN cd ON p.pos = cd.pos),
+            s AS (SELECT doc, student_id,
+                         ROUND(CASE WHEN MAX(CASE WHEN pv <= 0 THEN 1 ELSE 0 END) = 1 THEN CAST(0 AS DOUBLE)
+                                    ELSE EXP(SUM(LN(CASE WHEN pv > 0 THEN pv END))) END, 12) AS score
+                  FROM j GROUP BY doc, student_id)
+            SELECT doc, student_id, score, score >= CAST('{cutoff}' AS DOUBLE) AS detected
+            FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY doc ORDER BY score DESC, student_id ASC) AS rn FROM s)
+            WHERE rn = 1
+        """
+
+
 def _q_topk_digit_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     return probs_ops.topk_digit_accuracy(probs_fixture.probs_df(spark))
+
+
+def _topk_digit_accuracy_oracle() -> str:
+    return f"""
+            WITH {_probs_cte()},
+            p2 AS (SELECT probs, truth_digit, list_extract(probs, truth_digit + 1) AS pt FROM probs),
+            r AS (SELECT len(list_filter([0,1,2,3,4,5,6,7,8,9],
+                       d -> list_extract(probs, d + 1) > pt
+                            OR (list_extract(probs, d + 1) = pt AND d < truth_digit))) AS rank
+                  FROM p2)
+            SELECT ROUND(AVG(CASE WHEN rank < 1 THEN CAST(1 AS DOUBLE) ELSE CAST(0 AS DOUBLE) END), 6) AS top1_acc,
+                   ROUND(AVG(CASE WHEN rank < 2 THEN CAST(1 AS DOUBLE) ELSE CAST(0 AS DOUBLE) END), 6) AS top2_acc,
+                   ROUND(AVG(CASE WHEN rank < 3 THEN CAST(1 AS DOUBLE) ELSE CAST(0 AS DOUBLE) END), 6) AS top3_acc
+            FROM r
+        """
 
 
 def _q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2597,9 +3767,31 @@ _RUBRIC_SCHEMA = "doc int, problem_uid string, criterion_id string, awarded_poin
 _FB_SCHEMA = "doc int, problem_uid string, specificity int, actionability int, correctness int"
 
 
+_D1 = "CAST(1 AS DOUBLE)"
+_D0 = "CAST(0 AS DOUBLE)"
+
+
+def _ta_pairs_cte() -> str:
+    return _values_cte("pairs", ["doc", "gt", "pred"], ta_fixture.text_pairs())
+
+
+def _ta_item_ctes() -> tuple[str, str]:
+    g, p = ta_fixture.item_sets()
+    return _values_cte("gt", ["doc_id", "item"], g), _values_cte("pred", ["doc_id", "item"], p)
+
+
 def _q_ta_cer(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = spark.createDataFrame(ta_fixture.text_pairs(), _TA_TEXT_SCHEMA)
     return ta_metrics.cer(pairs, "gt", "pred")
+
+
+def _ta_cer_oracle() -> str:
+    return f"""
+            WITH {_ta_pairs_cte()}
+            SELECT ROUND(CAST(SUM(levenshtein(gt, pred)) AS DOUBLE) / SUM(greatest(length(gt), 1)), 6) AS cer,
+                   ROUND(AVG(levenshtein(gt, pred) / greatest(length(gt), length(pred), 1)), 6) AS mean_norm_lev
+            FROM pairs
+        """
 
 
 def _q_ta_set_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2609,6 +3801,23 @@ def _q_ta_set_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _ta_set_prf_oracle() -> str:
+    ta_gt_cte, ta_pred_cte = _ta_item_ctes()
+    return f"""
+            WITH {ta_gt_cte},
+            {ta_pred_cte},
+            g AS (SELECT DISTINCT doc_id, item FROM gt),
+            p AS (SELECT DISTINCT doc_id, item FROM pred),
+            j AS (SELECT COALESCE(g.doc_id, p.doc_id) AS doc_id, g.item AS gi, p.item AS pi
+                  FROM g FULL OUTER JOIN p ON g.doc_id = p.doc_id AND g.item = p.item)
+            SELECT doc_id,
+                   CAST(SUM(CASE WHEN gi IS NOT NULL AND pi IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS tp,
+                   CAST(SUM(CASE WHEN gi IS NULL AND pi IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS fp,
+                   CAST(SUM(CASE WHEN gi IS NOT NULL AND pi IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS fn
+            FROM j GROUP BY doc_id
+        """
+
+
 def _q_ta_macro_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
     g, p = ta_fixture.item_sets()
     return ta_metrics.macro_f1_by_tag(
@@ -2616,9 +3825,41 @@ def _q_ta_macro_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _ta_macro_f1_oracle() -> str:
+    ta_gt_cte, ta_pred_cte = _ta_item_ctes()
+    return f"""
+            WITH {ta_gt_cte},
+            {ta_pred_cte},
+            g AS (SELECT DISTINCT doc_id, item FROM gt),
+            p AS (SELECT DISTINCT doc_id, item FROM pred),
+            j AS (SELECT COALESCE(g.item, p.item) AS item, g.item AS gi, p.item AS pi
+                  FROM g FULL OUTER JOIN p ON g.doc_id = p.doc_id AND g.item = p.item),
+            per_tag AS (
+              SELECT item,
+                     CAST(SUM(CASE WHEN gi IS NOT NULL AND pi IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS tp,
+                     CAST(SUM(CASE WHEN gi IS NULL AND pi IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS fp,
+                     CAST(SUM(CASE WHEN gi IS NOT NULL AND pi IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS fn
+              FROM j GROUP BY item)
+            SELECT item, tp, fp, fn,
+                   ROUND(CASE WHEN 2 * tp + fp + fn > 0
+                              THEN CAST(2 AS DOUBLE) * tp / (2 * tp + fp + fn)
+                              ELSE {_D0} END, 6) AS f1
+            FROM per_tag
+        """
+
+
 def _q_ta_exact_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = spark.createDataFrame(ta_fixture.text_pairs(), _TA_TEXT_SCHEMA)
     return ta_metrics.exact_match_rate(pairs, "gt", "pred")
+
+
+def _ta_exact_match_oracle() -> str:
+    return f"""
+            WITH {_ta_pairs_cte()}
+            SELECT ROUND(AVG(CASE WHEN gt = pred THEN {_D1} ELSE {_D0} END), 6) AS exact_match,
+                   COUNT(*) AS n
+            FROM pairs WHERE gt IS NOT NULL AND gt != ''
+        """
 
 
 def _q_ta_rubric_mae(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2630,9 +3871,44 @@ def _q_ta_rubric_mae(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _ta_rubric_mae_oracle() -> str:
+    rub_g, rub_p = ta_fixture.rubric_rows()
+    rub_gt_cte = _values_cte("rgt", ["doc", "problem_uid", "criterion_id", "awarded_points"], rub_g)
+    rub_pred_cte = _values_cte("rpred", ["doc", "problem_uid", "criterion_id", "awarded_points"], rub_p)
+    return f"""
+            WITH {rub_gt_cte},
+            {rub_pred_cte},
+            j AS (SELECT g.awarded_points AS _gt, p.awarded_points AS _pred
+                  FROM rgt g LEFT JOIN rpred p
+                  ON g.doc = p.doc AND g.problem_uid = p.problem_uid AND g.criterion_id = p.criterion_id)
+            SELECT ROUND(AVG(ABS(_gt - COALESCE(_pred, {_D0}))), 6) AS mae,
+                   ROUND(AVG(CASE WHEN ABS(_gt - COALESCE(_pred, {_D0})) = 0 THEN {_D1} ELSE {_D0} END), 6) AS exact_rate,
+                   COUNT(*) AS n
+            FROM j
+        """
+
+
 def _q_ta_qwk(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = spark.createDataFrame(ta_fixture.label_pairs(), "t int, p int")
     return ta_metrics.quadratic_weighted_kappa(pairs, "t", "p", 4)
+
+
+def _ta_qwk_oracle() -> str:
+    qwk_cte = _values_cte("qpairs", ["t", "p"], ta_fixture.label_pairs())
+    return f"""
+            WITH {qwk_cte},
+            obs AS (SELECT t AS _t, p AS _p, COUNT(*) AS o FROM qpairs GROUP BY 1, 2),
+            mt AS (SELECT t AS _t, COUNT(*) AS m_t FROM qpairs GROUP BY 1),
+            mp AS (SELECT p AS _p, COUNT(*) AS m_p FROM qpairs GROUP BY 1),
+            grid AS (SELECT mt._t, mp._p, mt.m_t, mp.m_p FROM mt CROSS JOIN mp),
+            filled AS (SELECT grid._t, grid._p, grid.m_t, grid.m_p, COALESCE(obs.o, 0) AS o
+                       FROM grid LEFT JOIN obs ON grid._t = obs._t AND grid._p = obs._p),
+            agg AS (SELECT
+                SUM(((_t - _p) * (_t - _p)) / CAST(9 AS DOUBLE) * o) AS wo,
+                SUM(((_t - _p) * (_t - _p)) / CAST(9 AS DOUBLE) * m_t * m_p / CAST({len(ta_fixture.label_pairs())} AS DOUBLE)) AS we
+              FROM filled)
+            SELECT ROUND(CASE WHEN we > 0 THEN {_D1} - wo / we ELSE {_D1} END, 6) AS qwk FROM agg
+        """
 
 
 def _q_ta_feedback(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2645,6 +3921,26 @@ def _q_ta_feedback(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _ta_feedback_agreement_oracle() -> str:
+    fb_g, fb_p = ta_fixture.feedback_rows()
+    fb_gt_cte = _values_cte("fgt", ["doc", "problem_uid", "specificity", "actionability", "correctness"], fb_g)
+    fb_pred_cte = _values_cte("fpred", ["doc", "problem_uid", "specificity", "actionability", "correctness"], fb_p)
+    return f"""
+            WITH {fb_gt_cte},
+            {fb_pred_cte},
+            j AS (SELECT g.specificity AS gs, g.actionability AS ga, g.correctness AS gc,
+                         p.specificity AS ps, p.actionability AS pa, p.correctness AS pc
+                  FROM fgt g JOIN fpred p ON g.doc = p.doc AND g.problem_uid = p.problem_uid),
+            s AS (
+              SELECT 'specificity' AS dim, CASE WHEN gs = ps THEN {_D1} ELSE {_D0} END AS agree FROM j
+              UNION ALL
+              SELECT 'actionability', CASE WHEN ga = pa THEN {_D1} ELSE {_D0} END FROM j
+              UNION ALL
+              SELECT 'correctness', CASE WHEN gc = pc THEN {_D1} ELSE {_D0} END FROM j)
+            SELECT dim, ROUND(AVG(agree), 6) AS agreement FROM s GROUP BY dim
+        """
+
+
 def _q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     raw = F.get_json_object("props", "$.k")
@@ -2655,6 +3951,14 @@ def _q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(raw.cast("int")).alias("sum_k"),
         F.count(F.when(raw.isNull(), 1)).alias("n_null_k"),
     )
+
+
+_JSON_EXTRACT_ROLLUP_ORACLE = """
+            SELECT event_type,
+                   CAST(SUM(TRY_CAST(json_extract_string(props, '$.k') AS INT)) AS BIGINT) AS sum_k,
+                   CAST(SUM(CASE WHEN json_extract_string(props, '$.k') IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null_k
+            FROM events GROUP BY event_type
+        """
 
 
 _N_SPLIT = 256  # fixed so the VALUES oracle matches at every sf
@@ -2708,8 +4012,50 @@ def _q_media_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     return multimodal.probe_media(docs, "media_id", "payload", "kind")
 
 
+_MEDIA_PROBE_ORACLE = """
+            WITH m AS (
+              SELECT CAST(doc_id AS VARCHAR) AS media_id, 'blob' AS kind,
+                     strlen(text) AS n_bytes, sha256(text) AS sha
+              FROM documents),
+            b AS (SELECT *,
+                   (instr('0123456789abcdef', substr(sha, 1, 1)) - 1) * 16
+                 + (instr('0123456789abcdef', substr(sha, 2, 1)) - 1) AS b0,
+                   (instr('0123456789abcdef', substr(sha, 3, 1)) - 1) * 16
+                 + (instr('0123456789abcdef', substr(sha, 4, 1)) - 1) AS b1,
+                   (instr('0123456789abcdef', substr(sha, 5, 1)) - 1) * 16
+                 + (instr('0123456789abcdef', substr(sha, 6, 1)) - 1) AS b2
+              FROM m)
+            SELECT media_id, kind, CAST(n_bytes AS BIGINT) AS n_bytes, sha AS sha256,
+                   CAST(CASE WHEN n_bytes > 0 THEN 320 + b0 ELSE 0 END AS INT) AS width,
+                   CAST(CASE WHEN n_bytes > 0 THEN 240 + b1 ELSE 0 END AS INT) AS height,
+                   CAST(CASE WHEN n_bytes > 0 THEN 1000 * (1 + (b2 % 30)) ELSE 0 END AS BIGINT) AS duration_ms,
+                   CASE WHEN n_bytes > 0 THEN 'stub' ELSE 'empty' END AS decode_status
+            FROM b
+        """
+
+
 def _q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sessions.session_stats(_t(spark, sf_dir, "events"))
+
+
+_SESSIONIZE_EVENTS_ORACLE = """
+            WITH b AS (
+              SELECT user_id, ts, event_id, CAST(floor(epoch(ts)) AS BIGINT) AS ws
+              FROM events
+            ), brk AS (
+              SELECT user_id, ts, event_id, ws,
+                     CASE WHEN lag(ws) OVER w IS NULL OR ws - lag(ws) OVER w > 1800
+                          THEN 1 ELSE 0 END AS is_break
+              FROM b WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+            ), sess AS (
+              SELECT user_id, ts,
+                     CAST(SUM(is_break) OVER (PARTITION BY user_id ORDER BY ts, event_id
+                                              ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_idx
+              FROM brk)
+            SELECT user_id, session_idx, MIN(ts) AS session_start,
+                   MAX(ts) AS session_end, COUNT(*) AS n_events
+            FROM sess GROUP BY user_id, session_idx
+        """
 
 
 def _docs_as_media(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2741,6 +4087,25 @@ def _q_media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return multimodal.resize_media(_docs_as_media(spark, sf_dir), "media_id", "payload", 256, 256)
 
 
+# hex-pair byte extraction as in media_probe; resize math mirrors the
+# kernel expression shape exactly (same IEEE ops -> same floor)
+_MEDIA_RESIZE_ORACLE = """
+            WITH m AS (
+              SELECT CAST(doc_id AS VARCHAR) AS media_id, sha256(text) AS sha FROM documents),
+            d AS (SELECT media_id,
+                   320 + (instr('0123456789abcdef', substr(sha, 1, 1)) - 1) * 16
+                       + (instr('0123456789abcdef', substr(sha, 2, 1)) - 1) AS w,
+                   240 + (instr('0123456789abcdef', substr(sha, 3, 1)) - 1) * 16
+                       + (instr('0123456789abcdef', substr(sha, 4, 1)) - 1) AS h
+              FROM m),
+            s AS (SELECT *, least(1.0, 256.0 / w, 256.0 / h) AS sc FROM d)
+            SELECT media_id, CAST(w AS INT) AS width, CAST(h AS INT) AS height,
+                   CAST(FLOOR(w * sc) AS INT) AS out_w,
+                   CAST(FLOOR(h * sc) AS INT) AS out_h
+            FROM s
+        """
+
+
 def _q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return multimodal.extract_features(_docs_as_media(spark, sf_dir), "media_id", "payload")
 
@@ -2764,6 +4129,20 @@ def _q_sweep_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_SWEEP_GRID_ORACLE = """
+            WITH t AS (SELECT unnest([CAST(0.0 AS DOUBLE), 0.4, 0.8]) AS temperature),
+            k AS (SELECT unnest([CAST(10 AS BIGINT), 20]) AS top_k),
+            tr AS (SELECT unnest(range(0, 4)) AS trial),
+            runs AS (
+              SELECT temperature, top_k, trial,
+                     ROUND(temperature * 0.1 + top_k * 0.01 + trial * 0.001, 6) AS metric
+              FROM t CROSS JOIN k CROSS JOIN tr)
+            SELECT temperature, top_k, COUNT(*) AS n_trials,
+                   ROUND(AVG(metric), 6) AS mean_metric
+            FROM runs GROUP BY temperature, top_k
+        """
+
+
 def _q_legacy_alias(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P3: mixed-era table (some rows legacy 'ufid', some canonical) merges
     losslessly through rewrite_legacy_aliases."""
@@ -2777,6 +4156,14 @@ def _q_legacy_alias(spark: SparkSession, sf_dir: str) -> DataFrame:
     return keys_ops.rewrite_legacy_aliases(cust, {"ufid": "university_id"})
 
 
+_LEGACY_ALIAS_REWRITE_ORACLE = """
+            SELECT c_custkey,
+                   COALESCE(CASE WHEN c_custkey % 3 != 0 THEN c_name END,
+                            CASE WHEN c_custkey % 3 = 0 THEN c_name END) AS university_id
+            FROM customer
+        """
+
+
 def _q_media_base64(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P15: binary → base64 transport encoding (reference image_utils.py:13-16)."""
     docs = _t(spark, sf_dir, "documents").select(
@@ -2787,10 +4174,25 @@ def _q_media_base64(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_MEDIA_BASE64_ORACLE = """
+            SELECT CAST(doc_id AS VARCHAR) AS media_id,
+                   CAST(octet_length(encode(text)) AS INT) AS n_bytes,
+                   to_base64(encode(text)) AS payload_b64
+            FROM documents
+        """
+
+
 def _q_best_supplier_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W8: best-value highlight — flag per-nation max-acctbal suppliers."""
     sup = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey", "s_acctbal")
     return analytics.best_value_flags(sup, "s_nationkey", "s_acctbal")
+
+
+_BEST_SUPPLIER_FLAGS_ORACLE = """
+            SELECT s_suppkey, s_nationkey, s_acctbal,
+                   s_acctbal = MAX(s_acctbal) OVER (PARTITION BY s_nationkey) AS is_best
+            FROM supplier
+        """
 
 
 def _q_publish_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2824,12 +4226,60 @@ def _q_publish_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# mirrors plans/publish.publish_reject_reason rule order exactly:
+# empty -> pii -> non-finite -> bad json, first match wins
+_PUBLISH_GATE_ORACLE = """
+            WITH ev AS (
+              SELECT event_id,
+                CASE WHEN event_id % 97 = 0 THEN CAST('nan' AS DOUBLE) ELSE value END AS value,
+                CASE WHEN event_id % 89 = 0 THEN '{not json' ELSE props END AS props,
+                CASE WHEN event_id % 83 = 0 THEN 'contact me at someone@example.com please'
+                     ELSE 'clean note' END AS note
+              FROM events),
+            tagged AS (
+              SELECT CASE
+                WHEN note IS NULL OR trim(note) = '' THEN 'empty'
+                WHEN regexp_matches(note, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}') THEN 'pii_email'
+                WHEN value IS NOT NULL AND (isnan(value) OR isinf(value)) THEN 'non_finite'
+                WHEN props IS NOT NULL AND NOT json_valid(props) THEN 'bad_json'
+                ELSE 'ok' END AS reason
+              FROM ev)
+            SELECT reason, COUNT(*) AS n FROM tagged GROUP BY reason
+        """
+
+
 def _q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document → training-chunk fan-out: 64-token windows, 16-token overlap,
     in-plan sequence+slice (no Python, no shuffle)."""
     from batch_doc_vqa_spark.operators import chunking
 
     return chunking.chunk_documents(_t(spark, sf_dir, "documents"), "doc_id", "text", 64, 16)
+
+
+# window starts are 1+k*stride (k = 0..ceil((n-chunk)/stride)); the
+# chunk index is recovered arithmetically as (start-1)/stride and
+# n_tokens as least(chunk, n-start+1) — no re-tokenization needed
+_CHUNK_DOCUMENTS_ORACLE = r"""
+            WITH t AS (
+              SELECT doc_id, list_filter(regexp_split_to_array(text, '\s+'), x -> x != '') AS tk
+              FROM documents
+            ), b AS (
+              SELECT doc_id, tk, len(tk) AS n FROM t
+            ), st AS (
+              SELECT doc_id, tk, n,
+                CASE WHEN n > 0
+                     THEN range(1, 2 + greatest(CAST(ceil((n - 64.0) / 48) AS INT), 0) * 48, 48)
+                     ELSE CAST([] AS BIGINT[]) END AS starts
+              FROM b
+            ), ex AS (
+              SELECT doc_id, n, tk, unnest(starts) AS s FROM st
+            )
+            SELECT doc_id,
+                   CAST((s - 1) // 48 AS INT) AS chunk_idx,
+                   CAST(least(64, n - s + 1) AS INT) AS n_tokens,
+                   array_to_string(list_slice(tk, CAST(s AS INT), CAST(s + 63 AS INT)), ' ') AS chunk_text
+            FROM ex
+        """
 
 
 def _q_deterministic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2841,10 +4291,39 @@ def _q_deterministic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return chunking.deterministic_sample(docs, "doc_id", 0.25, seed=3, base_hash="md5")
 
 
+_DETERMINISTIC_SAMPLE_ORACLE = """
+            SELECT doc_id, n_chars FROM documents
+            WHERE CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR) || '#3'), 1, 15)) AS BIGINT)
+                  % 1048576 < 262144
+        """
+
+
 def _q_corpus_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-rules-style corpus gate composed from lang-ID + quality +
     repetition — first failed rule wins, nothing silently dropped."""
     return textstats.corpus_filter(_t(spark, sf_dir, "documents"), "doc_id", "text")
+
+
+# the corpus gate composes three already-oracled operators — build its
+# oracle FROM their SQL so the composition can never drift from the parts
+def _corpus_filter_oracle() -> str:
+    return f"""
+        WITH q AS (SELECT * FROM ({_doc_quality_oracle()}) qq),
+             lg AS (SELECT * FROM ({_lang_id_oracle()}) ll),
+             rep AS (SELECT * FROM ({_REPETITION_SCORES_ORACLE}) rr),
+             j AS (
+               SELECT q.doc_id, lg.lang_guess, q.n_tokens, q.quality_score,
+                      rep.repetition_score,
+                      CASE WHEN lg.lang_guess != 'en' THEN 'lang'
+                           WHEN q.n_tokens < 20 THEN 'too_short'
+                           WHEN q.quality_score < 0.5 THEN 'low_quality'
+                           WHEN rep.is_repetitive THEN 'repetitive'
+                           ELSE 'ok' END AS reason
+               FROM q JOIN lg USING (doc_id) JOIN rep USING (doc_id))
+        SELECT doc_id, lang_guess, n_tokens, quality_score, repetition_score,
+               reason, reason = 'ok' AS keep
+        FROM j
+    """
 
 
 _INTROS = (
@@ -2868,6 +4347,48 @@ def _q_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.duplicate_spans(pages, "doc_id", "text", k=8, min_docs=10, base_hash="md5")
 
 
+# windowed-hash mirror of the suffix-array substring dedup: k=8-token
+# window hashes (portable md5), shared-by-≥10-docs filter, interval
+# merge via lag + running sum — positions are 1-based inclusive
+def _duplicate_spans_oracle() -> str:
+    return rf"""
+            WITH d AS (
+              SELECT doc_id,
+                CASE WHEN doc_id % 3 = 0 THEN '{_INTROS[0]}'
+                     WHEN doc_id % 3 = 1 THEN '{_INTROS[1]}'
+                     ELSE '{_INTROS[2]}' END || ' ' || text AS text
+              FROM documents
+            ), t AS (
+              SELECT doc_id, list_filter(regexp_split_to_array(text, '\s+'), x -> x != '') AS tk
+              FROM d
+            ), b AS (
+              SELECT doc_id, tk, len(tk) AS n FROM t
+            ), w AS (
+              SELECT doc_id, u.i AS pos,
+                CAST(concat('0x', substr(md5(array_to_string(list_slice(tk, CAST(u.i AS INT), CAST(u.i + 7 AS INT)), ' ')), 1, 15)) AS BIGINT) AS h
+              FROM b, unnest(range(1, greatest(n - 7, 0) + 1)) u(i)
+            ), shared AS (
+              SELECT h FROM (SELECT h, COUNT(DISTINCT doc_id) AS nd FROM w GROUP BY h)
+              WHERE nd >= 10
+            ), dup AS (
+              SELECT doc_id, pos FROM w JOIN shared USING (h)
+            ), runs AS (
+              SELECT doc_id, pos,
+                CASE WHEN COALESCE(pos - lag(pos) OVER (PARTITION BY doc_id ORDER BY pos), 9) > 8
+                     THEN 1 ELSE 0 END AS nw
+              FROM dup
+            ), spans AS (
+              SELECT doc_id, pos,
+                SUM(nw) OVER (PARTITION BY doc_id ORDER BY pos ROWS UNBOUNDED PRECEDING) AS sp
+              FROM runs
+            )
+            SELECT doc_id, CAST(MIN(pos) AS INT) AS span_start,
+                   CAST(MAX(pos) + 7 AS INT) AS span_end,
+                   COUNT(*) AS n_windows
+            FROM spans GROUP BY doc_id, sp
+        """
+
+
 def _q_dedup_spans_removed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Substring-dedup REMOVAL: the planted shared intros are sliced out of
     every document's token stream; md5 proves byte-exact cleaning (docs with
@@ -2882,6 +4403,55 @@ def _q_dedup_spans_removed(spark: SparkSession, sf_dir: str) -> DataFrame:
     spans = dedup.duplicate_spans(pages, "doc_id", "text", k=8, min_docs=10, base_hash="md5")
     out = dedup.remove_duplicate_spans(pages, spans, "doc_id", "text")
     return out.select("doc_id", F.md5(F.encode("text", "utf-8")).alias("text_md5"))
+
+
+# removal mirror: same span chain, then an index-aware list_filter
+# (DuckDB (x,i) lambdas are 1-based like the span positions) drops
+# every token inside a span; spanless docs pass through verbatim
+def _dedup_spans_removed_oracle() -> str:
+    return rf"""
+            WITH d AS (
+              SELECT doc_id,
+                CASE WHEN doc_id % 3 = 0 THEN '{_INTROS[0]}'
+                     WHEN doc_id % 3 = 1 THEN '{_INTROS[1]}'
+                     ELSE '{_INTROS[2]}' END || ' ' || text AS text
+              FROM documents
+            ), t AS (
+              SELECT doc_id, text, list_filter(regexp_split_to_array(text, '\s+'), x -> x != '') AS tk
+              FROM d
+            ), b AS (
+              SELECT doc_id, text, tk, len(tk) AS n FROM t
+            ), w AS (
+              SELECT doc_id, u.i AS pos,
+                CAST(concat('0x', substr(md5(array_to_string(list_slice(tk, CAST(u.i AS INT), CAST(u.i + 7 AS INT)), ' ')), 1, 15)) AS BIGINT) AS h
+              FROM b, unnest(range(1, greatest(n - 7, 0) + 1)) u(i)
+            ), shared AS (
+              SELECT h FROM (SELECT h, COUNT(DISTINCT doc_id) AS nd FROM w GROUP BY h)
+              WHERE nd >= 10
+            ), dup AS (
+              SELECT doc_id, pos FROM w JOIN shared USING (h)
+            ), runs AS (
+              SELECT doc_id, pos,
+                CASE WHEN COALESCE(pos - lag(pos) OVER (PARTITION BY doc_id ORDER BY pos), 9) > 8
+                     THEN 1 ELSE 0 END AS nw
+              FROM dup
+            ), spansq AS (
+              SELECT doc_id, pos,
+                SUM(nw) OVER (PARTITION BY doc_id ORDER BY pos ROWS UNBOUNDED PRECEDING) AS sp
+              FROM runs
+            ), agg AS (
+              SELECT doc_id, list([st, en]) AS arr FROM (
+                SELECT doc_id, sp, MIN(pos) AS st, MAX(pos) + 7 AS en
+                FROM spansq GROUP BY doc_id, sp) q
+              GROUP BY doc_id
+            )
+            SELECT b.doc_id,
+                   md5(CASE WHEN a.arr IS NULL THEN b.text
+                            ELSE array_to_string(list_filter(b.tk,
+                                (x, i) -> len(list_filter(a.arr, s -> i >= s[1] AND i <= s[2])) = 0), ' ')
+                       END) AS text_md5
+            FROM b LEFT JOIN agg a ON a.doc_id = b.doc_id
+        """
 
 
 def _q_training_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2907,6 +4477,43 @@ def _q_training_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "chunk_idx", "n_tokens",
         F.md5(F.encode("chunk_text", "utf-8")).alias("chunk_md5"),
     )
+
+
+# end-to-end pipeline oracle: corpus gate (reused verbatim) → exact-dedup
+# keep-one → 64/16 token windows → md5-keyed 50% sample
+def _training_pipeline_oracle() -> str:
+    return rf"""
+        WITH flt AS (
+          SELECT doc_id FROM ({_corpus_filter_oracle()}) cf WHERE keep
+        ), canon AS (
+          SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY md5(text)
+        ), base AS (
+          SELECT d.doc_id, d.text FROM documents d
+          JOIN flt USING (doc_id) JOIN canon USING (doc_id)
+        ), t AS (
+          SELECT doc_id, list_filter(regexp_split_to_array(text, '\s+'), x -> x != '') AS tk
+          FROM base
+        ), b AS (
+          SELECT doc_id, tk, len(tk) AS n FROM t
+        ), st AS (
+          SELECT doc_id, tk, n,
+            CASE WHEN n > 0
+                 THEN range(1, 2 + greatest(CAST(ceil((n - 64.0) / 48) AS INT), 0) * 48, 48)
+                 ELSE CAST([] AS BIGINT[]) END AS starts
+          FROM b
+        ), ex AS (
+          SELECT doc_id, n, tk, unnest(starts) AS s FROM st
+        ), ch AS (
+          SELECT doc_id, CAST((s - 1) // 48 AS INT) AS chunk_idx,
+                 CAST(least(64, n - s + 1) AS INT) AS n_tokens,
+                 array_to_string(list_slice(tk, CAST(s AS INT), CAST(s + 63 AS INT)), ' ') AS chunk_text
+          FROM ex
+        )
+        SELECT doc_id, chunk_idx, n_tokens, md5(chunk_text) AS chunk_md5
+        FROM ch
+        WHERE CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR) || ':' || CAST(chunk_idx AS VARCHAR) || '#9'), 1, 15)) AS BIGINT)
+              % 1048576 < 524288
+    """
 
 
 def _q_training_recipe_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2946,6 +4553,64 @@ def _q_training_recipe_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.md5(F.encode("chunk_text", "utf-8")).alias("chunk_md5"),
         "start_offset", "seq_id", "crosses_boundary",
     )
+
+
+# round-4 recipe: PII redaction → decontamination → exact-dedup keep-one
+# → 64/16 chunking → concat-and-cut packing; composed from the SAME
+# generated/parameterized CTE builders the per-stage oracles use
+def _training_recipe_v2_oracle() -> str:
+    from batch_doc_vqa_spark.operators.pii import PII_PATTERNS
+    chain, final_rel, _ = _pii_chain_ctes("dirty")
+    return rf"""
+        WITH {_PII_DIRTY_CTE},
+        {chain},
+        red AS (SELECT doc_id, t{len(PII_PATTERNS)} AS text FROM {final_rel}),
+        {_decontam_ctes("red")},
+        flagged AS (SELECT DISTINCT doc_id FROM contam WHERE coverage >= 0.8),
+        keep AS (
+            SELECT r.doc_id, r.text FROM red r ANTI JOIN flagged USING (doc_id)
+        ), canon AS (
+            SELECT MIN(doc_id) AS doc_id FROM keep GROUP BY md5(text)
+        ), base AS (
+            SELECT k.doc_id, k.text FROM keep k JOIN canon USING (doc_id)
+        ), ct AS (
+            SELECT doc_id, list_filter(regexp_split_to_array(text, '\s+'), x -> x != '') AS tk
+            FROM base
+        ), cb AS (
+            SELECT doc_id, tk, len(tk) AS n FROM ct
+        ), cst AS (
+            SELECT doc_id, tk, n,
+              CASE WHEN n > 0
+                   THEN range(1, 2 + greatest(CAST(ceil((n - 64.0) / 48) AS INT), 0) * 48, 48)
+                   ELSE CAST([] AS BIGINT[]) END AS starts
+            FROM cb
+        ), cex AS (
+            SELECT doc_id, n, tk, unnest(starts) AS s FROM cst
+        ), ch AS (
+            SELECT doc_id, CAST((s - 1) // 48 AS INT) AS chunk_idx,
+                   CAST(least(64, n - s + 1) AS INT) AS n_tokens,
+                   array_to_string(list_slice(tk, CAST(s AS INT), CAST(s + 63 AS INT)), ' ') AS chunk_text
+            FROM cex
+        ), keyed AS (
+            SELECT doc_id, chunk_idx, n_tokens, chunk_text,
+                   doc_id * 4096 + chunk_idx AS k
+            FROM ch
+        ), off AS (
+            SELECT doc_id, chunk_idx, n_tokens, chunk_text,
+                   CAST(COALESCE(SUM(n_tokens) OVER (ORDER BY k
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
+                       AS start_offset
+            FROM keyed
+        )
+        SELECT doc_id, chunk_idx, n_tokens, md5(chunk_text) AS chunk_md5,
+               start_offset,
+               CAST((start_offset - (start_offset % 128)) // 128 AS BIGINT) AS seq_id,
+               CAST(((start_offset + GREATEST(n_tokens - 1, 0))
+                     - ((start_offset + GREATEST(n_tokens - 1, 0)) % 128)) // 128 AS BIGINT)
+                   > CAST((start_offset - (start_offset % 128)) // 128 AS BIGINT)
+                   AS crosses_boundary
+        FROM off
+    """
 
 
 def _q_training_recipe_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2993,6 +4658,32 @@ def _q_training_recipe_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# recipe v3 = recipe v2 + the learned-quality gate between decontam and
+# dedup: targeted rewrite of the v2 SQL (classifier CTE chain over the
+# kept docs + draw-gated qkeep), so every other line is shared verbatim
+# and the two recipes cannot drift; asserts fail loudly on reshape
+def _training_recipe_v3_oracle() -> str:
+    v2 = _training_recipe_v2_oracle()
+    gate_old = (
+        "), canon AS (\n"
+        "            SELECT MIN(doc_id) AS doc_id FROM keep GROUP BY md5(text)\n"
+        "        ), base AS (\n"
+        "            SELECT k.doc_id, k.text FROM keep k JOIN canon USING (doc_id)\n"
+    )
+    assert v2.count(gate_old) == 1, "recipe v2 oracle reshaped"
+    return v2.replace(
+        gate_old,
+        "), " + _classifier_ctes("keep") + ",\n"
+        "        qkeep AS (\n"
+        "            SELECT k.doc_id, k.text FROM keep k JOIN clf USING (doc_id)\n"
+        f"            WHERE {_draw_sql(11)} < clf.clf_score\n"
+        "        ), canon AS (\n"
+        "            SELECT MIN(doc_id) AS doc_id FROM qkeep GROUP BY md5(text)\n"
+        "        ), base AS (\n"
+        "            SELECT k.doc_id, k.text FROM qkeep k JOIN canon USING (doc_id)\n",
+    )
+
+
 def _q_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical-URL dedup over deterministically dirtied URLs: tracking
     params, fragments, case, double slashes and trailing slashes collapse so
@@ -3013,6 +4704,29 @@ def _q_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return webclean.url_dedup(urls, "url")
 
 
+# the canonical form is a pure function of c_custkey, so the oracle
+# reconstructs it arithmetically and groups — value-checking the whole
+# canonicalization (case, port, fragment, tracking params, slashes)
+_URL_DEDUP_ORACLE = """
+            WITH c AS (
+              SELECT c_custkey AS k, CAST(c_custkey // 2 AS BIGINT) AS p FROM customer
+            ), urls AS (
+              SELECT p,
+                CASE WHEN k % 2 = 0
+                     THEN 'https://Site' || (p % 7) || '.Example.org/a//b/page-' || p || '/?utm_source=news&x=' || p || '#top'
+                     ELSE 'https://site' || (p % 7) || '.example.org/a/b/page-' || p || '?x=' || p
+                END AS url
+              FROM c
+            ), canon AS (
+              SELECT 'https://site' || (p % 7) || '.example.org/a/b/page-' || p || '?x=' || p AS canonical_url,
+                     url
+              FROM urls
+            )
+            SELECT canonical_url, MIN(url) AS canonical_id, COUNT(*) AS n_dups
+            FROM canon GROUP BY canonical_url
+        """
+
+
 def _q_boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet/RefinedWeb-style per-host repeated-line detection: injected
     cookie-banner + footer lines (and any naturally duplicated doc bodies)
@@ -3022,6 +4736,22 @@ def _q_boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     return webclean.boilerplate_lines(
         _dirty_pages(spark, sf_dir), "host", "text", min_pages=3
     ).select("host", "line", "n_pages")
+
+
+_BOILERPLATE_LINES_ORACLE = """
+            WITH d AS (
+              SELECT 'h' || (doc_id % 5) AS host,
+                     'cookie notice for h' || (doc_id % 5) || chr(10) || text
+                       || chr(10) || 'all rights reserved' AS text
+              FROM documents
+            ), lines AS (
+              SELECT host,
+                     unnest(list_distinct(list_filter(string_split(text, chr(10)), x -> trim(x) != ''))) AS line
+              FROM d
+            )
+            SELECT host, line, COUNT(*) AS n_pages
+            FROM lines GROUP BY 1, 2 HAVING COUNT(*) >= 3
+        """
 
 
 def _dirty_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3043,6 +4773,30 @@ def _q_strip_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     out = webclean.strip_boilerplate_lines(_dirty_pages(spark, sf_dir), "host", "text", 3)
     return out.select("doc_id", "host", F.md5(F.encode("text", "utf-8")).alias("text_md5"))
+
+
+# removal mirror: same denylist CTE, lines filtered in place, md5 of
+# the cleaned text proves byte-exact equality with the Spark op
+_STRIP_BOILERPLATE_ORACLE = """
+            WITH d AS (
+              SELECT doc_id, 'h' || (doc_id % 5) AS host,
+                     'cookie notice for h' || (doc_id % 5) || chr(10) || text
+                       || chr(10) || 'all rights reserved' AS text
+              FROM documents
+            ), lines AS (
+              SELECT host,
+                     unnest(list_distinct(list_filter(string_split(text, chr(10)), x -> trim(x) != ''))) AS line
+              FROM d
+            ), deny AS (
+              SELECT host, line FROM lines GROUP BY 1, 2 HAVING COUNT(*) >= 3
+            ), dl AS (
+              SELECT host, list(line) AS arr FROM deny GROUP BY host
+            )
+            SELECT d.doc_id, d.host,
+                   md5(array_to_string(list_filter(string_split(d.text, chr(10)),
+                       ln -> dl.arr IS NULL OR NOT list_contains(dl.arr, ln)), chr(10))) AS text_md5
+            FROM d LEFT JOIN dl USING (host)
+        """
 
 
 _N_MEDIA = 200  # fixed so the VALUES oracle matches at every sf
@@ -3342,6 +5096,39 @@ def _q_validate_coerce(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# lenient-ladder mirror: violations are pure functions of c_custkey,
+# so the oracle recomputes the coerced values + corrections directly
+def _validate_coerce_oracle() -> str:
+    return f"""
+            WITH v AS ({_VALIDATE_ORACLE_BASE})
+            SELECT c_custkey,
+                   CASE WHEN v1 IS NOT NULL THEN NULL ELSE id8 END AS student_id,
+                   CASE WHEN v2 IS NOT NULL THEN NULL
+                        ELSE CAST(c_custkey % 1000 AS DOUBLE) END AS score,
+                   CASE WHEN v3 IS NOT NULL THEN NULL ELSE c_name END AS name,
+                   CASE WHEN v4 IS NOT NULL THEN NULL ELSE grade_clean END AS grade,
+                   CASE WHEN v5 IS NOT NULL THEN NULL
+                        ELSE CAST(c_custkey % 200 - 50 AS DOUBLE) END AS pct,
+                   CASE WHEN v6 IS NOT NULL THEN NULL ELSE comment_raw END AS comment_short,
+                   CASE WHEN v7 IS NOT NULL THEN NULL ELSE meta_clean END AS meta,
+                   CASE WHEN v8 IS NOT NULL THEN NULL ELSE tags_raw END AS tags,
+                   CASE WHEN v9 IS NOT NULL THEN NULL ELSE contact_raw END AS contact,
+                   CASE WHEN v10 IS NOT NULL THEN NULL ELSE payload_raw END AS payload,
+                   CASE WHEN v11 IS NOT NULL THEN NULL ELSE profile_raw END AS profile,
+                   CASE WHEN v12 IS NOT NULL THEN NULL ELSE event_ts_raw END AS event_ts,
+                   CASE WHEN v13 IS NOT NULL THEN NULL ELSE sku_raw END AS sku,
+                   CASE WHEN v14 IS NOT NULL THEN NULL ELSE alias_raw END AS alias,
+                   CASE WHEN v15 IS NOT NULL THEN NULL ELSE mode_val_raw END AS mode_val,
+                   CASE WHEN v16 IS NOT NULL THEN NULL ELSE nums_raw END AS nums,
+                   COALESCE(array_to_string(list_filter(
+                       [v1, v2, v3, v4, v5, v6, v7, v8, v9, v10, v11, v12, v13, v14, v15, v16], x -> x IS NOT NULL), ';'), '')
+                       AS corrections_csv,
+                   COALESCE(v1, v2, v3, v4, v5, v6, v7, v8, v9, v10, v11, v12, v13, v14, v15, v16) AS first_violation,
+                   TRUE AS valid
+            FROM v
+        """
+
+
 def _q_validate_strict(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X6 strict tier: any violating field fails the whole row (fail-loud
     branch); raw values preserved for the quarantine sink."""
@@ -3349,6 +5136,22 @@ def _q_validate_strict(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     dirty, rules = _validate_fixture(spark, sf_dir)
     return validate_coerce(dirty, rules, strict=True).select(*_VALIDATE_OUT_COLS)
+
+
+def _validate_strict_oracle() -> str:
+    return f"""
+            WITH v AS ({_VALIDATE_ORACLE_BASE})
+            SELECT c_custkey, student_id_raw AS student_id, score_raw AS score,
+                   name_raw AS name, grade_raw AS grade, pct_raw AS pct,
+                   comment_raw AS comment_short, meta_raw AS meta,
+                   tags_raw AS tags, contact_raw AS contact,
+                   payload_raw AS payload, profile_raw AS profile,
+                   event_ts_raw AS event_ts, sku_raw AS sku, alias_raw AS alias,
+                   mode_val_raw AS mode_val, nums_raw AS nums,
+                   COALESCE(v1, v2, v3, v4, v5, v6, v7, v8, v9, v10, v11, v12, v13, v14, v15, v16) AS first_violation,
+                   COALESCE(v1, v2, v3, v4, v5, v6, v7, v8, v9, v10, v11, v12, v13, v14, v15, v16) IS NULL AS valid
+            FROM v
+        """
 
 
 def _q_cohort_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3475,6 +5278,15 @@ def _q_summary_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_SUMMARY_STATS_ORACLE = """
+            SELECT o_orderpriority, COUNT(*) AS n,
+                   ROUND(CAST(SUM(CAST(o_totalprice AS DECIMAL(28,6))) AS DOUBLE) / COUNT(*), 6) AS mean_price,
+                   ROUND(MEDIAN(o_totalprice), 6) AS median_price,
+                   ROUND(STDDEV_SAMP(o_totalprice), 6) AS stddev_price
+            FROM orders GROUP BY o_orderpriority
+        """
+
+
 def _q_union_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = _t(spark, sf_dir, "orders")
     a = orders.filter(F.col("o_orderkey") % 3 == 0)
@@ -3482,1791 +5294,167 @@ def _q_union_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return a.unionByName(b).dropDuplicates(["o_orderkey"]).select("o_orderkey", "o_totalprice")
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Ordered by driver-verification priority: the driver checks a ~50-key
-    # sample of this dict each round, so keys WITHOUT a CORRECTNESS_r03 row
-    # (the 29 the r3 sample missed + queries new this round) come FIRST —
-    # the union of r03+r04 driver-signed rows then covers every query.
-    # Everything below also passes scripts/parity_check.py locally.
-    return {
-        # -- not driver-signed in r03 (incl. new-this-round): sampled first --
-        "host_components": _q_host_components,
-        "dedup_resolve_starcc": _q_dedup_resolve_starcc,
-        "bm25_topk": _q_bm25_topk,
-        "bm25_persisted_topk": _q_bm25_persisted,
-        "shard_layout": _q_shard_layout,
-        "shard_stats": _q_shard_stats,
-        "url_blocklist": _q_url_blocklist,
-        "stratified_split": _q_stratified_split,
-        "temperature_resample": _q_temperature_resample,
-        "validate_strict": _q_validate_strict,
-        "contamination_report": _q_contamination_report,
-        "contamination_report_shuffle": _q_contamination_report_shuffle,
-        "contamination_report_bloom": _q_contamination_report_bloom,
-        "decontaminate": _q_decontaminate,
-        "pii_report": _q_pii_report,
-        "pii_redact": _q_pii_redact,
-        "pack_sequences": _q_pack_sequences,
-        "packing_stats": _q_packing_stats,
-        "epoch_expand": _q_epoch_expand,
-        "budget_select": _q_budget_select,
-        "training_recipe_v2": _q_training_recipe_v2,
-        "training_recipe_v3": _q_training_recipe_v3,
-        "snapshot_diff": _q_snapshot_diff,
-        "snapshot_summary": _q_snapshot_summary,
-        "snapshot_work_set": _q_snapshot_work_set,
-        "incremental_dedup": _q_incremental_dedup,
-        "ann_ivf_topk": _q_ann_ivf,
-        "ann_pq_topk": _q_ann_pq,
-        "ann_pq_trained_topk": _q_ann_pq_trained,
-        "ann_ivfpq_topk": _q_ann_ivfpq,
-        "ann_ivfpq_trained_topk": _q_ann_ivfpq_trained,
-        "ann_ivfpq_persisted_topk": _q_ann_ivfpq_persisted,
-        "ann_ivfpq_appended_topk": _q_ann_ivfpq_appended,
-        "embedding_dup_pairs": _q_embedding_dup,
-        "embedding_dup_pairs_lsh": _q_embedding_dup_lsh,
-        "semdedup": _q_semdedup,
-        "doc_quality": _q_doc_quality,
-        "classifier_quality_score": _q_classifier_quality,
-        "classifier_resample": _q_classifier_resample,
-        "lm_perplexity": _q_lm_perplexity,
-        "ppl_buckets": _q_ppl_buckets,
-        "weighted_sample_docs": _q_weighted_sample,
-        "lang_id": _q_lang_id,
-        "token_counts": _q_token_counts,
-        "token_counts_bpe": _q_token_counts_bpe,
-        "chunk_documents_bpe": _q_chunk_documents_bpe,
-        "pack_sequences_bpe": _q_pack_sequences_bpe,
-        "fingerprint": _q_fingerprint,
-        "matching_pipeline": _q_matching_pipeline,
-        "detection_stats": _q_detection_stats,
-        "accuracy_stats": _q_accuracy_stats,
-        "digit_accuracy_chain": _q_digit_accuracy_chain,
-        "cost_rollup": _q_cost_rollup,
-        "parallel_runtime": _q_parallel_runtime,
-        "failure_counts": _q_failure_counts,
-        "cohort_select": _q_cohort_select,
-        "predict_ids": _q_predict_ids,
-        "topk_digit_accuracy": _q_topk_digit_accuracy,
-        "bootstrap_median_ci": _q_bootstrap_ci,
-        "region_match_prf": _q_region_match,
-        "ta_cer": _q_ta_cer,
-        "ta_set_prf": _q_ta_set_prf,
-        "ta_macro_f1": _q_ta_macro_f1,
-        "ta_exact_match": _q_ta_exact_match,
-        "ta_rubric_mae": _q_ta_rubric_mae,
-        "ta_qwk": _q_ta_qwk,
-        "ta_feedback_agreement": _q_ta_feedback,
-        "json_extract_rollup": _q_json_extract,
-        "union_dedup": _q_union_dedup,
-        "summary_stats": _q_summary_stats,
-        # -- driver-signed green in CORRECTNESS_r03 --
-        "sessionize_events": _q_sessionize,
-        "winnow_fingerprints": _q_winnow,
-        "split_pages": _q_split_pages,
-        "media_base64": _q_media_base64,
-        "media_resize": _q_media_resize,
-        "media_features": _q_media_features,
-        "media_probe": _q_media_probe,
-        "legacy_alias_rewrite": _q_legacy_alias,
-        "sweep_grid": _q_sweep_grid,
-        "best_supplier_flags": _q_best_supplier_flags,
-        "publish_gate": _q_publish_gate,
-        "lang_id_trigram": _q_lang_id_trigram,
-        "corpus_profile": _q_corpus_profile,
-        "dedup_resolve_lsh": _q_dedup_resolve_lsh,
-        "validate_coerce": _q_validate_coerce,
-        "cohort_stats": _q_cohort_stats,
-        "pdf_text_extract": _q_pdf_text,
-        "repetition_scores": _q_repetition,
-        "media_decode": _q_media_decode,
-        "url_dedup": _q_url_dedup,
-        "boilerplate_lines": _q_boilerplate_lines,
-        "chunk_documents": _q_chunk_documents,
-        "deterministic_sample": _q_deterministic_sample,
-        "corpus_filter": _q_corpus_filter,
-        "strip_boilerplate": _q_strip_boilerplate,
-        "training_pipeline": _q_training_pipeline,
-        "duplicate_spans": _q_duplicate_spans,
-        "dedup_spans_removed": _q_dedup_spans_removed,
-        "trigram_entropy": _q_trigram_entropy,
-        "extract_main_content": _q_extract,
-        "host_stats_salted": _q_host_stats,
-        "q1_pricing_summary": _q_pricing_summary,
-        "revenue_by_order": _q_revenue_by_order,
-        "region_rollup": _q_region_rollup,
-        "best_order_per_customer": _q_best_order_per_customer,
-        "top3_orders_per_customer": _q_top3_orders_per_customer,
-        "latest_event_per_user": _q_latest_event_per_user,
-        "supplier_customer_match": _q_supplier_customer_match,
-        "digit_frequency": _q_digit_frequency,
-        "pareto_parts": _q_pareto_parts,
-        "events_hourly": _q_events_hourly,
-        "events_asof_order": _q_events_asof_order,
-        "events_asof_order_array": _q_events_asof_order_array,
-        "host_pagerank": _q_host_pagerank,
-        "events_in_windows": _q_events_in_windows,
-        "hll_distinct_users": _q_hll_distinct_users,
-        "quantile_sketch": _q_quantile_sketch,
-        "cms_heavy_hitters": _q_cms_heavy_hitters,
-        "calibration_bins": _q_calibration,
-        "discount_product": _q_discount_product,
-        "dedup_exact": _q_dedup_exact,
-        "jaccard_pairs": _q_jaccard_pairs,
-        "dedup_resolve": _q_dedup_resolve,
-        "minhash_lsh_pairs": _q_minhash_pairs,
-        "simhash_pairs": _q_simhash_pairs,
-        "ann_cosine_topk": _q_ann_cosine,
-        "ann_lsh_topk": _q_ann_lsh,
-    }
+_UNION_DEDUP_ORACLE = """
+            SELECT DISTINCT o_orderkey, o_totalprice FROM orders
+            WHERE o_orderkey % 3 = 0 OR o_orderkey % 2 = 0
+        """
 
 
-_TOKS = r"list_filter(regexp_split_to_array(lower(text), '\s+'), x -> x != '')"
+_Builder = Callable[[SparkSession, str], DataFrame]
 
-# DuckDB mirror of dedup.normalized_tokens (lower → strip non-alnum →
-# whitespace split) — the tokenization every dedup/classifier op shares
-_NTOKS = (
-    r"list_filter(regexp_split_to_array(trim(regexp_replace(lower(text), "
-    r"'[^a-z0-9\s]', ' ', 'g')), '\s+'), x -> x != '')"
+# One row per declared query: (name, builder, oracle). The oracle is the
+# query's DuckDB SQL over the same tables: a string constant when the SQL is
+# literal, else a zero-arg function that builds it (fixture rows as VALUES,
+# trained models, shared CTEs), so importing this module builds no oracle.
+# Adding a query is adding one row here.
+#
+# Row order is part of the driver contract: the driver verifies the first 50
+# names of queries() (the keys of CORRECTNESS_r07.json), so queries without a
+# driver-signed row in CORRECTNESS_r03 come first.
+_QUERIES: tuple[tuple[str, _Builder, str | Callable[[], str]], ...] = (
+    # -- not driver-signed in r03 (incl. new-this-round): sampled first --
+    ("host_components", _q_host_components, _HOST_COMPONENTS_ORACLE),
+    # resolver tier invariance: star contraction shares the label tier's
+    # oracle verbatim (both converge to the component minimum)
+    ("dedup_resolve_starcc", _q_dedup_resolve_starcc, _dedup_resolve_lsh_oracle),
+    ("bm25_topk", _q_bm25_topk, _bm25_oracle),
+    # persisted-path invariance (the ann_ivfpq_persisted_topk precedent)
+    ("bm25_persisted_topk", _q_bm25_persisted, _bm25_oracle),
+    ("shard_layout", _q_shard_layout, _shard_layout_oracle),
+    ("shard_stats", _q_shard_stats, _shard_stats_oracle),
+    ("url_blocklist", _q_url_blocklist, _URL_BLOCKLIST_ORACLE),
+    ("stratified_split", _q_stratified_split, _stratified_split_oracle),
+    ("temperature_resample", _q_temperature_resample, _TEMPERATURE_ORACLE),
+    ("validate_strict", _q_validate_strict, _validate_strict_oracle),
+    ("contamination_report", _q_contamination_report, _contamination_report_oracle),
+    # tier-invariance IS the contract: the shuffle and bloom fallbacks
+    # share the broadcast tier's oracle verbatim
+    ("contamination_report_shuffle", _q_contamination_report_shuffle, _contamination_report_oracle),
+    ("contamination_report_bloom", _q_contamination_report_bloom, _contamination_report_oracle),
+    ("decontaminate", _q_decontaminate, _decontaminate_oracle),
+    ("pii_report", _q_pii_report, _pii_report_oracle),
+    ("pii_redact", _q_pii_redact, _pii_redact_oracle),
+    ("pack_sequences", _q_pack_sequences, _pack_sequences_oracle),
+    ("packing_stats", _q_packing_stats, _packing_stats_oracle),
+    ("epoch_expand", _q_epoch_expand, _EPOCH_EXPAND_ORACLE),
+    ("budget_select", _q_budget_select, _BUDGET_SELECT_ORACLE),
+    ("training_recipe_v2", _q_training_recipe_v2, _training_recipe_v2_oracle),
+    ("training_recipe_v3", _q_training_recipe_v3, _training_recipe_v3_oracle),
+    ("snapshot_diff", _q_snapshot_diff, _snapshot_diff_oracle),
+    ("snapshot_summary", _q_snapshot_summary, _snapshot_summary_oracle),
+    ("snapshot_work_set", _q_snapshot_work_set, _snapshot_work_set_oracle),
+    ("incremental_dedup", _q_incremental_dedup, _incremental_dedup_oracle),
+    ("ann_ivf_topk", _q_ann_ivf, _ANN_IVF_TOPK_ORACLE),
+    ("ann_pq_topk", _q_ann_pq, _ANN_PQ_TOPK_ORACLE),
+    ("ann_pq_trained_topk", _q_ann_pq_trained, _ann_pq_trained_oracle),
+    ("ann_ivfpq_topk", _q_ann_ivfpq, _ANN_IVFPQ_TOPK_ORACLE),
+    ("ann_ivfpq_trained_topk", _q_ann_ivfpq_trained, _ann_ivfpq_trained_oracle),
+    # the persisted path must return byte-identical rows to the one-shot
+    # build — same oracle verbatim (VERDICT r5 #2)
+    ("ann_ivfpq_persisted_topk", _q_ann_ivfpq_persisted, _ANN_IVFPQ_TOPK_ORACLE),
+    ("ann_ivfpq_appended_topk", _q_ann_ivfpq_appended, _ann_ivfpq_appended_oracle),
+    ("embedding_dup_pairs", _q_embedding_dup, _EMBEDDING_DUP_PAIRS_ORACLE),
+    ("embedding_dup_pairs_lsh", _q_embedding_dup_lsh, _embedding_dup_lsh_oracle),
+    ("semdedup", _q_semdedup, _semdedup_oracle),
+    ("doc_quality", _q_doc_quality, _doc_quality_oracle),
+    ("classifier_quality_score", _q_classifier_quality, _classifier_quality_oracle),
+    ("classifier_resample", _q_classifier_resample, _classifier_resample_oracle),
+    ("lm_perplexity", _q_lm_perplexity, _lm_perplexity_oracle),
+    ("ppl_buckets", _q_ppl_buckets, _ppl_buckets_oracle),
+    ("weighted_sample_docs", _q_weighted_sample, _WEIGHTED_SAMPLE_DOCS_ORACLE),
+    ("lang_id", _q_lang_id, _lang_id_oracle),
+    ("token_counts", _q_token_counts, _token_counts_oracle),
+    ("token_counts_bpe", _q_token_counts_bpe, _token_counts_bpe_oracle),
+    ("chunk_documents_bpe", _q_chunk_documents_bpe, _chunk_documents_bpe_oracle),
+    ("pack_sequences_bpe", _q_pack_sequences_bpe, _pack_sequences_bpe_oracle),
+    ("fingerprint", _q_fingerprint, _FINGERPRINT_ORACLE),
+    ("matching_pipeline", _q_matching_pipeline, _matching_pipeline_oracle),
+    ("detection_stats", _q_detection_stats, _detection_stats_oracle),
+    ("accuracy_stats", _q_accuracy_stats, _accuracy_stats_oracle),
+    ("digit_accuracy_chain", _q_digit_accuracy_chain, _digit_accuracy_chain_oracle),
+    ("cost_rollup", _q_cost_rollup, _cost_rollup_oracle),
+    ("parallel_runtime", _q_parallel_runtime, _parallel_runtime_oracle),
+    ("failure_counts", _q_failure_counts, _failure_counts_oracle),
+    ("cohort_select", _q_cohort_select, _cohort_select_oracle),
+    ("predict_ids", _q_predict_ids, _predict_ids_oracle),
+    ("topk_digit_accuracy", _q_topk_digit_accuracy, _topk_digit_accuracy_oracle),
+    ("bootstrap_median_ci", _q_bootstrap_ci, _bootstrap_ci_oracle),
+    ("region_match_prf", _q_region_match, _region_match_oracle),
+    ("ta_cer", _q_ta_cer, _ta_cer_oracle),
+    ("ta_set_prf", _q_ta_set_prf, _ta_set_prf_oracle),
+    ("ta_macro_f1", _q_ta_macro_f1, _ta_macro_f1_oracle),
+    ("ta_exact_match", _q_ta_exact_match, _ta_exact_match_oracle),
+    ("ta_rubric_mae", _q_ta_rubric_mae, _ta_rubric_mae_oracle),
+    ("ta_qwk", _q_ta_qwk, _ta_qwk_oracle),
+    ("ta_feedback_agreement", _q_ta_feedback, _ta_feedback_agreement_oracle),
+    ("json_extract_rollup", _q_json_extract, _JSON_EXTRACT_ROLLUP_ORACLE),
+    ("union_dedup", _q_union_dedup, _UNION_DEDUP_ORACLE),
+    ("summary_stats", _q_summary_stats, _SUMMARY_STATS_ORACLE),
+    # -- driver-signed green in CORRECTNESS_r03 --
+    ("sessionize_events", _q_sessionize, _SESSIONIZE_EVENTS_ORACLE),
+    ("winnow_fingerprints", _q_winnow, _WINNOW_FINGERPRINTS_ORACLE),
+    ("split_pages", _q_split_pages, _split_pages_oracle),
+    ("media_base64", _q_media_base64, _MEDIA_BASE64_ORACLE),
+    ("media_resize", _q_media_resize, _MEDIA_RESIZE_ORACLE),
+    ("media_features", _q_media_features, _media_features_oracle),
+    ("media_probe", _q_media_probe, _MEDIA_PROBE_ORACLE),
+    ("legacy_alias_rewrite", _q_legacy_alias, _LEGACY_ALIAS_REWRITE_ORACLE),
+    ("sweep_grid", _q_sweep_grid, _SWEEP_GRID_ORACLE),
+    ("best_supplier_flags", _q_best_supplier_flags, _BEST_SUPPLIER_FLAGS_ORACLE),
+    ("publish_gate", _q_publish_gate, _PUBLISH_GATE_ORACLE),
+    ("lang_id_trigram", _q_lang_id_trigram, _lang_trigram_oracle),
+    ("corpus_profile", _q_corpus_profile, _corpus_profile_oracle),
+    ("dedup_resolve_lsh", _q_dedup_resolve_lsh, _dedup_resolve_lsh_oracle),
+    ("validate_coerce", _q_validate_coerce, _validate_coerce_oracle),
+    ("cohort_stats", _q_cohort_stats, _cohort_stats_oracle),
+    ("pdf_text_extract", _q_pdf_text, _pdf_text_oracle),
+    ("repetition_scores", _q_repetition, _REPETITION_SCORES_ORACLE),
+    ("media_decode", _q_media_decode, _media_decode_oracle),
+    ("url_dedup", _q_url_dedup, _URL_DEDUP_ORACLE),
+    ("boilerplate_lines", _q_boilerplate_lines, _BOILERPLATE_LINES_ORACLE),
+    ("chunk_documents", _q_chunk_documents, _CHUNK_DOCUMENTS_ORACLE),
+    ("deterministic_sample", _q_deterministic_sample, _DETERMINISTIC_SAMPLE_ORACLE),
+    ("corpus_filter", _q_corpus_filter, _corpus_filter_oracle),
+    ("strip_boilerplate", _q_strip_boilerplate, _STRIP_BOILERPLATE_ORACLE),
+    ("training_pipeline", _q_training_pipeline, _training_pipeline_oracle),
+    ("duplicate_spans", _q_duplicate_spans, _duplicate_spans_oracle),
+    ("dedup_spans_removed", _q_dedup_spans_removed, _dedup_spans_removed_oracle),
+    ("trigram_entropy", _q_trigram_entropy, _TRIGRAM_ENTROPY_ORACLE),
+    ("extract_main_content", _q_extract, _extract_oracle),
+    ("host_stats_salted", _q_host_stats, _host_stats_oracle),
+    ("q1_pricing_summary", _q_pricing_summary, _Q1_PRICING_SUMMARY_ORACLE),
+    ("revenue_by_order", _q_revenue_by_order, _REVENUE_BY_ORDER_ORACLE),
+    ("region_rollup", _q_region_rollup, _REGION_ROLLUP_ORACLE),
+    ("best_order_per_customer", _q_best_order_per_customer, _BEST_ORDER_PER_CUSTOMER_ORACLE),
+    ("top3_orders_per_customer", _q_top3_orders_per_customer, _TOP3_ORDERS_PER_CUSTOMER_ORACLE),
+    ("latest_event_per_user", _q_latest_event_per_user, _LATEST_EVENT_PER_USER_ORACLE),
+    ("supplier_customer_match", _q_supplier_customer_match, _SUPPLIER_CUSTOMER_MATCH_ORACLE),
+    ("digit_frequency", _q_digit_frequency, _DIGIT_FREQUENCY_ORACLE),
+    ("pareto_parts", _q_pareto_parts, _PARETO_PARTS_ORACLE),
+    ("events_hourly", _q_events_hourly, _EVENTS_HOURLY_ORACLE),
+    ("events_asof_order", _q_events_asof_order, _ASOF_ORDER_ORACLE),
+    # tier invariance: the array strategy must satisfy the SAME oracle
+    ("events_asof_order_array", _q_events_asof_order_array, _ASOF_ORDER_ORACLE),
+    ("host_pagerank", _q_host_pagerank, _host_pagerank_oracle),
+    ("events_in_windows", _q_events_in_windows, _EVENTS_IN_WINDOWS_ORACLE),
+    ("hll_distinct_users", _q_hll_distinct_users, _hll_distinct_users_oracle),
+    ("quantile_sketch", _q_quantile_sketch, _quantile_sketch_oracle),
+    ("cms_heavy_hitters", _q_cms_heavy_hitters, _cms_heavy_hitters_oracle),
+    ("calibration_bins", _q_calibration, _CALIBRATION_BINS_ORACLE),
+    ("discount_product", _q_discount_product, _DISCOUNT_PRODUCT_ORACLE),
+    ("dedup_exact", _q_dedup_exact, _DEDUP_EXACT_ORACLE),
+    ("jaccard_pairs", _q_jaccard_pairs, _jaccard_pairs_oracle),
+    ("dedup_resolve", _q_dedup_resolve, _DEDUP_RESOLVE_ORACLE),
+    ("minhash_lsh_pairs", _q_minhash_pairs, _minhash_oracle),
+    ("simhash_pairs", _q_simhash_pairs, _simhash_oracle),
+    ("ann_cosine_topk", _q_ann_cosine, _ANN_COSINE_TOPK_ORACLE),
+    ("ann_lsh_topk", _q_ann_lsh, _ann_lsh_oracle),
 )
 
-# DuckDB mirror of operators.matching.surname_candidates (same candidate SET;
-# order is irrelevant because only the min pair distance is used)
-# DuckDB mirror of matching.surname_candidates (reference
-# string_matching.py:46-96): last two tokens individually for 3+-token names,
-# else the last token; per-token variants = token, hyphen parts, hyphen-free
-# concatenation; lower + dedup.
-_CAND = """list_distinct(list_transform(
-      list_filter(
-        flatten(list_transform(
-          CASE WHEN len(toks) >= 3 THEN toks[len(toks)-1:len(toks)]
-               WHEN len(toks) >= 1 THEN [toks[len(toks)]]
-               ELSE CAST([] AS VARCHAR[]) END,
-          t -> CASE WHEN contains(t, '-')
-                    THEN list_concat(list_concat([t],
-                             list_filter(string_split(t, '-'), p -> p != '')),
-                         [array_to_string(string_split(t, '-'), '')])
-                    ELSE [t] END)),
-        x -> x != ''),
-      x -> lower(x)))"""
 
-_SPLIT_NAME = r"list_filter(string_split(regexp_replace(trim({col}), '\s+', ' ', 'g'), ' '), x -> x != '')"
-
-
-def _fixture_oracles() -> dict[str, str]:
-    truth_cte = _values_cte(
-        "truth", ["doc", "student_id", "student_full_name"], matching_fixture.truth_rows()
-    )
-    ex_cte = _values_cte(
-        "extracted", ["doc", "page", "llm_id", "llm_fullname"], matching_fixture.extracted_rows()
-    )
-    results_cte = _values_cte(
-        "results",
-        [
-            "run_name", "url", "prompt_tokens", "completion_tokens", "actual_cost",
-            "cost_is_estimated", "generation_id", "failure_marker", "elapsed_seconds",
-        ],
-        runs_fixture.result_rows(),
-    )
-    runs_cte = _values_cte(
-        "runs",
-        [
-            "run_name", "model_key", "ts", "fingerprint", "runtime_seconds",
-            "digit_top1", "id_top1", "docs_detected",
-        ],
-        runs_fixture.runs_rows(),
-    )
-    probs_cte = _values_cte(
-        "probs", ["doc", "pos", "probs", "truth_digit"], probs_fixture.probs_rows()
-    )
-    cands_cte = _values_cte(
-        "cands", ["student_id"], [(probs_fixture.truth_id(42, d),) for d in range(32)]
-    )
-    cutoff = repr(probs_ops.DETECTION_CUTOFF)
-
-    ta_text_cte = _values_cte("pairs", ["doc", "gt", "pred"], ta_fixture.text_pairs())
-    ta_g, ta_p = ta_fixture.item_sets()
-    ta_gt_cte = _values_cte("gt", ["doc_id", "item"], ta_g)
-    ta_pred_cte = _values_cte("pred", ["doc_id", "item"], ta_p)
-    rub_g, rub_p = ta_fixture.rubric_rows()
-    rub_gt_cte = _values_cte("rgt", ["doc", "problem_uid", "criterion_id", "awarded_points"], rub_g)
-    rub_pred_cte = _values_cte("rpred", ["doc", "problem_uid", "criterion_id", "awarded_points"], rub_p)
-    qwk_cte = _values_cte("qpairs", ["t", "p"], ta_fixture.label_pairs())
-    fb_g, fb_p = ta_fixture.feedback_rows()
-    fb_gt_cte = _values_cte("fgt", ["doc", "problem_uid", "specificity", "actionability", "correctness"], fb_g)
-    fb_pred_cte = _values_cte("fpred", ["doc", "problem_uid", "specificity", "actionability", "correctness"], fb_p)
-    _d1 = "CAST(1 AS DOUBLE)"
-    _d0 = "CAST(0 AS DOUBLE)"
-
-    ta_oracles = {
-        "ta_cer": f"""
-            WITH {ta_text_cte}
-            SELECT ROUND(CAST(SUM(levenshtein(gt, pred)) AS DOUBLE) / SUM(greatest(length(gt), 1)), 6) AS cer,
-                   ROUND(AVG(levenshtein(gt, pred) / greatest(length(gt), length(pred), 1)), 6) AS mean_norm_lev
-            FROM pairs
-        """,
-        "ta_set_prf": f"""
-            WITH {ta_gt_cte},
-            {ta_pred_cte},
-            g AS (SELECT DISTINCT doc_id, item FROM gt),
-            p AS (SELECT DISTINCT doc_id, item FROM pred),
-            j AS (SELECT COALESCE(g.doc_id, p.doc_id) AS doc_id, g.item AS gi, p.item AS pi
-                  FROM g FULL OUTER JOIN p ON g.doc_id = p.doc_id AND g.item = p.item)
-            SELECT doc_id,
-                   CAST(SUM(CASE WHEN gi IS NOT NULL AND pi IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-                   CAST(SUM(CASE WHEN gi IS NULL AND pi IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS fp,
-                   CAST(SUM(CASE WHEN gi IS NOT NULL AND pi IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS fn
-            FROM j GROUP BY doc_id
-        """,
-        "ta_macro_f1": f"""
-            WITH {ta_gt_cte},
-            {ta_pred_cte},
-            g AS (SELECT DISTINCT doc_id, item FROM gt),
-            p AS (SELECT DISTINCT doc_id, item FROM pred),
-            j AS (SELECT COALESCE(g.item, p.item) AS item, g.item AS gi, p.item AS pi
-                  FROM g FULL OUTER JOIN p ON g.doc_id = p.doc_id AND g.item = p.item),
-            per_tag AS (
-              SELECT item,
-                     CAST(SUM(CASE WHEN gi IS NOT NULL AND pi IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-                     CAST(SUM(CASE WHEN gi IS NULL AND pi IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS fp,
-                     CAST(SUM(CASE WHEN gi IS NOT NULL AND pi IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS fn
-              FROM j GROUP BY item)
-            SELECT item, tp, fp, fn,
-                   ROUND(CASE WHEN 2 * tp + fp + fn > 0
-                              THEN CAST(2 AS DOUBLE) * tp / (2 * tp + fp + fn)
-                              ELSE {_d0} END, 6) AS f1
-            FROM per_tag
-        """,
-        "ta_exact_match": f"""
-            WITH {ta_text_cte}
-            SELECT ROUND(AVG(CASE WHEN gt = pred THEN {_d1} ELSE {_d0} END), 6) AS exact_match,
-                   COUNT(*) AS n
-            FROM pairs WHERE gt IS NOT NULL AND gt != ''
-        """,
-        "ta_rubric_mae": f"""
-            WITH {rub_gt_cte},
-            {rub_pred_cte},
-            j AS (SELECT g.awarded_points AS _gt, p.awarded_points AS _pred
-                  FROM rgt g LEFT JOIN rpred p
-                  ON g.doc = p.doc AND g.problem_uid = p.problem_uid AND g.criterion_id = p.criterion_id)
-            SELECT ROUND(AVG(ABS(_gt - COALESCE(_pred, {_d0}))), 6) AS mae,
-                   ROUND(AVG(CASE WHEN ABS(_gt - COALESCE(_pred, {_d0})) = 0 THEN {_d1} ELSE {_d0} END), 6) AS exact_rate,
-                   COUNT(*) AS n
-            FROM j
-        """,
-        "ta_qwk": f"""
-            WITH {qwk_cte},
-            obs AS (SELECT t AS _t, p AS _p, COUNT(*) AS o FROM qpairs GROUP BY 1, 2),
-            mt AS (SELECT t AS _t, COUNT(*) AS m_t FROM qpairs GROUP BY 1),
-            mp AS (SELECT p AS _p, COUNT(*) AS m_p FROM qpairs GROUP BY 1),
-            grid AS (SELECT mt._t, mp._p, mt.m_t, mp.m_p FROM mt CROSS JOIN mp),
-            filled AS (SELECT grid._t, grid._p, grid.m_t, grid.m_p, COALESCE(obs.o, 0) AS o
-                       FROM grid LEFT JOIN obs ON grid._t = obs._t AND grid._p = obs._p),
-            agg AS (SELECT
-                SUM(((_t - _p) * (_t - _p)) / CAST(9 AS DOUBLE) * o) AS wo,
-                SUM(((_t - _p) * (_t - _p)) / CAST(9 AS DOUBLE) * m_t * m_p / CAST({len(ta_fixture.label_pairs())} AS DOUBLE)) AS we
-              FROM filled)
-            SELECT ROUND(CASE WHEN we > 0 THEN {_d1} - wo / we ELSE {_d1} END, 6) AS qwk FROM agg
-        """,
-        "ta_feedback_agreement": f"""
-            WITH {fb_gt_cte},
-            {fb_pred_cte},
-            j AS (SELECT g.specificity AS gs, g.actionability AS ga, g.correctness AS gc,
-                         p.specificity AS ps, p.actionability AS pa, p.correctness AS pc
-                  FROM fgt g JOIN fpred p ON g.doc = p.doc AND g.problem_uid = p.problem_uid),
-            s AS (
-              SELECT 'specificity' AS dim, CASE WHEN gs = ps THEN {_d1} ELSE {_d0} END AS agree FROM j
-              UNION ALL
-              SELECT 'actionability', CASE WHEN ga = pa THEN {_d1} ELSE {_d0} END FROM j
-              UNION ALL
-              SELECT 'correctness', CASE WHEN gc = pc THEN {_d1} ELSE {_d0} END FROM j)
-            SELECT dim, ROUND(AVG(agree), 6) AS agreement FROM s GROUP BY dim
-        """,
-    }
-
-    return {
-        **ta_oracles,
-        "matching_pipeline": f"""
-            WITH {truth_cte},
-            {ex_cte},
-            tc0 AS (SELECT *, {_SPLIT_NAME.format(col='student_full_name')} AS toks FROM truth),
-            tc AS (SELECT doc, student_id, {_CAND} AS ct FROM tc0),
-            ec0 AS (SELECT *, {_SPLIT_NAME.format(col='llm_fullname')} AS toks FROM extracted),
-            ec AS (SELECT doc, llm_id, {_CAND} AS ce FROM ec0),
-            pairs AS (
-              SELECT e.doc, t.student_id,
-                     levenshtein(lower(e.llm_id), lower(t.student_id)) AS id_distance,
-                     list_min(flatten(list_transform(e.ce,
-                         a -> list_transform(t.ct, b -> levenshtein(a, b))))) AS lastname_distance
-              FROM ec e CROSS JOIN tc t)
-            SELECT doc, student_id, MIN(id_distance) AS id_distance,
-                   MIN(lastname_distance) AS lastname_distance,
-                   (MIN(id_distance) <= 3 OR MIN(lastname_distance) = 0) AS found
-            FROM pairs WHERE id_distance <= 3 OR lastname_distance = 0
-            GROUP BY doc, student_id
-        """,
-        "detection_stats": f"""
-            WITH {truth_cte},
-            {ex_cte},
-            tc0 AS (SELECT *, {_SPLIT_NAME.format(col='student_full_name')} AS toks FROM truth),
-            tc AS (SELECT doc, student_id, {_CAND} AS ct FROM tc0),
-            ec0 AS (SELECT *, {_SPLIT_NAME.format(col='llm_fullname')} AS toks FROM extracted),
-            ec AS (SELECT doc, llm_id, {_CAND} AS ce FROM ec0),
-            pairs AS (
-              SELECT e.doc,
-                     levenshtein(lower(e.llm_id), lower(t.student_id)) AS id_distance,
-                     list_min(flatten(list_transform(e.ce,
-                         a -> list_transform(t.ct, b -> levenshtein(a, b))))) AS lastname_distance
-              FROM ec e CROSS JOIN tc t),
-            per_doc AS (
-              SELECT doc, MIN(id_distance) AS min_id, MIN(lastname_distance) AS min_lastname
-              FROM pairs GROUP BY doc)
-            SELECT COUNT(*) AS n_docs,
-                   CAST(SUM(CASE WHEN min_id <= 3 OR min_lastname = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_detected,
-                   ROUND(AVG(CASE WHEN min_id <= 3 OR min_lastname = 0 THEN CAST(1 AS DOUBLE) ELSE CAST(0 AS DOUBLE) END) * 100, 6) AS docs_detected_pct
-            FROM per_doc
-        """,
-        # reference table_generator.py:700-730: best match per doc → digit
-        # explode of matched (llm_id, student_id) → mean·100
-        "digit_accuracy_chain": f"""
-            WITH {truth_cte},
-            {ex_cte},
-            tc0 AS (SELECT *, {_SPLIT_NAME.format(col='student_full_name')} AS toks FROM truth),
-            tc AS (SELECT doc, student_id, {_CAND} AS ct FROM tc0),
-            ec0 AS (SELECT *, {_SPLIT_NAME.format(col='llm_fullname')} AS toks FROM extracted),
-            ec AS (SELECT doc, llm_id, {_CAND} AS ce FROM ec0),
-            pairs AS (
-              SELECT e.doc, e.llm_id, t.student_id,
-                     levenshtein(lower(e.llm_id), lower(t.student_id)) AS id_distance,
-                     list_min(flatten(list_transform(e.ce,
-                         a -> list_transform(t.ct, b -> levenshtein(a, b))))) AS lastname_distance
-              FROM ec e CROSS JOIN tc t),
-            best AS (
-              SELECT doc, llm_id, student_id FROM (
-                SELECT *, ROW_NUMBER() OVER (
-                    PARTITION BY doc ORDER BY id_distance, lastname_distance, student_id) AS rn
-                FROM pairs) WHERE rn = 1),
-            dg AS (
-              SELECT substr(lpad(student_id, 8, '0'), CAST(u.i AS INT), 1) AS a,
-                     substr(lpad(llm_id, 8, '0'), CAST(u.i AS INT), 1) AS b
-              FROM best, unnest(range(1, 9)) u(i))
-            SELECT ROUND(AVG(CASE WHEN a = b THEN 1.0 ELSE 0.0 END) * 100, 6) AS digit_top1,
-                   COUNT(*) AS n_digits
-            FROM dg
-        """,
-        "accuracy_stats": f"""
-            WITH {truth_cte},
-            {ex_cte},
-            tc0 AS (SELECT *, {_SPLIT_NAME.format(col='student_full_name')} AS toks FROM truth),
-            tc AS (SELECT doc, student_id, {_CAND} AS ct FROM tc0),
-            ec0 AS (SELECT *, {_SPLIT_NAME.format(col='llm_fullname')} AS toks FROM extracted),
-            ec AS (SELECT doc, llm_id, {_CAND} AS ce FROM ec0),
-            pairs AS (
-              SELECT e.doc,
-                     levenshtein(lower(e.llm_id), lower(t.student_id)) AS id_distance,
-                     list_min(flatten(list_transform(e.ce,
-                         a -> list_transform(t.ct, b -> levenshtein(a, b))))) AS lastname_distance
-              FROM ec e CROSS JOIN tc t),
-            best AS (
-              SELECT doc, id_distance, lastname_distance FROM (
-                SELECT *, ROW_NUMBER() OVER (PARTITION BY doc ORDER BY id_distance, lastname_distance) AS rn
-                FROM pairs) WHERE rn = 1)
-            SELECT ROUND(AVG(CASE WHEN id_distance = 0 THEN CAST(1 AS DOUBLE) ELSE CAST(0 AS DOUBLE) END) * 100, 6) AS id_top1,
-                   ROUND(AVG(id_distance), 6) AS id_avg_lev,
-                   ROUND(AVG(CASE WHEN lastname_distance = 0 THEN CAST(1 AS DOUBLE) ELSE CAST(0 AS DOUBLE) END) * 100, 6) AS lastname_top1,
-                   CAST(SUM(CASE WHEN id_distance = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_perfect_id
-            FROM best
-        """,
-        "cost_rollup": f"""
-            WITH {results_cte},
-            agg AS (
-              SELECT run_name, COUNT(*) AS n_rows,
-                     CAST(SUM(prompt_tokens) AS BIGINT) AS prompt_tokens,
-                     CAST(SUM(completion_tokens) AS BIGINT) AS completion_tokens,
-                     CAST(SUM(CASE WHEN actual_cost IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_missing,
-                     CAST(SUM(CASE WHEN actual_cost IS NOT NULL AND cost_is_estimated THEN 1 ELSE 0 END) AS BIGINT) AS n_estimated,
-                     CAST(SUM(CASE WHEN actual_cost IS NOT NULL AND NOT cost_is_estimated AND actual_cost = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_zero,
-                     CAST(SUM(CASE WHEN actual_cost IS NOT NULL AND NOT cost_is_estimated AND actual_cost > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_precise,
-                     SUM(actual_cost) AS cost_sum
-              FROM results GROUP BY run_name)
-            SELECT run_name, n_rows, prompt_tokens, completion_tokens,
-                   n_missing, n_estimated, n_zero, n_precise,
-                   CASE WHEN n_missing = n_rows THEN 'unavailable'
-                        WHEN n_missing > 0 THEN 'partial'
-                        WHEN n_estimated > 0 THEN 'estimated'
-                        WHEN n_zero = n_rows THEN 'verified_zero'
-                        ELSE 'precise' END AS cost_status,
-                   CASE WHEN n_missing = 0 THEN ROUND(cost_sum, 8) END AS total_cost,
-                   CASE WHEN n_missing = 0 THEN ROUND(cost_sum / n_rows, 10) END AS cost_per_row
-            FROM agg
-        """,
-        "parallel_runtime": f"""
-            WITH {results_cte}
-            SELECT run_name, COUNT(*) AS n_rows,
-                   CAST(SUM(CASE WHEN elapsed_seconds IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_untimed,
-                   CASE WHEN SUM(CASE WHEN elapsed_seconds IS NULL THEN 1 ELSE 0 END) = 0
-                        THEN MAX(elapsed_seconds) END AS parallel_runtime_seconds
-            FROM results GROUP BY run_name
-        """,
-        "failure_counts": f"""
-            WITH {results_cte}
-            SELECT run_name,
-                   CASE WHEN failure_marker = '' THEN 'ok' ELSE failure_marker END AS reason,
-                   COUNT(*) AS n
-            FROM results GROUP BY 1, 2
-        """,
-        "cohort_select": f"""
-            WITH {runs_cte},
-            anchors AS (
-              SELECT model_key, fingerprint, ts AS anchor_ts FROM (
-                SELECT *, ROW_NUMBER() OVER (PARTITION BY model_key ORDER BY ts DESC, run_name ASC) AS rn
-                FROM runs) WHERE rn = 1)
-            SELECT r.run_name, r.model_key, r.ts, r.fingerprint, r.runtime_seconds,
-                   r.digit_top1, r.id_top1, r.docs_detected, a.anchor_ts
-            FROM runs r
-            JOIN anchors a ON r.model_key = a.model_key AND r.fingerprint = a.fingerprint
-            WHERE epoch(a.anchor_ts) - epoch(r.ts) BETWEEN 0 AND 86400
-        """,
-        "predict_ids": f"""
-            WITH {probs_cte},
-            {cands_cte},
-            cd AS (SELECT student_id, pos, CAST(substr(lpad(student_id, 8, '0'), CAST(pos AS INT) + 1, 1) AS INT) AS d
-                   FROM cands CROSS JOIN range(8) t(pos)),
-            j AS (SELECT p.doc, cd.student_id, list_extract(p.probs, cd.d + 1) AS pv
-                  FROM probs p JOIN cd ON p.pos = cd.pos),
-            s AS (SELECT doc, student_id,
-                         ROUND(CASE WHEN MAX(CASE WHEN pv <= 0 THEN 1 ELSE 0 END) = 1 THEN CAST(0 AS DOUBLE)
-                                    ELSE EXP(SUM(LN(CASE WHEN pv > 0 THEN pv END))) END, 12) AS score
-                  FROM j GROUP BY doc, student_id)
-            SELECT doc, student_id, score, score >= CAST('{cutoff}' AS DOUBLE) AS detected
-            FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY doc ORDER BY score DESC, student_id ASC) AS rn FROM s)
-            WHERE rn = 1
-        """,
-        "topk_digit_accuracy": f"""
-            WITH {probs_cte},
-            p2 AS (SELECT probs, truth_digit, list_extract(probs, truth_digit + 1) AS pt FROM probs),
-            r AS (SELECT len(list_filter([0,1,2,3,4,5,6,7,8,9],
-                       d -> list_extract(probs, d + 1) > pt
-                            OR (list_extract(probs, d + 1) = pt AND d < truth_digit))) AS rank
-                  FROM p2)
-            SELECT ROUND(AVG(CASE WHEN rank < 1 THEN CAST(1 AS DOUBLE) ELSE CAST(0 AS DOUBLE) END), 6) AS top1_acc,
-                   ROUND(AVG(CASE WHEN rank < 2 THEN CAST(1 AS DOUBLE) ELSE CAST(0 AS DOUBLE) END), 6) AS top2_acc,
-                   ROUND(AVG(CASE WHEN rank < 3 THEN CAST(1 AS DOUBLE) ELSE CAST(0 AS DOUBLE) END), 6) AS top3_acc
-            FROM r
-        """,
-    }
-
-
-def _lang_trigram_oracle() -> str:
-    from batch_doc_vqa_spark.operators.textstats import _TRIGRAM_PROFILES
-
-    def hits(grams: list[str]) -> str:
-        parts = " + ".join(
-            f"(length(t) - length(replace(t, '{g}', ''))) / {len(g)}" for g in grams
-        )
-        return f"CAST({parts} AS BIGINT)"
-
-    score_cols = ",\n               ".join(
-        f"{hits(g)} AS tri_{lang}" for lang, g in _TRIGRAM_PROFILES.items()
-    )
-    langs = list(_TRIGRAM_PROFILES)
-    g4 = ", ".join(f"tri_{lg}" for lg in langs)
-    guess = "CASE WHEN greatest({g}) = 0 THEN 'und' ".format(g=g4)
-    for lang in langs[:-1]:
-        guess += f"WHEN tri_{lang} = greatest({g4}) THEN '{lang}' "
-    guess += f"ELSE '{langs[-1]}' END"
-    return f"""
-        WITH lowered AS (SELECT doc_id, lower(text) AS t FROM documents),
-        s AS (SELECT doc_id,
-               {score_cols}
-              FROM lowered)
-        SELECT doc_id, {g4}, {guess} AS lang_guess FROM s
-    """
+def queries() -> dict[str, _Builder]:
+    return {name: build for name, build, _ in _QUERIES}
 
 
 def oracle_sql() -> dict[str, str]:
-    oracles = {
-        **_fixture_oracles(),
-        "dedup_resolve_lsh": _dedup_resolve_lsh_oracle(),
-        # resolver tier invariance: star contraction shares the label tier's
-        # oracle verbatim (both converge to the component minimum)
-        "dedup_resolve_starcc": _dedup_resolve_lsh_oracle(),
-        "pdf_text_extract": _pdf_text_oracle(),
-        "cohort_stats": _cohort_stats_oracle(),
-        "media_decode": _media_decode_oracle(),
-        # the canonical form is a pure function of c_custkey, so the oracle
-        # reconstructs it arithmetically and groups — value-checking the whole
-        # canonicalization (case, port, fragment, tracking params, slashes)
-        "url_dedup": """
-            WITH c AS (
-              SELECT c_custkey AS k, CAST(c_custkey // 2 AS BIGINT) AS p FROM customer
-            ), urls AS (
-              SELECT p,
-                CASE WHEN k % 2 = 0
-                     THEN 'https://Site' || (p % 7) || '.Example.org/a//b/page-' || p || '/?utm_source=news&x=' || p || '#top'
-                     ELSE 'https://site' || (p % 7) || '.example.org/a/b/page-' || p || '?x=' || p
-                END AS url
-              FROM c
-            ), canon AS (
-              SELECT 'https://site' || (p % 7) || '.example.org/a/b/page-' || p || '?x=' || p AS canonical_url,
-                     url
-              FROM urls
-            )
-            SELECT canonical_url, MIN(url) AS canonical_id, COUNT(*) AS n_dups
-            FROM canon GROUP BY canonical_url
-        """,
-        # window starts are 1+k*stride (k = 0..ceil((n-chunk)/stride)); the
-        # chunk index is recovered arithmetically as (start-1)/stride and
-        # n_tokens as least(chunk, n-start+1) — no re-tokenization needed
-        "chunk_documents": r"""
-            WITH t AS (
-              SELECT doc_id, list_filter(regexp_split_to_array(text, '\s+'), x -> x != '') AS tk
-              FROM documents
-            ), b AS (
-              SELECT doc_id, tk, len(tk) AS n FROM t
-            ), st AS (
-              SELECT doc_id, tk, n,
-                CASE WHEN n > 0
-                     THEN range(1, 2 + greatest(CAST(ceil((n - 64.0) / 48) AS INT), 0) * 48, 48)
-                     ELSE CAST([] AS BIGINT[]) END AS starts
-              FROM b
-            ), ex AS (
-              SELECT doc_id, n, tk, unnest(starts) AS s FROM st
-            )
-            SELECT doc_id,
-                   CAST((s - 1) // 48 AS INT) AS chunk_idx,
-                   CAST(least(64, n - s + 1) AS INT) AS n_tokens,
-                   array_to_string(list_slice(tk, CAST(s AS INT), CAST(s + 63 AS INT)), ' ') AS chunk_text
-            FROM ex
-        """,
-        "deterministic_sample": """
-            SELECT doc_id, n_chars FROM documents
-            WHERE CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR) || '#3'), 1, 15)) AS BIGINT)
-                  % 1048576 < 262144
-        """,
-        "boilerplate_lines": """
-            WITH d AS (
-              SELECT 'h' || (doc_id % 5) AS host,
-                     'cookie notice for h' || (doc_id % 5) || chr(10) || text
-                       || chr(10) || 'all rights reserved' AS text
-              FROM documents
-            ), lines AS (
-              SELECT host,
-                     unnest(list_distinct(list_filter(string_split(text, chr(10)), x -> trim(x) != ''))) AS line
-              FROM d
-            )
-            SELECT host, line, COUNT(*) AS n_pages
-            FROM lines GROUP BY 1, 2 HAVING COUNT(*) >= 3
-        """,
-        # windowed-hash mirror of the suffix-array substring dedup: k=8-token
-        # window hashes (portable md5), shared-by-≥10-docs filter, interval
-        # merge via lag + running sum — positions are 1-based inclusive
-        "duplicate_spans": rf"""
-            WITH d AS (
-              SELECT doc_id,
-                CASE WHEN doc_id % 3 = 0 THEN '{_INTROS[0]}'
-                     WHEN doc_id % 3 = 1 THEN '{_INTROS[1]}'
-                     ELSE '{_INTROS[2]}' END || ' ' || text AS text
-              FROM documents
-            ), t AS (
-              SELECT doc_id, list_filter(regexp_split_to_array(text, '\s+'), x -> x != '') AS tk
-              FROM d
-            ), b AS (
-              SELECT doc_id, tk, len(tk) AS n FROM t
-            ), w AS (
-              SELECT doc_id, u.i AS pos,
-                CAST(concat('0x', substr(md5(array_to_string(list_slice(tk, CAST(u.i AS INT), CAST(u.i + 7 AS INT)), ' ')), 1, 15)) AS BIGINT) AS h
-              FROM b, unnest(range(1, greatest(n - 7, 0) + 1)) u(i)
-            ), shared AS (
-              SELECT h FROM (SELECT h, COUNT(DISTINCT doc_id) AS nd FROM w GROUP BY h)
-              WHERE nd >= 10
-            ), dup AS (
-              SELECT doc_id, pos FROM w JOIN shared USING (h)
-            ), runs AS (
-              SELECT doc_id, pos,
-                CASE WHEN COALESCE(pos - lag(pos) OVER (PARTITION BY doc_id ORDER BY pos), 9) > 8
-                     THEN 1 ELSE 0 END AS nw
-              FROM dup
-            ), spans AS (
-              SELECT doc_id, pos,
-                SUM(nw) OVER (PARTITION BY doc_id ORDER BY pos ROWS UNBOUNDED PRECEDING) AS sp
-              FROM runs
-            )
-            SELECT doc_id, CAST(MIN(pos) AS INT) AS span_start,
-                   CAST(MAX(pos) + 7 AS INT) AS span_end,
-                   COUNT(*) AS n_windows
-            FROM spans GROUP BY doc_id, sp
-        """,
-        # removal mirror: same span chain, then an index-aware list_filter
-        # (DuckDB (x,i) lambdas are 1-based like the span positions) drops
-        # every token inside a span; spanless docs pass through verbatim
-        "dedup_spans_removed": rf"""
-            WITH d AS (
-              SELECT doc_id,
-                CASE WHEN doc_id % 3 = 0 THEN '{_INTROS[0]}'
-                     WHEN doc_id % 3 = 1 THEN '{_INTROS[1]}'
-                     ELSE '{_INTROS[2]}' END || ' ' || text AS text
-              FROM documents
-            ), t AS (
-              SELECT doc_id, text, list_filter(regexp_split_to_array(text, '\s+'), x -> x != '') AS tk
-              FROM d
-            ), b AS (
-              SELECT doc_id, text, tk, len(tk) AS n FROM t
-            ), w AS (
-              SELECT doc_id, u.i AS pos,
-                CAST(concat('0x', substr(md5(array_to_string(list_slice(tk, CAST(u.i AS INT), CAST(u.i + 7 AS INT)), ' ')), 1, 15)) AS BIGINT) AS h
-              FROM b, unnest(range(1, greatest(n - 7, 0) + 1)) u(i)
-            ), shared AS (
-              SELECT h FROM (SELECT h, COUNT(DISTINCT doc_id) AS nd FROM w GROUP BY h)
-              WHERE nd >= 10
-            ), dup AS (
-              SELECT doc_id, pos FROM w JOIN shared USING (h)
-            ), runs AS (
-              SELECT doc_id, pos,
-                CASE WHEN COALESCE(pos - lag(pos) OVER (PARTITION BY doc_id ORDER BY pos), 9) > 8
-                     THEN 1 ELSE 0 END AS nw
-              FROM dup
-            ), spansq AS (
-              SELECT doc_id, pos,
-                SUM(nw) OVER (PARTITION BY doc_id ORDER BY pos ROWS UNBOUNDED PRECEDING) AS sp
-              FROM runs
-            ), agg AS (
-              SELECT doc_id, list([st, en]) AS arr FROM (
-                SELECT doc_id, sp, MIN(pos) AS st, MAX(pos) + 7 AS en
-                FROM spansq GROUP BY doc_id, sp) q
-              GROUP BY doc_id
-            )
-            SELECT b.doc_id,
-                   md5(CASE WHEN a.arr IS NULL THEN b.text
-                            ELSE array_to_string(list_filter(b.tk,
-                                (x, i) -> len(list_filter(a.arr, s -> i >= s[1] AND i <= s[2])) = 0), ' ')
-                       END) AS text_md5
-            FROM b LEFT JOIN agg a ON a.doc_id = b.doc_id
-        """,
-        # removal mirror: same denylist CTE, lines filtered in place, md5 of
-        # the cleaned text proves byte-exact equality with the Spark op
-        "strip_boilerplate": """
-            WITH d AS (
-              SELECT doc_id, 'h' || (doc_id % 5) AS host,
-                     'cookie notice for h' || (doc_id % 5) || chr(10) || text
-                       || chr(10) || 'all rights reserved' AS text
-              FROM documents
-            ), lines AS (
-              SELECT host,
-                     unnest(list_distinct(list_filter(string_split(text, chr(10)), x -> trim(x) != ''))) AS line
-              FROM d
-            ), deny AS (
-              SELECT host, line FROM lines GROUP BY 1, 2 HAVING COUNT(*) >= 3
-            ), dl AS (
-              SELECT host, list(line) AS arr FROM deny GROUP BY host
-            )
-            SELECT d.doc_id, d.host,
-                   md5(array_to_string(list_filter(string_split(d.text, chr(10)),
-                       ln -> dl.arr IS NULL OR NOT list_contains(dl.arr, ln)), chr(10))) AS text_md5
-            FROM d LEFT JOIN dl USING (host)
-        """,
-        # lenient-ladder mirror: violations are pure functions of c_custkey,
-        # so the oracle recomputes the coerced values + corrections directly
-        "validate_coerce": f"""
-            WITH v AS ({_VALIDATE_ORACLE_BASE})
-            SELECT c_custkey,
-                   CASE WHEN v1 IS NOT NULL THEN NULL ELSE id8 END AS student_id,
-                   CASE WHEN v2 IS NOT NULL THEN NULL
-                        ELSE CAST(c_custkey % 1000 AS DOUBLE) END AS score,
-                   CASE WHEN v3 IS NOT NULL THEN NULL ELSE c_name END AS name,
-                   CASE WHEN v4 IS NOT NULL THEN NULL ELSE grade_clean END AS grade,
-                   CASE WHEN v5 IS NOT NULL THEN NULL
-                        ELSE CAST(c_custkey % 200 - 50 AS DOUBLE) END AS pct,
-                   CASE WHEN v6 IS NOT NULL THEN NULL ELSE comment_raw END AS comment_short,
-                   CASE WHEN v7 IS NOT NULL THEN NULL ELSE meta_clean END AS meta,
-                   CASE WHEN v8 IS NOT NULL THEN NULL ELSE tags_raw END AS tags,
-                   CASE WHEN v9 IS NOT NULL THEN NULL ELSE contact_raw END AS contact,
-                   CASE WHEN v10 IS NOT NULL THEN NULL ELSE payload_raw END AS payload,
-                   CASE WHEN v11 IS NOT NULL THEN NULL ELSE profile_raw END AS profile,
-                   CASE WHEN v12 IS NOT NULL THEN NULL ELSE event_ts_raw END AS event_ts,
-                   CASE WHEN v13 IS NOT NULL THEN NULL ELSE sku_raw END AS sku,
-                   CASE WHEN v14 IS NOT NULL THEN NULL ELSE alias_raw END AS alias,
-                   CASE WHEN v15 IS NOT NULL THEN NULL ELSE mode_val_raw END AS mode_val,
-                   CASE WHEN v16 IS NOT NULL THEN NULL ELSE nums_raw END AS nums,
-                   COALESCE(array_to_string(list_filter(
-                       [v1, v2, v3, v4, v5, v6, v7, v8, v9, v10, v11, v12, v13, v14, v15, v16], x -> x IS NOT NULL), ';'), '')
-                       AS corrections_csv,
-                   COALESCE(v1, v2, v3, v4, v5, v6, v7, v8, v9, v10, v11, v12, v13, v14, v15, v16) AS first_violation,
-                   TRUE AS valid
-            FROM v
-        """,
-        "pii_report": _pii_report_oracle(),
-        "pii_redact": _pii_redact_oracle(),
-        "incremental_dedup": f"""
-            WITH {_minhash_ctes()}
-            SELECT id_a, id_b, est_jaccard FROM pairs
-            WHERE est_jaccard >= 0.5 AND (id_a % 5 = 0 OR id_b % 5 = 0)
-        """,
-        "snapshot_diff": f"""
-            WITH {_SNAPSHOT_CTES}
-            SELECT doc_id, change FROM dif
-        """,
-        "snapshot_summary": f"""
-            WITH {_SNAPSHOT_CTES}
-            SELECT change, COUNT(*) AS n FROM dif GROUP BY change
-        """,
-        "snapshot_work_set": f"""
-            WITH {_SNAPSHOT_CTES}
-            SELECT n.doc_id, md5(n.text) AS text_md5
-            FROM newt n JOIN dif USING (doc_id)
-            WHERE dif.change IN ('added', 'changed')
-        """,
-        "epoch_expand": """
-            WITH e AS (
-                SELECT doc_id, source,
-                       CASE WHEN CAST(substr(source, 4) AS INT) % 2 = 1
-                            THEN 2.5 ELSE 1.0 END AS epochs,
-                       CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR) || '#0'), 1, 15)) AS BIGINT)
-                           % 1048576 AS h
-                FROM documents
-            ), c AS (
-                SELECT doc_id, source,
-                       CAST(FLOOR(epochs) AS INT)
-                       + CASE WHEN h < CAST(FLOOR((epochs - FLOOR(epochs)) * 1048576) AS BIGINT)
-                              THEN 1 ELSE 0 END AS copies
-                FROM e
-            )
-            SELECT doc_id, source, CAST(epoch_idx AS INT) AS epoch_idx
-            FROM (SELECT doc_id, source, unnest(range(0, copies)) AS epoch_idx
-                  FROM c WHERE copies > 0)
-        """,
-        "budget_select": """
-            SELECT doc_id, source, n_chars, cum_tokens
-            FROM (SELECT doc_id, source, n_chars,
-                         CAST(SUM(n_chars) OVER (PARTITION BY source
-                             ORDER BY n_chars DESC, doc_id
-                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-                             AS cum_tokens
-                  FROM documents)
-            WHERE cum_tokens <= 5000
-        """,
-        "pack_sequences": f"""
-            WITH {_PACK_OFF_CTE}
-            SELECT doc_id, n_tokens, start_offset, seq_id, end_seq_id,
-                   end_seq_id > seq_id AS crosses_boundary
-            FROM laid
-        """,
-        "packing_stats": f"""
-            WITH {_PACK_OFF_CTE}
-            SELECT n_docs, total_tokens,
-                   CAST((total_tokens + 511) // 512 AS BIGINT) AS n_sequences,
-                   n_boundary_docs,
-                   ROUND(CAST(total_tokens AS DOUBLE)
-                         / (((total_tokens + 511) // 512) * 512), 6) AS fill_fraction
-            FROM (SELECT COUNT(*) AS n_docs,
-                         CAST(SUM(n_tokens) AS BIGINT) AS total_tokens,
-                         CAST(SUM(CASE WHEN end_seq_id > seq_id THEN 1 ELSE 0 END) AS BIGINT)
-                             AS n_boundary_docs
-                  FROM laid)
-        """,
-        "contamination_report": f"""
-            WITH {_decontam_ctes()}
-            SELECT doc_id, bench_id, matched_ngrams, bench_ngrams, coverage
-            FROM contam
-        """,
-        # tier-invariance IS the contract: the shuffle and bloom fallbacks
-        # share the broadcast tier's oracle verbatim
-        "contamination_report_shuffle": f"""
-            WITH {_decontam_ctes()}
-            SELECT doc_id, bench_id, matched_ngrams, bench_ngrams, coverage
-            FROM contam
-        """,
-        "contamination_report_bloom": f"""
-            WITH {_decontam_ctes()}
-            SELECT doc_id, bench_id, matched_ngrams, bench_ngrams, coverage
-            FROM contam
-        """,
-        "decontaminate": f"""
-            WITH {_decontam_ctes()}
-            SELECT d.doc_id, d.n_chars
-            FROM documents d
-            ANTI JOIN (SELECT DISTINCT doc_id FROM contam WHERE coverage >= 0.8) c
-            USING (doc_id)
-        """,
-        "validate_strict": f"""
-            WITH v AS ({_VALIDATE_ORACLE_BASE})
-            SELECT c_custkey, student_id_raw AS student_id, score_raw AS score,
-                   name_raw AS name, grade_raw AS grade, pct_raw AS pct,
-                   comment_raw AS comment_short, meta_raw AS meta,
-                   tags_raw AS tags, contact_raw AS contact,
-                   payload_raw AS payload, profile_raw AS profile,
-                   event_ts_raw AS event_ts, sku_raw AS sku, alias_raw AS alias,
-                   mode_val_raw AS mode_val, nums_raw AS nums,
-                   COALESCE(v1, v2, v3, v4, v5, v6, v7, v8, v9, v10, v11, v12, v13, v14, v15, v16) AS first_violation,
-                   COALESCE(v1, v2, v3, v4, v5, v6, v7, v8, v9, v10, v11, v12, v13, v14, v15, v16) IS NULL AS valid
-            FROM v
-        """,
-        "split_pages": _split_pages_oracle(),
-        "region_match_prf": _region_match_oracle(),
-        "extract_main_content": _extract_oracle(),
-        "bootstrap_median_ci": _bootstrap_ci_oracle(),
-        "minhash_lsh_pairs": _minhash_oracle(),
-        "simhash_pairs": _simhash_oracle(),
-        "host_stats_salted": _host_stats_oracle(),
-        "ann_lsh_topk": _ann_lsh_oracle(),
-        "embedding_dup_pairs_lsh": _embedding_dup_lsh_oracle(),
-        "q1_pricing_summary": """
-            SELECT l_returnflag, l_linestatus,
-                   CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-                   CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-                   CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS sum_disc_price,
-                   ROUND(CAST(SUM(CAST(l_quantity AS DECIMAL(28,6))) AS DOUBLE) / COUNT(*), 6) AS avg_qty,
-                   ROUND(CAST(SUM(CAST(l_extendedprice AS DECIMAL(28,6))) AS DOUBLE) / COUNT(*), 6) AS avg_price,
-                   ROUND(CAST(SUM(CAST(l_discount AS DECIMAL(28,6))) AS DOUBLE) / COUNT(*), 6) AS avg_disc,
-                   COUNT(*) AS count_order
-            FROM lineitem
-            WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-            GROUP BY l_returnflag, l_linestatus
-        """,
-        "revenue_by_order": """
-            SELECT o_orderkey, o_orderdate,
-                   CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS revenue
-            FROM lineitem
-            JOIN orders ON l_orderkey = o_orderkey
-            JOIN customer ON o_custkey = c_custkey
-            WHERE c_mktsegment = 'BUILDING'
-            GROUP BY o_orderkey, o_orderdate
-        """,
-        "region_rollup": """
-            SELECT r_name, COUNT(*) AS n_customers, ROUND(CAST(SUM(CAST(c_acctbal AS DECIMAL(28,6))) AS DOUBLE) / COUNT(*), 6) AS avg_acctbal
-            FROM customer
-            JOIN nation ON c_nationkey = n_nationkey
-            JOIN region ON n_regionkey = r_regionkey
-            GROUP BY r_name
-        """,
-        "best_order_per_customer": """
-            SELECT o_custkey, o_orderkey, o_totalprice FROM (
-                SELECT o_custkey, o_orderkey, o_totalprice,
-                       ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn
-                FROM orders
-            ) WHERE rn = 1
-        """,
-        "top3_orders_per_customer": """
-            SELECT o_custkey, o_orderkey, o_totalprice, rank FROM (
-                SELECT o_custkey, o_orderkey, o_totalprice,
-                       ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey ASC) AS rank
-                FROM orders
-            ) WHERE rank <= 3
-        """,
-        "latest_event_per_user": """
-            SELECT user_id, event_id, ts, event_type FROM (
-                SELECT user_id, event_id, ts, event_type,
-                       ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id ASC) AS rn
-                FROM events
-            ) WHERE rn = 1
-        """,
-        "supplier_customer_match": """
-            SELECT s_suppkey,
-                   MIN(levenshtein(lower(s_name), lower(c_name))) AS best_dist,
-                   (MIN(levenshtein(lower(s_name), lower(c_name))) <= 3) AS found
-            FROM supplier JOIN customer ON s_nationkey = c_nationkey
-            GROUP BY s_suppkey
-        """,
-        "digit_frequency": """
-            SELECT digit, COUNT(*) AS n FROM (
-                SELECT unnest(string_to_array(lpad(CAST(c_custkey AS VARCHAR), 8, '0'), '')) AS digit
-                FROM customer
-            ) GROUP BY digit
-        """,
-        "pareto_parts": """
-            SELECT p_partkey, p_retailprice, p_size FROM part p
-            WHERE NOT EXISTS (
-                SELECT 1 FROM part o
-                WHERE o.p_retailprice < p.p_retailprice AND o.p_size >= p.p_size
-            )
-        """,
-        "events_hourly": """
-            SELECT date_trunc('hour', ts) AS hour, event_type,
-                   COUNT(*) AS n,
-                   CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value,
-                   ROUND(CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*), 6) AS avg_value
-            FROM events GROUP BY 1, 2
-        """,
-        "events_asof_order": _ASOF_ORDER_ORACLE,
-        # tier invariance: the array strategy must satisfy the SAME oracle
-        "events_asof_order_array": _ASOF_ORDER_ORACLE,
-        "host_pagerank": _host_pagerank_oracle(),
-        "hll_distinct_users": _hll_distinct_users_oracle(),
-        "quantile_sketch": _quantile_sketch_oracle(),
-        "cms_heavy_hitters": _cms_heavy_hitters_oracle(),
-        "events_in_windows": """
-            WITH ep AS (SELECT event_id, user_id,
-                               CAST(floor(epoch(ts)) AS BIGINT) AS p FROM events),
-            anchor AS (SELECT MIN(p) AS a FROM ep),
-            win AS (SELECT CAST(i AS INT) AS window_id, a + i * 14400 AS s
-                    FROM anchor, range(0, 64) t(i))
-            SELECT w.window_id, w.s AS win_start, w.s + 21600 AS win_end,
-                   COUNT(e.event_id) AS n_events,
-                   COUNT(DISTINCT e.user_id) AS n_users
-            FROM win w LEFT JOIN ep e ON e.p >= w.s AND e.p < w.s + 21600
-            GROUP BY w.window_id, w.s
-        """,
-        "calibration_bins": """
-            WITH p AS (
-                SELECT (abs(value) % 100.0) / 100.0 AS p,
-                       event_type IN ('purchase', 'signup') AS is_correct
-                FROM events
-            )
-            SELECT bin, COUNT(*) AS n, ROUND(AVG(p), 6) AS mean_prob,
-                   ROUND(AVG(CAST(is_correct AS DOUBLE)), 6) AS mean_correct
-            FROM (SELECT CAST(least(floor(p * 7), 6) AS INTEGER) AS bin, p, is_correct FROM p)
-            GROUP BY bin
-        """,
-        "discount_product": """
-            SELECT l_orderkey,
-                   ROUND(CASE WHEN MAX(CASE WHEN (1 - l_discount) <= 0 THEN 1 ELSE 0 END) = 1
-                              THEN 0.0
-                              ELSE ROUND(EXP(SUM(LN(CASE WHEN (1 - l_discount) > 0 THEN (1 - l_discount) END))), 12)
-                         END, 6) AS prob_product
-            FROM lineitem GROUP BY l_orderkey
-        """,
-        "dedup_exact": """
-            SELECT md5(text) AS text_hash, MIN(doc_id) AS canonical_id, COUNT(*) AS n_dups
-            FROM documents GROUP BY md5(text)
-        """,
-        "jaccard_pairs": f"""
-            WITH toks AS (
-                SELECT doc_id,
-                       list_filter(regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9\\s]', ' ', 'g')), '\\s+'), x -> x != '') AS t
-                FROM documents
-            ), sh AS (
-                SELECT doc_id, unnest(list_distinct(list_transform(
-                           range(1, greatest(len(t) - 2, 0) + 1),
-                           i -> array_to_string(list_slice(t, i, i + 2), ' ')))) AS s
-                FROM toks
-            ), sizes AS (
-                SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id
-            ), inter AS (
-                SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
-                FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-                GROUP BY 1, 2
-            )
-            SELECT id_a, id_b, ROUND(n_inter / (sa.sz + sb.sz - n_inter), 6) AS jaccard
-            FROM inter
-            JOIN sizes sa ON sa.doc_id = id_a
-            JOIN sizes sb ON sb.doc_id = id_b
-            WHERE ROUND(n_inter / (sa.sz + sb.sz - n_inter), 6) >= 0.2
-        """,
-        # pairs → duplicate clusters → keep-one, the step after candidate
-        # emission a real dedup ships. Components via a recursive reachability
-        # closure + MIN (tiny clusters at this sf; Spark uses min-label
-        # propagation — same fixpoint).
-        "dedup_resolve": """
-            WITH RECURSIVE toks AS (
-                SELECT doc_id,
-                       list_filter(regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9\\s]', ' ', 'g')), '\\s+'), x -> x != '') AS t
-                FROM documents
-            ), sh AS (
-                SELECT doc_id, unnest(list_distinct(list_transform(
-                           range(1, greatest(len(t) - 2, 0) + 1),
-                           i -> array_to_string(list_slice(t, i, i + 2), ' ')))) AS s
-                FROM toks
-            ), sizes AS (
-                SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id
-            ), inter AS (
-                SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
-                FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-                GROUP BY 1, 2
-            ), edges0 AS (
-                SELECT id_a, id_b FROM inter
-                JOIN sizes sa ON sa.doc_id = id_a
-                JOIN sizes sb ON sb.doc_id = id_b
-                WHERE ROUND(n_inter / (sa.sz + sb.sz - n_inter), 6) >= 0.5
-            ), edges AS (
-                SELECT id_a AS src, id_b AS dst FROM edges0
-                UNION
-                SELECT id_b AS src, id_a AS dst FROM edges0
-            ), reach(id, r) AS (
-                SELECT doc_id, doc_id FROM documents
-                UNION
-                SELECT reach.id, e.dst FROM reach JOIN edges e ON e.src = reach.r
-            ), cc AS (
-                SELECT id, MIN(r) AS cluster_id FROM reach GROUP BY id
-            ), csz AS (
-                SELECT cluster_id, COUNT(*) AS cluster_size FROM cc GROUP BY cluster_id
-            )
-            SELECT cc.id AS doc_id, cc.cluster_id,
-                   cc.id = cc.cluster_id AS keep, csz.cluster_size
-            FROM cc JOIN csz USING (cluster_id)
-        """,
-        "ann_cosine_topk": """
-            WITH emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-            q AS (SELECT vec_id AS q_id, v AS q_vec FROM emb WHERE vec_id % 50 = 0),
-            scored AS (
-                SELECT q.q_id, e.vec_id AS neighbor_id,
-                       ROUND(list_cosine_similarity(e.v, q.q_vec), 6) AS cosine
-                FROM emb e CROSS JOIN q WHERE e.vec_id != q.q_id
-            )
-            SELECT q_id, neighbor_id, cosine, rank FROM (
-                SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, neighbor_id ASC) AS rank
-                FROM scored
-            ) WHERE rank <= 5
-        """,
-        # IVF is deterministic end to end (md5-ordered centroid sample is
-        # engine-portable), so unlike LSH it gets a full value oracle
-        "ann_ivf_topk": """
-            WITH emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-            cent AS (
-                SELECT vec_id AS cent_id, v AS cent_vec FROM emb
-                ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT 16),
-            assign AS (
-                SELECT vec_id, v, cent_id FROM (
-                    SELECT e.vec_id, e.v, c.cent_id,
-                           ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                               ORDER BY ROUND(list_cosine_similarity(e.v, c.cent_vec), 6) DESC,
-                                        c.cent_id) AS rn
-                    FROM emb e CROSS JOIN cent c) WHERE rn = 1),
-            q AS (SELECT vec_id AS q_id, v AS q_vec FROM emb WHERE vec_id % 50 = 0),
-            probe AS (
-                SELECT q_id, q_vec, cent_id FROM (
-                    SELECT q.q_id, q.q_vec, c.cent_id,
-                           ROW_NUMBER() OVER (PARTITION BY q.q_id
-                               ORDER BY ROUND(list_cosine_similarity(q.q_vec, c.cent_vec), 6) DESC,
-                                        c.cent_id) AS rn
-                    FROM q CROSS JOIN cent c) WHERE rn <= 4),
-            scored AS (
-                SELECT p.q_id, a.vec_id AS neighbor_id,
-                       ROUND(list_cosine_similarity(a.v, p.q_vec), 6) AS cosine
-                FROM probe p JOIN assign a USING (cent_id)
-                WHERE a.vec_id != p.q_id)
-            SELECT q_id, neighbor_id, cosine, rank FROM (
-                SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, neighbor_id ASC) AS rank
-                FROM scored
-            ) WHERE rank <= 5
-        """,
-        "ann_pq_topk": """
-            WITH emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-            cb AS (
-                SELECT v, ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR))) AS code
-                FROM (SELECT vec_id, v FROM emb
-                      ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT 16)),
-            mm AS (SELECT unnest(range(0, 16)) AS m),
-            cbm AS (
-                SELECT code, CAST(m AS INT) AS m,
-                       list_slice(v, CAST(m*4 + 1 AS INT), CAST(m*4 + 4 AS INT)) AS cs
-                FROM cb CROSS JOIN mm),
-            ce AS (
-                SELECT e.vec_id, c.m, c.code,
-                       list_slice(e.v, c.m*4 + 1, c.m*4 + 4) AS es,
-                       ROUND(list_reduce(list_transform(range(1, 5),
-                           i -> (es[CAST(i AS INT)] - c.cs[CAST(i AS INT)])
-                                * (es[CAST(i AS INT)] - c.cs[CAST(i AS INT)])),
-                           (a, b) -> a + b), 6) AS dist
-                FROM emb e CROSS JOIN cbm c),
-            codes AS (
-                SELECT vec_id, m, code FROM (
-                    SELECT vec_id, m, code,
-                           ROW_NUMBER() OVER (PARTITION BY vec_id, m
-                               ORDER BY dist, code) AS rn
-                    FROM ce) WHERE rn = 1),
-            carr AS (SELECT vec_id, list(code ORDER BY m) AS codes
-                     FROM codes GROUP BY vec_id),
-            q AS (SELECT vec_id AS q_id, v AS qv FROM emb WHERE vec_id % 50 = 0),
-            qe AS (
-                SELECT q.q_id, c.m, c.code,
-                       list_slice(q.qv, c.m*4 + 1, c.m*4 + 4) AS qs,
-                       ROUND(list_reduce(list_transform(range(1, 5),
-                           i -> (qs[CAST(i AS INT)] - c.cs[CAST(i AS INT)])
-                                * (qs[CAST(i AS INT)] - c.cs[CAST(i AS INT)])),
-                           (a, b) -> a + b), 6) AS dist
-                FROM q CROSS JOIN cbm c),
-            qarr AS (SELECT q_id, list(dist ORDER BY m, code) AS qd
-                     FROM qe GROUP BY q_id),
-            adc AS (
-                SELECT qarr.q_id, carr.vec_id AS neighbor_id,
-                       ROUND(list_reduce(list_transform(range(1, 17),
-                           i -> qd[CAST((i-1)*16 + codes[CAST(i AS INT)] AS INT)]),
-                           (a, b) -> a + b), 6) AS approx_dist
-                FROM carr CROSS JOIN qarr WHERE carr.vec_id != qarr.q_id),
-            short AS (
-                SELECT q_id, neighbor_id, approx_dist FROM (
-                    SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
-                        ORDER BY approx_dist ASC, neighbor_id ASC) AS rn
-                    FROM adc) WHERE rn <= 40),
-            ex AS (
-                SELECT s.q_id, s.neighbor_id, s.approx_dist,
-                       ROUND(list_reduce(list_transform(range(1, 65),
-                           i -> (e.v[CAST(i AS INT)] - q.qv[CAST(i AS INT)])
-                                * (e.v[CAST(i AS INT)] - q.qv[CAST(i AS INT)])),
-                           (a, b) -> a + b), 6) AS exact_dist
-                FROM short s
-                JOIN emb e ON e.vec_id = s.neighbor_id
-                JOIN q ON q.q_id = s.q_id)
-            SELECT q_id, neighbor_id, approx_dist, exact_dist, rank FROM (
-                SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
-                    ORDER BY exact_dist ASC, neighbor_id ASC) AS rank
-                FROM ex
-            ) WHERE rank <= 5
-        """,
-        "ann_ivfpq_topk": """
-            WITH emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-            cent AS (
-                SELECT vec_id AS cent_id, v AS cv FROM emb
-                ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT 16),
-            assign AS (
-                SELECT vec_id, cent_id,
-                       list_transform(range(1, 65),
-                           i -> v[CAST(i AS INT)] - cv[CAST(i AS INT)]) AS r
-                FROM (
-                    SELECT e.vec_id, e.v, c.cent_id, c.cv,
-                           ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-                               ROUND(list_reduce(list_transform(range(1, 65),
-                                   i -> (e.v[CAST(i AS INT)] - c.cv[CAST(i AS INT)])
-                                        * (e.v[CAST(i AS INT)] - c.cv[CAST(i AS INT)])),
-                                   (a, b) -> a + b), 6) ASC, c.cent_id ASC) AS rn
-                    FROM emb e CROSS JOIN cent c) WHERE rn = 1),
-            cb AS (
-                SELECT r, ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR))) AS code
-                FROM (SELECT a.vec_id, a.r FROM assign a
-                      ANTI JOIN cent ON a.vec_id = cent.cent_id
-                      ORDER BY md5(CAST(a.vec_id AS VARCHAR)) LIMIT 16)),
-            mm AS (SELECT CAST(unnest(range(0, 16)) AS INT) AS m),
-            cbm AS (SELECT code, m, list_slice(r, m*4 + 1, m*4 + 4) AS cs
-                    FROM cb CROSS JOIN mm),
-            ce AS (
-                SELECT a.vec_id, a.cent_id, c.m, c.code,
-                       list_slice(a.r, c.m*4 + 1, c.m*4 + 4) AS es,
-                       ROUND(list_reduce(list_transform(range(1, 5),
-                           i -> (es[CAST(i AS INT)] - c.cs[CAST(i AS INT)])
-                                * (es[CAST(i AS INT)] - c.cs[CAST(i AS INT)])),
-                           (a2, b) -> a2 + b), 6) AS dist
-                FROM assign a CROSS JOIN cbm c),
-            codes AS (
-                SELECT vec_id, cent_id, m, code FROM (
-                    SELECT vec_id, cent_id, m, code,
-                           ROW_NUMBER() OVER (PARTITION BY vec_id, m
-                               ORDER BY dist, code) AS rn
-                    FROM ce) WHERE rn = 1),
-            carr AS (SELECT vec_id, cent_id, list(code ORDER BY m) AS codes
-                     FROM codes GROUP BY vec_id, cent_id),
-            q AS (SELECT vec_id AS q_id, v AS qv FROM emb WHERE vec_id % 50 = 0),
-            probe AS (
-                SELECT q_id, cent_id,
-                       list_transform(range(1, 65),
-                           i -> qv[CAST(i AS INT)] - cv[CAST(i AS INT)]) AS qr
-                FROM (
-                    SELECT q.q_id, q.qv, c.cent_id, c.cv,
-                           ROW_NUMBER() OVER (PARTITION BY q.q_id ORDER BY
-                               ROUND(list_reduce(list_transform(range(1, 65),
-                                   i -> (q.qv[CAST(i AS INT)] - c.cv[CAST(i AS INT)])
-                                        * (q.qv[CAST(i AS INT)] - c.cv[CAST(i AS INT)])),
-                                   (a, b) -> a + b), 6) ASC, c.cent_id ASC) AS rn
-                    FROM q CROSS JOIN cent c) WHERE rn <= 4),
-            qe AS (
-                SELECT p.q_id, p.cent_id, c.m, c.code,
-                       list_slice(p.qr, c.m*4 + 1, c.m*4 + 4) AS qs,
-                       ROUND(list_reduce(list_transform(range(1, 5),
-                           i -> (qs[CAST(i AS INT)] - c.cs[CAST(i AS INT)])
-                                * (qs[CAST(i AS INT)] - c.cs[CAST(i AS INT)])),
-                           (a2, b) -> a2 + b), 6) AS dist
-                FROM probe p CROSS JOIN cbm c),
-            qarr AS (SELECT q_id, cent_id, list(dist ORDER BY m, code) AS qd
-                     FROM qe GROUP BY q_id, cent_id),
-            adc AS (
-                SELECT qa.q_id, ca.vec_id AS neighbor_id,
-                       ROUND(list_reduce(list_transform(range(1, 17),
-                           i -> qd[CAST((i-1)*16 + codes[CAST(i AS INT)] AS INT)]),
-                           (a, b) -> a + b), 6) AS approx_dist
-                FROM carr ca JOIN qarr qa USING (cent_id)
-                WHERE ca.vec_id != qa.q_id),
-            short AS (
-                SELECT q_id, neighbor_id, approx_dist FROM (
-                    SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
-                        ORDER BY approx_dist ASC, neighbor_id ASC) AS rn
-                    FROM adc) WHERE rn <= 40),
-            ex AS (
-                SELECT s.q_id, s.neighbor_id, s.approx_dist,
-                       ROUND(list_reduce(list_transform(range(1, 65),
-                           i -> (e.v[CAST(i AS INT)] - q.qv[CAST(i AS INT)])
-                                * (e.v[CAST(i AS INT)] - q.qv[CAST(i AS INT)])),
-                           (a, b) -> a + b), 6) AS exact_dist
-                FROM short s
-                JOIN emb e ON e.vec_id = s.neighbor_id
-                JOIN q ON q.q_id = s.q_id)
-            SELECT q_id, neighbor_id, approx_dist, exact_dist, rank FROM (
-                SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
-                    ORDER BY exact_dist ASC, neighbor_id ASC) AS rank
-                FROM ex
-            ) WHERE rank <= 5
-        """,
-        "semdedup": _semdedup_oracle(),
-        "embedding_dup_pairs": """
-            WITH emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)
-            SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                   ROUND(list_cosine_similarity(a.v, b.v), 6) AS cosine
-            FROM emb a JOIN emb b ON a.vec_id < b.vec_id
-            WHERE ROUND(list_cosine_similarity(a.v, b.v), 6) >= 0.4
-        """,
-        "doc_quality": f"""
-            WITH t AS (
-                SELECT doc_id, text, {_TOKS} AS toks FROM documents
-            )
-            SELECT doc_id,
-                   length(text) AS n_chars,
-                   len(toks) AS n_tokens,
-                   CASE WHEN length(text) > 0
-                        THEN ROUND(length(regexp_replace(text, '[^.!?,;:]', '', 'g')) / length(text), 6)
-                        ELSE 0.0 END AS punct_ratio,
-                   CASE WHEN len(toks) > 0
-                        THEN ROUND(len(list_filter(toks, x -> list_contains(['the','and','with','from','that','this','for','are','was'], x))) / len(toks), 6)
-                        ELSE 0.0 END AS stopword_ratio,
-                   CASE WHEN len(toks) > 0 THEN ROUND(length(text) / len(toks), 6) ELSE 0.0 END AS mean_token_len,
-                   ROUND(
-                     (CASE WHEN len(toks) >= 20 AND len(toks) <= 100000 THEN CAST(0.4 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END)
-                   + (CASE WHEN length(text) > 0
-                           AND ROUND(length(regexp_replace(text, '[^.!?,;:]', '', 'g')) / length(text), 6) > 0.001
-                           AND ROUND(length(regexp_replace(text, '[^.!?,;:]', '', 'g')) / length(text), 6) < 0.2
-                           THEN CAST(0.3 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END)
-                   + (CASE WHEN len(toks) > 0
-                           AND ROUND(len(list_filter(toks, x -> list_contains(['the','and','with','from','that','this','for','are','was'], x))) / len(toks), 6) > 0.05
-                           THEN CAST(0.3 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END), 6) AS quality_score
-            FROM t
-        """,
-        "lang_id": f"""
-            WITH t AS (
-                SELECT doc_id, {_TOKS} AS toks FROM documents
-            ), s AS (
-                SELECT doc_id,
-                       len(list_filter(toks, x -> list_contains(['the','and','with','from','that'], x))) AS score_en,
-                       len(list_filter(toks, x -> list_contains(['und','der','nicht','mit','aber'], x))) AS score_de,
-                       len(list_filter(toks, x -> list_contains(['les','dans','avec','pour','mais'], x))) AS score_fr,
-                       len(list_filter(toks, x -> list_contains(['los','para','pero','como','donde'], x))) AS score_es
-                FROM t
-            )
-            SELECT doc_id, score_en, score_de, score_fr, score_es,
-                   CASE WHEN greatest(score_en, score_de, score_fr, score_es) = 0 THEN 'und'
-                        WHEN score_en = greatest(score_en, score_de, score_fr, score_es) THEN 'en'
-                        WHEN score_de = greatest(score_en, score_de, score_fr, score_es) THEN 'de'
-                        WHEN score_fr = greatest(score_en, score_de, score_fr, score_es) THEN 'fr'
-                        ELSE 'es' END AS lang_guess
-            FROM s
-        """,
-        "corpus_profile": f"""
-            SELECT COUNT(*) AS n_docs,
-                   COUNT(DISTINCT md5(text)) AS n_distinct,
-                   ROUND(CAST(SUM(CAST(length(text) AS DECIMAL(28,0))) AS DOUBLE) / COUNT(*), 6) AS mean_chars,
-                   CAST(MEDIAN(length(text)) AS DOUBLE) AS median_chars,
-                   CAST(SUM(len({_TOKS})) AS BIGINT) AS total_ws_tokens
-            FROM documents
-        """,
-        "token_counts": f"""
-            SELECT doc_id,
-                   len({_TOKS}) AS ws_tokens,
-                   len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS regex_tokens
-            FROM documents
-        """,
-        "fingerprint": """
-            SELECT doc_id,
-                   md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp_md5,
-                   sha256(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp_sha256
-            FROM documents
-        """,
-        # Independent SQL reimplementation of winnowing (Schleimer et al. 2003):
-        # per-char unnest -> k=5 polynomial rolling hash mod 2^64 in HUGEINT
-        # (exact literal powers of 1000003; ** would go through DOUBLE) ->
-        # w=4 sliding windows, rightmost-min pick, dedup consecutive picks.
-        "winnow_fingerprints": """
-            WITH base AS (
-              SELECT doc_id, lower(text) AS t, length(text) AS len FROM documents
-            ),
-            codes AS (
-              SELECT doc_id, u.i, CAST(unicode(substr(t, CAST(u.i AS INT), 1)) AS HUGEINT) AS c
-              FROM base, unnest(range(1, len + 1)) u(i)
-            ),
-            h0 AS (
-              SELECT doc_id, i,
-                ((c * CAST('1000012000054000108000081' AS HUGEINT)) % CAST('18446744073709551616' AS HUGEINT)
-                 + (lead(c,1) OVER w * CAST('1000009000027000027' AS HUGEINT)) % CAST('18446744073709551616' AS HUGEINT)
-                 + (lead(c,2) OVER w * CAST('1000006000009' AS HUGEINT)) % CAST('18446744073709551616' AS HUGEINT)
-                 + (lead(c,3) OVER w * CAST('1000003' AS HUGEINT)) % CAST('18446744073709551616' AS HUGEINT)
-                 + lead(c,4) OVER w) % CAST('18446744073709551616' AS HUGEINT) AS hm
-              FROM codes WINDOW w AS (PARTITION BY doc_id ORDER BY i)
-            ),
-            h1 AS (
-              SELECT doc_id, i, hm, count(*) OVER (PARTITION BY doc_id) AS n
-              FROM h0 WHERE hm IS NOT NULL
-            ),
-            h AS (
-              SELECT doc_id, i, n,
-                CAST(CASE WHEN hm >= CAST('9223372036854775808' AS HUGEINT)
-                          THEN hm - CAST('18446744073709551616' AS HUGEINT) ELSE hm END AS BIGINT) AS h
-              FROM h1
-            ),
-            win AS (
-              SELECT doc_id, i AS ws,
-                h AS h0_, lead(h,1) OVER w AS h1_, lead(h,2) OVER w AS h2_, lead(h,3) OVER w AS h3_
-              FROM h WINDOW w AS (PARTITION BY doc_id ORDER BY i)
-            ),
-            picks AS (
-              SELECT doc_id, ws,
-                CASE WHEN h3_ <= least(h0_, h1_, h2_) THEN 3
-                     WHEN h2_ <= least(h0_, h1_) THEN 2
-                     WHEN h1_ <= h0_ THEN 1 ELSE 0 END AS rel
-              FROM win WHERE h3_ IS NOT NULL
-            ),
-            kept AS (
-              SELECT doc_id, ws, ws + rel AS gpos,
-                lag(ws + rel) OVER (PARTITION BY doc_id ORDER BY ws) AS prev_gpos
-              FROM picks
-            ),
-            sel AS (
-              -- n > 4 keeps this branch disjoint from "short": docs with
-              -- exactly w=4 k-gram hashes have one valid window here AND match
-              -- the kernel's n<=w single-min path — without the guard both
-              -- branches would emit and the oracle double-counts such docs
-              SELECT k2.doc_id, k2.ws, h.h
-              FROM kept k2 JOIN h ON h.doc_id = k2.doc_id AND h.i = k2.gpos
-              WHERE (prev_gpos IS NULL OR gpos != prev_gpos) AND h.n > 4
-            ),
-            short AS (
-              SELECT doc_id, min(h) AS h FROM h WHERE n <= 4 GROUP BY doc_id
-            ),
-            fps AS (
-              SELECT doc_id, string_agg(CAST(h AS VARCHAR), ',' ORDER BY ws) AS fps,
-                     count(*) AS n_fp
-              FROM sel GROUP BY doc_id
-              UNION ALL
-              SELECT doc_id, CAST(h AS VARCHAR), 1 FROM short
-            )
-            SELECT b.doc_id, CAST(COALESCE(f.n_fp, 0) AS INT) AS n_fp,
-                   COALESCE(f.fps, '') AS fps
-            FROM base b LEFT JOIN fps f USING (doc_id)
-        """,
-        "json_extract_rollup": """
-            SELECT event_type,
-                   CAST(SUM(TRY_CAST(json_extract_string(props, '$.k') AS INT)) AS BIGINT) AS sum_k,
-                   CAST(SUM(CASE WHEN json_extract_string(props, '$.k') IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null_k
-            FROM events GROUP BY event_type
-        """,
-        "union_dedup": """
-            SELECT DISTINCT o_orderkey, o_totalprice FROM orders
-            WHERE o_orderkey % 3 = 0 OR o_orderkey % 2 = 0
-        """,
-        "sweep_grid": """
-            WITH t AS (SELECT unnest([CAST(0.0 AS DOUBLE), 0.4, 0.8]) AS temperature),
-            k AS (SELECT unnest([CAST(10 AS BIGINT), 20]) AS top_k),
-            tr AS (SELECT unnest(range(0, 4)) AS trial),
-            runs AS (
-              SELECT temperature, top_k, trial,
-                     ROUND(temperature * 0.1 + top_k * 0.01 + trial * 0.001, 6) AS metric
-              FROM t CROSS JOIN k CROSS JOIN tr)
-            SELECT temperature, top_k, COUNT(*) AS n_trials,
-                   ROUND(AVG(metric), 6) AS mean_metric
-            FROM runs GROUP BY temperature, top_k
-        """,
-        "legacy_alias_rewrite": """
-            SELECT c_custkey,
-                   COALESCE(CASE WHEN c_custkey % 3 != 0 THEN c_name END,
-                            CASE WHEN c_custkey % 3 = 0 THEN c_name END) AS university_id
-            FROM customer
-        """,
-        "media_base64": """
-            SELECT CAST(doc_id AS VARCHAR) AS media_id,
-                   CAST(octet_length(encode(text)) AS INT) AS n_bytes,
-                   to_base64(encode(text)) AS payload_b64
-            FROM documents
-        """,
-        "best_supplier_flags": """
-            SELECT s_suppkey, s_nationkey, s_acctbal,
-                   s_acctbal = MAX(s_acctbal) OVER (PARTITION BY s_nationkey) AS is_best
-            FROM supplier
-        """,
-        # mirrors plans/publish.publish_reject_reason rule order exactly:
-        # empty -> pii -> non-finite -> bad json, first match wins
-        "publish_gate": """
-            WITH ev AS (
-              SELECT event_id,
-                CASE WHEN event_id % 97 = 0 THEN CAST('nan' AS DOUBLE) ELSE value END AS value,
-                CASE WHEN event_id % 89 = 0 THEN '{not json' ELSE props END AS props,
-                CASE WHEN event_id % 83 = 0 THEN 'contact me at someone@example.com please'
-                     ELSE 'clean note' END AS note
-              FROM events),
-            tagged AS (
-              SELECT CASE
-                WHEN note IS NULL OR trim(note) = '' THEN 'empty'
-                WHEN regexp_matches(note, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}') THEN 'pii_email'
-                WHEN value IS NOT NULL AND (isnan(value) OR isinf(value)) THEN 'non_finite'
-                WHEN props IS NOT NULL AND NOT json_valid(props) THEN 'bad_json'
-                ELSE 'ok' END AS reason
-              FROM ev)
-            SELECT reason, COUNT(*) AS n FROM tagged GROUP BY reason
-        """,
-        "sessionize_events": """
-            WITH b AS (
-              SELECT user_id, ts, event_id, CAST(floor(epoch(ts)) AS BIGINT) AS ws
-              FROM events
-            ), brk AS (
-              SELECT user_id, ts, event_id, ws,
-                     CASE WHEN lag(ws) OVER w IS NULL OR ws - lag(ws) OVER w > 1800
-                          THEN 1 ELSE 0 END AS is_break
-              FROM b WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-            ), sess AS (
-              SELECT user_id, ts,
-                     CAST(SUM(is_break) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                              ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_idx
-              FROM brk)
-            SELECT user_id, session_idx, MIN(ts) AS session_start,
-                   MAX(ts) AS session_end, COUNT(*) AS n_events
-            FROM sess GROUP BY user_id, session_idx
-        """,
-        "lang_id_trigram": _lang_trigram_oracle(),
-        # H = log2(n) − Σ c·log2(c) / n over the doc's own trigram counts —
-        # the one-pass algebraic form; round(6) absorbs double-sum ordering
-        "trigram_entropy": """
-            WITH lowered AS (SELECT doc_id, lower(text) AS t FROM documents),
-            tri AS (
-              SELECT doc_id,
-                     unnest(list_transform(range(1, greatest(length(t) - 2, 0) + 1),
-                            i -> substr(t, CAST(i AS INT), 3))) AS g
-              FROM lowered
-            ), c AS (
-              SELECT doc_id, g, COUNT(*) AS c FROM tri GROUP BY 1, 2
-            ), e AS (
-              SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n,
-                     SUM(c * log2(c)) AS clogc, COUNT(*) AS dt
-              FROM c GROUP BY 1
-            )
-            SELECT d.doc_id, COALESCE(e.n, 0) AS n_trigrams,
-                   COALESCE(e.dt, 0) AS distinct_trigrams,
-                   COALESCE(ROUND(log2(e.n) - e.clogc / e.n, 6), 0.0) AS trigram_entropy
-            FROM documents d LEFT JOIN e USING (doc_id)
-        """,
-        # reference-exact assess_repetition (inference.py:69-96): \w is
-        # ASCII-only in BOTH Java and RE2 regex engines, ratios are exact
-        # integer-over-integer double divisions, so values match bit-for-bit
-        "repetition_scores": r"""
-            WITH t AS (
-              SELECT doc_id, regexp_extract_all(lower(text), '\w+|[^\s\w]') AS tk FROM documents
-            ), b AS (
-              SELECT doc_id, tk, len(tk) AS n FROM t
-            ), cons AS (
-              SELECT doc_id, n,
-                CASE WHEN n > 1
-                     THEN CAST(len(list_filter(range(1, n), i -> tk[i] = tk[i+1])) AS DOUBLE) / (n - 1)
-                     ELSE CAST(0 AS DOUBLE) END AS consec
-              FROM b
-            ), ex AS (
-              SELECT doc_id, unnest(tk) AS tok FROM b
-            ), cnt AS (
-              SELECT doc_id, tok, COUNT(*) AS c FROM ex GROUP BY 1, 2
-            ), agg AS (
-              SELECT doc_id, MAX(c) AS mc, COUNT(*) AS uniq FROM cnt GROUP BY 1
-            ), s AS (
-              SELECT co.doc_id, co.n, co.consec,
-                     CAST(a.mc AS DOUBLE) / co.n AS rep,
-                     CAST(a.uniq AS DOUBLE) / co.n AS div,
-                     (co.n >= 40 AND a.mc IS NOT NULL) AS elig
-              FROM cons co LEFT JOIN agg a USING (doc_id)
-            )
-            SELECT doc_id, CAST(n AS INT) AS n_tokens,
-                   CASE WHEN elig THEN ROUND(rep, 6) ELSE 0.0 END AS repetition_ratio,
-                   CASE WHEN elig THEN ROUND(div, 6) ELSE 0.0 END AS diversity_ratio,
-                   CASE WHEN elig THEN ROUND(consec, 6) ELSE 0.0 END AS consecutive_repeats,
-                   CASE WHEN elig THEN ROUND(greatest(rep, 1.0 - div, consec), 6) ELSE 0.0 END AS repetition_score,
-                   CASE WHEN elig THEN (greatest(rep, 1.0 - div, consec) >= 0.22
-                                        OR (div <= 0.35 AND rep >= 0.18))
-                        ELSE FALSE END AS is_repetitive
-            FROM s
-        """,
-        # hex-pair byte extraction as in media_probe; resize math mirrors the
-        # kernel expression shape exactly (same IEEE ops -> same floor)
-        "media_resize": """
-            WITH m AS (
-              SELECT CAST(doc_id AS VARCHAR) AS media_id, sha256(text) AS sha FROM documents),
-            d AS (SELECT media_id,
-                   320 + (instr('0123456789abcdef', substr(sha, 1, 1)) - 1) * 16
-                       + (instr('0123456789abcdef', substr(sha, 2, 1)) - 1) AS w,
-                   240 + (instr('0123456789abcdef', substr(sha, 3, 1)) - 1) * 16
-                       + (instr('0123456789abcdef', substr(sha, 4, 1)) - 1) AS h
-              FROM m),
-            s AS (SELECT *, least(1.0, 256.0 / w, 256.0 / h) AS sc FROM d)
-            SELECT media_id, CAST(w AS INT) AS width, CAST(h AS INT) AS height,
-                   CAST(FLOOR(w * sc) AS INT) AS out_w,
-                   CAST(FLOOR(h * sc) AS INT) AS out_h
-            FROM s
-        """,
-        "media_features": _media_features_oracle(),
-        "media_probe": """
-            WITH m AS (
-              SELECT CAST(doc_id AS VARCHAR) AS media_id, 'blob' AS kind,
-                     strlen(text) AS n_bytes, sha256(text) AS sha
-              FROM documents),
-            b AS (SELECT *,
-                   (instr('0123456789abcdef', substr(sha, 1, 1)) - 1) * 16
-                 + (instr('0123456789abcdef', substr(sha, 2, 1)) - 1) AS b0,
-                   (instr('0123456789abcdef', substr(sha, 3, 1)) - 1) * 16
-                 + (instr('0123456789abcdef', substr(sha, 4, 1)) - 1) AS b1,
-                   (instr('0123456789abcdef', substr(sha, 5, 1)) - 1) * 16
-                 + (instr('0123456789abcdef', substr(sha, 6, 1)) - 1) AS b2
-              FROM m)
-            SELECT media_id, kind, CAST(n_bytes AS BIGINT) AS n_bytes, sha AS sha256,
-                   CAST(CASE WHEN n_bytes > 0 THEN 320 + b0 ELSE 0 END AS INT) AS width,
-                   CAST(CASE WHEN n_bytes > 0 THEN 240 + b1 ELSE 0 END AS INT) AS height,
-                   CAST(CASE WHEN n_bytes > 0 THEN 1000 * (1 + (b2 % 30)) ELSE 0 END AS BIGINT) AS duration_ms,
-                   CASE WHEN n_bytes > 0 THEN 'stub' ELSE 'empty' END AS decode_status
-            FROM b
-        """,
-        "summary_stats": """
-            SELECT o_orderpriority, COUNT(*) AS n,
-                   ROUND(CAST(SUM(CAST(o_totalprice AS DECIMAL(28,6))) AS DOUBLE) / COUNT(*), 6) AS mean_price,
-                   ROUND(MEDIAN(o_totalprice), 6) AS median_price,
-                   ROUND(STDDEV_SAMP(o_totalprice), 6) AS stddev_price
-            FROM orders GROUP BY o_orderpriority
-        """,
-    }
-    # the corpus gate composes three already-oracled operators — build its
-    # oracle FROM their SQL so the composition can never drift from the parts
-    oracles["corpus_filter"] = f"""
-        WITH q AS (SELECT * FROM ({oracles["doc_quality"]}) qq),
-             lg AS (SELECT * FROM ({oracles["lang_id"]}) ll),
-             rep AS (SELECT * FROM ({oracles["repetition_scores"]}) rr),
-             j AS (
-               SELECT q.doc_id, lg.lang_guess, q.n_tokens, q.quality_score,
-                      rep.repetition_score,
-                      CASE WHEN lg.lang_guess != 'en' THEN 'lang'
-                           WHEN q.n_tokens < 20 THEN 'too_short'
-                           WHEN q.quality_score < 0.5 THEN 'low_quality'
-                           WHEN rep.is_repetitive THEN 'repetitive'
-                           ELSE 'ok' END AS reason
-               FROM q JOIN lg USING (doc_id) JOIN rep USING (doc_id))
-        SELECT doc_id, lang_guess, n_tokens, quality_score, repetition_score,
-               reason, reason = 'ok' AS keep
-        FROM j
-    """
-    # end-to-end pipeline oracle: corpus gate (reused verbatim) → exact-dedup
-    # keep-one → 64/16 token windows → md5-keyed 50% sample
-    oracles["training_pipeline"] = rf"""
-        WITH flt AS (
-          SELECT doc_id FROM ({oracles["corpus_filter"]}) cf WHERE keep
-        ), canon AS (
-          SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY md5(text)
-        ), base AS (
-          SELECT d.doc_id, d.text FROM documents d
-          JOIN flt USING (doc_id) JOIN canon USING (doc_id)
-        ), t AS (
-          SELECT doc_id, list_filter(regexp_split_to_array(text, '\s+'), x -> x != '') AS tk
-          FROM base
-        ), b AS (
-          SELECT doc_id, tk, len(tk) AS n FROM t
-        ), st AS (
-          SELECT doc_id, tk, n,
-            CASE WHEN n > 0
-                 THEN range(1, 2 + greatest(CAST(ceil((n - 64.0) / 48) AS INT), 0) * 48, 48)
-                 ELSE CAST([] AS BIGINT[]) END AS starts
-          FROM b
-        ), ex AS (
-          SELECT doc_id, n, tk, unnest(starts) AS s FROM st
-        ), ch AS (
-          SELECT doc_id, CAST((s - 1) // 48 AS INT) AS chunk_idx,
-                 CAST(least(64, n - s + 1) AS INT) AS n_tokens,
-                 array_to_string(list_slice(tk, CAST(s AS INT), CAST(s + 63 AS INT)), ' ') AS chunk_text
-          FROM ex
-        )
-        SELECT doc_id, chunk_idx, n_tokens, md5(chunk_text) AS chunk_md5
-        FROM ch
-        WHERE CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR) || ':' || CAST(chunk_idx AS VARCHAR) || '#9'), 1, 15)) AS BIGINT)
-              % 1048576 < 524288
-    """
-    # round-4 recipe: PII redaction → decontamination → exact-dedup keep-one
-    # → 64/16 chunking → concat-and-cut packing; composed from the SAME
-    # generated/parameterized CTE builders the per-stage oracles use
-    _chain, _final_rel, _ = _pii_chain_ctes("dirty")
-    _n_stages = len(__import__("batch_doc_vqa_spark.operators.pii", fromlist=["PII_PATTERNS"]).PII_PATTERNS)
-    oracles["training_recipe_v2"] = rf"""
-        WITH {_PII_DIRTY_CTE},
-        {_chain},
-        red AS (SELECT doc_id, t{_n_stages} AS text FROM {_final_rel}),
-        {_decontam_ctes("red")},
-        flagged AS (SELECT DISTINCT doc_id FROM contam WHERE coverage >= 0.8),
-        keep AS (
-            SELECT r.doc_id, r.text FROM red r ANTI JOIN flagged USING (doc_id)
-        ), canon AS (
-            SELECT MIN(doc_id) AS doc_id FROM keep GROUP BY md5(text)
-        ), base AS (
-            SELECT k.doc_id, k.text FROM keep k JOIN canon USING (doc_id)
-        ), ct AS (
-            SELECT doc_id, list_filter(regexp_split_to_array(text, '\s+'), x -> x != '') AS tk
-            FROM base
-        ), cb AS (
-            SELECT doc_id, tk, len(tk) AS n FROM ct
-        ), cst AS (
-            SELECT doc_id, tk, n,
-              CASE WHEN n > 0
-                   THEN range(1, 2 + greatest(CAST(ceil((n - 64.0) / 48) AS INT), 0) * 48, 48)
-                   ELSE CAST([] AS BIGINT[]) END AS starts
-            FROM cb
-        ), cex AS (
-            SELECT doc_id, n, tk, unnest(starts) AS s FROM cst
-        ), ch AS (
-            SELECT doc_id, CAST((s - 1) // 48 AS INT) AS chunk_idx,
-                   CAST(least(64, n - s + 1) AS INT) AS n_tokens,
-                   array_to_string(list_slice(tk, CAST(s AS INT), CAST(s + 63 AS INT)), ' ') AS chunk_text
-            FROM cex
-        ), keyed AS (
-            SELECT doc_id, chunk_idx, n_tokens, chunk_text,
-                   doc_id * 4096 + chunk_idx AS k
-            FROM ch
-        ), off AS (
-            SELECT doc_id, chunk_idx, n_tokens, chunk_text,
-                   CAST(COALESCE(SUM(n_tokens) OVER (ORDER BY k
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-                       AS start_offset
-            FROM keyed
-        )
-        SELECT doc_id, chunk_idx, n_tokens, md5(chunk_text) AS chunk_md5,
-               start_offset,
-               CAST((start_offset - (start_offset % 128)) // 128 AS BIGINT) AS seq_id,
-               CAST(((start_offset + GREATEST(n_tokens - 1, 0))
-                     - ((start_offset + GREATEST(n_tokens - 1, 0)) % 128)) // 128 AS BIGINT)
-                   > CAST((start_offset - (start_offset % 128)) // 128 AS BIGINT)
-                   AS crosses_boundary
-        FROM off
-    """
-    # recipe v3 = recipe v2 + the learned-quality gate between decontam and
-    # dedup: targeted rewrite of the v2 SQL (classifier CTE chain over the
-    # kept docs + draw-gated qkeep), so every other line is shared verbatim
-    # and the two recipes cannot drift; asserts fail loudly on reshape
-    _v2 = oracles["training_recipe_v2"]
-    _gate_old = (
-        "), canon AS (\n"
-        "            SELECT MIN(doc_id) AS doc_id FROM keep GROUP BY md5(text)\n"
-        "        ), base AS (\n"
-        "            SELECT k.doc_id, k.text FROM keep k JOIN canon USING (doc_id)\n"
-    )
-    assert _v2.count(_gate_old) == 1, "recipe v2 oracle reshaped"
-    oracles["training_recipe_v3"] = _v2.replace(
-        _gate_old,
-        "), " + _classifier_ctes("keep") + ",\n"
-        "        qkeep AS (\n"
-        "            SELECT k.doc_id, k.text FROM keep k JOIN clf USING (doc_id)\n"
-        f"            WHERE {_draw_sql(11)} < clf.clf_score\n"
-        "        ), canon AS (\n"
-        "            SELECT MIN(doc_id) AS doc_id FROM qkeep GROUP BY md5(text)\n"
-        "        ), base AS (\n"
-        "            SELECT k.doc_id, k.text FROM qkeep k JOIN canon USING (doc_id)\n",
-    )
-    # learned quality classifier: the deterministic trainer re-runs at
-    # oracle-build time; only the WEIGHTS embed as VALUES — the scoring
-    # math is full SQL over the documents view
-    oracles["classifier_quality_score"] = _classifier_quality_oracle()
-    # importance resampling over the learned score: oracle wraps the
-    # classifier SQL and reproduces the deterministic md5 draw exactly
-    oracles["classifier_resample"] = _classifier_resample_oracle()
-    # LM perplexity tier: training is counting — the whole pipeline
-    # (deterministic split, bigram counts, smoothing, scoring) is plain SQL
-    oracles["lm_perplexity"] = _lm_perplexity_oracle()
-    # CCNet tercile cut: rank cuts over the distinct value table — integer
-    # compares only, so the SQL mirror is exact (no quantile interpolation)
-    oracles["ppl_buckets"] = _ppl_buckets_oracle()
-    # weighted sampling: the identical draw + race-key expression; ties
-    # after the 6-round break on doc_id in BOTH engines
-    oracles["weighted_sample_docs"] = """
-        WITH wd AS (
-            SELECT doc_id, source, n_chars,
-                   CAST(concat('0x', substr(md5(concat(CAST(doc_id AS VARCHAR), '#5')),
-                                            1, 15)) AS BIGINT) % 1048576 AS d
-            FROM documents
-            WHERE n_chars IS NOT NULL AND CAST(n_chars AS DOUBLE) > 0)
-        SELECT doc_id, source, n_chars,
-               ROUND(-ln(CAST(d + 1 AS DOUBLE) / 1048577.0)
-                     / CAST(n_chars AS DOUBLE), 6) AS wkey
-        FROM wd
-        ORDER BY wkey, doc_id
-        LIMIT 100
-    """
-    # BPE subword tier: kernel outputs as VALUES (byte-identity per doc);
-    # the packing layout is re-derived in SQL from the embedded counts
-    bpe = _bpe_model()
-    cnt_cte = _values_cte("cnt", ["doc_id", "bpe_tokens"], bpe["counts"])
-    oracles["token_counts_bpe"] = f"""
-        WITH {cnt_cte}
-        SELECT CAST(doc_id AS BIGINT) AS doc_id,
-               CAST(bpe_tokens AS INT) AS bpe_tokens
-        FROM cnt
-    """
-    oracles["chunk_documents_bpe"] = f"""
-        WITH {_values_cte("ch", ["doc_id", "chunk_idx", "n_tokens", "chunk_md5"], bpe["chunks"])}
-        SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(chunk_idx AS INT) AS chunk_idx,
-               CAST(n_tokens AS INT) AS n_tokens, chunk_md5
-        FROM ch
-    """
-    oracles["pack_sequences_bpe"] = f"""
-        WITH {cnt_cte},
-        off AS (
-            SELECT doc_id, bpe_tokens,
-                   CAST(COALESCE(SUM(bpe_tokens) OVER (ORDER BY doc_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-                       AS start_offset
-            FROM cnt)
-        SELECT CAST(doc_id AS BIGINT) AS doc_id,
-               CAST(bpe_tokens AS INT) AS bpe_tokens, start_offset,
-               CAST((start_offset - (start_offset % 64)) // 64 AS BIGINT) AS seq_id,
-               CAST(((start_offset + GREATEST(bpe_tokens - 1, 0))
-                     - ((start_offset + GREATEST(bpe_tokens - 1, 0)) % 64)) // 64 AS BIGINT)
-                   AS end_seq_id,
-               CAST(((start_offset + GREATEST(bpe_tokens - 1, 0))
-                     - ((start_offset + GREATEST(bpe_tokens - 1, 0)) % 64)) // 64 AS BIGINT)
-                   > CAST((start_offset - (start_offset % 64)) // 64 AS BIGINT)
-                   AS crosses_boundary
-        FROM off
-    """
-    # trained-quantizer oracles: kernel-mirror models embedded as VALUES
-    # (k-means itself is iterative; the MODEL is deterministic — VERDICT r5 #1)
-    oracles["ann_pq_trained_topk"] = _ann_pq_trained_oracle()
-    oracles["ann_ivfpq_trained_topk"] = _ann_ivfpq_trained_oracle()
-    # the persisted path must return byte-identical rows to the one-shot
-    # build — same oracle verbatim (VERDICT r5 #2)
-    oracles["ann_ivfpq_persisted_topk"] = oracles["ann_ivfpq_topk"]
-    # incremental growth (round 6): the SAME IVFADC SQL with the model CTEs
-    # (centroid sample + residual-codebook sample) restricted to the even
-    # half — frozen-model append means encode-over-all, model-from-A.
-    # Derived by targeted rewrite of the one-shot oracle so the two can
-    # never drift; the asserts fail loudly if the base SQL is reshaped.
-    base = oracles["ann_ivfpq_topk"]
-    cent_old = "SELECT vec_id AS cent_id, v AS cv FROM emb\n"
-    cb_old = "ANTI JOIN cent ON a.vec_id = cent.cent_id\n"
-    assert base.count(cent_old) == 1 and base.count(cb_old) == 1, "ivfpq oracle reshaped"
-    oracles["ann_ivfpq_appended_topk"] = base.replace(
-        cent_old, "SELECT vec_id AS cent_id, v AS cv FROM emb WHERE vec_id % 2 = 0\n"
-    ).replace(
-        cb_old,
-        "ANTI JOIN cent ON a.vec_id = cent.cent_id\n"
-        "                      WHERE a.vec_id % 2 = 0\n",
-    )
-    # round-6 additions: large-star/small-star components (recursive-CTE
-    # mirror), BM25 inverted-index retrieval, token-balanced shard layout
-    # (plain prefix-sum mirror of the two-layer distributed form), and the
-    # suffix-level domain blocklist
-    oracles["host_components"] = _HOST_COMPONENTS_ORACLE
-    oracles["bm25_topk"] = _BM25_ORACLE.format(ntoks=_NTOKS)
-    # persisted-path invariance (the ann_ivfpq_persisted_topk precedent)
-    oracles["bm25_persisted_topk"] = oracles["bm25_topk"]
-    ntoks_count = (
-        f"SELECT doc_id, CAST(len({_NTOKS}) AS INT) AS n_tokens FROM documents"
-    )
-    shard_cte = _SHARD_OFF_CTE.format(ntoks_count=ntoks_count)
-    oracles["shard_layout"] = f"""
-        WITH {shard_cte}
-        SELECT doc_id, n_tokens,
-               s // {_SHARD_TARGET} AS shard_id,
-               s % {_SHARD_TARGET} AS shard_offset,
-               CAST(ROW_NUMBER() OVER (PARTITION BY s // {_SHARD_TARGET}
-                                       ORDER BY draw, doc_id) - 1 AS INT) AS shard_pos
-        FROM soff
-    """
-    oracles["shard_stats"] = f"""
-        WITH {shard_cte}
-        SELECT s // {_SHARD_TARGET} AS shard_id,
-               COUNT(*) AS n_docs,
-               CAST(SUM(n_tokens) AS BIGINT) AS shard_tokens
-        FROM soff GROUP BY 1
-    """
-    oracles["url_blocklist"] = _URL_BLOCKLIST_ORACLE
-    oracles["stratified_split"] = _stratified_split_oracle()
-    oracles["temperature_resample"] = _TEMPERATURE_ORACLE
-    return oracles
+    return {name: o if isinstance(o, str) else o() for name, _, o in _QUERIES}

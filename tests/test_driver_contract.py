@@ -26,6 +26,7 @@ def test_queries_and_oracles_cover_each_other():
     assert missing <= NO_ORACLE_ALLOWED, f"queries missing oracles: {sorted(missing - NO_ORACLE_ALLOWED)}"
     assert not (NO_ORACLE_ALLOWED & os_), "allowlisted query grew an oracle — drop it from the list"
     assert len(qs) >= 62
+    assert len(entrymod._QUERIES) == len(qs), "a name repeated in _QUERIES hides a query"
 
 
 def test_entry_returns_flagship_frame(spark):
