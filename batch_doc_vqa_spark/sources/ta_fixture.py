@@ -51,7 +51,7 @@ def item_sets(n_docs: int = 12, seed: int = 42) -> tuple[list[tuple], list[tuple
             [rng.choice(_TAGS)] if rng.random() < 0.5 else []
         )
         gt += [(d, t) for t in g]
-        pred += [(d, t) for t in set(p)]
+        pred += [(d, t) for t in sorted(set(p))]
     return gt, pred
 
 

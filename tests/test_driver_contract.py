@@ -8,6 +8,10 @@ without an oracle fails this test unless it is consciously allowlisted."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
 import __spark_entry__ as entrymod
 
 # consciously rows-only: no closed-form SQL exists. Keep this list SHORT and
@@ -36,3 +40,21 @@ def test_entry_returns_flagship_frame(spark):
     assert len(rows) == 500
     assert {r["status"] for r in rows} <= {"ok", "ok_recall", "pdf", "empty", "error"}
     assert all(r["n_chars"] >= 0 for r in rows)
+
+
+def test_oracle_text_is_identical_across_processes():
+    """The oracle SQL is part of the driver's fingerprint, so it must not
+    depend on per-process state such as str hash randomisation."""
+    script = (
+        "import hashlib, json, __spark_entry__ as m; "
+        "print(hashlib.sha256(json.dumps(m.oracle_sql(), sort_keys=True).encode()).hexdigest())"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    digests = {
+        subprocess.run(
+            [sys.executable, "-c", script], cwd=repo, capture_output=True, text=True, check=True,
+            env={**os.environ, "PYTHONHASHSEED": seed},
+        ).stdout.strip()
+        for seed in ("0", "1")
+    }
+    assert len(digests) == 1, digests
