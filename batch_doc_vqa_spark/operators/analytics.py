@@ -76,16 +76,6 @@ def latest_per_key(df: DataFrame, key_col: str, ts_col: str, tiebreak_col: str) 
     return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
 
 
-def first_nonnull_per_key(df: DataFrame, key_col: str, order_col: str, value_col: str) -> DataFrame:
-    """First non-null value per key in order (W6 pick-best-across-pages)."""
-    w = Window.partitionBy(key_col).orderBy(order_col).rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    return (
-        df.withColumn("picked", F.first(value_col, ignorenulls=True).over(w))
-        .groupBy(key_col)
-        .agg(F.first("picked").alias("picked"))
-    )
-
-
 def calibration_bins(df: DataFrame, prob_col: str, correct_col: str, n_bins: int = 7) -> DataFrame:
     """Reliability diagram bins (A19): bucket prob, mean accuracy per bucket."""
     bucket = F.least(F.floor(F.col(prob_col) * n_bins), F.lit(n_bins - 1)).cast("int")

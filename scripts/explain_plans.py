@@ -6,14 +6,22 @@ Checks (printed per query):
 - BroadcastHashJoin vs SortMergeJoin choices
 - Exchange count (shuffles)
 - WholeStageCodegen coverage
+
+Usage: python scripts/explain_plans.py SF_DIR [QUERY ...] [--verbose]
+                                       [--out DIR --suffix S]
+
+With --out, each formatted plan is also written to DIR/<query>_<S>.txt, so a
+plan can be captured before and after an operator change and diffed.
 """
 
 from __future__ import annotations
 
+import argparse
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from batch_doc_vqa_spark.session import get_spark  # noqa: E402
@@ -67,12 +75,19 @@ INTERESTING = [
 
 
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    names = sys.argv[2:] or INTERESTING
+    ap = argparse.ArgumentParser()
+    ap.add_argument("sf_dir", help="directory of the driver's parquet tables")
+    ap.add_argument("names", nargs="*", default=INTERESTING)
+    ap.add_argument("--verbose", action="store_true", help="print each full plan")
+    ap.add_argument("--out", help="also write each plan to OUT/<query>_<suffix>.txt")
+    ap.add_argument("--suffix", default="plan")
+    args = ap.parse_args()
     spark = get_spark("explain", master="local[4]", shuffle_partitions=4)
     qs = entrymod.queries()
-    for name in names:
-        df = qs[name](spark, sf_dir)
+    if args.out:
+        os.makedirs(args.out, exist_ok=True)
+    for name in args.names:
+        df = qs[name](spark, args.sf_dir)
         plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
         n_exchange = len(re.findall(r"\bExchange\b", plan))
         n_bhj = len(re.findall(r"BroadcastHashJoin", plan))
@@ -82,8 +97,11 @@ def main() -> None:
         print(f"\n===== {name}: exchanges={n_exchange} bhj={n_bhj} smj={n_smj} bnlj={n_bnl}")
         for p in pushed[:4]:
             print(f"  pushed: [{p[:120]}]")
-        if "--verbose" in sys.argv:
+        if args.verbose:
             print(plan)
+        if args.out:
+            with open(os.path.join(args.out, f"{name}_{args.suffix}.txt"), "w") as fh:
+                fh.write(plan)
 
 
 if __name__ == "__main__":
