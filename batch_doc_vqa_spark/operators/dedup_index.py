@@ -43,19 +43,13 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.publish import _fs, read_maintenance_lease
 from .dedup import banded_rows, minhash_signatures
 
 INDEX_PARAMS = dict(n=3, num_hashes=64, bands=16, seed=7, base_hash="xxhash64")
 
 _SIG_COLS = ["_id", "signature"]
 _BAND_COLS = ["_id", "band_idx", "band_hash"]
-
-
-def _fs(spark: SparkSession, path: str):
-    # the marker machinery is the publish protocol's — one definition
-    from ..plans.publish import _fs as publish_fs
-
-    return publish_fs(spark, path)
 
 
 def committed_snapshots(spark: SparkSession, path: str) -> list[str]:
@@ -102,7 +96,7 @@ def _write_snapshot(
     from ..plans.publish import commit_marker
 
     def _refuse_under_lease():
-        if _read_lease(spark, path) is not None:
+        if read_maintenance_lease(spark, path) is not None:
             raise CompactionInProgressError(
                 f"incremental index commit blocked: compaction in progress at "
                 f"{path} (lease held) — retry after it finishes, or run "
@@ -170,12 +164,6 @@ def _acquire_lease(spark: SparkSession, path: str, payload: dict) -> None:
             "compaction is running, or a crashed one left state behind "
             "(run recover_dedup_index first)"
         ) from exc
-
-
-def _read_lease(spark: SparkSession, path: str) -> dict | None:
-    from ..plans.publish import read_maintenance_lease
-
-    return read_maintenance_lease(spark, path)
 
 
 def _release_lease(spark: SparkSession, path: str) -> None:
@@ -304,7 +292,7 @@ def vacuum_dedup_index(
     marker has not landed yet (deleting it would commit a marker with no
     data). Drop to 0 only when no writer can be active.
     """
-    if _read_lease(spark, path) is not None:
+    if read_maintenance_lease(spark, path) is not None:
         raise CompactionInProgressError(
             f"vacuum refused: compaction lease held at {path} "
             "(finish or recover_dedup_index first)"

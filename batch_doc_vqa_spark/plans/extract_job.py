@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from .. import __version__ as ENGINE_VERSION
 from ..functions.udfs import extract_udf
+from .publish import _fs
 from .skew import BUCKET_COL, with_salted_partition
 
 MAX_FAILURE_URLS_PER_PARTITION = 100
@@ -54,9 +55,7 @@ def _table_exists(spark: SparkSession, path: str) -> bool:
     100 TB with thousands of prior runs that is a driver-side stall on every
     incremental run.
     """
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, jpath = _fs(spark, path)
     return bool(fs.exists(jpath))
 
 
@@ -67,8 +66,7 @@ def _has_data_files(spark: SparkSession, path: str) -> bool:
     so a populated store costs one listing step, and only the
     crashed-before-any-commit empty-directory case walks the (empty) tree.
     """
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, jpath = _fs(spark, path)
     it = fs.listFiles(jpath, True)
     while it.hasNext():
         name = it.next().getPath().getName()
