@@ -38,24 +38,15 @@ def get_spark(
         # collapses to 1 task, a 100 TB shuffle still gets TB/advisory
         # partitions). The Spark tuning guide recommends false on busy
         # clusters; locally it removes ~32 near-empty tasks per exchange.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            os.environ.get("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"),
-        )
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_AQE_ADVISORY", "64m"),
-        )
+        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # let the planner pick shuffled-hash over sort-merge when a side
         # fits per-partition (guide §3.1); AQE additionally rewrites SMJ →
         # SHJ at runtime below the local-map threshold — both size-gated,
         # so the choice stays scale-adaptive
         .config("spark.sql.join.preferSortMergeJoin", "false")
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCALMAP", "64m"),
-        )
+        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # ~3KB/page → ~30MB Arrow batches: amortizes per-batch Python overhead
