@@ -118,6 +118,15 @@ class FieldRule:
     if_then_else: tuple = ()  # (if_rule, then_rule[, else_rule])
     items: object = None  # FieldRule applied to EVERY element of a JSON array
 
+    def __post_init__(self) -> None:
+        # a rule is a dict key (_VIOLATION_CACHE), so sequence fields given
+        # as lists are stored as tuples: the list form validates the same
+        for name in ("enum", "required_keys", "any_of", "one_of", "all_of", "if_then_else"):
+            value = getattr(self, name)
+            if isinstance(value, list):
+                object.__setattr__(self, name, tuple(value))
+        object.__setattr__(self, "nested", tuple(tuple(pair) for pair in self.nested))
+
 
 # Unresolved-expression memo: a rule's violation Column is a pure function
 # of the (frozen, hashable) FieldRule — building it costs thousands of py4j

@@ -286,3 +286,30 @@ def test_allof_not_ifthenelse_items(spark):
     # no Python anywhere in the plan — the whole extended ladder is columns
     plan = validate_coerce(df, rules, strict=True)._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan and "MapInPandas" not in plan
+
+
+def test_list_valued_rule_fields_validate_like_tuples(spark):
+    """Sequence fields may be given as lists (e.g. parsed from a JSON
+    schema); the rule must stay hashable and validate exactly like the
+    tuple form."""
+    as_tuples = [
+        FieldRule("grade", enum=("A", "B")),
+        FieldRule("obj", required_keys=("id",), nested=(("id", FieldRule("id", dtype="bigint")),)),
+        FieldRule("code", any_of=(FieldRule("code", pattern=r"^[0-9]+$"), FieldRule("code", max_length=2))),
+    ]
+    as_lists = [
+        FieldRule("grade", enum=["A", "B"]),
+        FieldRule("obj", required_keys=["id"], nested=[["id", FieldRule("id", dtype="bigint")]]),
+        FieldRule("code", any_of=[FieldRule("code", pattern=r"^[0-9]+$"), FieldRule("code", max_length=2)]),
+    ]
+    rows = [
+        (1, "A", '{"id": 7}', "123"),
+        (2, "Z", '{"id": 7}', "ab"),
+        (3, "B", '{"x": 1}', "abc"),
+        (4, "B", '{"id": "q"}', "12345"),
+    ]
+    df = spark.createDataFrame(rows, "id int, grade string, obj string, code string")
+    for strict in (True, False):
+        want = validate_coerce(df, as_tuples, strict=strict).orderBy("id").collect()
+        assert validate_coerce(df, as_lists, strict=strict).orderBy("id").collect() == want
+    assert as_lists == as_tuples
