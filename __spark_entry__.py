@@ -3371,16 +3371,21 @@ _CAND = """list_distinct(list_transform(
 _SPLIT_NAME = r"list_filter(string_split(regexp_replace(trim({col}), '\s+', ' ', 'g'), ' '), x -> x != '')"
 
 
-def _truth_cte() -> str:
-    return _values_cte(
+def _matching_ctes() -> str:
+    """The fixture rows of both sides as VALUES plus each side's surname
+    candidates: the CTE prefix every matching-family oracle shares."""
+    truth = _values_cte(
         "truth", ["doc", "student_id", "student_full_name"], matching_fixture.truth_rows()
     )
-
-
-def _extracted_cte() -> str:
-    return _values_cte(
+    extracted = _values_cte(
         "extracted", ["doc", "page", "llm_id", "llm_fullname"], matching_fixture.extracted_rows()
     )
+    return f"""{truth},
+            {extracted},
+            tc0 AS (SELECT *, {_SPLIT_NAME.format(col='student_full_name')} AS toks FROM truth),
+            tc AS (SELECT doc, student_id, {_CAND} AS ct FROM tc0),
+            ec0 AS (SELECT *, {_SPLIT_NAME.format(col='llm_fullname')} AS toks FROM extracted),
+            ec AS (SELECT doc, llm_id, {_CAND} AS ce FROM ec0),"""
 
 
 def _q_matching_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3394,12 +3399,7 @@ def _q_matching_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _matching_pipeline_oracle() -> str:
     return f"""
-            WITH {_truth_cte()},
-            {_extracted_cte()},
-            tc0 AS (SELECT *, {_SPLIT_NAME.format(col='student_full_name')} AS toks FROM truth),
-            tc AS (SELECT doc, student_id, {_CAND} AS ct FROM tc0),
-            ec0 AS (SELECT *, {_SPLIT_NAME.format(col='llm_fullname')} AS toks FROM extracted),
-            ec AS (SELECT doc, llm_id, {_CAND} AS ce FROM ec0),
+            WITH {_matching_ctes()}
             pairs AS (
               SELECT e.doc, t.student_id,
                      levenshtein(lower(e.llm_id), lower(t.student_id)) AS id_distance,
@@ -3425,12 +3425,7 @@ def _q_digit_accuracy_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
 # explode of matched (llm_id, student_id) → mean·100
 def _digit_accuracy_chain_oracle() -> str:
     return f"""
-            WITH {_truth_cte()},
-            {_extracted_cte()},
-            tc0 AS (SELECT *, {_SPLIT_NAME.format(col='student_full_name')} AS toks FROM truth),
-            tc AS (SELECT doc, student_id, {_CAND} AS ct FROM tc0),
-            ec0 AS (SELECT *, {_SPLIT_NAME.format(col='llm_fullname')} AS toks FROM extracted),
-            ec AS (SELECT doc, llm_id, {_CAND} AS ce FROM ec0),
+            WITH {_matching_ctes()}
             pairs AS (
               SELECT e.doc, e.llm_id, t.student_id,
                      levenshtein(lower(e.llm_id), lower(t.student_id)) AS id_distance,
@@ -3461,12 +3456,7 @@ def _q_detection_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _detection_stats_oracle() -> str:
     return f"""
-            WITH {_truth_cte()},
-            {_extracted_cte()},
-            tc0 AS (SELECT *, {_SPLIT_NAME.format(col='student_full_name')} AS toks FROM truth),
-            tc AS (SELECT doc, student_id, {_CAND} AS ct FROM tc0),
-            ec0 AS (SELECT *, {_SPLIT_NAME.format(col='llm_fullname')} AS toks FROM extracted),
-            ec AS (SELECT doc, llm_id, {_CAND} AS ce FROM ec0),
+            WITH {_matching_ctes()}
             pairs AS (
               SELECT e.doc,
                      levenshtein(lower(e.llm_id), lower(t.student_id)) AS id_distance,
@@ -3492,12 +3482,7 @@ def _q_accuracy_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _accuracy_stats_oracle() -> str:
     return f"""
-            WITH {_truth_cte()},
-            {_extracted_cte()},
-            tc0 AS (SELECT *, {_SPLIT_NAME.format(col='student_full_name')} AS toks FROM truth),
-            tc AS (SELECT doc, student_id, {_CAND} AS ct FROM tc0),
-            ec0 AS (SELECT *, {_SPLIT_NAME.format(col='llm_fullname')} AS toks FROM extracted),
-            ec AS (SELECT doc, llm_id, {_CAND} AS ce FROM ec0),
+            WITH {_matching_ctes()}
             pairs AS (
               SELECT e.doc,
                      levenshtein(lower(e.llm_id), lower(t.student_id)) AS id_distance,
@@ -4333,6 +4318,24 @@ _INTROS = (
 )
 
 
+# window hashes → shared-by-≥10-docs filter → run starts: the CTE chain both
+# substring-dedup span oracles below build on
+_SPAN_WINDOW_CTES = """w AS (
+              SELECT doc_id, u.i AS pos,
+                CAST(concat('0x', substr(md5(array_to_string(list_slice(tk, CAST(u.i AS INT), CAST(u.i + 7 AS INT)), ' ')), 1, 15)) AS BIGINT) AS h
+              FROM b, unnest(range(1, greatest(n - 7, 0) + 1)) u(i)
+            ), shared AS (
+              SELECT h FROM (SELECT h, COUNT(DISTINCT doc_id) AS nd FROM w GROUP BY h)
+              WHERE nd >= 10
+            ), dup AS (
+              SELECT doc_id, pos FROM w JOIN shared USING (h)
+            ), runs AS (
+              SELECT doc_id, pos,
+                CASE WHEN COALESCE(pos - lag(pos) OVER (PARTITION BY doc_id ORDER BY pos), 9) > 8
+                     THEN 1 ELSE 0 END AS nw
+              FROM dup"""
+
+
 def _q_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact substring-level dedup (Lee et al. 2022): shared 16-token intros
     planted on every doc surface as maximal duplicated spans with positions;
@@ -4363,20 +4366,7 @@ def _duplicate_spans_oracle() -> str:
               FROM d
             ), b AS (
               SELECT doc_id, tk, len(tk) AS n FROM t
-            ), w AS (
-              SELECT doc_id, u.i AS pos,
-                CAST(concat('0x', substr(md5(array_to_string(list_slice(tk, CAST(u.i AS INT), CAST(u.i + 7 AS INT)), ' ')), 1, 15)) AS BIGINT) AS h
-              FROM b, unnest(range(1, greatest(n - 7, 0) + 1)) u(i)
-            ), shared AS (
-              SELECT h FROM (SELECT h, COUNT(DISTINCT doc_id) AS nd FROM w GROUP BY h)
-              WHERE nd >= 10
-            ), dup AS (
-              SELECT doc_id, pos FROM w JOIN shared USING (h)
-            ), runs AS (
-              SELECT doc_id, pos,
-                CASE WHEN COALESCE(pos - lag(pos) OVER (PARTITION BY doc_id ORDER BY pos), 9) > 8
-                     THEN 1 ELSE 0 END AS nw
-              FROM dup
+            ), {_SPAN_WINDOW_CTES}
             ), spans AS (
               SELECT doc_id, pos,
                 SUM(nw) OVER (PARTITION BY doc_id ORDER BY pos ROWS UNBOUNDED PRECEDING) AS sp
@@ -4421,20 +4411,7 @@ def _dedup_spans_removed_oracle() -> str:
               FROM d
             ), b AS (
               SELECT doc_id, text, tk, len(tk) AS n FROM t
-            ), w AS (
-              SELECT doc_id, u.i AS pos,
-                CAST(concat('0x', substr(md5(array_to_string(list_slice(tk, CAST(u.i AS INT), CAST(u.i + 7 AS INT)), ' ')), 1, 15)) AS BIGINT) AS h
-              FROM b, unnest(range(1, greatest(n - 7, 0) + 1)) u(i)
-            ), shared AS (
-              SELECT h FROM (SELECT h, COUNT(DISTINCT doc_id) AS nd FROM w GROUP BY h)
-              WHERE nd >= 10
-            ), dup AS (
-              SELECT doc_id, pos FROM w JOIN shared USING (h)
-            ), runs AS (
-              SELECT doc_id, pos,
-                CASE WHEN COALESCE(pos - lag(pos) OVER (PARTITION BY doc_id ORDER BY pos), 9) > 8
-                     THEN 1 ELSE 0 END AS nw
-              FROM dup
+            ), {_SPAN_WINDOW_CTES}
             ), spansq AS (
               SELECT doc_id, pos,
                 SUM(nw) OVER (PARTITION BY doc_id ORDER BY pos ROWS UNBOUNDED PRECEDING) AS sp
