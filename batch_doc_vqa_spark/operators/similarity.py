@@ -1,19 +1,44 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity search and near-dup detection over embedding columns
+(array<float>), entirely in JVM-side column expressions except the k-means
+fits.
 
-Brute-force cosine top-k as the exact baseline (JVM-side ``zip_with`` +
-``aggregate`` dot products — no Python), and a random-hyperplane LSH variant
-as the scale path: sign-bit signatures bucket the corpus so each query only
-scores its own buckets. The LSH projection matrix is a fixed seeded literal,
-so bucketing is deterministic.
+Tiers, exact to compressed:
 
-At 100 TB the broadcast side is the *query* set (small); the corpus stays
-partitioned and is scanned once per batch of queries.
+- exact: ``cosine_topk`` (broadcast queries × corpus scan) and
+  ``embedding_dup_pairs`` (all pairs) — the small-scale oracles;
+- LSH: ``lsh_cosine_topk`` / ``embedding_dup_pairs_lsh`` bucket by
+  random-hyperplane sign signatures (a fixed seeded literal matrix), so
+  each query scores only its colliding buckets;
+- IVF: ``ivf_cosine_topk`` probes the ``nprobe`` coarse cells nearest each
+  query; ``semdedup`` prunes near-dups within cells;
+- PQ / IVF×PQ (IVFADC, Jégou et al. 2011): ``pq_topk`` and the
+  ``ivfpq_build`` / ``ivfpq_query`` split (persisted via
+  ``save_ivfpq_index`` / ``load_ivfpq_index`` / ``append_ivfpq_index``)
+  rank by asymmetric distance over ``m`` sub-space codes, with an optional
+  exact re-rank; ``train_pq_codebook`` / ``train_ivfpq_model`` swap the
+  md5-sample models for k-means ones with zero plan change.
+
+Every tier is built from one set of quantizer primitives, each defined
+once so a tie-break, rounding or NaN rule has a single home:
+``_nearest_centroid`` (cosine argmax / L2 argmin as a min(struct)),
+``_subspace_dists`` (rounded per-sub-space distances to the codebook),
+``_pq_encode`` (argmin code per sub-space, packed in m-order),
+``_query_table`` (the per-query ADC lookup array), ``_adc_dist`` (the ADC
+sum), ``_topk`` / ``_adc_search`` (per-query ranking with an optional exact
+re-rank), ``_pq_codebook`` (supplied-or-md5-sample codebook),
+``_fit_kmeans_groups`` (per-sub-space k-means), plus ``_sub_dim``
+(the ``dim % m`` check) and ``_dbl`` (the array-to-double cast).
+
+Models are data-derived (md5(id) order, parameter-derived seeds), never
+task- or partition-derived, so every default model is reproducible by the
+DuckDB oracles. At 100 TB the broadcast side is the *query* set (small);
+the corpus stays partitioned and is scanned once per batch of queries.
 """
 
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
@@ -27,6 +52,265 @@ def _norm(a):
 
 def cosine_sim(a, b, digits: int = 6):
     return F.round(_dot(a, b) / (_norm(a) * _norm(b)), digits)
+
+
+def _sq_l2(a, b):
+    """Squared-L2 between two equal-length double arrays — elementwise
+    (x−y)² then a LEFT fold, the IEEE-identical form a SQL oracle must use
+    (same addends, same order → bit-identical sums)."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)), F.lit(0.0), lambda acc, v: acc + v
+    )
+
+
+def _dbl(c):
+    """array<float> → array<double>, so float-array inputs (the parquet
+    embeddings are FLOAT[]) get the same IEEE math the oracle uses."""
+    return F.transform(c, lambda x: x.cast("double"))
+
+
+def _sub_dim(dim: int, m: int) -> int:
+    if dim % m:
+        raise ValueError("dim must divide into m sub-spaces")
+    return dim // m
+
+
+def _md5_key(id_col: str):
+    """md5(id) — the deterministic, engine-portable order (md5 exists in
+    both Spark and DuckDB) every default model and training sample draws
+    from."""
+    return F.md5(F.col(id_col).cast("string"))
+
+
+def _md5_first(df: DataFrame, id_col: str, n: int) -> DataFrame:
+    """The ``n`` rows with the smallest md5(id)."""
+    return df.orderBy(_md5_key(id_col)).limit(n)
+
+
+def _topk(df: DataFrame, part: str, k: int, *order, col: str = "rank") -> DataFrame:
+    """The first ``k`` rows per ``part`` under ``order`` (which must end in
+    a unique tiebreak), numbered 1..k in ``col``."""
+    w = Window.partitionBy(part).orderBy(*order)
+    return df.withColumn(col, F.row_number().over(w)).filter(F.col(col) <= k)
+
+
+def _nearest_centroid(
+    df: DataFrame, cent: DataFrame, key: str, vec: str, cent_vec: str, metric: str, *payload
+) -> DataFrame:
+    """(key, _b) with ``_b = struct(d, c, payload…)`` of the nearest
+    broadcast centroid per ``key`` — ``metric`` "l2" is the argmin of
+    round(squared-L2, 6), "cos" the argmax of the rounded cosine (as the
+    argmin of its exact negation).
+
+    One map-side-combinable MIN over struct(dist, cent_id, payload…):
+    (dist, cent_id) is unique per group, so ties break on cent_id and the
+    trailing payloads are never compared; the corpus × centroid rows
+    partial-aggregate BEFORE the exchange instead of shuffling into a
+    per-vector sort window. NaN sorts last, as in the oracles' ORDER BY.
+
+    A zero-norm vector or centroid makes the cosine divide by zero, which
+    under the engine's ANSI session (``spark.sql.ansi.enabled``, the Spark
+    4.1 default) raises DIVIDE_BY_ZERO — the input fails loudly rather than
+    placing a NaN."""
+    if metric == "cos":
+        dist = -cosine_sim(F.col(vec), F.col(cent_vec))
+    else:
+        dist = F.round(_sq_l2(F.col(vec), F.col(cent_vec)), 6)
+    return (
+        df.crossJoin(F.broadcast(cent))
+        .withColumn("_cd", dist)
+        .groupBy(key)
+        .agg(
+            F.min(
+                F.struct(F.col("_cd").alias("d"), F.col("cent_id").alias("c"), *payload)
+            ).alias("_b")
+        )
+    )
+
+
+def _residual(a, b):
+    return F.zip_with(a, b, lambda x, y: x - y)
+
+
+def _subvectors(df: DataFrame, keys: list, vec: str, m: int, sub: int, out: str) -> DataFrame:
+    """One row per (keys…, m) carrying the m-th ``sub``-long slice of
+    ``vec`` as ``out``."""
+    ms = F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("m")
+    return df.select(*keys, F.col(vec).alias("_sv"), ms).select(
+        *keys, "m", F.slice(F.col("_sv"), F.col("m") * sub + 1, sub).alias(out)
+    )
+
+
+def _subspace_dists(
+    df: DataFrame, keys: list, vec: str, cbm: DataFrame, m: int, sub: int
+) -> DataFrame:
+    """Every sub-vector of ``vec`` against every code of its sub-space in
+    the broadcast codebook ``cbm`` (code, m, _cs): adds (m, code, dist)
+    with dist = round(squared-L2, 6) — rounded BEFORE every argmin and
+    lookup (cross-engine float discipline)."""
+    return (
+        _subvectors(df, keys, vec, m, sub, "_vs")
+        .join(F.broadcast(cbm), "m")
+        .withColumn("dist", F.round(_sq_l2(F.col("_vs"), F.col("_cs")), 6))
+    )
+
+
+def _packed(field: str, *order: str):
+    """collect_list(``field``) as one array sorted by ``order``."""
+    return F.transform(
+        F.sort_array(F.collect_list(F.struct(*order, field))), lambda s: s[field]
+    )
+
+
+def _pq_encode(df: DataFrame, keys: list, vec: str, cbm: DataFrame, m: int, sub: int) -> DataFrame:
+    """(keys…, _codes): the nearest code of each sub-vector of ``vec``,
+    packed in m-order. The per-(keys, m) argmin is min(struct(dist, code))
+    — ties break on code, and partial (map-side) aggregation collapses the
+    ×n_codes scored rows before the exchange, with no window sort."""
+    return (
+        _subspace_dists(df, keys, vec, cbm, m, sub)
+        .groupBy(*keys, "m")
+        .agg(F.min(F.struct("dist", "code")).alias("_mc"))
+        .select(*keys, "m", F.col("_mc.code").alias("code"))
+        .groupBy(*keys)
+        .agg(_packed("code", "m").alias("_codes"))
+    )
+
+
+def _query_table(
+    df: DataFrame, keys: list, vec: str, cbm: DataFrame, m: int, sub: int
+) -> DataFrame:
+    """(keys…, _qd): the ADC lookup table of ``vec`` — its full (m, code)
+    distance table packed as one array in (m, code) order, so position =
+    m·n_codes + code (1-based codes)."""
+    return (
+        _subspace_dists(df, keys, vec, cbm, m, sub)
+        .groupBy(*keys)
+        .agg(_packed("dist", "m", "code").alias("_qd"))
+    )
+
+
+def _adc_dist(m: int, n_codes: int):
+    """The asymmetric distance: the ``_qd`` lookups at each of the ``m``
+    ``_codes``, folded in fixed m-order (never a float sum through an
+    order-free aggregate), rounded to 6."""
+    return F.round(
+        F.aggregate(
+            F.sequence(F.lit(0), F.lit(m - 1)),
+            F.lit(0.0),
+            lambda acc, i: acc
+            + F.element_at(
+                F.col("_qd"), (i * n_codes + F.element_at(F.col("_codes"), i + 1)).cast("int")
+            ),
+        ),
+        6,
+    )
+
+
+def _adc_search(
+    cand: DataFrame,
+    qd: DataFrame,
+    vecs: DataFrame | None,
+    id_col: str,
+    q_id_col: str,
+    m: int,
+    n_codes: int,
+    k: int,
+    rerank: int,
+) -> DataFrame:
+    """Rank ``cand`` (code rows joined with their query tables) by ADC.
+
+    ``rerank=0``: (q_id, neighbor_id, approx_dist, rank) top-k. ``rerank=R``
+    is the standard ADC→exact pipeline: the R-deep approximate shortlist
+    fetches its TRUE vectors from ``vecs`` (id, _v) and re-ranks by exact
+    squared-L2 against ``qd`` (q_id, _q); output gains ``exact_dist``. The
+    R×Q shortlist broadcasts (small by construction), so the vector fetch
+    is a map-side semi-join — never a corpus shuffle."""
+    adc = cand.filter(F.col(id_col) != F.col(q_id_col)).select(
+        q_id_col,
+        F.col(id_col).alias("neighbor_id"),
+        _adc_dist(m, n_codes).alias("approx_dist"),
+    )
+    by_approx = (F.asc("approx_dist"), F.asc("neighbor_id"))
+    if not rerank:
+        return _topk(adc, q_id_col, k, *by_approx)
+    shortlist = _topk(adc, q_id_col, rerank, *by_approx, col="_rn").drop("_rn")
+    exact = (
+        vecs.select(F.col(id_col).alias("neighbor_id"), F.col("_v").alias("_nv"))
+        .join(F.broadcast(shortlist), "neighbor_id")
+        .join(F.broadcast(qd), q_id_col)
+        .withColumn("exact_dist", F.round(_sq_l2(F.col("_nv"), F.col("_q")), 6))
+    )
+    return _topk(exact, q_id_col, k, F.asc("exact_dist"), F.asc("neighbor_id")).select(
+        q_id_col, "neighbor_id", "approx_dist", "exact_dist", "rank"
+    )
+
+
+def _pq_codebook(
+    codebook: DataFrame | None,
+    src: DataFrame,
+    id_col: str,
+    vec: str,
+    n_codes: int,
+    m: int,
+    sub: int,
+    where: str,
+) -> tuple[DataFrame, int]:
+    """(cbm: (code, m, _cs), n_codes). A supplied (m, code, center) model
+    — e.g. ``train_pq_codebook`` output — is validated and used as is (zero
+    plan change downstream). Otherwise the md5-sample codebook: the ``vec``
+    slices of the ``n_codes`` md5-smallest ``src`` rows, code = md5 rank.
+    A source smaller than ``n_codes`` yields a short codebook, and the ADC
+    position arithmetic must use the ACTUAL size, so it is counted."""
+    if codebook is not None:
+        cbm = codebook.select(
+            "code", "m", F.col("center").alias("_cs")
+        ).localCheckpoint(eager=True)
+        return cbm, _validate_codebook(cbm, m, where)
+    cb = (
+        _md5_first(src, id_col, n_codes)
+        .withColumn("code", F.row_number().over(Window.orderBy(_md5_key(id_col))))
+        .localCheckpoint(eager=True)  # ≤ n_codes rows; also fixes the count
+    )
+    return _subvectors(cb, ["code"], vec, m, sub, "_cs"), cb.count()
+
+
+def _training_sample(
+    corpus: DataFrame, id_col: str, vec_col: str, sample_size: int, corpus_hint: int | None
+) -> DataFrame:
+    """(_ord = md5(id), _v) of the ``sample_size`` md5-smallest docs — the
+    data-derived, partition-independent training sample."""
+    keyed = corpus.select(_md5_key(id_col).alias("_ord"), _dbl(F.col(vec_col)).alias("_v"))
+    return _md5_presample(keyed, F.col("_ord"), sample_size, corpus_hint)
+
+
+def _fit_kmeans_groups(rows: DataFrame, k: int, iters: int, base_seed: int) -> DataFrame:
+    """(m, code, center) from (_ord, m, _vs) rows: one k-means per group
+    ``m`` (a sub-space, or the single m=0 group of full vectors for coarse
+    centroids), one ``applyInPandas`` group each. Rows are re-sorted by the
+    md5 key INSIDE the group (Spark hands groups in arbitrary row order,
+    and k-means++ draws row indices, so order is model identity); the
+    group's seed is ``base_seed + m``, from parameters, never from
+    task/partition ids."""
+
+    def fit(pdf):
+        import pandas as pd
+
+        from ..functions.kmeans import kmeans_fit
+
+        pdf = pdf.sort_values("_ord")
+        X = np.array(pdf["_vs"].tolist(), dtype=np.float64)
+        mm = int(pdf["m"].iloc[0])
+        C = kmeans_fit(X, k, iters, base_seed + mm)
+        return pd.DataFrame(
+            {
+                "m": mm,
+                "code": np.arange(1, len(C) + 1),
+                "center": [[float(x) for x in c] for c in C],
+            }
+        )
+
+    return rows.groupBy("m").applyInPandas(fit, "m int, code int, center array<double>")
 
 
 def _validate_codebook(cbm: DataFrame, m: int, where: str) -> int:
@@ -66,6 +350,18 @@ def _validate_codebook(cbm: DataFrame, m: int, where: str) -> int:
     return counts.pop()
 
 
+def _cosine_rank(
+    cand: DataFrame, k: int, id_col: str, vec_col: str, q_id_col: str, q_vec_col: str
+) -> DataFrame:
+    """Exact cosine over (query, candidate) rows, top-k per query."""
+    scored = cand.select(
+        F.col(q_id_col),
+        F.col(id_col).alias("neighbor_id"),
+        cosine_sim(F.col(vec_col), F.col(q_vec_col)).alias("cosine"),
+    )
+    return _topk(scored, q_id_col, k, F.desc("cosine"), F.asc("neighbor_id"))
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -77,13 +373,7 @@ def cosine_topk(
 ) -> DataFrame:
     """Exact top-k by cosine: broadcast queries × corpus scan + window rank."""
     joined = corpus.crossJoin(F.broadcast(queries)).filter(F.col(id_col) != F.col(q_id_col))
-    scored = joined.select(
-        F.col(q_id_col),
-        F.col(id_col).alias("neighbor_id"),
-        cosine_sim(F.col(vec_col), F.col(q_vec_col)).alias("cosine"),
-    )
-    w = Window.partitionBy(q_id_col).orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _cosine_rank(joined, k, id_col, vec_col, q_id_col, q_vec_col)
 
 
 def hyperplane_signature(vec_col: str, dim: int, n_planes: int = 16, seed: int = 11):
@@ -117,6 +407,15 @@ def hyperplane_signature(vec_col: str, dim: int, n_planes: int = 16, seed: int =
     return F.expr(sig)
 
 
+def _lsh_signatures(vec_col: str, dim: int, n_planes: int, n_tables: int):
+    """(_t, _sig) rows: ``n_tables`` independent sign-bit signatures
+    (different seeded planes), one row per table."""
+    sigs = F.array(
+        *[hyperplane_signature(vec_col, dim, n_planes, seed=11 + t) for t in range(n_tables)]
+    )
+    return F.posexplode(sigs).alias("_t", "_sig")
+
+
 def lsh_cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -137,27 +436,14 @@ def lsh_cosine_topk(
     Recall vs ``cosine_topk`` is asserted in tests. The shuffle key is
     (table, signature) — corpus-linear; the query side broadcasts.
     """
-
-    def with_sigs(df, vcol):
-        sigs = F.array(
-            *[hyperplane_signature(vcol, dim, n_planes, seed=11 + t) for t in range(n_tables)]
-        )
-        return df.select("*", F.posexplode(sigs).alias("_t", "_sig"))
-
-    c = with_sigs(corpus, vec_col)
-    q = with_sigs(queries, q_vec_col)
+    c = corpus.select("*", _lsh_signatures(vec_col, dim, n_planes, n_tables))
+    q = queries.select("*", _lsh_signatures(q_vec_col, dim, n_planes, n_tables))
     cand = (
         c.join(F.broadcast(q), ["_t", "_sig"])
         .filter(F.col(id_col) != F.col(q_id_col))
         .dropDuplicates([q_id_col, id_col])
     )
-    scored = cand.select(
-        F.col(q_id_col),
-        F.col(id_col).alias("neighbor_id"),
-        cosine_sim(F.col(vec_col), F.col(q_vec_col)).alias("cosine"),
-    )
-    w = Window.partitionBy(q_id_col).orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _cosine_rank(cand, k, id_col, vec_col, q_id_col, q_vec_col)
 
 
 def embedding_dup_pairs(
@@ -195,15 +481,12 @@ def embedding_dup_pairs_lsh(
     exact-cosine verify of candidates only. Shuffle key (table, signature) —
     corpus-linear; high-cosine pairs collide in some table with high
     probability (recall vs the exact tier asserted in tests)."""
-    sigs = F.array(
-        *[hyperplane_signature(vec_col, dim, n_planes, seed=11 + t) for t in range(n_tables)]
-    )
     # the self-join + dedup move only (id, table, signature) — 3 longs per
     # row; vectors rejoin AFTER candidate dedup (the minhash_lsh_pairs
     # shape), so the exchanges never carry the dim-double payload
     banded = corpus.select(
         F.col(id_col).alias("_id"),
-        F.posexplode(sigs).alias("_t", "_sig"),
+        _lsh_signatures(vec_col, dim, n_planes, n_tables),
     ).localCheckpoint(eager=True)  # signatures computed once for both sides
     a, b = banded.alias("a"), banded.alias("b")
     cand = (
@@ -245,52 +528,22 @@ def ivf_cosine_topk(
     Spark and DuckDB, so the oracle reproduces the exact same model); a
     k-means refinement would drop in here without changing the plan shape.
     Everything is in-plan: centroid selection, assignment (broadcast argmax
-    join), probing, and ranking — no driver-side collect.
+    aggregate), probing, and ranking — no driver-side collect.
     """
-    cent = (
-        corpus.select(F.col(id_col).alias("cent_id"), F.col(vec_col).alias("cent_vec"))
-        .orderBy(F.md5(F.col("cent_id").cast("string")))
-        .limit(n_centroids)
+    cent = _md5_first(corpus, id_col, n_centroids).select(
+        F.col(id_col).alias("cent_id"), F.col(vec_col).alias("cent_vec")
     )
-    # argmax as a map-side-combinable MIN over struct(-cos, cent_id, vec):
-    # negation of the rounded cosine is exact, (cos, cent_id) is unique per
-    # group so the trailing vec is never compared, and the corpus×centroid
-    # rows partial-aggregate BEFORE the exchange instead of shuffling into
-    # a per-vector sort (the old row_number window)
-    assign = (
-        corpus.crossJoin(F.broadcast(cent))
-        .withColumn("_cs", cosine_sim(F.col(vec_col), F.col("cent_vec")))
-        .groupBy(id_col)
-        .agg(
-            F.min(
-                F.struct(
-                    (-F.col("_cs")).alias("n"),
-                    F.col("cent_id").alias("c"),
-                    F.col(vec_col).alias("v"),
-                )
-            ).alias("_b")
-        )
-        .select(id_col, F.col("_b.v").alias(vec_col), F.col("_b.c").alias("cent_id"))
-    )
-    w_probe = Window.partitionBy(q_id_col).orderBy(F.desc("_cs"), F.asc("cent_id"))
-    probe = (
-        queries.crossJoin(F.broadcast(cent))
-        .withColumn("_cs", cosine_sim(F.col(q_vec_col), F.col("cent_vec")))
-        .withColumn("_rn", F.row_number().over(w_probe))
-        .filter(F.col("_rn") <= nprobe)
-        .select(q_id_col, q_vec_col, "cent_id")
-    )
-    scored = (
-        probe.join(assign, "cent_id")
-        .filter(F.col(id_col) != F.col(q_id_col))
-        .select(
-            F.col(q_id_col),
-            F.col(id_col).alias("neighbor_id"),
-            cosine_sim(F.col(vec_col), F.col(q_vec_col)).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy(q_id_col).orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    assign = _nearest_centroid(
+        corpus, cent, id_col, vec_col, "cent_vec", "cos", F.col(vec_col).alias("v")
+    ).select(id_col, F.col("_b.v").alias(vec_col), F.col("_b.c").alias("cent_id"))
+    probe = _topk(
+        queries.crossJoin(F.broadcast(cent)).withColumn(
+            "_cs", cosine_sim(F.col(q_vec_col), F.col("cent_vec"))
+        ),
+        q_id_col, nprobe, F.desc("_cs"), F.asc("cent_id"), col="_rn",
+    ).select(q_id_col, q_vec_col, "cent_id")
+    cand = probe.join(assign, "cent_id").filter(F.col(id_col) != F.col(q_id_col))
+    return _cosine_rank(cand, k, id_col, vec_col, q_id_col, q_vec_col)
 
 
 _PRESAMPLE_OVERSHOOT = 16  # expected survivors = OVERSHOOT × sample_size
@@ -343,138 +596,48 @@ def train_ivfpq_model(
     Training runs entirely on the md5-smallest ``sample_size`` docs
     (``corpus_hint`` enables the bit-identical map-side prefilter —
     ``_md5_presample``): one single-group k-means over full vectors for
-    the coarse centroids,
-    then an in-plan assignment of the SAME sample to those centroids, then
-    one k-means per sub-space over the sample residuals. Iterative ⇒ not
-    SQL-expressible; contracts are pytest-verified (capture + determinism).
+    the coarse centroids, then the SAME sample assigned to those centroids
+    through the build's own ``_ivfpq_assign``, then one k-means per
+    sub-space over the sample residuals. Iterative ⇒ not SQL-expressible;
+    contracts are pytest-verified (capture + determinism).
 
     Returns (centroids: (cent_id, cent_vec), codebook: (m, code, center)).
     Trained centroids are synthetic points (cent_id = 1..K), so
     ``ivfpq_build`` skips its centroid-doc codebook exclusion for them.
     """
-    if dim % m:
-        raise ValueError("dim must divide into m sub-spaces")
-    sub = dim // m
-    md5_id = F.md5(F.col(id_col).cast("string"))
-    keyed = corpus.select(
-        md5_id.alias("_ord"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
-    )
-    samp = _md5_presample(keyed, F.col("_ord"), sample_size, corpus_hint)
+    sub = _sub_dim(dim, m)
+    samp = _training_sample(corpus, id_col, vec_col, sample_size, corpus_hint)
     samp = samp.localCheckpoint(eager=True)  # two consumers: centroid fit + residuals
-
-    def fit_cents(pdf):
-        import pandas as pd
-
-        from ..functions.kmeans import kmeans_fit
-
-        pdf = pdf.sort_values("_ord")
-        X = np.array(pdf["_v"].tolist(), dtype=np.float64)
-        C = kmeans_fit(X, n_centroids, iters, seed)
-        return pd.DataFrame(
-            {
-                "cent_id": np.arange(1, len(C) + 1),
-                "cent_vec": [[float(x) for x in c] for c in C],
-            }
-        )
-
     cents = (
-        samp.withColumn("_g", F.lit(0))
-        .groupBy("_g")
-        .applyInPandas(fit_cents, "cent_id long, cent_vec array<double>")
+        _fit_kmeans_groups(
+            samp.select("_ord", F.lit(0).alias("m"), F.col("_v").alias("_vs")),
+            n_centroids, iters, seed,
+        )
+        .select(F.col("code").cast("long").alias("cent_id"), F.col("center").alias("cent_vec"))
         .localCheckpoint(eager=True)
     )
-    # assign the sample to the trained centroids (in-plan) → residuals
-    w_assign = Window.partitionBy("_ord").orderBy("_cd", "cent_id")
-    residuals = (
-        samp.crossJoin(F.broadcast(cents))
-        .withColumn("_cd", F.round(_sq_l2(F.col("_v"), F.col("cent_vec")), 6))
-        .withColumn("_rn", F.row_number().over(w_assign))
-        .filter(F.col("_rn") == 1)
-        .select(
-            "_ord", F.zip_with(F.col("_v"), F.col("cent_vec"), lambda x, y: x - y).alias("_r")
-        )
+    # the build's own assignment, keyed on the md5 order: same rounding and
+    # (dist, cent_id) tiebreak as every indexed vector
+    residuals = _ivfpq_assign(
+        samp, cents.select("cent_id", F.col("cent_vec").alias("_cv")), "_ord"
     )
-    ms = F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("m")
-    rows = residuals.select("_ord", "_r", ms).select(
-        "_ord", "m", F.slice(F.col("_r"), F.col("m") * sub + 1, sub).alias("_vs")
-    )
-
-    def fit_cb(pdf):
-        import pandas as pd
-
-        from ..functions.kmeans import kmeans_fit
-
-        pdf = pdf.sort_values("_ord")
-        X = np.array(pdf["_vs"].tolist(), dtype=np.float64)
-        mm = int(pdf["m"].iloc[0])
-        C = kmeans_fit(X, n_codes, iters, seed * 1000 + mm)
-        return pd.DataFrame(
-            {
-                "m": mm,
-                "code": np.arange(1, len(C) + 1),
-                "center": [[float(x) for x in c] for c in C],
-            }
-        )
-
-    codebook = rows.groupBy("m").applyInPandas(fit_cb, "m int, code int, center array<double>")
-    return cents, codebook
+    rows = _subvectors(residuals, ["_ord"], "_r", m, sub, "_vs")
+    return cents, _fit_kmeans_groups(rows, n_codes, iters, seed * 1000)
 
 
 def _ivfpq_assign(corpus_d: DataFrame, cent: DataFrame, id_col: str) -> DataFrame:
-    """(id, cent_id, residual) — nearest-centroid assignment, ONE shared
-    definition for the build and append paths (an append that re-derived
-    its own assignment could drift from the build's rounding/tiebreak and
+    """(id, cent_id, _r residual) — nearest-centroid assignment by
+    round(squared-L2, 6) with a cent_id tiebreak, ONE shared definition for
+    the trainer, the build and the append (an append that re-derived its
+    own assignment could drift from the build's rounding/tiebreak and
     silently place the same vector in a different cell)."""
-    # argmin as a map-side-combinable MIN over struct(dist, cent_id, cv, v)
-    # — (dist, cent_id) unique per group, trailing payloads never compared;
-    # partial aggregation replaces the per-vector shuffle+sort window
-    return (
-        corpus_d.crossJoin(F.broadcast(cent))
-        .withColumn("_cd", F.round(_sq_l2(F.col("_v"), F.col("_cv")), 6))
-        .groupBy(id_col)
-        .agg(
-            F.min(
-                F.struct(
-                    F.col("_cd").alias("d"),
-                    F.col("cent_id").alias("c"),
-                    F.col("_cv").alias("cv"),
-                    F.col("_v").alias("v"),
-                )
-            ).alias("_b")
-        )
-        .select(
-            id_col,
-            F.col("_b.c").alias("cent_id"),
-            F.zip_with(F.col("_b.v"), F.col("_b.cv"), lambda x, y: x - y).alias("_r"),
-        )
-    )
-
-
-def _ivfpq_encode(assign: DataFrame, cbm: DataFrame, m: int, sub: int, id_col: str) -> DataFrame:
-    """(id, cent_id, m codes packed in m-order) — residual sub-vectors →
-    nearest code; shared by build and append (same rounding, same
-    (dist, code) tiebreak)."""
-    ms = F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("m")
-    return (
-        assign.select(id_col, "cent_id", F.col("_r").alias("_rv"), ms)
-        .select(
-            id_col, "cent_id", "m",
-            F.slice(F.col("_rv"), F.col("m") * sub + 1, sub).alias("_vs"),
-        )
-        .join(F.broadcast(cbm), "m")
-        .withColumn("dist", F.round(_sq_l2(F.col("_vs"), F.col("_cs")), 6))
-        # per-(id, m) argmin as min(struct(dist, code)) — map-side partial
-        # aggregation over the ×n_codes scored rows, no window sort
-        .groupBy(id_col, "cent_id", "m")
-        .agg(F.min(F.struct("dist", "code")).alias("_mc"))
-        .select(id_col, "cent_id", "m", F.col("_mc.code").alias("code"))
-        .groupBy(id_col, "cent_id")
-        .agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("m", "code"))), lambda s: s["code"]
-            ).alias("_codes")
-        )
+    return _nearest_centroid(
+        corpus_d, cent, id_col, "_v", "_cv", "l2",
+        F.col("_cv").alias("cv"), F.col("_v").alias("v"),
+    ).select(
+        id_col,
+        F.col("_b.c").alias("cent_id"),
+        _residual(F.col("_b.v"), F.col("_b.cv")).alias("_r"),
     )
 
 
@@ -502,66 +665,37 @@ def ivfpq_build(
     ``train_ivfpq_model`` — zero plan change; defaults stay the
     deterministic md5-sample model (the SQL-oracle-checkable one).
     """
-    if dim % m:
-        raise ValueError("dim must divide into m sub-spaces")
-    sub = dim // m
-    dbl = lambda c: F.transform(c, lambda x: x.cast("double"))  # noqa: E731
-    corpus_d = corpus.select(id_col, dbl(F.col(vec_col)).alias("_v"))
-    md5_id = F.md5(F.col(id_col).cast("string"))
+    sub = _sub_dim(dim, m)
+    corpus_d = corpus.select(id_col, _dbl(F.col(vec_col)).alias("_v"))
     sampled_centroids = centroids is None
     if sampled_centroids:
-        cent = (
-            corpus_d.orderBy(md5_id)
-            .limit(n_centroids)
-            .select(F.col(id_col).alias("cent_id"), F.col("_v").alias("_cv"))
-            .localCheckpoint(eager=True)  # ≤ n_centroids rows, two consumers
+        cent = _md5_first(corpus_d, id_col, n_centroids).select(
+            F.col(id_col).alias("cent_id"), F.col("_v").alias("_cv")
         )
     else:
-        cent = centroids.select(
-            "cent_id", F.col("cent_vec").alias("_cv")
-        ).localCheckpoint(eager=True)
+        cent = centroids.select("cent_id", F.col("cent_vec").alias("_cv"))
+    cent = cent.localCheckpoint(eager=True)  # ≤ n_centroids rows, two consumers
     # assignment + residuals: one corpus pass, broadcast argmin
     assign = _ivfpq_assign(corpus_d, cent, id_col).localCheckpoint(
         eager=True  # residuals feed codebook + encoding
     )
-    ms = F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("m")
-
-    def subvec(col):
-        return F.slice(col, F.col("m") * sub + 1, sub)
-
-    if codebook is not None:
-        cbm = codebook.select(
-            "code", "m", F.col("center").alias("_cs")
-        ).localCheckpoint(eager=True)
-        n_codes = _validate_codebook(cbm, m, "ivfpq_build")
-    else:
-        # shared residual codebook (sample; train_ivfpq_model trains it).
-        # With SAMPLED centroids, centroid docs are excluded: each is its
-        # own nearest centroid, so its residual is the ZERO vector — and
-        # the smallest-md5 docs are exactly the centroid picks (same
-        # ordering), which would collapse the whole codebook to zeros and
-        # every doc to one code. Trained centroids are synthetic points
-        # (cent_id 1..K, no doc is its own centroid), so no exclusion.
-        cb_src = assign
-        if sampled_centroids:
-            cb_src = assign.join(
-                F.broadcast(cent.select(F.col("cent_id").alias(id_col))), id_col, "left_anti"
-            )
-        cb = (
-            cb_src.orderBy(md5_id)
-            .limit(n_codes)
-            .withColumn("code", F.row_number().over(Window.orderBy(md5_id)))
-            .localCheckpoint(eager=True)
+    # shared residual codebook (sample; train_ivfpq_model trains it).
+    # With SAMPLED centroids, centroid docs are excluded: each is its own
+    # nearest centroid, so its residual is the ZERO vector — and the
+    # smallest-md5 docs are exactly the centroid picks (same ordering),
+    # which would collapse the whole codebook to zeros and every doc to one
+    # code. Trained centroids are synthetic points (cent_id 1..K, no doc is
+    # its own centroid), so no exclusion.
+    cb_src = assign
+    if sampled_centroids:
+        cb_src = assign.join(
+            F.broadcast(cent.select(F.col("cent_id").alias(id_col))), id_col, "left_anti"
         )
-        n_codes = cb.count()  # degrade gracefully when the corpus is tiny
-        cbm = cb.select("code", F.col("_r").alias("_cr"), ms).select(
-            "code", "m", subvec(F.col("_cr")).alias("_cs")
-        )
-    codes = _ivfpq_encode(assign, cbm, m, sub, id_col)
+    cbm, n_codes = _pq_codebook(codebook, cb_src, id_col, "_r", n_codes, m, sub, "ivfpq_build")
     return {
         "cent": cent,
         "cbm": cbm,
-        "codes": codes,
+        "codes": _pq_encode(assign, [id_col, "cent_id"], "_r", cbm, m, sub),
         "corpus_d": corpus_d,
         "m": m,
         "n_codes": n_codes,
@@ -572,40 +706,31 @@ def ivfpq_build(
 
 def save_ivfpq_index(index: dict, path: str) -> None:
     """Persist the index state (centroids, codebook, inverted lists) behind
-    the repo's marker-commit protocol: all three tables land, then one
+    the repo's marker-commit protocol (``plans.publish.save_index_store``,
+    shared with ``save_bm25_index``): all three tables land, then one
     ``_committed/index`` marker makes them visible — a torn write is
     invisible to ``load_ivfpq_index``. The codes table is written
     partitioned by ``cent_id`` so a loaded index's ADC join can prune at
     the directory level (and a bucketed write would make it
     exchange-free).
 
-    CREATE-ONLY: refuses a path holding a committed index. Deleting the
-    old index before a long rebuild would destroy the only good copy and
-    fail every concurrent reader mid-scan; refresh by saving to a NEW
-    versioned path and flipping the pointer your jobs read (or delete the
-    old path explicitly once its readers drain)."""
-    from ..plans.publish import _fs, commit_marker, committed_publish_ids
+    CREATE-ONLY: refuses a path holding ANY committed marker — a committed
+    index, or another store whose data the torn-attempt cleanup must never
+    delete. Refresh by saving to a NEW versioned path and flipping the
+    pointer your jobs read (or delete the old path explicitly once its
+    readers drain)."""
+    from ..plans.publish import save_index_store
 
-    spark = index["codes"].sparkSession
-    if "index" in committed_publish_ids(spark, path):
-        raise FileExistsError(
-            f"a committed IVF×PQ index already exists at {path} — save to a "
-            "new path (destructive-first overwrite would destroy the only "
-            "good copy mid-rebuild and break concurrent readers)"
-        )
-    fs, jpath = _fs(spark, path)
-    if fs.exists(jpath):  # torn previous attempt (no marker) — safe to clear
-        fs.delete(jpath, True)
-    index["cent"].write.parquet(f"{path}/cent")
-    index["cbm"].write.parquet(f"{path}/cbm")
-    index["codes"].write.partitionBy("cent_id").parquet(f"{path}/codes")
-    import json as _json
-
-    meta = {k: index[k] for k in ("m", "n_codes", "sub", "id_col")}
-    out = fs.create(_fs(spark, f"{path}/meta.json")[1], True)
-    out.write(bytearray(_json.dumps(meta).encode()))
-    out.close()
-    commit_marker(spark, path, "index")
+    save_index_store(
+        index["codes"].sparkSession,
+        path,
+        {
+            "cent": index["cent"].write,
+            "cbm": index["cbm"].write,
+            "codes": index["codes"].write.partitionBy("cent_id"),
+        },
+        {k: index[k] for k in ("m", "n_codes", "sub", "id_col")},
+    )
 
 
 def append_ivfpq_index(
@@ -619,8 +744,8 @@ def append_ivfpq_index(
     10^12-doc deployment runs per crawl snapshot. The model (centroids +
     codebook) is IMMUTABLE post-build: new vectors pay only the
     encode-side cost (one assignment pass against the broadcast centroids,
-    one ADC encode against the broadcast codebook — the same shared
-    ``_ivfpq_assign``/``_ivfpq_encode`` definitions the build uses, so an
+    one PQ encode against the broadcast codebook — the same shared
+    ``_ivfpq_assign``/``_pq_encode`` definitions the build uses, so an
     appended vector gets bit-identical codes to a rebuilt one), written as
     a marker-committed snapshot ``codes_snap/<id>`` partitioned by
     ``cent_id`` — the dedup-index protocol: a torn append is invisible to
@@ -635,14 +760,14 @@ def append_ivfpq_index(
     from already-indexed ids (same as the dedup index's re-crawl rule)."""
     import uuid as _uuid
 
-    from ..plans.publish import _fs, commit_marker
+    from ..plans.publish import commit_marker
 
     index = load_ivfpq_index(spark, path)
     snap = snapshot_id or "s" + _uuid.uuid4().hex[:12]
-    dbl = lambda c: F.transform(c, lambda x: x.cast("double"))  # noqa: E731
-    corpus_d = corpus.select(index["id_col"], dbl(F.col(vec_col)).alias("_v"))
-    assign = _ivfpq_assign(corpus_d, index["cent"], index["id_col"])
-    codes = _ivfpq_encode(assign, index["cbm"], index["m"], index["sub"], index["id_col"])
+    id_col = index["id_col"]
+    corpus_d = corpus.select(id_col, _dbl(F.col(vec_col)).alias("_v"))
+    assign = _ivfpq_assign(corpus_d, index["cent"], id_col)
+    codes = _pq_encode(assign, [id_col, "cent_id"], "_r", index["cbm"], index["m"], index["sub"])
     codes.write.mode("overwrite").partitionBy("cent_id").parquet(
         f"{path}/codes_snap/{snap}"
     )
@@ -659,22 +784,9 @@ def load_ivfpq_index(spark: SparkSession, path: str, corpus: DataFrame | None = 
     must cover appended snapshots too when given). The codes table is the
     base build UNION every committed ``append_ivfpq_index`` snapshot —
     uncommitted (torn) appends are invisible."""
-    import json as _json
+    from ..plans.publish import load_index_store
 
-    from ..plans.publish import _fs, committed_publish_ids
-
-    markers = committed_publish_ids(spark, path)
-    if "index" not in markers:
-        raise FileNotFoundError(
-            f"no committed IVF×PQ index under {path} (save_ivfpq_index first; "
-            "a torn save is invisible by design)"
-        )
-    fs, jpath = _fs(spark, f"{path}/meta.json")
-    stream = fs.open(jpath)
-    try:
-        meta = _json.loads(bytes(stream.readAllBytes()).decode())
-    finally:
-        stream.close()
+    meta, markers = load_index_store(spark, path)
     codes = spark.read.parquet(f"{path}/codes")
     for mname in sorted(m for m in markers if m.startswith("snap-")):
         codes = codes.unionByName(
@@ -694,10 +806,7 @@ def load_ivfpq_index(spark: SparkSession, path: str, corpus: DataFrame | None = 
             f"match the stored codebook at {path}"
         )
     if corpus is not None:
-        index["corpus_d"] = corpus.select(
-            meta["id_col"],
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
-        )
+        index["corpus_d"] = corpus.select(meta["id_col"], _dbl(F.col(vec_col)).alias("_v"))
     return index
 
 
@@ -715,90 +824,28 @@ def ivfpq_query(
     of the probed cells — the cell-restricted join on ``cent_id`` is the
     pruning. ``rerank=R`` fetches R true vectors per query for exact
     re-ranking. Cost is probe-bounded: nothing here scans the corpus."""
-    cent, cbm, codes = index["cent"], index["cbm"], index["codes"]
-    m, n_codes, sub, id_col = index["m"], index["n_codes"], index["sub"], index["id_col"]
-    dbl = lambda c: F.transform(c, lambda x: x.cast("double"))  # noqa: E731
-    ms = F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("m")
-
-    def subvec(col):
-        return F.slice(col, F.col("m") * sub + 1, sub)
-
-    # probe: nprobe nearest cells per query, with per-cell query residuals
-    qd = queries.select(q_id_col, dbl(F.col(q_vec_col)).alias("_q"))
-    w_probe = Window.partitionBy(q_id_col).orderBy("_cd", "cent_id")
-    probe = (
-        qd.crossJoin(F.broadcast(cent))
-        .withColumn("_cd", F.round(_sq_l2(F.col("_q"), F.col("_cv")), 6))
-        .withColumn("_rn", F.row_number().over(w_probe))
-        .filter(F.col("_rn") <= nprobe)
-        .select(
-            q_id_col,
-            "cent_id",
-            F.zip_with(F.col("_q"), F.col("_cv"), lambda x, y: x - y).alias("_qr"),
-        )
-    )
-    # per-(query, cell) ADC lookup table, packed in (m, code) order
-    qtab = (
-        probe.select(q_id_col, "cent_id", F.col("_qr").alias("_qrv"), ms)
-        .select(q_id_col, "cent_id", "m", subvec(F.col("_qrv")).alias("_qs"))
-        .join(F.broadcast(cbm), "m")
-        .withColumn("dist", F.round(_sq_l2(F.col("_qs"), F.col("_cs")), 6))
-        .groupBy(q_id_col, "cent_id")
-        .agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("m", "code", "dist"))),
-                lambda s: s["dist"],
-            ).alias("_qd")
-        )
-    )
-    # cell-restricted ADC: the join key IS the pruning — a query only meets
-    # the codes of its probed cells (contrast pq_topk's full crossJoin)
-    adc = (
-        codes.join(F.broadcast(qtab), "cent_id")
-        .filter(F.col(id_col) != F.col(q_id_col))
-        .select(
-            q_id_col,
-            F.col(id_col).alias("neighbor_id"),
-            F.round(
-                F.aggregate(
-                    F.sequence(F.lit(0), F.lit(m - 1)),
-                    F.lit(0.0),
-                    lambda acc, i: acc
-                    + F.element_at(
-                        F.col("_qd"),
-                        (i * n_codes + F.element_at(F.col("_codes"), i + 1)).cast("int"),
-                    ),
-                ),
-                6,
-            ).alias("approx_dist"),
-        )
-    )
-    w = Window.partitionBy(q_id_col).orderBy(F.asc("approx_dist"), F.asc("neighbor_id"))
-    if not rerank:
-        return adc.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-    if index.get("corpus_d") is None:
+    if rerank and index.get("corpus_d") is None:
         raise ValueError(
             "rerank>0 needs the true vectors: pass corpus= to load_ivfpq_index "
             "(a loaded index carries only centroids/codebook/codes)"
         )
-    shortlist = (
-        adc.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") <= rerank).drop("_rn")
+    id_col = index["id_col"]
+    # probe: nprobe nearest cells per query, with per-cell query residuals
+    qd = queries.select(q_id_col, _dbl(F.col(q_vec_col)).alias("_q"))
+    probe = _topk(
+        qd.crossJoin(F.broadcast(index["cent"])).withColumn(
+            "_cd", F.round(_sq_l2(F.col("_q"), F.col("_cv")), 6)
+        ),
+        q_id_col, nprobe, "_cd", "cent_id", col="_rn",
+    ).select(q_id_col, "cent_id", _residual(F.col("_q"), F.col("_cv")).alias("_qr"))
+    qtab = _query_table(
+        probe, [q_id_col, "cent_id"], "_qr", index["cbm"], index["m"], index["sub"]
     )
-    vecs = index["corpus_d"].select(
-        F.col(id_col).alias("neighbor_id"), F.col("_v").alias("_nv")
-    )
-    # broadcast the R×Q shortlist (small by construction) so the corpus
-    # vector fetch is a map-side semi-join — never a corpus shuffle
-    exact = (
-        vecs.join(F.broadcast(shortlist), "neighbor_id")
-        .join(F.broadcast(qd), q_id_col)
-        .withColumn("exact_dist", F.round(_sq_l2(F.col("_nv"), F.col("_q")), 6))
-    )
-    w2 = Window.partitionBy(q_id_col).orderBy(F.asc("exact_dist"), F.asc("neighbor_id"))
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(q_id_col, "neighbor_id", "approx_dist", "exact_dist", "rank")
+    # cell-restricted ADC: the join key IS the pruning — a query only meets
+    # the codes of its probed cells (contrast pq_topk's full crossJoin)
+    return _adc_search(
+        index["codes"].join(F.broadcast(qtab), "cent_id"), qd, index["corpus_d"],
+        id_col, q_id_col, index["m"], index["n_codes"], k, rerank,
     )
 
 
@@ -856,14 +903,6 @@ def ivfpq_topk(
     return ivfpq_query(index, queries, nprobe, k, rerank, q_id_col, q_vec_col)
 
 
-def _sq_l2(a, b):
-    """Squared-L2 between two equal-length double arrays — elementwise
-    (x−y)² then a LEFT fold, the IEEE-identical form a SQL oracle must use
-    (same addends, same order → bit-identical sums)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)), F.lit(0.0), lambda acc, v: acc + v
-    )
-
 
 def train_pq_codebook(
     corpus: DataFrame,
@@ -902,38 +941,11 @@ def train_pq_codebook(
     remainder instead of every corpus row. The fit is m tiny single-group
     fits; the model is m·n_codes rows — broadcast-size by construction.
     """
-    if dim % m:
-        raise ValueError("dim must divide into m sub-spaces")
-    sub = dim // m
-    md5_id = F.md5(F.col(id_col).cast("string"))
-    keyed = corpus.select(
-        md5_id.alias("_ord"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
+    sub = _sub_dim(dim, m)
+    samp = _training_sample(corpus, id_col, vec_col, sample_size, corpus_hint)
+    return _fit_kmeans_groups(
+        _subvectors(samp, ["_ord"], "_v", m, sub, "_vs"), n_codes, iters, seed * 1000
     )
-    samp = _md5_presample(keyed, F.col("_ord"), sample_size, corpus_hint)
-    ms = F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("m")
-    rows = samp.select("_ord", "_v", ms).select(
-        "_ord", "m", F.slice(F.col("_v"), F.col("m") * sub + 1, sub).alias("_vs")
-    )
-
-    def fit(pdf):
-        import pandas as pd
-
-        from ..functions.kmeans import kmeans_fit
-
-        pdf = pdf.sort_values("_ord")
-        X = np.array(pdf["_vs"].tolist(), dtype=np.float64)
-        mm = int(pdf["m"].iloc[0])
-        C = kmeans_fit(X, n_codes, iters, seed * 1000 + mm)
-        return pd.DataFrame(
-            {
-                "m": mm,
-                "code": np.arange(1, len(C) + 1),
-                "center": [[float(x) for x in c] for c in C],
-            }
-        )
-
-    return rows.groupBy("m").applyInPandas(fit, "m int, code int, center array<double>")
 
 
 def pq_topk(
@@ -965,7 +977,7 @@ def pq_topk(
     float sum through an order-free aggregate.
 
     Scale shape: encoding is corpus × (m·n_codes) map-side rows against a
-    broadcast codebook — one pass, one argmin window keyed (vec, m);
+    broadcast codebook — one pass, one min(struct) argmin keyed (vec, m);
     persisted codes are ``m`` small ints per doc. Query time touches the
     corpus only through the codes table: the distance tables (queries ×
     m·n_codes) broadcast, and ranking is the standard per-query window.
@@ -986,124 +998,14 @@ def pq_topk(
     double internally so float-array inputs (the parquet embeddings are
     FLOAT[]) get the same IEEE math the oracle uses.
     """
-    if dim % m:
-        raise ValueError("dim must divide into m sub-spaces")
-    sub = dim // m
-    ms = F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("m")
-
-    def subvec(col):
-        return F.transform(
-            F.slice(col, F.col("m") * sub + 1, sub), lambda x: x.cast("double")
-        )
-
-    if codebook is not None:
-        # trained model (train_pq_codebook) — same (code, m, _cs) shape, so
-        # everything downstream is unchanged
-        cbm = codebook.select(
-            "code", "m", F.col("center").alias("_cs")
-        ).localCheckpoint(eager=True)
-        n_codes = _validate_codebook(cbm, m, "pq_topk")
-    else:
-        md5_order = F.md5(F.col(id_col).cast("string"))
-        cb = (
-            corpus.select(id_col, vec_col)
-            .orderBy(md5_order)
-            .limit(n_codes)
-            .withColumn("code", F.row_number().over(Window.orderBy(md5_order)))
-            .localCheckpoint(eager=True)  # ≤ n_codes rows; also fixes the count
-        )
-        # a corpus smaller than n_codes yields a short codebook — the ADC
-        # position arithmetic must use the ACTUAL size or lookups land in the
-        # wrong (or out-of-range) slots; degrade gracefully like ivf_cosine_topk
-        n_codes = cb.count()
-        cbm = cb.select("code", F.col(vec_col).alias("_cv"), ms).select(
-            "code", "m", subvec(F.col("_cv")).alias("_cs")
-        )
-
-    def encode(df: DataFrame, key: str, vcol: str, keep_dist: bool) -> DataFrame:
-        rows = df.select(key, F.col(vcol).alias("_v"), ms).select(
-            key, "m", subvec(F.col("_v")).alias("_vs")
-        )
-        scored = rows.join(F.broadcast(cbm), "m").withColumn(
-            "dist", F.round(_sq_l2(F.col("_vs"), F.col("_cs")), 6)
-        )
-        if keep_dist:
-            return scored.select(key, "m", "code", "dist")
-        # per-(key, m) argmin as min(struct(dist, code)): partial (map-side)
-        # aggregation collapses the ×n_codes scored rows before the
-        # exchange — no shuffle+sort window over the full scored frame
-        return (
-            scored.groupBy(key, "m")
-            .agg(F.min(F.struct("dist", "code")).alias("_mc"))
-            .select(key, "m", F.col("_mc.code").alias("code"))
-        )
-
-    # corpus → m codes per vector, packed in m-order
-    codes = (
-        encode(corpus, id_col, vec_col, keep_dist=False)
-        .groupBy(id_col)
-        .agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("m", "code"))), lambda s: s["code"]
-            ).alias("_codes")
-        )
-    )
-    # queries → full (m, code) distance table, packed as one lookup array
-    # in (m, code) order: position = m*n_codes + code (1-based codes)
-    qtab = (
-        encode(queries, q_id_col, q_vec_col, keep_dist=True)
-        .groupBy(q_id_col)
-        .agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("m", "code", "dist"))),
-                lambda s: s["dist"],
-            ).alias("_qd")
-        )
-    )
-    adc = (
-        codes.crossJoin(F.broadcast(qtab))
-        .filter(F.col(id_col) != F.col(q_id_col))
-        .select(
-            q_id_col,
-            F.col(id_col).alias("neighbor_id"),
-            F.round(
-                F.aggregate(
-                    F.sequence(F.lit(0), F.lit(m - 1)),
-                    F.lit(0.0),
-                    lambda acc, i: acc
-                    + F.element_at(
-                        F.col("_qd"), (i * n_codes + F.element_at(F.col("_codes"), i + 1)).cast("int")
-                    ),
-                ),
-                6,
-            ).alias("approx_dist"),
-        )
-    )
-    w = Window.partitionBy(q_id_col).orderBy(F.asc("approx_dist"), F.asc("neighbor_id"))
-    if not rerank:
-        return adc.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-    shortlist = adc.withColumn("_rn", F.row_number().over(w)).filter(
-        F.col("_rn") <= rerank
-    ).drop("_rn")
-    vecs = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_nv"),
-    )
-    qv = queries.select(
-        q_id_col, F.transform(F.col(q_vec_col), lambda x: x.cast("double")).alias("_qv")
-    )
-    # broadcast the R×Q shortlist so the true-vector fetch is a map-side
-    # semi-join over the corpus — never a corpus shuffle
-    exact = (
-        vecs.join(F.broadcast(shortlist), "neighbor_id")
-        .join(F.broadcast(qv), q_id_col)
-        .withColumn("exact_dist", F.round(_sq_l2(F.col("_nv"), F.col("_qv")), 6))
-    )
-    w2 = Window.partitionBy(q_id_col).orderBy(F.asc("exact_dist"), F.asc("neighbor_id"))
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(q_id_col, "neighbor_id", "approx_dist", "exact_dist", "rank")
+    sub = _sub_dim(dim, m)
+    corpus_d = corpus.select(id_col, _dbl(F.col(vec_col)).alias("_v"))
+    qd = queries.select(q_id_col, _dbl(F.col(q_vec_col)).alias("_q"))
+    cbm, n_codes = _pq_codebook(codebook, corpus_d, id_col, "_v", n_codes, m, sub, "pq_topk")
+    codes = _pq_encode(corpus_d, [id_col], "_v", cbm, m, sub)
+    qtab = _query_table(qd, [q_id_col], "_q", cbm, m, sub)
+    return _adc_search(
+        codes.crossJoin(F.broadcast(qtab)), qd, corpus_d, id_col, q_id_col, m, n_codes, k, rerank
     )
 
 
@@ -1142,30 +1044,13 @@ def semdedup(
             raise ValueError(f"semdedup: centroids frame missing {sorted(missing)}")
         cent = centroids.select("cent_id", "cent_vec")
     else:
-        cent = (
-            corpus.select(
-                F.col(id_col).alias("cent_id"), F.col(vec_col).alias("cent_vec")
-            )
-            .orderBy(F.md5(F.col(id_col).cast("string")))
-            .limit(n_centroids)
+        cent = _md5_first(corpus, id_col, n_centroids).select(
+            F.col(id_col).alias("cent_id"), F.col(vec_col).alias("cent_vec")
         )
-    # argmax assignment as a map-side-combinable MIN over struct(-cos,
-    # cent_id, v): negation of the rounded cosine is exact and (cos,
-    # cent_id) is unique per group, so this is the row_number window's
-    # argmax without the per-vector shuffle+sort.
     assign = (
-        corpus.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-        .crossJoin(F.broadcast(cent))
-        .withColumn("_cs", cosine_sim(F.col("_v"), F.col("cent_vec")))
-        .groupBy("_id")
-        .agg(
-            F.min(
-                F.struct(
-                    (-F.col("_cs")).alias("n"),
-                    F.col("cent_id").alias("c"),
-                    F.col("_v").alias("v"),
-                )
-            ).alias("_b")
+        _nearest_centroid(
+            corpus.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")),
+            cent, "_id", "_v", "cent_vec", "cos", F.col("_v").alias("v"),
         )
         # precompute each vector's norm ONCE here: the within-cell pair
         # scan below evaluates Σ|cell|² cosines, and recomputing the norm
@@ -1176,7 +1061,7 @@ def semdedup(
             "_id",
             F.col("_b.v").alias("_v"),
             F.col("_b.c").alias("cent_id"),
-            (-F.col("_b.n")).alias("cos_to_centroid"),
+            (-F.col("_b.d")).alias("cos_to_centroid"),
             _norm(F.col("_b.v")).alias("_nv"),
         )
         .localCheckpoint(eager=False)  # reused: pair scan + keep ranking

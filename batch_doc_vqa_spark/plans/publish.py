@@ -170,6 +170,61 @@ def commit_marker(spark: SparkSession, out_dir: str, run_id: str) -> None:
     fs.create(marker, True).close()
 
 
+def save_index_store(spark: SparkSession, path: str, writers: dict, meta: dict) -> None:
+    """Create-only save of a marker-committed index store — ONE definition
+    for ``save_bm25_index`` and ``save_ivfpq_index``: each ``writers`` entry
+    (name → DataFrameWriter) lands as ``{path}/<name>`` parquet, then
+    ``meta.json``, then one ``_committed/index`` marker makes the store
+    visible, so a torn save is invisible to ``load_index_store``.
+
+    Refuses a path holding ANY committed marker, not just ``index``: it may
+    hold another writer's marker-committed store, and the torn-attempt
+    cleanup below must never recursively delete committed data. Deleting an
+    old index before a long rebuild would also destroy the only good copy
+    and fail concurrent readers mid-scan; refresh by saving to a NEW
+    versioned path and flipping the pointer the jobs read."""
+    import json as _json
+
+    committed = committed_publish_ids(spark, path)
+    if committed:
+        raise FileExistsError(
+            f"committed data already exists at {path} (markers: "
+            f"{sorted(committed)}) — save to a new path (destructive-first "
+            "overwrite would destroy the only good copy mid-rebuild and "
+            "break concurrent readers)"
+        )
+    fs, jpath = _fs(spark, path)
+    if fs.exists(jpath):  # torn previous attempt (no marker) — safe to clear
+        fs.delete(jpath, True)
+    for name, writer in writers.items():
+        writer.parquet(f"{path}/{name}")
+    out = fs.create(_fs(spark, f"{path}/meta.json")[1], True)
+    out.write(bytearray(_json.dumps(meta).encode()))
+    out.close()
+    commit_marker(spark, path, "index")
+
+
+def load_index_store(spark: SparkSession, path: str) -> tuple[dict, list[str]]:
+    """(meta, committed marker ids) of a store written by
+    ``save_index_store``. Raises loudly when the ``index`` marker is missing
+    (a torn save is invisible by design)."""
+    import json as _json
+
+    markers = committed_publish_ids(spark, path)
+    if "index" not in markers:
+        raise FileNotFoundError(
+            f"no committed index under {path} (save it first; a torn save "
+            "is invisible by design)"
+        )
+    fs, jpath = _fs(spark, f"{path}/meta.json")
+    stream = fs.open(jpath)
+    try:
+        meta = _json.loads(bytes(stream.readAllBytes()).decode())
+    finally:
+        stream.close()
+    return meta, markers
+
+
 def _schema_versions(spark: SparkSession, out_dir: str, table: str) -> list[tuple[int, str]]:
     """Sorted (version, filename) of ``_schema/<table>.v<N>.json`` files."""
     fs, sdir = _fs(spark, f"{out_dir}/_schema")

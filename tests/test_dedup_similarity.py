@@ -687,6 +687,27 @@ def test_ivfpq_index_save_load_roundtrip(vectors, tmp_path):
     assert similarity.load_ivfpq_index(spark, path)["m"] == 8
 
 
+def test_save_ivfpq_index_refuses_foreign_committed_store(vectors, spark, tmp_path):
+    """A path committed under ANY marker id — here another writer's
+    published run — refuses the save, and the refusal must not delete the
+    foreign committed data (the torn-attempt cleanup is for unmarked paths
+    only)."""
+    import os
+
+    from batch_doc_vqa_spark.plans.publish import commit_marker
+
+    foreign = str(tmp_path / "foreign")
+    spark.createDataFrame([(1,)], "x long").write.parquet(
+        f"{foreign}/published/run_id=run1"
+    )
+    commit_marker(spark, foreign, "run1")
+    index = similarity.ivfpq_build(vectors, n_centroids=4, m=4, n_codes=4, dim=16)
+    with pytest.raises(FileExistsError, match="committed data"):
+        similarity.save_ivfpq_index(index, foreign)
+    assert os.path.exists(f"{foreign}/_committed/run1")
+    assert spark.read.parquet(f"{foreign}/published/run_id=run1").count() == 1
+
+
 def test_codebook_shape_validated_at_every_acceptance_point(vectors, spark):
     """ADVICE r5 (low): the ADC position arithmetic assumes every sub-space
     carries codes 1..n_codes contiguously with equal counts — a ragged or
@@ -935,3 +956,31 @@ def test_semdedup_accepts_trained_centroids(spark):
 
     with pytest.raises(ValueError, match="missing"):
         semdedup(df, centroids=cent.drop("cent_vec"))
+
+
+def test_zero_norm_centroid_fails_loudly_in_cosine_argmax(spark):
+    """A zero-norm centroid makes the shared cosine argmax divide by zero.
+    Under the engine's ANSI session (the Spark 4.1 default) that raises
+    DIVIDE_BY_ZERO in both ivf_cosine_topk and semdedup, so no NaN cosine
+    ever reaches the min(struct) ordering."""
+    from pyspark.errors import ArithmeticException
+
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    rows = [(0, [0.0, 0.0, 0.0, 0.0])] + [
+        (i, [float(i == j) + 0.1 for j in range(4)]) for i in range(1, 4)
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    q = df.filter(F.col("vec_id") == 1).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
+    )
+    # n_centroids covers the whole corpus, so the zero vector is a centroid
+    with pytest.raises(ArithmeticException, match="DIVIDE_BY_ZERO"):
+        similarity.ivf_cosine_topk(df, q, n_centroids=4, nprobe=2, k=2).collect()
+    cent = spark.createDataFrame(
+        [(1, [0.0, 0.0, 0.0, 0.0]), (2, [1.0, 0.0, 0.0, 0.0])],
+        "cent_id long, cent_vec array<double>",
+    )
+    with pytest.raises(ArithmeticException, match="DIVIDE_BY_ZERO"):
+        similarity.semdedup(
+            df.filter(F.col("vec_id") != 0), 0.9, centroids=cent
+        ).collect()
