@@ -2005,12 +2005,18 @@ def _emb(spark: SparkSession, sf_dir: str, parallel: bool = False) -> DataFrame:
     )
 
 
-def _q_ann_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _emb(spark, sf_dir, parallel=True)
-    queries = emb.filter(F.col("vec_id") % 50 == 0).select(
+def _ann_queries(emb: DataFrame) -> DataFrame:
+    """The ANN query batch: every 50th embedding, as (q_id, q_vec)."""
+    return emb.filter(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
-    return similarity.cosine_topk(emb, queries, k=5).select("q_id", "neighbor_id", "cosine", "rank")
+
+
+def _q_ann_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = _emb(spark, sf_dir, parallel=True)
+    return similarity.cosine_topk(emb, _ann_queries(emb), k=5).select(
+        "q_id", "neighbor_id", "cosine", "rank"
+    )
 
 
 _ANN_COSINE_TOPK_ORACLE = """
@@ -2030,10 +2036,7 @@ _ANN_COSINE_TOPK_ORACLE = """
 
 def _q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    return similarity.ivf_cosine_topk(emb, queries, n_centroids=16, nprobe=4, k=5).select(
+    return similarity.ivf_cosine_topk(emb, _ann_queries(emb), n_centroids=16, nprobe=4, k=5).select(
         "q_id", "neighbor_id", "cosine", "rank"
     )
 
@@ -2077,10 +2080,7 @@ def _q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     half): 16 sub-spaces × 16 deterministic sample centroids, 40-deep ADC
     shortlist, exact squared-L2 re-rank to top-5."""
     emb = _emb(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    return similarity.pq_topk(emb, queries, m=16, n_codes=16, k=5, rerank=40).select(
+    return similarity.pq_topk(emb, _ann_queries(emb), m=16, n_codes=16, k=5, rerank=40).select(
         "q_id", "neighbor_id", "approx_dist", "exact_dist", "rank"
     )
 
@@ -2173,14 +2173,11 @@ def _q_ann_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     from batch_doc_vqa_spark.sources.vectors_fixture import TRAIN_SAMPLE
 
     emb = _emb(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
     cbk = similarity.train_pq_codebook(
         _trained_fixture_df(spark), sample_size=TRAIN_SAMPLE, **_TRAINER_KW
     )
     return similarity.pq_topk(
-        emb, queries, m=16, n_codes=16, k=5, dim=64, rerank=40, codebook=cbk
+        emb, _ann_queries(emb), m=16, n_codes=16, k=5, dim=64, rerank=40, codebook=cbk
     ).select("q_id", "neighbor_id", "approx_dist", "exact_dist", "rank")
 
 
@@ -2191,9 +2188,6 @@ def _q_ann_ivfpq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     from batch_doc_vqa_spark.sources.vectors_fixture import TRAIN_SAMPLE
 
     emb = _emb(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
     cents, cbk = similarity.train_ivfpq_model(
         _trained_fixture_df(spark), n_centroids=16, sample_size=TRAIN_SAMPLE,
         **_TRAINER_KW,
@@ -2201,7 +2195,7 @@ def _q_ann_ivfpq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     index = similarity.ivfpq_build(
         emb, n_centroids=16, m=16, n_codes=16, dim=64, centroids=cents, codebook=cbk
     )
-    return similarity.ivfpq_query(index, queries, nprobe=4, k=5, rerank=40).select(
+    return similarity.ivfpq_query(index, _ann_queries(emb), nprobe=4, k=5, rerank=40).select(
         "q_id", "neighbor_id", "approx_dist", "exact_dist", "rank"
     )
 
@@ -2215,14 +2209,11 @@ def _q_ann_ivfpq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     emb = _emb(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
     index = similarity.ivfpq_build(emb, n_centroids=16, m=16, n_codes=16, dim=64)
     path = tempfile.mkdtemp(prefix="ivfpq_store_") + "/idx"
     similarity.save_ivfpq_index(index, path)
     loaded = similarity.load_ivfpq_index(spark, path, corpus=emb)
-    return similarity.ivfpq_query(loaded, queries, nprobe=4, k=5, rerank=40).select(
+    return similarity.ivfpq_query(loaded, _ann_queries(emb), nprobe=4, k=5, rerank=40).select(
         "q_id", "neighbor_id", "approx_dist", "exact_dist", "rank"
     )
 
@@ -2233,11 +2224,8 @@ def _q_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     shortlist, exact squared-L2 re-rank to top-5. The ADC join is keyed on
     cent_id — probe-bounded, never a per-query corpus scan."""
     emb = _emb(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
     return similarity.ivfpq_topk(
-        emb, queries, n_centroids=16, nprobe=4, m=16, n_codes=16, k=5, dim=64, rerank=40
+        emb, _ann_queries(emb), n_centroids=16, nprobe=4, m=16, n_codes=16, k=5, dim=64, rerank=40
     ).select("q_id", "neighbor_id", "approx_dist", "exact_dist", "rank")
 
 
@@ -2537,9 +2525,6 @@ def _q_ann_ivfpq_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     emb = _emb(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
     index = similarity.ivfpq_build(
         emb.filter(F.col("vec_id") % 2 == 0), n_centroids=16, m=16, n_codes=16, dim=64
     )
@@ -2549,7 +2534,7 @@ def _q_ann_ivfpq_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, path, emb.filter(F.col("vec_id") % 2 != 0), snapshot_id="e00000001"
     )
     loaded = similarity.load_ivfpq_index(spark, path, corpus=emb)
-    return similarity.ivfpq_query(loaded, queries, nprobe=4, k=5, rerank=40).select(
+    return similarity.ivfpq_query(loaded, _ann_queries(emb), nprobe=4, k=5, rerank=40).select(
         "q_id", "neighbor_id", "approx_dist", "exact_dist", "rank"
     )
 
@@ -2707,12 +2692,9 @@ def _q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings").select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("embedding")
     )
-    queries = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    return similarity.lsh_cosine_topk(emb, queries, dim=64, k=5, n_planes=6, n_tables=8).select(
-        "q_id", "neighbor_id", "cosine", "rank"
-    )
+    return similarity.lsh_cosine_topk(
+        emb, _ann_queries(emb), dim=64, k=5, n_planes=6, n_tables=8
+    ).select("q_id", "neighbor_id", "cosine", "rank")
 
 
 def _q_doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -12,7 +12,7 @@ Usage:
     SPARK_GRAFT_BENCH_REPS=3 controls reps (min is reported).
 
 Prints one JSON line per query:
-    {"query": name, "secs": [..], "min": s, "jobs": n, "stages": n}
+    {"query": name, "secs": [..], "min": s, "jobs_per_rep": [..]}
 """
 
 from __future__ import annotations
@@ -72,7 +72,7 @@ def main() -> None:
                     "query": name,
                     "secs": secs,
                     "min": min(secs),
-                    "jobs": jobs_per_rep[-1],
+                    "jobs_per_rep": jobs_per_rep,
                 }
             ),
             flush=True,

@@ -71,6 +71,14 @@ INTERESTING = [
     "bm25_topk",
     "shard_layout",
     "url_blocklist",
+    # vector-search tier: every caller of the shared quantizer primitives
+    "ann_ivf_topk",
+    "ann_lsh_topk",
+    "ann_pq_trained_topk",
+    "ann_ivfpq_trained_topk",
+    "ann_ivfpq_appended_topk",
+    "semdedup",
+    "embedding_dup_pairs_lsh",
 ]
 
 
