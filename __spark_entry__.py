@@ -35,6 +35,7 @@ from batch_doc_vqa_spark.operators import (
     textstats,
 )
 from batch_doc_vqa_spark.operators import sessions, ta_metrics
+from batch_doc_vqa_spark.plans.publish import _fs
 from batch_doc_vqa_spark.plans.skew import salted_host_stats, with_salted_partition
 from batch_doc_vqa_spark.sources import matching_fixture, probs_fixture, runs_fixture, ta_fixture
 from batch_doc_vqa_spark.sources.pages import pages_df, rows_for_sf
@@ -109,8 +110,9 @@ def _tp(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     aggregation) serializes onto one core regardless of cluster size. For
     the compute-heavy constructors a deterministic hash repartition on the
     primary key spreads that map work across the session's cores; the gate
-    compares the PLANNED split count (file size / maxPartitionBytes — no
-    Spark job) against session parallelism, so adequately split inputs
+    compares the PLANNED split count (data files and bytes /
+    maxPartitionBytes, from a filesystem listing — no Spark job) against
+    session parallelism, so adequately split inputs
     (any real multi-file table at scale) pay no extra exchange. Predicate
     pushdown still reaches the scan through RepartitionByExpression.
 
@@ -130,33 +132,27 @@ def _tp(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-_SCAN_SPLIT_CACHE: dict[tuple[str, int], int] = {}
-
-
 def _planned_scan_splits(spark: SparkSession, path: str) -> int:
-    """Spark's planned split count for a single parquet file: bytes over
-    maxPartitionBytes — computed from the file size directly (a
-    df.rdd.getNumPartitions() probe costs a full plan→RDD conversion,
-    ~0.3 s per table read). Cached per (path, maxPartitionBytes)."""
+    """Spark's planned split count for a parquet table, one file or a
+    directory of them: at least one split per data file, and bytes over
+    maxPartitionBytes — read from the filesystem the table lives on, as it
+    is now (a df.rdd.getNumPartitions() probe costs a full plan→RDD
+    conversion, ~0.3 s per table read). Names starting with ``_`` or ``.``
+    (``_SUCCESS``, checksums) are skipped as Spark's file index skips them;
+    a Hadoop content summary would count them, and a one-file Spark-written
+    directory would then read as two splits."""
     import math
-    import os
 
-    raw = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728").lower()
-    units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
-    s = raw[:-1] if raw.endswith("b") else raw
-    mpb = (
-        int(s[:-1]) * units[s[-1]] if s and s[-1] in units else int(s or "134217728")
-    )
-    ck = (path, mpb)
-    n = _SCAN_SPLIT_CACHE.get(ck)
-    if n is None:
-        try:
-            size = os.path.getsize(path)
-        except OSError:
-            size = 0
-        n = max(1, math.ceil(size / mpb))
-        _SCAN_SPLIT_CACHE[ck] = n
-    return n
+    mpb = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    fs, jpath = _fs(spark, path)
+    files = size = 0
+    it = fs.listFiles(jpath, True)
+    while it.hasNext():
+        st = it.next()
+        if not st.getPath().getName().startswith(("_", ".")):
+            files += 1
+            size += st.getLen()
+    return max(1, files, math.ceil(size / mpb))
 
 
 def _sf_of(sf_dir: str) -> float:

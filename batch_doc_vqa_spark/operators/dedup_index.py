@@ -31,9 +31,10 @@ absent); incremental commits refuse under the lease, and a racer that
 slips the probe-to-commit window is caught by compaction's post-swap
 marker verification, which rolls the compaction back (the racer always
 wins — a committed snapshot is never lost). Crashes are adjudicated by
-``recover_dedup_index``; disk for superseded snapshots is reclaimed by
-the separate ``vacuum_dedup_index`` step, never mid-swap (concurrent
-readers keep scanning old files safely).
+``plans.publish.recover_marker_store``; disk for superseded snapshots is
+reclaimed by the separate ``vacuum_dedup_index`` step, never mid-swap
+(concurrent readers keep scanning old files safely). Every one of these
+mechanics is the shared marker-store code in plans/publish.py.
 """
 
 from __future__ import annotations
@@ -43,7 +44,15 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.publish import _fs, read_maintenance_lease
+from ..plans.publish import (
+    _begin_maintenance,
+    _fs,
+    commit_run,
+    committed_publish_ids,
+    read_committed_table,
+    swap_marker_dir,
+    vacuum_store,
+)
 from .dedup import banded_rows, minhash_signatures
 
 INDEX_PARAMS = dict(n=3, num_hashes=64, bands=16, seed=7, base_hash="xxhash64")
@@ -52,64 +61,31 @@ _SIG_COLS = ["_id", "signature"]
 _BAND_COLS = ["_id", "band_idx", "band_hash"]
 
 
-def committed_snapshots(spark: SparkSession, path: str) -> list[str]:
-    from ..plans.publish import committed_publish_ids
-
-    return committed_publish_ids(spark, path)
-
-
-def _read_index_table(spark: SparkSession, path: str, table: str, cols: list[str]) -> DataFrame:
-    snaps = committed_snapshots(spark, path)
-    if not snaps:
-        raise FileNotFoundError(
-            f"no committed index snapshots under {path} (build_dedup_index first; "
-            "a torn snapshot write is invisible by design — if a compaction "
-            "crashed mid-swap, run recover_dedup_index)"
-        )
-    return (
-        spark.read.parquet(f"{path}/{table}")
-        .filter(F.col("snap").isin(snaps))
-        .select(*cols)
-    )
-
-
 def read_index_sigs(spark: SparkSession, path: str) -> DataFrame:
-    return _read_index_table(spark, path, "sigs", _SIG_COLS)
+    return read_committed_table(spark, path, "sigs", "snap").select(*_SIG_COLS)
 
 
 def read_index_bands(spark: SparkSession, path: str) -> DataFrame:
-    return _read_index_table(spark, path, "bands", _BAND_COLS)
+    return read_committed_table(spark, path, "bands", "snap").select(*_BAND_COLS)
 
 
 def _write_snapshot(
     spark: SparkSession, sigs: DataFrame, bands: DataFrame, path: str, snapshot_id: str
 ) -> None:
-    """Both halves into snap-scoped dirs (overwrite ⇒ idempotent retry for a
-    stable snapshot_id), then the single marker create = the commit point.
-
-    Refuses while a compaction lease is held: a snapshot committed during a
-    compaction window would not be in the rebuilt index (the lost-update
-    compaction used to allow silently). The check runs before the data
-    writes AND again right before the marker create — the remaining
-    probe-to-commit race is caught by compaction's post-swap verification,
-    which rolls the compaction back rather than lose this snapshot."""
-    from ..plans.publish import commit_marker
-
-    def _refuse_under_lease():
-        if read_maintenance_lease(spark, path) is not None:
-            raise CompactionInProgressError(
-                f"incremental index commit blocked: compaction in progress at "
-                f"{path} (lease held) — retry after it finishes, or run "
-                "recover_dedup_index if it crashed"
-            )
-
-    _refuse_under_lease()
-    sigs.select(*_SIG_COLS).write.mode("overwrite").parquet(f"{path}/sigs/snap={snapshot_id}")
-    bands.select(*_BAND_COLS).write.mode("overwrite").parquet(
-        f"{path}/bands/snap={snapshot_id}"
+    """Both halves into ``snap=``-scoped dirs, committed as one run by the
+    shared ``commit_run``: it refuses while a compaction lease is held (a
+    snapshot committed during a compaction window would not be in the
+    rebuilt index), before the data writes AND again right before the
+    marker create — the remaining probe-to-commit race is caught by
+    compaction's post-swap verification, which rolls the compaction back
+    rather than lose this snapshot."""
+    commit_run(
+        spark,
+        path,
+        snapshot_id,
+        {"sigs": sigs.select(*_SIG_COLS), "bands": bands.select(*_BAND_COLS)},
+        part_col="snap",
     )
-    _refuse_under_lease()
-    commit_marker(spark, path, snapshot_id)
 
 
 def build_dedup_index(
@@ -139,39 +115,6 @@ def build_dedup_index(
     _write_snapshot(spark, sigs, bands, path, snapshot_id)
 
 
-class ConcurrentSnapshotError(RuntimeError):
-    """A snapshot committed while a compaction was in flight. The racing
-    snapshot is PRESERVED (the compaction rolls back); re-run compaction
-    from a corpus state that includes it."""
-
-
-# one lease protocol for every marker-committed store (publish archive and
-# this index) — the machinery lives with the marker protocol in
-# plans/publish; this module adds only the index-specific error type
-class CompactionInProgressError(RuntimeError):
-    """A compaction lease is held (live compaction, or a crashed one that
-    needs ``recover_dedup_index``)."""
-
-
-def _acquire_lease(spark: SparkSession, path: str, payload: dict) -> None:
-    from ..plans.publish import MaintenanceInProgressError, acquire_maintenance_lease
-
-    try:
-        acquire_maintenance_lease(spark, path, payload)
-    except MaintenanceInProgressError as exc:
-        raise CompactionInProgressError(
-            f"compaction lease already held at {path}/_compact_lease — another "
-            "compaction is running, or a crashed one left state behind "
-            "(run recover_dedup_index first)"
-        ) from exc
-
-
-def _release_lease(spark: SparkSession, path: str) -> None:
-    from ..plans.publish import release_maintenance_lease
-
-    release_maintenance_lease(spark, path)
-
-
 def compact_dedup_index(
     spark: SparkSession,
     current_docs: DataFrame,
@@ -196,14 +139,15 @@ def compact_dedup_index(
       that slipped past the lease check between its probe and its commit)
       triggers a full ROLLBACK — the live marker dir is restored exactly as
       it was, the racing snapshot stays committed, and
-      ``ConcurrentSnapshotError`` tells the operator to re-run compaction.
+      ``ConcurrentCommitError`` tells the operator to re-run compaction
+      from a corpus state that includes the preserved snapshots.
       Compaction always loses the race; a committed snapshot is never lost.
 
     Swap protocol: the rebuilt snapshot's data dirs land first (no marker),
     then the LIVE ``_committed`` dir is replaced by one holding only the new
     snapshot's marker (rename-aside → rename-in, every rename checked). A
     crash at any point leaves the lease + aside dirs for
-    ``recover_dedup_index``, which either completes or rolls back — no
+    ``recover_marker_store``, which either completes or rolls back — no
     manual surgery, and no window ever shows old and new snapshots together
     (duplicate ids) or a half-written snapshot.
 
@@ -217,19 +161,7 @@ def compact_dedup_index(
     """
     p = {**INDEX_PARAMS, **params}
     snap = "compact-" + uuid.uuid4().hex[:12]
-    _acquire_lease(spark, path, {"distinguished": snap, "pre_markers": []})
-    # capture under the lease (markers committed between the first look and
-    # the claim belong to the pre-set), then overwrite the held lease body
-    # in place so recover adjudicates from the SAME set the live path uses
-    pre_markers = committed_snapshots(spark, path)
-    import json as _json
-
-    fs_l, lease = _fs(spark, f"{path}/_compact_lease")
-    out_l = fs_l.create(lease, True)
-    out_l.write(
-        bytearray(_json.dumps({"distinguished": snap, "pre_markers": pre_markers}).encode())
-    )
-    out_l.close()
+    pre_markers = _begin_maintenance(spark, path, snap)
     sigs = minhash_signatures(
         current_docs, id_col, text_col, p["n"], p["num_hashes"], p["seed"], p["base_hash"]
     ).localCheckpoint(eager=True)
@@ -240,80 +172,18 @@ def compact_dedup_index(
     if _test_hook_before_swap is not None:
         _test_hook_before_swap()
 
-    from ..plans.publish import ConcurrentCommitError, swap_marker_dir
-
-    try:
-        # swap + post-swap racer verification + rollback: the shared
-        # maintenance-swap implementation (plans/publish.swap_marker_dir) —
-        # one definition for both marker-committed stores
-        swap_marker_dir(spark, path, [snap], pre_markers, "recover_dedup_index")
-    except ConcurrentCommitError as exc:
-        raise ConcurrentSnapshotError(
-            f"{exc} — re-run compaction from a corpus state that includes "
-            "the preserved snapshots"
-        ) from exc
-
-
-def recover_dedup_index(spark: SparkSession, path: str) -> str:
-    """Adjudicate a crashed compaction: either complete it or roll it back.
-    Idempotent; safe to run when nothing is wrong (returns 'clean').
-
-    Decision table (lease body records the compaction snap + the marker set
-    it superseded):
-
-    - no lease → 'clean' (stray aside dirs from pre-lease eras are left for
-      vacuum);
-    - live ``_committed`` holds the compaction marker: racers in the aside
-      dir → ROLL BACK (restore aside, compaction loses); no racers →
-      COMPLETE (drop aside dir);
-    - live ``_committed`` missing or pre-swap: ROLL BACK (restore the aside
-      dir, folding in any markers a mid-swap racer committed into a
-      recreated live dir; otherwise nothing moved).
-
-    Shared implementation: ``plans/publish.recover_marker_store``.
-    """
-    from ..plans.publish import recover_marker_store
-
-    return recover_marker_store(spark, path)
+    swap_marker_dir(spark, path, [snap], pre_markers)
 
 
 def vacuum_dedup_index(
     spark: SparkSession, path: str, grace_seconds: int = 86400
 ) -> list[str]:
     """Delete data dirs of snapshots no longer committed (superseded by a
-    compaction, or torn) — the deferred-GC half of the compaction protocol
-    (Iceberg's expire-snapshots). Refuses to run while a compaction lease
-    exists: the in-flight (or crashed, unrecovered) compaction's aside state
-    still references old snapshots. Run it once in-flight readers of the
-    pre-compaction view have drained. Returns the deleted snapshot ids.
-
-    ``grace_seconds``: a marker-less snapshot dir modified within the
-    window is SKIPPED — it may be an in-flight ``_write_snapshot`` whose
-    marker has not landed yet (deleting it would commit a marker with no
-    data). Drop to 0 only when no writer can be active.
-    """
-    if read_maintenance_lease(spark, path) is not None:
-        raise CompactionInProgressError(
-            f"vacuum refused: compaction lease held at {path} "
-            "(finish or recover_dedup_index first)"
-        )
-    live = set(committed_snapshots(spark, path))
-    now_ms = spark._jvm.System.currentTimeMillis()
-    deleted: list[str] = []
-    for table in ("sigs", "bands"):
-        tfs, tdir = _fs(spark, f"{path}/{table}")
-        if not tfs.exists(tdir):
-            continue
-        for st in tfs.listStatus(tdir):
-            name = st.getPath().getName()
-            if not name.startswith("snap=") or name[len("snap="):] in live:
-                continue
-            if now_ms - st.getModificationTime() < grace_seconds * 1000:
-                continue  # possibly an in-flight commit — not torn, just young
-            tfs.delete(st.getPath(), True)
-            if name[len("snap="):] not in deleted:
-                deleted.append(name[len("snap="):])
-    return sorted(deleted)
+    compaction, or torn) — Iceberg's expire-snapshots, through the shared
+    ``vacuum_store`` (refuses under a lease; skips marker-less dirs younger
+    than ``grace_seconds``). Run it once in-flight readers of the
+    pre-compaction view have drained. Returns the deleted snapshot ids."""
+    return vacuum_store(spark, path, ("sigs", "bands"), "snap", grace_seconds)
 
 
 def incremental_dedup_pairs(
@@ -460,7 +330,7 @@ def pairs_for_snapshot(
     import re as _re
 
     p = {**INDEX_PARAMS, **params}
-    snaps = committed_snapshots(spark, path)
+    snaps = committed_publish_ids(spark, path)
     if snapshot_id not in snaps:
         raise FileNotFoundError(f"snapshot {snapshot_id!r} not committed under {path}")
     earlier = [s for s in snaps if s < snapshot_id]
@@ -476,11 +346,11 @@ def pairs_for_snapshot(
             "sortable snapshot_ids on indexes the streaming twin serves, or "
             "pass allow_unsorted_ids=True if they genuinely ingested later."
         )
-    bands = spark.read.parquet(f"{path}/bands").filter(F.col("snap").isin(snaps))
+    bands = read_committed_table(spark, path, "bands", "snap")
     new_bands = bands.filter(F.col("snap") == snapshot_id).select(*_BAND_COLS)
     old_bands = bands.filter(F.col("snap").isin(earlier)).select(*_BAND_COLS)
     sigs = (
-        spark.read.parquet(f"{path}/sigs")
+        read_committed_table(spark, path, "sigs", "snap")
         .filter(F.col("snap").isin(earlier + [snapshot_id]))
         .select(*_SIG_COLS)
     )

@@ -1,4 +1,5 @@
-"""Validation-gated publishing (S11) with an atomic per-run commit.
+"""Validation-gated publishing (S11) with an atomic per-run commit, and the
+one marker-committed run store every sink in the repo shares.
 
 The reference validates run artifacts before they reach the published archive
 — structural checks, PII scrubbing, non-finite numeric rejection
@@ -15,14 +16,26 @@ half-written directories exist on disk but are invisible until the marker
 appears, and a retry of the same run_id overwrites them idempotently. This
 is the parquet emulation of an Iceberg two-table transaction; the marker
 file plays the snapshot-commit role.
+
+Every store mechanic is defined here exactly once and shared by the publish
+archive, the dedup index (``operators/dedup_index``) and the streaming sinks
+(``streaming/*``): ``commit_run`` (lease check → run-scoped writes → schema
+store → marker), ``read_committed_table``, the epoch sink with its replay
+guard (``epoch_sink`` / ``commit_epoch``), the maintenance lease, the
+marker-dir swap and its recovery, and the partition-dir vacuum.
 """
 
 from __future__ import annotations
 
+import json
+import logging
 import uuid
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import StructType
 
 # conservative PII pattern: emails (the reference's scrub list also covers
 # names/ids, which here are structural columns, not free text)
@@ -74,6 +87,29 @@ def _fs(spark: SparkSession, path: str):
     return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
 
 
+def _write_json(spark: SparkSession, path: str, obj, overwrite: bool = True) -> None:
+    """Write one JSON file through the Hadoop FS. ``overwrite=False`` is an
+    atomic create-if-absent claim: it raises when the file already exists."""
+    fs, jpath = _fs(spark, path)
+    out = fs.create(jpath, overwrite)
+    try:
+        out.write(bytearray(json.dumps(obj).encode()))
+    finally:
+        out.close()
+
+
+def _read_json(spark: SparkSession, path: str):
+    """Parse one JSON file; an empty or torn body raises ValueError (IO
+    faults surface as themselves)."""
+    fs, jpath = _fs(spark, path)
+    stream = fs.open(jpath)
+    try:
+        data = bytes(stream.readAllBytes())
+    finally:
+        stream.close()
+    return json.loads(data.decode())
+
+
 def committed_publish_ids(spark: SparkSession, out_dir: str) -> list[str]:
     """run_ids whose publish transaction fully committed (marker exists).
     Only FILES count — a stray subdirectory (e.g. a nested rename artifact
@@ -86,7 +122,7 @@ def committed_publish_ids(spark: SparkSession, out_dir: str) -> list[str]:
 
 class MaintenanceInProgressError(RuntimeError):
     """A store-maintenance lease (compaction) is held — a live maintenance
-    pass, or a crashed one awaiting its recover_* function."""
+    pass, or a crashed one awaiting ``recover_marker_store``."""
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -96,15 +132,13 @@ class ConcurrentCommitError(RuntimeError):
 
 def acquire_maintenance_lease(spark: SparkSession, root: str, payload: dict) -> None:
     """Atomic create-if-absent claim of ``{root}/_compact_lease`` — the
-    single-writer gate every marker-committed store's maintenance pass uses
-    (publish compaction here, index compaction in operators/dedup_index).
+    single-writer gate every marker-committed store's maintenance pass uses.
     The body records what the pass supersedes, for crash adjudication."""
-    import json as _json
-
-    fs, lease = _fs(spark, f"{root}/_compact_lease")
+    path = f"{root}/_compact_lease"
+    fs, lease = _fs(spark, path)
     fs.mkdirs(lease.getParent())
     try:
-        out = fs.create(lease, False)  # overwrite=False: atomic claim
+        _write_json(spark, path, payload, overwrite=False)
     except Exception as exc:
         # Py4J wraps the Java exception; only the ALREADY-exists condition
         # means "lease held" — a permissions/IO fault (including
@@ -117,26 +151,17 @@ def acquire_maintenance_lease(spark: SparkSession, root: str, payload: dict) -> 
         raise MaintenanceInProgressError(
             f"maintenance lease already held at {root}/_compact_lease — another "
             "compaction is running, or a crashed one left state behind "
-            "(run the store's recover function first)"
+            "(run recover_marker_store first)"
         ) from exc
-    out.write(bytearray(_json.dumps(payload).encode()))
-    out.close()
 
 
 def read_maintenance_lease(spark: SparkSession, root: str) -> dict | None:
-    import json as _json
-
     fs, lease = _fs(spark, f"{root}/_compact_lease")
     if not fs.exists(lease):
         return None
-    stream = fs.open(lease)
     try:
-        data = bytes(stream.readAllBytes())
-    finally:
-        stream.close()
-    try:
-        return _json.loads(data.decode())
-    except Exception:
+        return _read_json(spark, f"{root}/_compact_lease")
+    except ValueError:
         # a crash mid-(re)write leaves an empty/torn lease body. The lease
         # FILE existing is what matters: report it as held-with-empty-body
         # so commit/vacuum still refuse and recover can still adjudicate
@@ -150,24 +175,131 @@ def release_maintenance_lease(spark: SparkSession, root: str) -> None:
     fs.delete(lease, False)
 
 
-def commit_marker(spark: SparkSession, out_dir: str, run_id: str) -> None:
-    """The single atomic file-create that makes a run visible — ONE
-    definition shared by every marker-committed sink (batch publish,
-    streaming publish epochs, streaming decontamination verdicts, dedup
-    index snapshots). Refuses while a maintenance lease is held on the same
-    store: a marker committed mid-compaction would not be in the rebuilt
-    marker set (the remaining probe-to-commit race is caught by the
-    compaction's post-swap verification, which rolls back rather than lose
-    the run)."""
-    if read_maintenance_lease(spark, out_dir) is not None:
+def _refuse_under_lease(spark: SparkSession, root: str, action: str) -> None:
+    if read_maintenance_lease(spark, root) is not None:
         raise MaintenanceInProgressError(
-            f"commit blocked: store maintenance in progress at {out_dir} "
-            "(lease held) — retry after it finishes, or run the store's "
-            "recover function if it crashed"
+            f"{action} blocked: store maintenance in progress at {root} "
+            "(lease held) — retry after it finishes, or run "
+            "recover_marker_store if it crashed"
         )
+
+
+def _begin_maintenance(spark: SparkSession, root: str, distinguished: str) -> list[str]:
+    """Claim the lease, then re-capture the marker set UNDER it (markers
+    committed before the claim belong to the pre-set) and overwrite the held
+    lease body in place, so recover adjudicates from the same set the live
+    pass uses. Never release/re-acquire instead: that window would let a
+    commit slip in unrecorded. Returns the captured markers."""
+    acquire_maintenance_lease(spark, root, {"distinguished": distinguished, "pre_markers": []})
+    pre = committed_publish_ids(spark, root)
+    _write_json(spark, f"{root}/_compact_lease", {"distinguished": distinguished, "pre_markers": pre})
+    return pre
+
+
+def commit_marker(spark: SparkSession, out_dir: str, run_id: str) -> None:
+    """The single atomic file-create that makes a run visible. Refuses while
+    a maintenance lease is held on the same store: a marker committed
+    mid-compaction would not be in the rebuilt marker set (the remaining
+    probe-to-commit race is caught by the compaction's post-swap
+    verification, which rolls back rather than lose the run)."""
+    _refuse_under_lease(spark, out_dir, "commit")
     fs, marker = _fs(spark, f"{out_dir}/_committed/{run_id}")
     fs.mkdirs(marker.getParent())
     fs.create(marker, True).close()
+
+
+def commit_run(
+    spark: SparkSession,
+    root: str,
+    run_id: str,
+    tables: dict[str, DataFrame],
+    part_col: str = "run_id",
+    _crash_before_commit: str | None = None,
+) -> None:
+    """The staged-write + marker-commit protocol — ONE definition for every
+    marker-committed store (batch publish, every streaming epoch sink, dedup
+    index snapshots with ``part_col="snap"``).
+
+    Refuses before any write while a maintenance lease is held; writes each
+    table to ``{root}/{table}/{part_col}={run_id}`` (overwrite, so a retried
+    run_id is idempotent); records each table's schema in the schema store;
+    then creates the marker — the commit point, which re-checks the lease.
+    ``_crash_before_commit`` is a test-only fault-injection point: it raises
+    right after the named table has landed."""
+    _refuse_under_lease(spark, root, "commit")
+    for table, df in tables.items():
+        df.write.mode("overwrite").parquet(f"{root}/{table}/{part_col}={run_id}")
+        if _crash_before_commit == table:
+            raise RuntimeError(f"fault injection: crashed after the {table} write")
+    # schema store BEFORE the marker: a crash here leaves extra nullable
+    # columns in the union (harmless); the reverse order could commit a run
+    # whose columns the stored schema lacks
+    for table, df in tables.items():
+        update_schema_store(spark, root, table, df.schema)
+    commit_marker(spark, root, run_id)
+
+
+def commit_epoch(
+    spark: SparkSession,
+    out_dir: str,
+    run_id: str,
+    epoch_tables: Callable[[], dict[str, DataFrame]],
+) -> bool:
+    """The replay guard every epoch sink shares: ``commit_run`` of
+    ``epoch_tables()`` unless ``run_id`` already committed, in which case
+    nothing is computed or written and False is returned.
+
+    A committed epoch id is either a true replay (crash after the marker,
+    before the stream checkpoint advanced — identical content, so skipping
+    is exact) or a LOST-checkpoint restart whose epoch numbering reset over
+    an existing store — skipping keeps the committed epoch intact, but the
+    new batch's rows are dropped, so the collision is never silent: a
+    warning is logged and ``_collisions/<run_id>`` is left behind. That
+    operator mistake needs a fresh out_dir."""
+    fs, marker = _fs(spark, f"{out_dir}/_committed/{run_id}")
+    if fs.exists(marker):
+        logging.getLogger(__name__).warning(
+            "epoch %s already committed at %s — batch skipped (a lost-checkpoint "
+            "restart over an existing store requires a fresh out_dir)",
+            run_id, out_dir,
+        )
+        fs.create(_fs(spark, f"{out_dir}/_collisions/{run_id}")[1], True).close()
+        return False
+    commit_run(spark, out_dir, run_id, epoch_tables())
+    return True
+
+
+def epoch_sink(
+    spark: SparkSession,
+    source_dir: str,
+    schema: str,
+    out_dir: str,
+    checkpoint_dir: str,
+    epoch_tables: Callable[[DataFrame, str], dict[str, DataFrame]],
+    available_now: bool = True,
+) -> StreamingQuery:
+    """File-source stream → one marker-committed run per micro-batch: the
+    epoch id ``e<batch_id:08d>`` (zero-padded, so ids sort in ingestion
+    order), the replay guard (``commit_epoch``) and ``commit_run`` of the
+    tables ``epoch_tables(batch, run_id)`` returns. A replayed epoch
+    overwrites its own run directories idempotently and a torn epoch stays
+    invisible until its marker lands — end-to-end exactly-once.
+    ``available_now`` makes the stream an incremental batch job: rerun it
+    after new files land and only the new files flow through."""
+
+    def run_epoch(batch: DataFrame, batch_id: int) -> None:
+        run_id = f"e{batch_id:08d}"
+        commit_epoch(batch.sparkSession, out_dir, run_id, lambda: epoch_tables(batch, run_id))
+
+    writer = (
+        spark.readStream.schema(schema)
+        .parquet(source_dir)
+        .writeStream.foreachBatch(run_epoch)
+        .option("checkpointLocation", checkpoint_dir)
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def save_index_store(spark: SparkSession, path: str, writers: dict, meta: dict) -> None:
@@ -183,8 +315,6 @@ def save_index_store(spark: SparkSession, path: str, writers: dict, meta: dict) 
     old index before a long rebuild would also destroy the only good copy
     and fail concurrent readers mid-scan; refresh by saving to a NEW
     versioned path and flipping the pointer the jobs read."""
-    import json as _json
-
     committed = committed_publish_ids(spark, path)
     if committed:
         raise FileExistsError(
@@ -198,9 +328,7 @@ def save_index_store(spark: SparkSession, path: str, writers: dict, meta: dict) 
         fs.delete(jpath, True)
     for name, writer in writers.items():
         writer.parquet(f"{path}/{name}")
-    out = fs.create(_fs(spark, f"{path}/meta.json")[1], True)
-    out.write(bytearray(_json.dumps(meta).encode()))
-    out.close()
+    _write_json(spark, f"{path}/meta.json", meta)
     commit_marker(spark, path, "index")
 
 
@@ -208,21 +336,13 @@ def load_index_store(spark: SparkSession, path: str) -> tuple[dict, list[str]]:
     """(meta, committed marker ids) of a store written by
     ``save_index_store``. Raises loudly when the ``index`` marker is missing
     (a torn save is invisible by design)."""
-    import json as _json
-
     markers = committed_publish_ids(spark, path)
     if "index" not in markers:
         raise FileNotFoundError(
             f"no committed index under {path} (save it first; a torn save "
             "is invisible by design)"
         )
-    fs, jpath = _fs(spark, f"{path}/meta.json")
-    stream = fs.open(jpath)
-    try:
-        meta = _json.loads(bytes(stream.readAllBytes()).decode())
-    finally:
-        stream.close()
-    return meta, markers
+    return _read_json(spark, f"{path}/meta.json"), markers
 
 
 def _schema_versions(spark: SparkSession, out_dir: str, table: str) -> list[tuple[int, str]]:
@@ -242,6 +362,21 @@ def _schema_versions(spark: SparkSession, out_dir: str, table: str) -> list[tupl
     return sorted(out)
 
 
+def _latest_schema(spark: SparkSession, out_dir: str, table: str) -> tuple[int, StructType] | None:
+    """(version, schema) of the newest READABLE schema version, or None. A
+    torn newest file falls back to the version before it. Serves both the
+    reader and the vacuum prune, so the two can never disagree on which
+    version is current."""
+    for n, name in reversed(_schema_versions(spark, out_dir, table)):
+        try:
+            d = _read_json(spark, f"{out_dir}/_schema/{name}")
+            # nonce-wrapped (current) or bare StructType json (early r5)
+            return n, StructType.fromJson(d["schema"] if "schema" in d else d)
+        except (ValueError, KeyError, TypeError):
+            continue  # torn version file — try the one before it
+    return None
+
+
 def update_schema_store(spark: SparkSession, out_dir: str, table: str, schema) -> None:
     """Persist the union of the store-level schema with ``schema`` —
     VERSIONED compare-and-swap, so concurrent publishers can never lose
@@ -253,19 +388,15 @@ def update_schema_store(spark: SparkSession, out_dir: str, table: str, schema) -
     Protocol (the Iceberg metadata-versioning emulation): read the latest
     ``_schema/<table>.v<N>.json``; if the union adds nothing, stop (no
     version churn on ordinary publishes); else atomically create
-    ``v<N+1>`` with overwrite=False — a concurrent writer that claimed the
-    version first makes the create fail, and we re-read and retry on top
-    of ITS union. Old versions are pruned by vacuum.
+    ``v<N+1>`` — a concurrent writer that claimed the version first makes
+    the claim fail, and we re-read and retry on top of ITS union. Old
+    versions are pruned by vacuum.
 
     The union is additive-only: a field re-appearing with a different type
     raises — this emulation does not do type-widening evolution (that is
     Iceberg's job). Written BEFORE the run's marker: a torn run's extra
     nullable columns in the union are harmless, while the reverse order
     could commit a run whose columns the stored schema lacks."""
-    import json as _json
-
-    from pyspark.sql.types import StructType
-
     for _ in range(50):
         versions = _schema_versions(spark, out_dir, table)
         latest_n = versions[-1][0] if versions else 0
@@ -296,26 +427,19 @@ def update_schema_store(spark: SparkSession, out_dir: str, table: str, schema) -
         # we re-read and check our nonce: the loser (its content replaced,
         # or its rename failed) retries on the next version, merging on
         # top of the winner's union. No interleaving loses a column.
-        import uuid as _uuid
-
-        nonce = _uuid.uuid4().hex
-        payload = {"nonce": nonce, "schema": merged.jsonValue()}
-        fs, tmp = _fs(spark, f"{out_dir}/_schema/.tmp-{nonce}")
-        fs.mkdirs(tmp.getParent())
-        out = fs.create(tmp, True)
-        out.write(bytearray(_json.dumps(payload).encode()))
-        out.close()
-        jpath = _fs(spark, f"{out_dir}/_schema/{table}.v{latest_n + 1}.json")[1]
-        if not fs.rename(tmp, jpath):
-            fs.delete(tmp, False)  # lost the version race — re-read, merge
+        nonce = uuid.uuid4().hex
+        tmp = f"{out_dir}/_schema/.tmp-{nonce}"
+        fs, jtmp = _fs(spark, tmp)
+        fs.mkdirs(jtmp.getParent())
+        _write_json(spark, tmp, {"nonce": nonce, "schema": merged.jsonValue()})
+        version = f"{out_dir}/_schema/{table}.v{latest_n + 1}.json"
+        if not fs.rename(jtmp, _fs(spark, version)[1]):
+            fs.delete(jtmp, False)  # lost the version race — re-read, merge
             continue
-        stream = fs.open(jpath)
         try:
-            landed = _json.loads(bytes(stream.readAllBytes()).decode())
-        except Exception:
+            landed = _read_json(spark, version)
+        except ValueError:
             landed = {}
-        finally:
-            stream.close()
         if landed.get("nonce") == nonce:
             return
         # a peer replaced our rename (POSIX semantics) — retry on top
@@ -330,41 +454,38 @@ def read_schema_store(spark: SparkSession, out_dir: str, table: str):
     committed yet). A torn write of the newest version file falls back to
     the version before it — never to None, which would make the next
     update's union start from scratch and drop prior columns."""
-    import json as _json
-
-    from pyspark.sql.types import StructType
-
-    for _, name in reversed(_schema_versions(spark, out_dir, table)):
-        fs, jpath = _fs(spark, f"{out_dir}/_schema/{name}")
-        stream = fs.open(jpath)
-        try:
-            data = bytes(stream.readAllBytes())
-        finally:
-            stream.close()
-        try:
-            d = _json.loads(data.decode())
-            # nonce-wrapped (current) or bare StructType json (early r5)
-            return StructType.fromJson(d["schema"] if "schema" in d else d)
-        except Exception:
-            continue  # torn version file — try the one before it
-    return None
+    latest = _latest_schema(spark, out_dir, table)
+    return None if latest is None else latest[1]
 
 
-def read_committed_table(spark: SparkSession, out_dir: str, table: str) -> DataFrame:
-    """Committed-runs-only view of a marker-committed table.
+def _scan_table(spark: SparkSession, out_dir: str, table: str) -> DataFrame:
+    """Every run directory of ``table``, committed or not. Schema comes from
+    the commit-time schema store (one tiny JSON read, no per-run footer
+    fetches; Spark appends the partition column and NULL-fills fields absent
+    from older files); stores written before the schema store existed fall
+    back to ``mergeSchema``."""
+    stored = read_schema_store(spark, out_dir, table)
+    if stored is not None:
+        return spark.read.schema(stored).parquet(f"{out_dir}/{table}")
+    return spark.read.option("mergeSchema", "true").parquet(f"{out_dir}/{table}")
+
+
+def read_committed_table(
+    spark: SparkSession, out_dir: str, table: str, part_col: str = "run_id"
+) -> DataFrame:
+    """Committed-runs-only view of a marker-committed table — the one reader
+    every store uses (the index passes ``part_col="snap"``).
 
     Raises FileNotFoundError with a clear message when NO run has ever
     committed (a half-written first run leaves table dirs you must not
     read — "nothing committed yet" is the only safe answer; a raw
     PATH_NOT_FOUND from the torn half would be misleading).
 
-    Schema comes from the commit-time schema store (one tiny JSON read, no
-    per-run footer fetches); stores written before the schema store existed
-    fall back to ``mergeSchema``. The isin literal list grows with run
-    count — ``compact_published_store`` consolidates old runs into one
-    partition so the live marker set stays small (the Iceberg analogue is
-    snapshot expiration); compacted rows keep their ORIGINAL ``run_id``
-    via the ``src_run_id`` column, so compaction is invisible in output.
+    The isin literal list grows with run count — ``compact_published_store``
+    consolidates old runs into one partition so the live marker set stays
+    small (the Iceberg analogue is snapshot expiration); compacted rows keep
+    their ORIGINAL run id via the ``src_run_id`` column, so compaction is
+    invisible in output.
     """
     ids = committed_publish_ids(spark, out_dir)
     if not ids:
@@ -372,35 +493,24 @@ def read_committed_table(spark: SparkSession, out_dir: str, table: str) -> DataF
             f"no committed runs under {out_dir} (the _committed marker set is "
             "empty — a torn first run is invisible by design)"
         )
-    stored = read_schema_store(spark, out_dir, table)
-    if stored is not None:
-        # Spark appends the run_id partition column to a user schema and
-        # NULL-fills fields absent from older files — mergeSchema semantics
-        # at zero footer cost
-        df = spark.read.schema(stored).parquet(f"{out_dir}/{table}")
-    else:
-        df = spark.read.option("mergeSchema", "true").parquet(f"{out_dir}/{table}")
     # partition filter on the committed id set: torn (marker-less) run dirs
     # are pruned at the directory level, never scanned
-    df = df.filter(F.col("run_id").isin(ids))
+    df = _scan_table(spark, out_dir, table).filter(F.col(part_col).isin(ids))
     if "src_run_id" in df.columns:
         df = df.withColumn(
-            "run_id", F.coalesce(F.col("src_run_id"), F.col("run_id"))
+            part_col, F.coalesce(F.col("src_run_id"), F.col(part_col))
         ).drop("src_run_id")
     return df
 
 
-_read_committed = read_committed_table
-
-
 def read_published(spark: SparkSession, out_dir: str) -> DataFrame:
     """The published archive — committed runs only (never a torn run)."""
-    return _read_committed(spark, out_dir, "published")
+    return read_committed_table(spark, out_dir, "published")
 
 
 def read_quarantine(spark: SparkSession, out_dir: str) -> DataFrame:
     """The quarantine table — committed runs only (never a torn run)."""
-    return _read_committed(spark, out_dir, "quarantine")
+    return read_committed_table(spark, out_dir, "quarantine")
 
 
 def publish_run(
@@ -465,48 +575,28 @@ def publish_run(
     }
 
 
+def tagged_tables(tagged: DataFrame) -> dict[str, DataFrame]:
+    """The two halves of a frame carrying a ``_reject`` column: publishable
+    rows, and the quarantine with its ``reject_reason``."""
+    return {
+        "published": tagged.filter(F.col("_reject").isNull()).drop("_reject"),
+        "quarantine": tagged.filter(F.col("_reject").isNotNull()).withColumnRenamed(
+            "_reject", "reject_reason"
+        ),
+    }
+
+
 def write_tagged_run(
     spark: SparkSession,
     tagged: DataFrame,
     out_dir: str,
     run_id: str,
     _crash_before_commit: str | None = None,
-    skip_if_committed: bool = False,
-) -> bool:
-    """The staged-write + marker-commit protocol, shared by the batch
-    publisher and the streaming twin (one definition — the two sinks cannot
-    drift). ``tagged`` carries a ``_reject`` column; both halves land in
-    run-scoped directories (overwrite = idempotent replay) and become
-    visible only when the single marker file is created.
-
-    ``skip_if_committed=True`` (the streaming epochs): a run_id whose marker
-    already exists is left untouched and False is returned. For a true
-    replay (crash after marker, before the stream checkpoint advanced) the
-    content is identical, so skipping is exact; for a LOST-checkpoint
-    restart (epoch numbering resets over an existing archive) it prevents
-    the new batch 0 from destroying the committed old epoch 0 — that
-    operator mistake needs a fresh out_dir, not a silent overwrite."""
-    if skip_if_committed:
-        fs, marker = _fs(spark, f"{out_dir}/_committed/{run_id}")
-        if fs.exists(marker):
-            return False
-    pub = tagged.filter(F.col("_reject").isNull()).drop("_reject")
-    pub.write.mode("overwrite").parquet(f"{out_dir}/published/run_id={run_id}")
-    if _crash_before_commit == "published":
-        raise RuntimeError("fault injection: crashed after published half")
-    quar = tagged.filter(F.col("_reject").isNotNull()).withColumnRenamed(
-        "_reject", "reject_reason"
-    )
-    quar.write.mode("overwrite").parquet(f"{out_dir}/quarantine/run_id={run_id}")
-    if _crash_before_commit == "quarantine":
-        raise RuntimeError("fault injection: crashed before commit marker")
-    # schema store BEFORE the marker: a crash here leaves extra nullable
-    # columns in the union (harmless); the reverse order could commit a run
-    # whose columns the stored schema lacks
-    update_schema_store(spark, out_dir, "published", pub.schema)
-    update_schema_store(spark, out_dir, "quarantine", quar.schema)
-    commit_marker(spark, out_dir, run_id)  # single atomic create = the commit point
-    return True
+) -> None:
+    """``commit_run`` of both halves of a tagged frame — the batch
+    publisher's commit; the streaming twin commits the same
+    ``tagged_tables`` through ``epoch_sink``."""
+    commit_run(spark, out_dir, run_id, tagged_tables(tagged), _crash_before_commit=_crash_before_commit)
 
 
 def compact_published_store(
@@ -527,28 +617,16 @@ def compact_published_store(
     markers and directories are untouched).
 
     Concurrency: same protocol as ``compact_dedup_index`` — a maintenance
-    lease blocks new commits (``commit_marker`` refuses under it), the
+    lease blocks new commits (``commit_run`` refuses under it), the
     marker-dir swap is verified post-swap, and a run that slipped the
     probe-to-commit window triggers a full rollback that preserves it
     (``ConcurrentCommitError``). Crashes are adjudicated by
-    ``recover_published_store``; superseded run directories are reclaimed
+    ``recover_marker_store``; superseded run directories are reclaimed
     by the separate ``vacuum_published_store`` step so concurrent readers
     never lose files mid-scan.
     """
     compact_id = "compact" + uuid.uuid4().hex[:12]
-    acquire_maintenance_lease(
-        spark, out_dir, {"distinguished": compact_id, "pre_markers": []}
-    )
-    pre = committed_publish_ids(spark, out_dir)  # re-capture under the lease
-    # keep the lease body authoritative for recover: overwrite in place
-    # (we HOLD the lease — never release/re-acquire, that window would let
-    # a commit slip in unrecorded)
-    import json as _json
-
-    fs_l, lease = _fs(spark, f"{out_dir}/_compact_lease")
-    out_l = fs_l.create(lease, True)
-    out_l.write(bytearray(_json.dumps({"distinguished": compact_id, "pre_markers": pre}).encode()))
-    out_l.close()
+    pre = _begin_maintenance(spark, out_dir, compact_id)
     targets = list(run_ids) if run_ids is not None else list(pre)
     unknown = [r for r in targets if r not in pre]
     if unknown:
@@ -559,26 +637,25 @@ def compact_published_store(
         raise ValueError("compact_published_store: nothing to compact")
 
     for table in ("published", "quarantine"):
-        stored = read_schema_store(spark, out_dir, table)
-        if stored is not None:
-            df = spark.read.schema(stored).parquet(f"{out_dir}/{table}")
-        else:
-            df = spark.read.option("mergeSchema", "true").parquet(f"{out_dir}/{table}")
-        df = df.filter(F.col("run_id").isin(targets))
-        if "src_run_id" in df.columns:  # re-compacting an already-compacted store
-            df = df.withColumn(
-                "_src", F.coalesce(F.col("src_run_id"), F.col("run_id"))
-            ).drop("src_run_id")
-        else:
-            df = df.withColumn("_src", F.col("run_id"))
-        out = df.drop("run_id").withColumnRenamed("_src", "src_run_id")
+        df = _scan_table(spark, out_dir, table).filter(F.col("run_id").isin(targets))
+        # re-compacting an already-compacted store keeps the ORIGINAL id
+        src = (
+            F.coalesce(F.col("src_run_id"), F.col("run_id"))
+            if "src_run_id" in df.columns
+            else F.col("run_id")
+        )
+        out = (
+            df.withColumn("_src", src)
+            .drop("src_run_id", "run_id")
+            .withColumnRenamed("_src", "src_run_id")
+        )
         out.write.mode("overwrite").parquet(f"{out_dir}/{table}/run_id={compact_id}")
         update_schema_store(spark, out_dir, table, out.schema)
     if _test_hook_before_swap is not None:
         _test_hook_before_swap()
 
     new_markers = sorted(set(pre) - set(targets)) + [compact_id]
-    swap_marker_dir(spark, out_dir, new_markers, pre, "recover_published_store")
+    swap_marker_dir(spark, out_dir, new_markers, pre)
     return compact_id
 
 
@@ -587,7 +664,6 @@ def swap_marker_dir(
     root: str,
     new_markers: list[str],
     pre_markers: list[str],
-    recover_name: str,
 ) -> None:
     """Replace ``{root}/_committed`` with ``new_markers`` — the ONE
     maintenance-swap implementation every marker-committed store uses
@@ -614,22 +690,17 @@ def swap_marker_dir(
        (for the publish store that is exactly right; the dedup index
        additionally documents the possible duplicate-signature overlap).
     """
-    import json as _json
-
     fs, committed = _fs(spark, f"{root}/_committed")
     nxt = _fs(spark, f"{root}/_committed_next")[1]
     old = _fs(spark, f"{root}/_committed_old")[1]
     # record the full plan in the HELD lease so recover can tell racer
     # markers from our own in every crash state
     dist = sorted(set(new_markers) - set(pre_markers))
-    lease_body = {
+    _write_json(spark, f"{root}/_compact_lease", {
         "distinguished": dist[0] if dist else new_markers[-1],
         "pre_markers": list(pre_markers),
         "new_markers": list(new_markers),
-    }
-    out_l = fs.create(_fs(spark, f"{root}/_compact_lease")[1], True)
-    out_l.write(bytearray(_json.dumps(lease_body).encode()))
-    out_l.close()
+    })
     for stale in (nxt, old):  # debris from a previously recovered pass
         if fs.exists(stale):
             fs.delete(stale, True)
@@ -664,12 +735,12 @@ def swap_marker_dir(
         if fs.exists(committed) and not fs.delete(committed, True):
             raise IOError(
                 f"maintenance rollback: could not retract marker dir at {root} "
-                f"(run {recover_name})"
+                "(run recover_marker_store)"
             )
         if not fs.rename(old, committed):
             raise IOError(
                 f"maintenance rollback: could not restore marker dir at {root} "
-                f"(run {recover_name})"
+                "(run recover_marker_store)"
             )
         if fs.exists(nxt):
             fs.delete(nxt, True)
@@ -690,7 +761,7 @@ def swap_marker_dir(
             _rollback([], "inside")
         raise IOError(
             f"maintenance swap: could not activate new marker dir at {root} "
-            f"(run {recover_name})"
+            "(run recover_marker_store)"
         )
     # post-activation audit: unwind a nested move (the racer-dir-existed
     # rename semantics that return true), then verify the live set
@@ -724,7 +795,19 @@ def recover_marker_store(spark: SparkSession, root: str) -> str:
     ONE implementation for every marker-committed store (publish archive,
     dedup index). A mid-swap racer's markers found in a live dir the
     distinguished marker never reached are merged into the restored set —
-    committed markers are never stranded in ``_committed_old``."""
+    committed markers are never stranded in ``_committed_old``.
+
+    Decision table (the lease body records the distinguished marker and
+    the marker set the pass superseded):
+
+    - no lease → 'clean';
+    - live ``_committed`` holds the distinguished marker: racers in the
+      aside dir → ROLL BACK (restore aside, maintenance loses); no racers
+      → COMPLETE (drop aside dir);
+    - live ``_committed`` missing or pre-swap: ROLL BACK (restore the aside
+      dir, folding in any markers a mid-swap racer committed into a
+      recreated live dir; otherwise nothing moved).
+    """
     lease = read_maintenance_lease(spark, root)
     if lease is None:
         return "clean"
@@ -791,76 +874,53 @@ def recover_marker_store(spark: SparkSession, root: str) -> str:
     return "rolled_back"
 
 
-def recover_published_store(spark: SparkSession, out_dir: str) -> str:
-    """Adjudicate a crashed publish-store compaction (see
-    ``recover_marker_store`` — the shared implementation)."""
-    return recover_marker_store(spark, out_dir)
+def vacuum_store(
+    spark: SparkSession,
+    root: str,
+    tables: tuple[str, ...],
+    part_col: str,
+    grace_seconds: int,
+) -> list[str]:
+    """Delete the ``{part_col}=<id>`` directories of ``tables`` whose marker
+    is gone (compacted away, or torn runs that never committed) and prune
+    superseded schema versions — the deferred-GC half of compaction, shared
+    by ``vacuum_published_store`` and ``vacuum_dedup_index``. Refuses under
+    a live lease: an in-flight (or crashed, unrecovered) pass's aside state
+    still references old runs. Returns the removed ids.
+
+    ``grace_seconds`` (Iceberg/Delta vacuum-retention analogue): a
+    marker-less directory modified within the window is SKIPPED — it may be
+    an IN-FLIGHT commit that has written data but not yet its marker;
+    deleting it would leave a committed run with missing data. Only drop
+    the grace (0) when no writer can be active."""
+    _refuse_under_lease(spark, root, "vacuum")
+    live = set(committed_publish_ids(spark, root))
+    now_ms = spark._jvm.System.currentTimeMillis()
+    prefix = f"{part_col}="
+    deleted: set[str] = set()
+    for table in tables:
+        fs, tdir = _fs(spark, f"{root}/{table}")
+        if fs.exists(tdir):
+            for st in fs.listStatus(tdir):
+                name = st.getPath().getName()
+                if not name.startswith(prefix) or name[len(prefix):] in live:
+                    continue
+                if now_ms - st.getModificationTime() < grace_seconds * 1000:
+                    continue  # possibly an in-flight commit — not torn, just young
+                fs.delete(st.getPath(), True)
+                deleted.add(name[len(prefix):])
+        # keep everything from the latest READABLE schema version up (a
+        # torn newest file must keep its predecessor)
+        latest = _latest_schema(spark, root, table)
+        for n, name in _schema_versions(spark, root, table):
+            if latest is not None and n < latest[0]:
+                fs.delete(_fs(spark, f"{root}/_schema/{name}")[1], False)
+    return sorted(deleted)
 
 
 def vacuum_published_store(
     spark: SparkSession, out_dir: str, grace_seconds: int = 86400
 ) -> list[str]:
-    """Delete run directories whose marker is gone (compacted away, or torn
-    runs that never committed) — the deferred-GC half of compaction. Refuses
-    under a live lease. Returns the removed run_ids.
-
-    ``grace_seconds`` (Iceberg/Delta vacuum-retention analogue): a
-    marker-less directory modified within the window is SKIPPED — it may be
-    an IN-FLIGHT publish that has written data but not yet committed its
-    marker; deleting it would leave a committed run with missing data.
-    Only drop the grace (0) when no writer can be active.
-    """
-    if read_maintenance_lease(spark, out_dir) is not None:
-        raise MaintenanceInProgressError(
-            f"vacuum refused: maintenance lease held at {out_dir} "
-            "(finish or recover_published_store first)"
-        )
-    live = set(committed_publish_ids(spark, out_dir))
-    now_ms = spark._jvm.System.currentTimeMillis()
-    deleted: list[str] = []
-    for table in ("published", "quarantine"):
-        tfs, tdir = _fs(spark, f"{out_dir}/{table}")
-        if not tfs.exists(tdir):
-            continue
-        for st in tfs.listStatus(tdir):
-            name = st.getPath().getName()
-            if not name.startswith("run_id=") or name[len("run_id="):] in live:
-                continue
-            if now_ms - st.getModificationTime() < grace_seconds * 1000:
-                continue  # possibly an in-flight commit — not torn, just young
-            tfs.delete(st.getPath(), True)
-            if name[len("run_id="):] not in deleted:
-                deleted.append(name[len("run_id="):])
-    # prune superseded schema versions: keep everything from the latest
-    # READABLE version up (a torn newest file must keep its predecessor)
-    import json as _json
-
-    from pyspark.sql.types import StructType
-
-    for table in ("published", "quarantine"):
-        versions = _schema_versions(spark, out_dir, table)
-        keep_from = None
-        for n, name in reversed(versions):
-            fs, jpath = _fs(spark, f"{out_dir}/_schema/{name}")
-            stream = fs.open(jpath)
-            try:
-                data = bytes(stream.readAllBytes())
-            finally:
-                stream.close()
-            try:
-                # same dual-format parse as read_schema_store: current
-                # versions are nonce-wrapped {"nonce":…,"schema":…}; a raw
-                # StructType.fromJson on the wrapper always fails, which
-                # would anchor keep_from to a stale bare-format version
-                # (or never prune at all on current-format stores)
-                d = _json.loads(data.decode())
-                StructType.fromJson(d["schema"] if "schema" in d else d)
-                keep_from = n
-                break
-            except Exception:
-                continue
-        for n, name in versions:
-            if keep_from is not None and n < keep_from:
-                fs, jpath = _fs(spark, f"{out_dir}/_schema/{name}")
-                fs.delete(jpath, False)
-    return sorted(deleted)
+    """Reclaim the publish archive's superseded and torn run directories
+    (see ``vacuum_store``). Returns the removed run_ids."""
+    return vacuum_store(spark, out_dir, ("published", "quarantine"), "run_id", grace_seconds)

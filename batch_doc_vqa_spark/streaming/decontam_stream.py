@@ -3,7 +3,7 @@ screened against the eval set as they land.
 
 Batch form: ``operators/decontam.contamination_report`` over a full corpus.
 Streaming form: new document files flow through the SAME n-gram machinery
-inside ``foreachBatch`` (one definition — the shared
+in the shared epoch sink (``plans.publish.epoch_sink`` — the shared
 ``contamination_report`` is called per micro-batch against the pinned
 benchmark frame), and each epoch's verdicts land atomically via the
 publish protocol's run-scoped marker commit: ``clean/run_id=e<batch>`` and
@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.decontam import DEFAULT_DROP_THRESHOLD, DEFAULT_NGRAM, contamination_report
-from ..plans.publish import _fs, commit_marker, read_committed_table
+from ..plans.publish import epoch_sink, read_committed_table
 
 
 def decontam_screen_stream(
@@ -49,14 +49,8 @@ def decontam_screen_stream(
     markers, so a crash between the two table writes never surfaces a torn
     epoch (same contract as the publish archive)."""
     bench = bench.localCheckpoint(eager=True)  # pin the eval set for the run
-    stream = spark.readStream.schema(schema).parquet(docs_dir)
 
-    def screen(batch: DataFrame, batch_id: int) -> None:
-        sess = batch.sparkSession
-        run_id = f"e{batch_id:08d}"
-        fs, marker = _fs(sess, f"{out_dir}/_committed/{run_id}")
-        if fs.exists(marker):  # replay of a committed epoch / stale archive
-            return
+    def screen(batch: DataFrame, _run_id: str) -> dict[str, DataFrame]:
         # materialized once: the report feeds both the anti-join build side
         # and the contaminated-table write. strategy pinned to 'broadcast':
         # the eval set is localCheckpointed once for the whole run, and
@@ -65,25 +59,14 @@ def decontam_screen_stream(
             batch, id_col, text_col, bench, "bench_id", "bench_text", n=n,
             strategy="broadcast",
         ).localCheckpoint(eager=True)
-        flagged = (
-            report.filter(F.col("coverage") >= threshold)
-            .select(F.col("doc_id").alias(id_col))
-            .distinct()
-        )
-        batch.join(F.broadcast(flagged), id_col, "left_anti").write.mode("overwrite").parquet(
-            f"{out_dir}/clean/run_id={run_id}"
-        )
-        report.filter(F.col("coverage") >= threshold).write.mode("overwrite").parquet(
-            f"{out_dir}/contaminated/run_id={run_id}"
-        )
-        commit_marker(sess, out_dir, run_id)
+        hits = report.filter(F.col("coverage") >= threshold)
+        flagged = hits.select(F.col("doc_id").alias(id_col)).distinct()
+        return {
+            "clean": batch.join(F.broadcast(flagged), id_col, "left_anti"),
+            "contaminated": hits,
+        }
 
-    writer = stream.writeStream.foreachBatch(screen).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return epoch_sink(spark, docs_dir, schema, out_dir, checkpoint_dir, screen, available_now)
 
 
 def read_clean(spark: SparkSession, out_dir: str) -> DataFrame:

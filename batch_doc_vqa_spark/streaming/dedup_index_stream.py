@@ -3,8 +3,9 @@ stream in, each micro-batch dedups against the persisted index and appends
 itself as one committed index snapshot.
 
 Batch form: ``operators/dedup_index.incremental_dedup_pairs``. Streaming
-form: the SAME operator runs inside ``foreachBatch`` with the epoch id as
-the snapshot id, so the index grows exactly-once:
+form: the SAME operator runs in the shared epoch sink
+(``plans.publish.epoch_sink``) with the epoch id as the snapshot id, so the
+index grows exactly-once:
 
 - the epoch's PAIRS land at ``out_dir/pairs/run_id=e<batch>`` behind the
   marker protocol (a torn epoch is invisible to ``read_stream_pairs``);
@@ -30,15 +31,17 @@ and it lives in the marker-committed store, not the checkpoint).
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.dedup_index import (
-    committed_snapshots,
     incremental_dedup_pairs,
     pairs_for_snapshot,
+    read_index_sigs,
 )
-from ..plans.publish import _fs, commit_marker, read_committed_table, update_schema_store
+from ..plans.publish import committed_publish_ids, epoch_sink, read_committed_table
 
 
 def dedup_index_stream(
@@ -62,21 +65,14 @@ def dedup_index_stream(
     (publish's ``_crash_before_commit`` precedent): raise after the named
     batch ids' index snapshot committed but before their pairs landed —
     the exact window the ``pairs_for_snapshot`` heal exists for."""
-    stream = spark.readStream.schema(schema).parquet(docs_dir)
     # only the FIRST batch this stream instance processes can be a replay
     # of a crashed epoch (later batches imply their predecessors committed)
     # — scopes the compacted-away audit below to one batch per (re)start
     first_processed = {"v": True}
 
-    def ingest(batch: DataFrame, batch_id: int) -> None:
-        import logging
-
+    def ingest(batch: DataFrame, run_id: str) -> dict[str, DataFrame]:
         sess = batch.sparkSession
-        run_id = f"e{batch_id:08d}"
-        fs, marker = _fs(sess, f"{out_dir}/_committed/{run_id}")
-        if fs.exists(marker):  # replay of a fully committed epoch
-            return
-        snaps = committed_snapshots(sess, index_path)
+        snaps = committed_publish_ids(sess, index_path)
         if run_id in snaps:
             # crashed between the index commit and the pairs write: the
             # docs are already indexed, so recompute the pairs from the
@@ -93,8 +89,6 @@ def dedup_index_stream(
                 # Warn LOUDLY (the two cases are indistinguishable here —
                 # a hard failure would wedge legitimate streams forever)
                 # and proceed with the re-ingestion-safe semantics.
-                from ..operators.dedup_index import read_index_sigs
-
                 n_batch = batch.count()
                 indexed_ids = read_index_sigs(sess, index_path).select("_id")
                 n_already = batch.join(
@@ -115,19 +109,12 @@ def dedup_index_stream(
                 sess, batch, id_col, text_col, index_path, threshold,
                 update_index=True, snapshot_id=run_id, **params,
             )
-            if _crash_after_index_commit and batch_id in _crash_after_index_commit:
+            if _crash_after_index_commit and int(run_id[1:]) in _crash_after_index_commit:
                 raise RuntimeError("fault injection: crashed after index commit")
-        pairs.write.mode("overwrite").parquet(f"{out_dir}/pairs/run_id={run_id}")
-        update_schema_store(sess, out_dir, "pairs", pairs.schema)
-        commit_marker(sess, out_dir, run_id)
         first_processed["v"] = False
+        return {"pairs": pairs}
 
-    writer = stream.writeStream.foreachBatch(ingest).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return epoch_sink(spark, docs_dir, schema, out_dir, checkpoint_dir, ingest, available_now)
 
 
 def read_stream_pairs(spark: SparkSession, out_dir: str) -> DataFrame:

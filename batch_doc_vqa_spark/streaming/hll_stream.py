@@ -17,10 +17,10 @@ sketch algebra:
   even a double-committed epoch cannot change the estimate. Crash-safety
   from the data structure itself.
 - loghist / CMS registers merge by SUM — associative + commutative but NOT
-  idempotent — so exactly-once rests on the marker protocol: the foreachBatch
-  replay check skips already-committed epochs, and a torn epoch (partials
-  written, marker not) is invisible until its marker lands. This is the same
-  protocol every batch sink in the repo uses (plans/publish.py).
+  idempotent — so exactly-once rests on the marker protocol: the shared
+  epoch sink's replay guard skips already-committed epochs, and a torn
+  epoch (partials written, marker not) is invisible until its marker lands.
+  This is the same protocol every sink in the repo uses (plans/publish.py).
 """
 
 from __future__ import annotations
@@ -38,7 +38,7 @@ from ..operators.sketches import (
     loghist_partial,
     loghist_quantile,
 )
-from ..plans.publish import _fs, commit_marker, read_committed_table
+from ..plans.publish import epoch_sink, read_committed_table
 
 
 def sketch_stream(
@@ -54,25 +54,11 @@ def sketch_stream(
     micro-batch to its register/bucket rows), committed atomically. Read the
     running statistic by merging ``read_sketch_partials`` with the sketch's
     batch reducer."""
-    stream = spark.readStream.schema(schema).parquet(docs_dir)
-
-    def sketch(batch: DataFrame, batch_id: int) -> None:
-        sess = batch.sparkSession
-        run_id = f"e{batch_id:08d}"
-        fs, marker = _fs(sess, f"{out_dir}/_committed/{run_id}")
-        if fs.exists(marker):  # replay of a committed epoch
-            return
-        partial_fn(batch).write.mode("overwrite").parquet(
-            f"{out_dir}/partials/run_id={run_id}"
-        )
-        commit_marker(sess, out_dir, run_id)
-
-    writer = stream.writeStream.foreachBatch(sketch).option(
-        "checkpointLocation", checkpoint_dir
+    return epoch_sink(
+        spark, docs_dir, schema, out_dir, checkpoint_dir,
+        lambda batch, _: {"partials": partial_fn(batch)},
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_sketch_partials(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -104,10 +90,6 @@ def hll_stream(
         checkpoint_dir,
         available_now,
     )
-
-
-def read_hll_partials(spark: SparkSession, out_dir: str) -> DataFrame:
-    return read_sketch_partials(spark, out_dir)
 
 
 def read_hll_estimate(

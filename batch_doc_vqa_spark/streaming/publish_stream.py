@@ -3,24 +3,22 @@
 Batch form: ``plans/publish.publish_run`` tags rows with a reject reason and
 splits them into published/quarantine tables behind an atomic per-run
 marker commit. Streaming form: the SAME column-expression gate
-(``publish_reject_reason``) and the SAME staged-write protocol
-(``write_tagged_run`` — one definition each, no drift) run inside
-``foreachBatch`` with an EPOCH-scoped run id (``e<batch_id>``): a replayed
-epoch overwrites its own run directories idempotently, and a crash between
-the two table writes leaves the epoch invisible to
-``read_published``/``read_quarantine`` until the marker lands — end-to-end
-exactly-once, not just at-least-once appends. ``trigger(availableNow=True)``
-turns this into an incremental batch publisher: rerun it after new result
-files land and only the new files flow through the gate.
+(``publish_reject_reason``) and the SAME table split (``tagged_tables``)
+commit through the shared epoch sink (``plans.publish.epoch_sink``) with an
+EPOCH-scoped run id (``e<batch_id>``): a replayed epoch overwrites its own
+run directories idempotently, and a crash between the two table writes
+leaves the epoch invisible to ``read_published``/``read_quarantine`` until
+the marker lands — end-to-end exactly-once, not just at-least-once appends.
+``available_now`` turns this into an incremental batch publisher: rerun it
+after new result files land and only the new files flow through the gate.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from ..plans.publish import _fs, publish_reject_reason, write_tagged_run
+from ..plans.publish import epoch_sink, publish_reject_reason, tagged_tables
 
 
 def gated_publish_stream(
@@ -36,36 +34,12 @@ def gated_publish_stream(
     available_now: bool = True,
 ) -> StreamingQuery:
     """File-source results stream → gate → atomic epoch-scoped publishes."""
-    stream = spark.readStream.schema(schema).parquet(results_dir)
     reason = publish_reject_reason(text_col, numeric_cols, json_cols, decode_status_col)
-
-    def publish_batch(batch: DataFrame, batch_id: int) -> None:
-        tagged = batch.withColumn("_reject", reason).localCheckpoint(eager=True)
-        run_id = f"e{batch_id:08d}"
-        # skip_if_committed: an already-committed epoch is either a true
-        # replay (identical content — skip is exact) or a lost-checkpoint
-        # restart colliding with an old archive (skip prevents destroying
-        # the committed epoch; use a fresh out_dir after losing a checkpoint)
-        written = write_tagged_run(
-            batch.sparkSession, tagged, out_dir, run_id, skip_if_committed=True
-        )
-        if not written:
-            # LOUD breadcrumb: a collision is either benign (replay) or an
-            # operator error about to drop this batch's rows — never silent
-            import logging
-
-            logging.getLogger(__name__).warning(
-                "publish epoch %s already committed at %s — batch skipped "
-                "(lost-checkpoint restart over an existing archive requires a "
-                "fresh out_dir)", run_id, out_dir,
-            )
-            fs, flag = _fs(batch.sparkSession, f"{out_dir}/_collisions/{run_id}")
-            fs.mkdirs(flag.getParent())
-            fs.create(flag, True).close()
-
-    writer = stream.writeStream.foreachBatch(publish_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return epoch_sink(
+        spark, results_dir, schema, out_dir, checkpoint_dir,
+        # localCheckpoint: the gate classifier runs once for both halves
+        lambda batch, _: tagged_tables(
+            batch.withColumn("_reject", reason).localCheckpoint(eager=True)
+        ),
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

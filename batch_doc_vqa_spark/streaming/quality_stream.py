@@ -3,8 +3,9 @@ are classifier-scored and importance-resampled as they land.
 
 Batch form: ``textstats.classifier_score`` → ``chunking.score_resample``
 (the gate inside ``training_recipe_v3``). Streaming form: new document
-files flow through the SAME two operators inside ``foreachBatch`` — one
-definition, so a later batch re-validation of any epoch is bit-identical —
+files flow through the SAME two operators in the shared epoch sink
+(``plans.publish.epoch_sink``), so a later batch re-validation of any epoch
+is bit-identical —
 and each epoch's verdicts land atomically via the publish protocol's
 run-scoped marker commit: ``kept/run_id=e<batch>`` and
 ``rejected/run_id=e<batch>`` become visible together or not at all.
@@ -22,12 +23,11 @@ only the new files are scored.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.chunking import score_resample
 from ..operators.textstats import classifier_score
-from ..plans.publish import _fs, commit_marker, read_committed_table
+from ..plans.publish import epoch_sink, read_committed_table
 
 
 def quality_gate_stream(
@@ -54,32 +54,18 @@ def quality_gate_stream(
     re-derived in SQL (the batch oracle's draw expression). Read results
     with ``read_kept`` / ``read_rejected`` — marker-filtered, so a crash
     between the two table writes never surfaces a torn epoch."""
-    stream = spark.readStream.schema(schema).parquet(docs_dir)
 
-    def gate(batch: DataFrame, batch_id: int) -> None:
-        sess = batch.sparkSession
-        run_id = f"e{batch_id:08d}"
-        fs, marker = _fs(sess, f"{out_dir}/_committed/{run_id}")
-        if fs.exists(marker):  # replay of a committed epoch
-            return
+    def gate(batch: DataFrame, _run_id: str) -> dict[str, DataFrame]:
         scored = classifier_score(
             batch, id_col, text_col, bias, weights, n_buckets
         ).localCheckpoint(eager=True)  # feeds both the kept and rejected writes
         kept = score_resample(scored, id_col, "clf_score", seed=seed, base_hash=base_hash)
-        batch.join(kept, id_col).write.mode("overwrite").parquet(
-            f"{out_dir}/kept/run_id={run_id}"
-        )
-        scored.join(kept.select(id_col), id_col, "left_anti").write.mode(
-            "overwrite"
-        ).parquet(f"{out_dir}/rejected/run_id={run_id}")
-        commit_marker(sess, out_dir, run_id)
+        return {
+            "kept": batch.join(kept, id_col),
+            "rejected": scored.join(kept.select(id_col), id_col, "left_anti"),
+        }
 
-    writer = stream.writeStream.foreachBatch(gate).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return epoch_sink(spark, docs_dir, schema, out_dir, checkpoint_dir, gate, available_now)
 
 
 def read_kept(spark: SparkSession, out_dir: str) -> DataFrame:

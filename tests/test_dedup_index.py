@@ -154,41 +154,40 @@ def test_incremental_commit_blocked_during_compaction(spark, corpora, tmp_path):
     """The lease enforces single-writer: an incremental commit attempted
     while a compaction is in flight fails LOUDLY instead of being silently
     lost by the compaction's marker swap (VERDICT r4 #1)."""
-    from batch_doc_vqa_spark.operators.dedup_index import (
-        CompactionInProgressError,
-        _acquire_lease,
-        _release_lease,
+    from batch_doc_vqa_spark.plans.publish import (
+        MaintenanceInProgressError,
+        acquire_maintenance_lease,
+        release_maintenance_lease,
     )
 
     old, new = corpora
     path = str(tmp_path / "idx_lease")
     build_dedup_index(old, "doc_id", "text", path)
-    _acquire_lease(spark, path, {"snap": "compact-test", "pre_markers": ["base"]})
-    with pytest.raises(CompactionInProgressError):
+    acquire_maintenance_lease(spark, path, {"snap": "compact-test", "pre_markers": ["base"]})
+    with pytest.raises(MaintenanceInProgressError):
         incremental_dedup_pairs(spark, new, "doc_id", "text", path,
                                 update_index=True, snapshot_id="snapX")
     # the blocked attempt committed nothing
-    from batch_doc_vqa_spark.operators.dedup_index import committed_snapshots
-    assert committed_snapshots(spark, path) == ["base"]
-    _release_lease(spark, path)
+    from batch_doc_vqa_spark.plans.publish import committed_publish_ids
+    assert committed_publish_ids(spark, path) == ["base"]
+    release_maintenance_lease(spark, path)
     incremental_dedup_pairs(spark, new, "doc_id", "text", path,
                             update_index=True, snapshot_id="snapX")
-    assert committed_snapshots(spark, path) == ["base", "snapX"]
+    assert committed_publish_ids(spark, path) == ["base", "snapX"]
 
 
 def test_compaction_rolls_back_and_preserves_racing_snapshot(spark, corpora, tmp_path):
     """A snapshot that slips past the lease probe and commits mid-compaction
     (simulated via the pre-swap hook committing a marker directly) is
     PRESERVED: the compaction detects it post-swap, restores the previous
-    marker dir exactly, and raises ConcurrentSnapshotError."""
+    marker dir exactly, and raises ConcurrentCommitError."""
     from batch_doc_vqa_spark.operators.dedup import banded_rows, minhash_signatures
     from batch_doc_vqa_spark.operators.dedup_index import (
         INDEX_PARAMS,
-        ConcurrentSnapshotError,
-        committed_snapshots,
         compact_dedup_index,
         read_index_sigs,
     )
+    from batch_doc_vqa_spark.plans.publish import ConcurrentCommitError, committed_publish_ids
 
     old, new = corpora
     path = str(tmp_path / "idx_race")
@@ -208,32 +207,31 @@ def test_compaction_rolls_back_and_preserves_racing_snapshot(spark, corpora, tmp
             f"{path}/bands/snap=racer")
         open(f"{path}/_committed/racer", "w").close()
 
-    with pytest.raises(ConcurrentSnapshotError):
+    with pytest.raises(ConcurrentCommitError):
         compact_dedup_index(spark, old, "doc_id", "text", path,
                             _test_hook_before_swap=racer_commit)
     # rollback: both the original snapshot AND the racer survive, readable
-    assert committed_snapshots(spark, path) == ["base", "racer"]
+    assert committed_publish_ids(spark, path) == ["base", "racer"]
     assert read_index_sigs(spark, path).count() == 30 + new.count()
     # the lease was released — a re-run compaction (now including the racer
     # docs in current state) succeeds
     current = old.unionByName(new)
     compact_dedup_index(spark, current, "doc_id", "text", path)
-    assert len(committed_snapshots(spark, path)) == 1
+    assert len(committed_publish_ids(spark, path)) == 1
     assert read_index_sigs(spark, path).count() == 30 + new.count()
 
 
 def test_recover_completes_or_rolls_back_crashed_compaction(spark, corpora, tmp_path):
     """Crash between the swap renames leaves NO live marker dir; readers
-    fail loudly (never silently-empty) and recover_dedup_index restores the
+    fail loudly (never silently-empty) and recover_marker_store restores the
     exact pre-compaction state (ADVICE r4: no manual recovery)."""
     import os
 
     from batch_doc_vqa_spark.operators.dedup_index import (
-        committed_snapshots,
         compact_dedup_index,
         read_index_sigs,
-        recover_dedup_index,
     )
+    from batch_doc_vqa_spark.plans.publish import committed_publish_ids, recover_marker_store
 
     old, _ = corpora
     path = str(tmp_path / "idx_crash")
@@ -249,37 +247,39 @@ def test_recover_completes_or_rolls_back_crashed_compaction(spark, corpora, tmp_
 
     with pytest.raises(Crash):
         compact_dedup_index(spark, old, "doc_id", "text", path, _test_hook_before_swap=boom)
-    assert recover_dedup_index(spark, path) == "rolled_back"
-    assert committed_snapshots(spark, path) == ["base"]
+    assert recover_marker_store(spark, path) == "rolled_back"
+    assert committed_publish_ids(spark, path) == ["base"]
     assert read_index_sigs(spark, path).count() == 30
 
     # crash AFTER the aside rename (no live _committed): simulate by moving
     # the live dir aside and re-planting the lease the crashed run held
-    from batch_doc_vqa_spark.operators.dedup_index import _acquire_lease
+    from batch_doc_vqa_spark.plans.publish import acquire_maintenance_lease
 
     os.rename(f"{path}/_committed", f"{path}/_committed_old")
-    _acquire_lease(spark, path, {"snap": "compact-crashed", "pre_markers": ["base"]})
+    acquire_maintenance_lease(spark, path, {"snap": "compact-crashed", "pre_markers": ["base"]})
     with pytest.raises(FileNotFoundError):
         read_index_sigs(spark, path)  # loud, not silently empty
-    assert recover_dedup_index(spark, path) == "rolled_back"
-    assert committed_snapshots(spark, path) == ["base"]
+    assert recover_marker_store(spark, path) == "rolled_back"
+    assert committed_publish_ids(spark, path) == ["base"]
     assert read_index_sigs(spark, path).count() == 30
-    assert recover_dedup_index(spark, path) == "clean"  # idempotent
+    assert recover_marker_store(spark, path) == "clean"  # idempotent
 
 
-def test_vacuum_reclaims_only_uncommitted_snapshots(spark, corpora, tmp_path):
+def test_vacuum_reclaims_only_uncommitted_publish_ids(spark, corpora, tmp_path):
     """Compaction defers GC (concurrent readers keep scanning old snapshot
     files); vacuum_dedup_index is the separate reclaim step and refuses to
     run under a live lease (ADVICE r4)."""
     import os
 
     from batch_doc_vqa_spark.operators.dedup_index import (
-        CompactionInProgressError,
-        _acquire_lease,
-        _release_lease,
         compact_dedup_index,
         read_index_sigs,
         vacuum_dedup_index,
+    )
+    from batch_doc_vqa_spark.plans.publish import (
+        MaintenanceInProgressError,
+        acquire_maintenance_lease,
+        release_maintenance_lease,
     )
 
     old, new = corpora
@@ -295,10 +295,10 @@ def test_vacuum_reclaims_only_uncommitted_snapshots(spark, corpora, tmp_path):
     assert os.path.isdir(f"{path}/sigs/snap=base") and os.path.isdir(f"{path}/sigs/snap=snapV")
     assert pre_reader.count() == 30 + new.count()
 
-    _acquire_lease(spark, path, {"snap": "x", "pre_markers": []})
-    with pytest.raises(CompactionInProgressError):
+    acquire_maintenance_lease(spark, path, {"snap": "x", "pre_markers": []})
+    with pytest.raises(MaintenanceInProgressError):
         vacuum_dedup_index(spark, path)
-    _release_lease(spark, path)
+    release_maintenance_lease(spark, path)
     # the default retention grace protects a marker-less dir that might be
     # an IN-FLIGHT commit (data written, marker not yet landed): these dirs
     # are seconds old, so the default-grace vacuum must not touch them

@@ -421,22 +421,23 @@ def test_read_archive_before_any_commit_raises_clearly(spark, tmp_path):
 
 
 def test_committed_epoch_is_never_overwritten_with_skip_guard(spark, tmp_path):
-    """skip_if_committed: a colliding run_id (lost-checkpoint restart over an
-    existing archive) leaves the committed epoch untouched."""
+    """The epoch sinks' shared replay guard (commit_epoch): a colliding
+    run_id (lost-checkpoint restart over an existing archive) leaves the
+    committed epoch untouched."""
     from pyspark.sql import functions as F2
 
     from batch_doc_vqa_spark.plans import read_published
-    from batch_doc_vqa_spark.plans.publish import write_tagged_run
+    from batch_doc_vqa_spark.plans.publish import commit_epoch, tagged_tables
 
     out = str(tmp_path / "guard")
     first = spark.createDataFrame([(1, "original")], "id long, text string").withColumn(
         "_reject", F2.lit(None).cast("string")
     )
-    assert write_tagged_run(spark, first, out, "e0", skip_if_committed=True) is True
+    assert commit_epoch(spark, out, "e0", lambda: tagged_tables(first)) is True
     collider = spark.createDataFrame([(9, "intruder")], "id long, text string").withColumn(
         "_reject", F2.lit(None).cast("string")
     )
-    assert write_tagged_run(spark, collider, out, "e0", skip_if_committed=True) is False
+    assert commit_epoch(spark, out, "e0", lambda: tagged_tables(collider)) is False
     rows = read_published(spark, out).collect()
     assert [r["id"] for r in rows] == [1] and rows[0]["text"] == "original"
 

@@ -147,3 +147,27 @@ def test_url_dedup_single_shuffle_on_canonical_key(plans):
     p = plans("url_dedup")
     assert "EvalPython" not in p and "MapInPandas" not in p
     assert _n_exchanges(p) == 1, p[:1500]
+
+
+def _repartitioned(df) -> bool:
+    return "RepartitionByExpression" in df._jdf.queryExecution().logical().toString()
+
+
+def test_tp_scan_gate_counts_the_files_of_a_directory(spark, tmp_path):
+    """_tp's scan-split gate reads the table's data files as they are now,
+    not the size of its path: a Spark-written directory with one data file
+    plans one split (its ``_SUCCESS`` marker is not a split) and gets the
+    repair; rewritten in place with two data files it plans two, which is
+    enough at local[4], so no repair repartition is added."""
+    docs = spark.range(40).selectExpr("cast(id as string) as doc_id", "'x' as text")
+    table = str(tmp_path / "documents.parquet")
+    docs.coalesce(1).write.parquet(table)
+    assert _repartitioned(entrymod._tp(spark, str(tmp_path), "documents"))
+    docs.repartition(2).write.mode("overwrite").parquet(table)
+    assert not _repartitioned(entrymod._tp(spark, str(tmp_path), "documents"))
+
+
+def test_tp_scan_gate_repairs_a_single_small_file(spark, sf_dir):
+    """A single small parquet file plans one split and still gets the repair
+    repartition."""
+    assert _repartitioned(entrymod._tp(spark, sf_dir, "documents"))

@@ -19,7 +19,7 @@ from batch_doc_vqa_spark.plans.publish import (
     read_published,
     read_quarantine,
     read_schema_store,
-    recover_published_store,
+    recover_marker_store,
     release_maintenance_lease,
     vacuum_published_store,
 )
@@ -153,7 +153,7 @@ def test_recover_store_after_crashes(spark, tmp_path):
 
     with pytest.raises(Crash):  # crash before the swap
         compact_published_store(spark, out, _test_hook_before_swap=boom)
-    assert recover_published_store(spark, out) == "rolled_back"
+    assert recover_marker_store(spark, out) == "rolled_back"
     assert committed_publish_ids(spark, out) == ["r1", "r2", "r3"]
     assert _rows(read_published(spark, out)) == pub_before
 
@@ -164,10 +164,10 @@ def test_recover_store_after_crashes(spark, tmp_path):
         read_published(spark, out)  # loud, never silently empty
     with pytest.raises(MaintenanceInProgressError):
         vacuum_published_store(spark, out, grace_seconds=0)  # vacuum refuses mid-crash
-    assert recover_published_store(spark, out) == "rolled_back"
+    assert recover_marker_store(spark, out) == "rolled_back"
     assert committed_publish_ids(spark, out) == ["r1", "r2", "r3"]
     assert _rows(read_published(spark, out)) == pub_before
-    assert recover_published_store(spark, out) == "clean"
+    assert recover_marker_store(spark, out) == "clean"
 
 
 def test_schema_store_versioned_cas_never_loses_columns(spark, tmp_path):
@@ -252,7 +252,7 @@ def test_recover_merges_mid_swap_racer_markers(spark, tmp_path):
     acquire_maintenance_lease(
         spark, out, {"distinguished": "cZ", "pre_markers": ["r1", "r2", "r3"]}
     )
-    assert recover_published_store(spark, out) == "rolled_back"
+    assert recover_marker_store(spark, out) == "rolled_back"
     assert committed_publish_ids(spark, out) == ["r1", "r2", "r3", "racer"]
     pub = read_published(spark, out)
     assert {r["doc_id"] for r in pub.filter("run_id = 'racer'").collect()} == {"dr"}
@@ -281,7 +281,7 @@ def test_recover_preserves_window3_racer_in_live_dir(spark, tmp_path):
     acquire_maintenance_lease(spark, out, {
         "distinguished": cid, "pre_markers": ["r1", "r2", "r3"], "new_markers": [cid],
     })
-    res = recover_published_store(spark, out)
+    res = recover_marker_store(spark, out)
     assert res.startswith("rolled_back")
     assert committed_publish_ids(spark, out) == ["r1", "r2", "r3", "racer3"]
     assert {r["doc_id"] for r in read_published(spark, out)
@@ -309,7 +309,7 @@ def test_recover_post_audit_crash_is_completed_not_rollback(spark, tmp_path):
     acquire_maintenance_lease(spark, out, {
         "distinguished": cid, "pre_markers": ["r1", "r2", "r3"], "new_markers": [cid],
     })
-    res = recover_published_store(spark, out)
+    res = recover_marker_store(spark, out)
     assert res.startswith("completed")
     # compacted marker survived alongside the racer; data intact
     assert committed_publish_ids(spark, out) == sorted([cid, "racerP"])

@@ -238,11 +238,11 @@ def test_dedup_index_stream_grows_index_and_heals_crash_window(spark, tmp_path):
 
     from batch_doc_vqa_spark.operators.dedup_index import (
         build_dedup_index,
-        committed_snapshots,
         incremental_dedup_pairs,
         pairs_for_snapshot,
         read_index_sigs,
     )
+    from batch_doc_vqa_spark.plans.publish import committed_publish_ids
     from batch_doc_vqa_spark.streaming.dedup_index_stream import (
         dedup_index_stream,
         read_stream_pairs,
@@ -265,7 +265,7 @@ def test_dedup_index_stream_grows_index_and_heals_crash_window(spark, tmp_path):
     q.awaitTermination(120)
     pairs0 = {(r["id_a"], r["id_b"]) for r in read_stream_pairs(spark, out).collect()}
     assert pairs0 == {("base0", "n0")}
-    assert committed_snapshots(spark, idx) == ["base", "e00000000"]
+    assert committed_publish_ids(spark, idx) == ["base", "e00000000"]
     assert read_index_sigs(spark, idx).count() == 10  # 8 base + 2 new
 
     # epoch 1: dup of the EPOCH-0 doc — with a REAL injected crash in the
@@ -279,7 +279,7 @@ def test_dedup_index_stream_grows_index_and_heals_crash_window(spark, tmp_path):
     with pytest.raises(Exception, match="fault injection"):
         q2.awaitTermination(120)
     # the window state: index grew, but epoch 1's pairs are uncommitted
-    assert "e00000001" in committed_snapshots(spark, idx)
+    assert "e00000001" in committed_publish_ids(spark, idx)
     assert not os.path.exists(f"{out}/_committed/e00000001")
     pairs_now = {(r["id_a"], r["id_b"]) for r in read_stream_pairs(spark, out).collect()}
     assert ("base0", "m0") not in pairs_now  # torn epoch invisible
@@ -397,7 +397,7 @@ def test_hll_stream_incremental_and_idempotent(spark, tmp_path):
     from batch_doc_vqa_spark.streaming.hll_stream import (
         hll_stream,
         read_hll_estimate,
-        read_hll_partials,
+        read_sketch_partials,
     )
 
     src = tmp_path / "docs_in"
@@ -442,7 +442,7 @@ def test_hll_stream_incremental_and_idempotent(spark, tmp_path):
     est_torn = {r["g"]: r["est_distinct"]
                 for r in read_hll_estimate(spark, out, ["g"], p=8).collect()}
     assert est_torn == est1
-    n_epochs = read_hll_partials(spark, out).select("run_id").distinct().count()
+    n_epochs = read_sketch_partials(spark, out).select("run_id").distinct().count()
     assert n_epochs == 2  # e0 + the forged dup; e1 retracted
 
 
@@ -502,3 +502,92 @@ def test_sketch_stream_twins_loghist_cms(spark, tmp_path):
     want_torn = sorted(map(tuple, loghist_quantile(
         loghist_partial(early, "v", ["g"], b=5), ["g"], qs, b=5).collect()))
     assert got_torn == want_torn
+
+
+def test_lost_checkpoint_restart_flags_collision_in_sketch_stream(spark, tmp_path):
+    """A restart with a FRESH checkpoint over an existing out_dir renumbers
+    epochs from 0. The shared replay guard keeps the committed epoch intact
+    and never drops the colliding batch silently: it leaves the same
+    ``_collisions/<epoch>`` breadcrumb the publish sink always left."""
+    import os
+
+    from batch_doc_vqa_spark.plans.publish import committed_publish_ids
+    from batch_doc_vqa_spark.streaming.hll_stream import hll_stream, read_hll_estimate
+
+    src = tmp_path / "docs_in"
+    out = str(tmp_path / "hll_out")
+    schema = "doc_id long, uid string, g string"
+    spark.createDataFrame(
+        [(i, f"u{i}", "a") for i in range(100)], schema
+    ).write.mode("append").parquet(str(src))
+    hll_stream(spark, str(src), schema, "uid", ["g"], out,
+               str(tmp_path / "ckpt1"), p=8).awaitTermination(120)
+    est_before = read_hll_estimate(spark, out, ["g"], p=8).collect()
+    assert not os.path.exists(f"{out}/_collisions")
+
+    spark.createDataFrame(
+        [(i, f"u{i}", "a") for i in range(100, 1100)], schema
+    ).write.mode("append").parquet(str(src))
+    hll_stream(spark, str(src), schema, "uid", ["g"], out,
+               str(tmp_path / "ckpt_lost"), p=8).awaitTermination(120)
+    assert os.path.exists(f"{out}/_collisions/e00000000")
+    assert committed_publish_ids(spark, out) == ["e00000000"]
+    assert read_hll_estimate(spark, out, ["g"], p=8).collect() == est_before
+
+
+def test_every_epoch_sink_writes_the_schema_store(spark, tmp_path):
+    """The decontam, quality and sketch sinks commit through the same
+    ``commit_run`` as the publish archive, so each epoch records its tables
+    in the schema store; the readers' output is the same as the per-read
+    mergeSchema fallback gives."""
+    import os
+    import shutil
+
+    from batch_doc_vqa_spark.sources.clf_fixture import (
+        CLF_BUCKETS,
+        clf_fixture_rows,
+        trained_quality_model,
+    )
+    from batch_doc_vqa_spark.streaming.decontam_stream import (
+        decontam_screen_stream,
+        read_clean,
+        read_contaminated,
+    )
+    from batch_doc_vqa_spark.streaming.hll_stream import hll_stream, read_sketch_partials
+    from batch_doc_vqa_spark.streaming.quality_stream import (
+        quality_gate_stream,
+        read_kept,
+        read_rejected,
+    )
+
+    src = tmp_path / "docs_in"
+    schema = "doc_id long, text string"
+    rows = [(i, t) for i, (_, t) in enumerate(clf_fixture_rows())][:20]
+    bench_text = "q1 q2 q3 q4 q5 q6 q7 q8 q9 q10 q11 q12"
+    rows.append((999, f"prefix words {bench_text} suffix words"))
+    spark.createDataFrame(rows, schema).write.parquet(str(src))
+    bench = spark.createDataFrame([("b0", bench_text)], "bench_id string, bench_text string")
+    bias, weights = trained_quality_model()
+
+    dc, qg, sk = (str(tmp_path / n) for n in ("dc_out", "qg_out", "sk_out"))
+    decontam_screen_stream(spark, str(src), schema, bench, dc,
+                           str(tmp_path / "dc_ck")).awaitTermination(120)
+    quality_gate_stream(spark, str(src), schema, bias, weights, qg,
+                        str(tmp_path / "qg_ck"), n_buckets=CLF_BUCKETS).awaitTermination(120)
+    hll_stream(spark, str(src), schema, "text", [], sk,
+               str(tmp_path / "sk_ck"), p=8).awaitTermination(120)
+
+    def snapshot(df):
+        return df.schema, sorted(map(tuple, df.collect()))
+
+    for out, readers in (
+        (dc, {"clean": read_clean, "contaminated": read_contaminated}),
+        (qg, {"kept": read_kept, "rejected": read_rejected}),
+        (sk, {"partials": read_sketch_partials}),
+    ):
+        for table in readers:
+            assert os.path.exists(f"{out}/_schema/{table}.v1.json"), (out, table)
+        with_store = {t: snapshot(r(spark, out)) for t, r in readers.items()}
+        shutil.move(f"{out}/_schema", f"{out}/_schema_aside")  # mergeSchema fallback
+        assert {t: snapshot(r(spark, out)) for t, r in readers.items()} == with_store
+    assert {r["doc_id"] for r in read_contaminated(spark, dc).collect()} == {999}
