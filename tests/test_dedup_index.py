@@ -265,7 +265,7 @@ def test_recover_completes_or_rolls_back_crashed_compaction(spark, corpora, tmp_
     assert recover_marker_store(spark, path) == "clean"  # idempotent
 
 
-def test_vacuum_reclaims_only_uncommitted_publish_ids(spark, corpora, tmp_path):
+def test_vacuum_reclaims_only_uncommitted_snapshots(spark, corpora, tmp_path):
     """Compaction defers GC (concurrent readers keep scanning old snapshot
     files); vacuum_dedup_index is the separate reclaim step and refuses to
     run under a live lease (ADVICE r4)."""
